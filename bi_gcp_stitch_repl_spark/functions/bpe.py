@@ -126,7 +126,7 @@ def bpe_train(
     released."""
     if n_merges < 0:
         raise ValueError(f"n_merges must be >= 0 (got {n_merges})")
-    from .graph import _free_local_checkpoint, _local_df, _probe_rows
+    from .dispatch import free_local_checkpoint, local_df, probe_rows
 
     wf = (
         words.select(
@@ -148,24 +148,24 @@ def bpe_train(
     out_schema = (
         "merge_rank int, a string, b string, merged string, cnt long"
     )
-    rows = _probe_rows(wf, driver_threshold) if driver_threshold > 0 else None
+    rows = probe_rows(wf, driver_threshold) if driver_threshold > 0 else None
     if rows is not None:
         mn = min((r.freq for r in rows), default=None)
         if mn is not None and mn <= 0:
             raise ValueError(f"word frequencies must be positive (min={mn})")
         rules = _bpe_driver_rows(rows, n_merges)
-        _free_local_checkpoint(wf)
-        # VALUES local relation (the graph-family _local_df discipline):
+        free_local_checkpoint(wf)
+        # VALUES local relation (the dispatch.local_df discipline):
         # a plain createDataFrame parallelizes ~8 rule rows into 32
         # near-empty Python slices at every downstream execution
-        return _local_df(spark, rules, out_schema)
+        return local_df(spark, rules, out_schema)
     fb = wf.agg(F.min("freq").alias("mn")).first()
     if fb.mn is not None and fb.mn <= 0:
         raise ValueError(f"word frequencies must be positive (min={fb.mn})")
     w = wf.select(
         "freq", F.expr(_CHARS.format(w="word")).alias("syms")
     ).localCheckpoint(eager=True)
-    _free_local_checkpoint(wf)
+    free_local_checkpoint(wf)
     rules: list[tuple] = []
     for r in range(1, n_merges + 1):
         pc = (
@@ -195,9 +195,7 @@ def bpe_train(
         w = w.select(
             "freq", _merge_fold(F.col("syms"), a, b, a + b).alias("syms")
         ).localCheckpoint(eager=True)
-        from .graph import _free_local_checkpoint
-
-        _free_local_checkpoint(old)
+        free_local_checkpoint(old)
     return spark.createDataFrame(rules, out_schema)
 
 

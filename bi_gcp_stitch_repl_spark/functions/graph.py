@@ -19,12 +19,22 @@ rounds and dies on long chains.
 
 from __future__ import annotations
 
-import math
 from collections import namedtuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+
+from .dispatch import (
+    PY_ORDERED_SIMPLE,
+    distinct_probe_rows,
+    free_local_checkpoint,
+    is_local_plan,
+    local_df,
+    plan_output_aggregated,
+    probe_rows,
+    weight_guard,
+    weighted_edges,
+)
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -136,7 +146,7 @@ def connected_components(
     # the union-find input (the old count()-then-collect() pair was two
     # driver round-trips over the same checkpointed frame)
     erows = (
-        _probe_rows(e, driver_threshold)
+        probe_rows(e, driver_threshold)
         if driver_threshold > 0
         else None
     )
@@ -230,7 +240,7 @@ def _cc_driver(
         node_col = nodes.columns[0]
         all_nodes = nodes.select(F.col(node_col).alias("node")).distinct()
         nrows = (
-            _probe_rows(all_nodes, driver_threshold)
+            probe_rows(all_nodes, driver_threshold)
             if driver_threshold > 0
             else None
         )
@@ -249,13 +259,13 @@ def _cc_driver(
                 ],
                 key=lambda t: (t[0] is None, t[0]),
             )
-            return _local_df(spark, label_rows, schema)
+            return local_df(spark, label_rows, schema)
         labels = spark.createDataFrame(label_rows, schema)
         singletons = all_nodes.join(
             F.broadcast(labels), "node", "left_anti"
         ).select("node", F.col("node").alias("component"))
         return labels.unionByName(singletons)
-    return _local_df(spark, label_rows, schema)
+    return local_df(spark, label_rows, schema)
 
 
 def pagerank(
@@ -434,132 +444,58 @@ def pagerank_fixedpoint(
             "edges needs (src, dst, weight) columns — for an unweighted"
             " graph pass F.lit(1) as the weight"
         )
-    src, dst, w = edges.columns[:3]
     # canonicalize to ONE row per (src, dst): duplicate edge rows must
     # pre-aggregate, because the out-weight FRACTION floor-divides per
     # row — two rows w=1,w=2 truncate differently than one row w=3, and
     # the result would then depend on the caller's representation (the
     # exact class of nondeterminism this function exists to exclude;
-    # caught by the hypothesis property suite's self-loop example).
-    # NULL endpoints drop here (SQL joins and Python dict membership
+    # caught by the hypothesis property suite's self-loop example). The
+    # aggregate drops NULL endpoints (SQL joins and Python dict membership
     # disagree about NULL, so letting one through would diverge the two
-    # physical paths); checkpointed — the upstream derivation is the
-    # expensive part and frac references e twice.
-    ecast = edges.select(
-        F.col(src).cast(node_type).alias("src"),
-        F.col(dst).cast(node_type).alias("dst"),
-        F.col(w).cast("long").alias("w"),
+    # physical paths)
+    ew = weighted_edges(edges, driver_threshold, "sum", node_type)
+    node_df, nrows, n = _node_universe(
+        nodes, node_type, driver_threshold if ew.rows is not None else 0
     )
-    e = None
-    erows = None
-    # fully-local fast path (the label_propagation discipline): a
-    # driver-built local relation (the trade wrappers' VALUES edge
-    # aggregate) collects job-free and the (src, dst) canonicalization
-    # runs in Python with SQL SUM semantics — skipping the aggregate
-    # exchange + eager checkpoint + probe jobs entirely; int64 sum
-    # overflow falls back to the engine's ANSI-abort spelling
-    if driver_threshold > 0 and _is_local_plan(ecast):
-        raw = ecast.limit(driver_threshold + 1).collect()
-        if len(raw) <= driver_threshold:
-            pairs = _dagg_rows_py(raw)
-            if pairs is not None and len(pairs) <= driver_threshold:
-                erows = pairs
-    if erows is None:
-        e = (
-            ecast.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-            .groupBy("src", "dst")
-            .agg(F.sum("w").alias("w"))
-            .localCheckpoint(eager=True)
-        )
-    nd_proj = nodes.select(
-        F.col(nodes.columns[0]).cast(node_type).alias("node")
-    ).filter(F.col("node").isNotNull())
-    node_df = nd_proj.distinct()
-    # driver/distributed dispatch via the one-job limit probe: when both
-    # frames fit, the probe rows ARE the collected inputs — the old
-    # count() + guard-agg + count() + collect() + collect() sequence
-    # spent five driver round-trips where two suffice (the weight guard
-    # then runs in Python over rows already in hand, same checks, same
-    # messages). EDGES probe first (e is already checkpointed); the node
-    # frame is probed UN-checkpointed — the driver path never touches it
-    # again, so its eager checkpoint was a pure extra job + planning gap
-    # per query; the distributed branch checkpoints it below as before
-    if erows is None:
-        erows = (
-            _probe_rows(e, driver_threshold) if driver_threshold > 0 else None
-        )
-    if erows is not None and any(r.w is None for r in erows):
-        # SQL MIN/SUM skip NULL weights, so the distributed guard and
-        # loop have well-defined NULL semantics the Python replica does
-        # not reproduce — route NULL-weight inputs to the engine
-        erows = None
-    nrows = (
-        _distinct_probe_rows(nd_proj, driver_threshold)
-        if erows is not None
-        else None
-    )
-    if nrows is not None and len(nrows) == 0:
-        return node_df.select("node", F.lit(0).cast("long").alias("rank_fp"))
-    if nrows is not None:
-        _check_weights_rows(
-            (r.w for r in erows), frac_scale=frac_scale
-        )
-        seeds = None
-        if teleport is not None:
-            # Python set intersection IS the left-semi join here: the
-            # node universe is fully in hand (nrows) and both sides are
-            # NULL-filtered hashable keys. The teleport frame is PROBED,
-            # not blindly collected — a seed list larger than the
-            # dispatch bound falls back to the distributed semi-join
-            # instead of exhausting driver memory (r11 advice)
-            trows = _distinct_probe_rows(
-                teleport.select(
-                    F.col(teleport.columns[0]).cast(node_type).alias("node")
-                ).filter(F.col("node").isNotNull()),
-                driver_threshold,
-            )
-            if trows is None:
-                nrows = None
-            else:
-                seeds = {r.node for r in trows} & {r.node for r in nrows}
-                if not seeds:
-                    raise ValueError(
-                        "teleport set is empty or disjoint from nodes — an"
-                        " all-zero restart vector has no fixed point"
-                    )
-    if nrows is not None:
-        return _pagerank_fp_driver(
-            erows, nrows, node_df, len(nrows), n_iter, damping_num,
-            damping_den, scale, frac_scale, seeds=seeds,
-        )
-    if e is None:
-        # the local fast path collected the edges but the dispatch fell
-        # through (node frame or teleport above the bound): build the
-        # canonical checkpointed aggregate for the distributed loop
-        e = (
-            ecast.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-            .groupBy("src", "dst")
-            .agg(F.sum("w").alias("w"))
-            .localCheckpoint(eager=True)
-        )
-    node_df = node_df.localCheckpoint(eager=True)
-    n = node_df.count()
     if n == 0:
         return node_df.select("node", F.lit(0).cast("long").alias("rank_fp"))
-    wb = e.agg(F.min("w").alias("mn"), F.max("w").alias("mx")).first()
-    if wb.mn is not None:
-        if wb.mn <= 0:
-            # Python // floors while Spark DIV truncates toward zero, so
-            # negative weights would silently diverge the two physical
-            # paths; zero total out-weight divides by zero — both are
-            # contract violations, not data to paper over
-            raise ValueError(f"edge weights must be positive (min={wb.mn})")
-        if wb.mx * frac_scale >= 2**63:
-            # the distributed CAST(w * frac_scale) would ANSI-abort (or
-            # wrap) where the driver path's Python bignums succeed
-            raise ValueError(
-                f"max edge weight {wb.mx} * frac_scale overflows int64"
-            )
+    wb = weight_guard(ew, ew.rows)
+    if wb.mx is not None and wb.mx * frac_scale >= 2**63:
+        # the distributed CAST(w * frac_scale) would ANSI-abort (or
+        # wrap) where the driver path's Python bignums succeed
+        raise ValueError(
+            f"max edge weight {wb.mx} * frac_scale overflows int64"
+        )
+    seeds = None
+    if nrows is not None and teleport is not None:
+        # Python set intersection IS the left-semi join here: the
+        # node universe is fully in hand (nrows) and both sides are
+        # NULL-filtered hashable keys. The teleport frame is PROBED,
+        # not blindly collected — a seed list larger than the
+        # dispatch bound falls back to the distributed semi-join
+        # instead of exhausting driver memory (r11 advice)
+        trows = distinct_probe_rows(
+            teleport.select(
+                F.col(teleport.columns[0]).cast(node_type).alias("node")
+            ).filter(F.col("node").isNotNull()),
+            driver_threshold,
+        )
+        if trows is None:
+            nrows = None
+            node_df = node_df.localCheckpoint(eager=True)
+        else:
+            seeds = {r.node for r in trows} & {r.node for r in nrows}
+            if not seeds:
+                raise ValueError(
+                    "teleport set is empty or disjoint from nodes — an"
+                    " all-zero restart vector has no fixed point"
+                )
+    if nrows is not None:
+        return _pagerank_fp_driver(
+            ew.rows, nrows, node_df, n, n_iter, damping_num,
+            damping_den, scale, frac_scale, seeds=seeds,
+        )
+    e = ew.frame
     seeds_df = None
     m = n
     if teleport is not None:
@@ -653,6 +589,25 @@ def pagerank_fixedpoint(
     return rank
 
 
+def _node_universe(
+    nodes: DataFrame, node_type: str, threshold: int
+) -> tuple[DataFrame, list | None, int]:
+    """``(node_df, nrows, n)``: the distinct NULL-free node set of the
+    fixed-point operators. Probed UN-checkpointed when ``threshold > 0``
+    and it fits (``nrows`` in hand; the driver path never touches the
+    frame again), else checkpointed and counted for the distributed
+    loop (``nrows`` None)."""
+    proj = nodes.select(
+        F.col(nodes.columns[0]).cast(node_type).alias("node")
+    ).filter(F.col("node").isNotNull())
+    node_df = proj.distinct()
+    nrows = distinct_probe_rows(proj, threshold) if threshold > 0 else None
+    if nrows is not None:
+        return node_df, nrows, len(nrows)
+    node_df = node_df.localCheckpoint(eager=True)
+    return node_df, None, node_df.count()
+
+
 def _pagerank_fp_driver(
     erows: list,
     nrows: list,
@@ -714,7 +669,7 @@ def _pagerank_fp_driver(
                 for v in nodes
             }
     out_type = dict(node_df.dtypes)["node"]
-    return _local_df(
+    return local_df(
         spark, [(v, rank[v]) for v in nodes], f"node {out_type}, rank_fp long"
     )
 
@@ -771,81 +726,12 @@ def hits_fixedpoint(
             "edges needs (src, dst, weight) columns — for an unweighted"
             " graph pass F.lit(1) as the weight"
         )
-    src, dst, w = edges.columns[:3]
     # one row per (src, dst) and NULL endpoints dropped up front — same
     # canonicalization (and same reasons) as pagerank_fixedpoint
-    ecast = edges.select(
-        F.col(src).cast(node_type).alias("src"),
-        F.col(dst).cast(node_type).alias("dst"),
-        F.col(w).cast("long").alias("w"),
+    ew = weighted_edges(edges, driver_threshold, "sum", node_type)
+    node_df, nrows, n = _node_universe(
+        nodes, node_type, driver_threshold if ew.rows is not None else 0
     )
-    e = None
-    erows = None
-    # fully-local fast path (the pagerank_fixedpoint discipline): VALUES
-    # edge inputs collect job-free, canonicalize in Python with SQL SUM
-    # semantics — no aggregate exchange, checkpoint or probe job
-    if driver_threshold > 0 and _is_local_plan(ecast):
-        raw = ecast.limit(driver_threshold + 1).collect()
-        if len(raw) <= driver_threshold:
-            pairs = _dagg_rows_py(raw)
-            if pairs is not None and len(pairs) <= driver_threshold:
-                erows = pairs
-    if erows is None:
-        e = (
-            ecast.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-            .groupBy("src", "dst")
-            .agg(F.sum("w").alias("w"))
-            .localCheckpoint(eager=True)
-        )
-    nd_proj = nodes.select(
-        F.col(nodes.columns[0]).cast(node_type).alias("node")
-    ).filter(F.col("node").isNotNull())
-    node_df = nd_proj.distinct()
-    # one-job dispatch probe (the pagerank_fixedpoint discipline): when
-    # both frames fit the driver threshold, the probe rows ARE the
-    # collected inputs and the guards run in Python over them — same
-    # checks, same messages, three fewer driver round-trips. Edges probe
-    # first (e is already checkpointed); the node frame probes
-    # UN-checkpointed — the driver path never touches it again, and the
-    # distributed branch checkpoints it below as before
-    if erows is None:
-        erows = (
-            _probe_rows(e, driver_threshold) if driver_threshold > 0 else None
-        )
-    if erows is not None and any(r.w is None for r in erows):
-        # SQL MIN/MAX/SUM skip NULL weights — the engine defines the
-        # NULL-weight behavior, so route those inputs to it (the
-        # pagerank_fixedpoint fallback)
-        erows = None
-    nrows = (
-        _distinct_probe_rows(nd_proj, driver_threshold)
-        if erows is not None
-        else None
-    )
-    if nrows is not None and len(nrows) == 0:
-        return node_df.select(
-            "node",
-            F.lit(0).cast("long").alias("hub_fp"),
-            F.lit(0).cast("long").alias("auth_fp"),
-        )
-    if nrows is not None:
-        n = len(nrows)
-        if scale // n == 0:
-            raise ValueError(f"scale={scale} must be >= node count {n}")
-        _check_weights_rows((r.w for r in erows), hits_scale=scale)
-        return _hits_fp_driver(erows, nrows, node_df, n, n_iter, scale)
-    if e is None:
-        # local fast path collected the edges but the node frame is
-        # above the bound: build the checkpointed aggregate for the
-        # distributed loop
-        e = (
-            ecast.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-            .groupBy("src", "dst")
-            .agg(F.sum("w").alias("w"))
-            .localCheckpoint(eager=True)
-        )
-    node_df = node_df.localCheckpoint(eager=True)
-    n = node_df.count()
     if n == 0:
         return node_df.select(
             "node",
@@ -857,19 +743,19 @@ def hits_fixedpoint(
         # everywhere and every round would stay zero — a silent all-zero
         # answer is a configuration error, not a result
         raise ValueError(f"scale={scale} must be >= node count {n}")
-    wb = e.agg(
-        F.min("w").alias("mn"), F.max("w").alias("mx"), F.sum("w").alias("tw")
-    ).first()
-    if wb.mn is not None:
-        if wb.mn <= 0:
-            raise ValueError(f"edge weights must be positive (min={wb.mn})")
-        if scale * scale * wb.mx >= 2**63 or scale * wb.tw >= 2**63:
-            raise ValueError(
-                "fixed-point scale overflows int64 for these edge weights:"
-                f" need scale^2*max_w ({scale}^2*{wb.mx}) and scale*total_w"
-                f" ({scale}*{wb.tw}) below 2^63 — lower scale or"
-                " pre-normalize weights"
-            )
+    wb = weight_guard(ew, ew.rows)
+    if wb.mx is not None and (
+        scale * scale * wb.mx >= 2**63 or scale * wb.tw >= 2**63
+    ):
+        raise ValueError(
+            "fixed-point scale overflows int64 for these edge weights:"
+            f" need scale^2*max_w ({scale}^2*{wb.mx}) and scale*total_w"
+            f" ({scale}*{wb.tw}) below 2^63 — lower scale or"
+            " pre-normalize weights"
+        )
+    if nrows is not None:
+        return _hits_fp_driver(ew.rows, nrows, node_df, n, n_iter, scale)
+    e = ew.frame
     # restrict to in-universe edges ONCE (pagerank folds this into its
     # per-round joins; HITS reads the edge frame 2x per round, so paying
     # the two semi-joins once outside the loop is strictly cheaper)
@@ -950,203 +836,12 @@ def _hits_fp_driver(
         t = sum(hraw.values())
         hub = {v: (hraw[v] * scale) // t if t else 0 for v in nodes}
     out_type = dict(node_df.dtypes)["node"]
-    return _local_df(
+    return local_df(
         spark,
         [(v, hub[v], auth[v]) for v in nodes],
         f"node {out_type}, hub_fp long, auth_fp long",
     )
 
-
-def _check_weights_rows(
-    weights,
-    frac_scale: int | None = None,
-    hits_scale: int | None = None,
-) -> None:
-    """The driver-path spelling of the distributed weight guards: same
-    checks, same messages, over rows already collected by the dispatch
-    probe (no extra aggregate job). ``frac_scale`` enables the
-    pagerank-family overflow check, ``hits_scale`` the HITS one."""
-    mn = mx = tw = None
-    for w in weights:
-        if mn is None:
-            mn = mx = w
-            tw = 0
-        mn = w if w < mn else mn
-        mx = w if w > mx else mx
-        tw += w
-    if mn is None:
-        return
-    if mn <= 0:
-        raise ValueError(f"edge weights must be positive (min={mn})")
-    if frac_scale is not None and mx * frac_scale >= 2**63:
-        raise ValueError(
-            f"max edge weight {mx} * frac_scale overflows int64"
-        )
-    if hits_scale is not None and (
-        hits_scale * hits_scale * mx >= 2**63 or hits_scale * tw >= 2**63
-    ):
-        raise ValueError(
-            "fixed-point scale overflows int64 for these edge weights:"
-            f" need scale^2*max_w ({hits_scale}^2*{mx}) and scale*total_w"
-            f" ({hits_scale}*{tw}) below 2^63 — lower scale or"
-            " pre-normalize weights"
-        )
-
-
-#: VALUES-literal emission cutoff: the SQL parse cost crosses the
-#: 1-slice-RDD emission cost at ~4-5k rows (measured, local[32]: noop of
-#: a 2-col bigint frame — 0.105 vs 0.198 s at 1k rows, 0.202 vs 0.200 at
-#: 5k, 0.383 vs 0.235 at 20k)
-_VALUES_MAX_ROWS = 4096
-
-#: broadcast-hint gate for driver-path results: ~100k short rows is a
-#: few MB framed — comfortably inside the executor build-side budget —
-#: and it equals the graph family's default dispatch bound, so every
-#: default-threshold driver-path result is hinted. Fixed on purpose:
-#: a caller-raised driver_threshold proves driver fit, not executor
-#: hash-relation fit (see _local_df's docstring).
-_BROADCAST_HINT_MAX_ROWS = 100_000
-
-#: column types the VALUES literal renderer covers (simpleString -> SQL);
-#: anything else (arrays, structs, timestamps) takes the RDD path
-_VALUES_TYPES = {
-    "bigint": "BIGINT",
-    "int": "INT",
-    "string": "STRING",
-    "double": "DOUBLE",
-    "boolean": "BOOLEAN",
-}
-
-
-def _sql_literal(v, sql_type: str) -> str:
-    """Render one Python value as an exact Spark SQL literal. Strings
-    escape backslash and quote (the default parser processes backslash
-    escapes); doubles go through repr(), which round-trips binary64
-    exactly and is re-parsed by CAST with correct rounding — bit-exact
-    both ways."""
-    if v is None:
-        return "NULL"
-    if sql_type == "STRING":
-        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-    if sql_type == "DOUBLE":
-        if math.isnan(v):
-            return "CAST('NaN' AS DOUBLE)"
-        if math.isinf(v):
-            return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
-        return f"CAST('{v!r}' AS DOUBLE)"
-    if sql_type == "BOOLEAN":
-        return "true" if v else "false"
-    return str(v)
-
-
-def _local_df(spark, rows, schema):
-    """Driver-path result emitter. Small simple-typed results embed as a
-    ``VALUES`` literal — a pure-JVM ``LocalTableScan`` with ACCURATE
-    stats: no Python-worker round-trip at execution (measured 0.157 →
-    0.037 s for a 25-row noop; a downstream join picks the broadcast
-    side from real sizes), at the price of SQL-text parse time that
-    grows with the row count (crossover ~4-5k rows, see
-    ``_VALUES_MAX_ROWS``).
-
-    Larger or complex-typed results fall back to a ONE-slice RDD:
-    ``createDataFrame`` on a plain list parallelizes into
-    defaultParallelism slices — 32 near-empty tasks for a 25-row result,
-    each paying a Python-worker round-trip, and every downstream
-    operator schedules them all; the one-slice form measured 0.7-1.4 s →
-    0.24-0.37 s for a 25-row noop write, 1.1-1.8 → 0.6-0.9 s at 100k
-    rows. (NOT ``coalesce(1)``: a no-shuffle coalesce makes the single
-    task evaluate all 32 parent Python slices SEQUENTIALLY — measured
-    4.7 s for 25 rows.)
-
-    The broadcast hint is gated on the ACTUAL row count in hand (not an
-    estimate): an RDD-backed frame has no stats, so the planner assumes
-    it is huge — a consumer joining a 25-row driver-path result to a
-    dimension table got a two-Exchange sort-merge join
-    (x_triangle_trade's measured plan). The gate is the fixed
-    :data:`_BROADCAST_HINT_MAX_ROWS` (the graph family's default probe
-    bound), NOT the caller's threshold: a caller that raised its
-    dispatch bound has proven its rows fit the DRIVER, which says
-    nothing about every executor also holding the built hash relation —
-    beyond the fixed bound results stay unhinted (walk corpora fan out
-    past it routinely). The hint stays on the VALUES path too — same
-    boundedness argument, zero-cost exchange."""
-    st = (
-        StructType.fromDDL(schema) if isinstance(schema, str) else schema
-    )
-    sql_types = [
-        _VALUES_TYPES.get(f.dataType.simpleString()) for f in st.fields
-    ]
-    if 0 < len(rows) <= _VALUES_MAX_ROWS and all(sql_types):
-        cols = ", ".join(
-            f"CAST(c{i} AS {t}) AS `{f.name}`"
-            for i, (f, t) in enumerate(zip(st.fields, sql_types))
-        )
-        tuples = ", ".join(
-            "("
-            + ", ".join(
-                _sql_literal(row[i], t) for i, t in enumerate(sql_types)
-            )
-            + ")"
-            for row in rows
-        )
-        alias = ", ".join(f"c{i}" for i in range(len(st.fields)))
-        df = spark.sql(f"SELECT {cols} FROM VALUES {tuples} AS t({alias})")
-    else:
-        df = spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, 1), st
-        )
-    return F.broadcast(df) if len(rows) <= _BROADCAST_HINT_MAX_ROWS else df
-
-
-_NodeRow = namedtuple("_NodeRow", ["node"])
-
-
-def _distinct_probe_rows(proj: DataFrame, threshold: int) -> list | None:
-    """Smallness probe of ``proj.distinct()`` for a ONE-column frame of
-    a :data:`_PY_ORDERED_SIMPLE` type: probe the RAW projection (a
-    CollectLimit over the scan — limit short-circuits, no aggregate to
-    plan, job-free on driver-local relations) and dedup in Python, where
-    equality provably matches SQL distinct for these types (the engine
-    applied any cast while executing/folding the projection). Probing
-    ``distinct()`` itself was costing a 2-stage AQE plan + a ~0.2 s
-    driver planning gap per graph query on a 25-row dimension scan
-    (measured, x_pagerank_trade). A raw row count past the threshold —
-    the 100 TB node frame — falls back to the ordinary one-job probe of
-    the distinct frame, reading ~threshold rows either way; a DEDUPED
-    count past the threshold is proof the distinct cannot fit and
-    returns None directly."""
-    t = proj.schema[0].dataType.simpleString()
-    if t in _PY_ORDERED_SIMPLE:
-        raw = proj.limit(threshold + 1).collect()
-        if len(raw) <= threshold:
-            seen = dict.fromkeys(r[0] for r in raw)
-            if len(seen) <= threshold:
-                return [_NodeRow(v) for v in seen]
-            return None
-    return _probe_rows(proj.distinct(), threshold)
-
-
-def _probe_rows(df: DataFrame, threshold: int) -> list | None:
-    """ONE-job smallness probe: collect up to ``threshold + 1`` rows of a
-    (checkpointed) frame; return the row list when the frame fits — the
-    caller then holds EVERY row and needs no further action on the frame
-    — else None. Replaces the ``count()``-then-``collect()`` pair the
-    adaptive driver/distributed dispatch used to pay: each action is a
-    full driver round-trip (a scheduled job), and on the driver path the
-    count told us nothing the collect would not. The distributed branch
-    still takes its exact counts as before — this probe only spends one
-    job deciding, and its partial result is discarded there."""
-    rows = df.limit(threshold + 1).collect()
-    return rows if len(rows) <= threshold else None
-
-
-#: dtypes whose PYTHON ordering/equality provably match Spark's
-#: least/greatest/distinct semantics on collected values (integrals:
-#: numeric order; strings: Python compares by code point, and Spark's
-#: UTF8String binary order preserves code-point order) — the fused
-#: driver-path normalization below is gated on them; any other endpoint
-#: type falls back to the distributed distinct (always correct).
-_PY_ORDERED_SIMPLE = {"tinyint", "smallint", "int", "bigint", "string"}
 
 _UndRow = namedtuple("_UndRow", ["u", "v"])
 
@@ -1155,7 +850,7 @@ def _und_rows_py(rows: list) -> list:
     """Driver spelling of :func:`_simple_undirected` over probed raw edge
     rows: least/greatest endpoint ordering, NULL endpoints and self-loops
     dropped, exact dedup — bit-identical to the distributed
-    distinct for the :data:`_PY_ORDERED_SIMPLE` types (the only ones the
+    distinct for the :data:`PY_ORDERED_SIMPLE` types (the only ones the
     caller dispatches here)."""
     s = set()
     for r in rows:
@@ -1164,43 +859,6 @@ def _und_rows_py(rows: list) -> list:
             continue
         s.add((a, b) if a <= b else (b, a))
     return [_UndRow(u, v) for u, v in s]
-
-
-def _is_local_plan(df: DataFrame) -> bool:
-    """True when the frame's optimized logical plan is a driver-local
-    relation (VALUES literal / fully constant-folded) — collecting it
-    schedules no job, so probe-style dispatches can skip the defensive
-    checkpoint. Best-effort (py4j introspection): False on any doubt,
-    which only costs the checkpoint job, never correctness."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        return plan.getClass().getName().endswith("LocalRelation")
-    except Exception:  # noqa: BLE001 — conservative fallback
-        return False
-
-
-def _plan_output_aggregated(df: DataFrame) -> bool:
-    """True when the frame's optimized plan is an Aggregate (possibly
-    under Project/Filter nodes) — its output cardinality is the GROUP
-    count, which for the graph callers (nation-pair / domain-pair edge
-    aggregates) is bounded far below the upstream fact table, so an
-    eager checkpoint of it is storage-safe at any input scale. A
-    ``limit`` probe over an Aggregate must run the FULL aggregation
-    anyway (no pushdown through the blocking operator), which is exactly
-    why those inputs are checkpointed before probing. Best-effort (py4j
-    introspection): False on any doubt, which routes the caller to the
-    no-checkpoint probe — never a correctness decision."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        for _ in range(8):
-            name = plan.getClass().getSimpleName()
-            if name in ("Project", "Filter"):
-                plan = plan.child()
-                continue
-            return name == "Aggregate"
-        return False
-    except Exception:  # noqa: BLE001 — conservative fallback
-        return False
 
 
 def _und_probe(
@@ -1236,19 +894,19 @@ def _und_probe(
     ).schema["u"].dataType
     if driver_threshold <= 0:
         return _simple_undirected(edges), None, utype
-    if utype.simpleString() in _PY_ORDERED_SIMPLE:
+    if utype.simpleString() in PY_ORDERED_SIMPLE:
         proj = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        if _is_local_plan(proj):
+        if is_local_plan(proj):
             # a driver-built local relation (e.g. the sparsify fast
             # path's VALUES output): probing collects straight off the
             # driver — LocalTableScanExec.executeCollect schedules NO
             # job — so the checkpoint below would be pure overhead
-            rows = _probe_rows(proj, driver_threshold)
+            rows = probe_rows(proj, driver_threshold)
             if rows is not None:
                 return None, _und_rows_py(rows), utype
             und = _simple_undirected(proj)
-            return und, _probe_rows(und, driver_threshold), utype
-        if _plan_output_aggregated(proj):
+            return und, probe_rows(und, driver_threshold), utype
+        if plan_output_aggregated(proj):
             # aggregate upstream (the trade/domain edge frames): a limit
             # probe would run the FULL aggregation, so materialize it
             # ONCE (output bounded by the group count — storage-safe),
@@ -1257,13 +915,13 @@ def _und_probe(
             # path consumed it, the distributed path re-reads it exactly
             # once into the normalized checkpoint)
             ck = proj.localCheckpoint(eager=True)
-            rows = _probe_rows(ck, driver_threshold)
+            rows = probe_rows(ck, driver_threshold)
             if rows is not None:
-                _free_local_checkpoint(ck)
+                free_local_checkpoint(ck)
                 return None, _und_rows_py(rows), utype
             und = _simple_undirected(ck)
-            _free_local_checkpoint(ck)
-            return und, _probe_rows(und, driver_threshold), utype
+            free_local_checkpoint(ck)
+            return und, probe_rows(und, driver_threshold), utype
         # non-aggregate upstream (raw edge scans, persisted RDDs): the
         # limit probe short-circuits — it reads ~threshold rows whatever
         # the input size — so probe WITHOUT a checkpoint: a raw eager
@@ -1273,46 +931,13 @@ def _und_probe(
         # threshold the rows are in hand (upstream ran once); above it
         # the probe cost is bounded and the normalization pass runs the
         # upstream exactly once, as the legacy shape did.
-        rows = _probe_rows(proj, driver_threshold)
+        rows = probe_rows(proj, driver_threshold)
         if rows is not None:
             return None, _und_rows_py(rows), utype
         und = _simple_undirected(proj)
-        return und, _probe_rows(und, driver_threshold), utype
+        return und, probe_rows(und, driver_threshold), utype
     und = _simple_undirected(edges)
-    return und, _probe_rows(und, driver_threshold), utype
-
-
-_WUndRow = namedtuple("_WUndRow", ["u", "v", "w"])
-_MUndRow = namedtuple("_MUndRow", ["u", "v", "w", "cu", "cv"])
-
-
-def _wund_rows_py(erows: list, nodeset: set | None) -> list | None:
-    """Driver spelling of the canonical WEIGHTED undirected aggregate
-    (label_propagation / modularity contract): least/greatest endpoint
-    ordering, NULL endpoints and self-loops dropped, per-pair weights
-    SUMMED with SQL semantics (NULLs skipped; all-NULL pair → NULL),
-    optionally restricted to ``nodeset`` endpoints (the subgraph
-    semi-join). Returns None when any partial sum leaves int64 — the
-    engine's BIGINT SUM would ANSI-abort there, so the caller must fall
-    back to the distributed spelling rather than silently succeed with
-    Python bignums."""
-    agg: dict = {}
-    for r in erows:
-        a, b, w = r[0], r[1], r[2]
-        if a is None or b is None or a == b:
-            continue
-        if nodeset is not None and (a not in nodeset or b not in nodeset):
-            continue
-        key = (a, b) if a <= b else (b, a)
-        if w is not None:
-            cur = agg.get(key)
-            s = w if cur is None else cur + w
-            if not (-(2**63) <= s < 2**63):
-                return None
-            agg[key] = s
-        else:
-            agg.setdefault(key, None)
-    return [_WUndRow(u, v, w) for (u, v), w in agg.items()]
+    return und, probe_rows(und, driver_threshold), utype
 
 
 def _simple_undirected(edges: DataFrame) -> DataFrame:
@@ -1343,22 +968,6 @@ def _simple_undirected(edges: DataFrame) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-
-
-def _free_local_checkpoint(df: DataFrame) -> None:
-    """Best-effort release of a superseded ``localCheckpoint``'s storage
-    blocks. A localCheckpoint() frame's plan is a ``LogicalRDD`` over the
-    persisted internal RDD; unpersisting that RDD frees its blocks
-    immediately instead of holding them until the context dies — on a
-    deep iterative loop (k_core peel rounds) the superseded rounds would
-    otherwise accumulate one retained RDD per round. JVM-internal
-    accessor via py4j, so strictly best-effort: any failure leaves the
-    blocks to normal GC (correctness never depends on the release —
-    callers only free frames no longer referenced by any live plan)."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
 
 
 def triangle_counts(
@@ -1417,7 +1026,7 @@ def triangle_counts(
         und = edges
         utype = und.schema["u"].dataType
         urows = (
-            _probe_rows(und, driver_threshold)
+            probe_rows(und, driver_threshold)
             if driver_threshold > 0
             else None
         )
@@ -1436,8 +1045,8 @@ def triangle_counts(
         if und is not None and not pre_normalized:
             # this call owns the normalization checkpoint and has fully
             # consumed it; a shared pre-normalized frame stays persisted
-            _free_local_checkpoint(und)
-        return _local_df(
+            free_local_checkpoint(und)
+        return local_df(
             edges.sparkSession, sorted(tri.items()), schema
         )
     deg = (
@@ -1561,8 +1170,8 @@ def clustering_coefficients(
             for n, d in sorted(degm.items())
         ]
         if und is not None:
-            _free_local_checkpoint(und)
-        return _local_df(edges.sparkSession, rows, schema)
+            free_local_checkpoint(und)
+        return local_df(edges.sparkSession, rows, schema)
     deg = (
         und.select(F.col("u").alias("node"))
         .unionByName(und.select(F.col("v").alias("node")))
@@ -1619,7 +1228,7 @@ def bfs_hops(
     graphs — the small-world property); the convergence probe is ONE
     cheap ``isEmpty`` on the already-checkpointed new-nodes frame, and
     superseded rounds' checkpoints are released as they die
-    (:func:`_free_local_checkpoint`, the k_core storage contract).
+    (:func:`free_local_checkpoint`, the k_core storage contract).
     ``max_iter`` is a loud backstop: non-convergence raises.
     """
     src_proj = sources.select(
@@ -1635,13 +1244,13 @@ def bfs_hops(
     # jobs on a 25-node graph
     und, urows, utype = _und_probe(edges, driver_threshold)
     srows = (
-        _distinct_probe_rows(src_proj, driver_threshold)
+        distinct_probe_rows(src_proj, driver_threshold)
         if urows is not None
         else None
     )
     if srows is not None:
         if und is not None:
-            _free_local_checkpoint(und)
+            free_local_checkpoint(und)
         return _bfs_driver(urows, srows, utype, dist0, max_iter)
     if und is None:
         # driver-eligible edges but a seed set above threshold (>100k
@@ -1655,7 +1264,7 @@ def bfs_hops(
         .localCheckpoint(eager=True)
     )
     # the one-directional frame is fully consumed by sym's materialization
-    _free_local_checkpoint(und)
+    free_local_checkpoint(und)
     dist = dist0.localCheckpoint(eager=True)
     frontier = dist
     for i in range(1, max_iter + 1):
@@ -1678,9 +1287,9 @@ def bfs_hops(
         # the moment the new union materializes (this round's discovery
         # already consumed them); round 1's frontier IS the seed dist, so
         # guard against the double free
-        _free_local_checkpoint(old_dist)
+        free_local_checkpoint(old_dist)
         if old_frontier is not old_dist:
-            _free_local_checkpoint(old_frontier)
+            free_local_checkpoint(old_frontier)
     raise RuntimeError(
         f"bfs_hops did not converge within max_iter={max_iter} rounds;"
         " raise max_iter (rounds are bounded by the seed set's graph"
@@ -1734,34 +1343,7 @@ def _bfs_driver(
         if discovered
         else dist0.schema
     )
-    return _local_df(dist0.sparkSession, sorted(hops.items()), schema)
-
-
-_SsspERow = namedtuple("_SsspERow", ["src", "dst", "w"])
-
-
-def _dagg_rows_py(erows: list) -> list | None:
-    """Driver spelling of the DIRECTED canonical aggregate shared by
-    pagerank_fixedpoint / hits_fixedpoint: NULL endpoints dropped,
-    per-(src, dst) weights SUMMED with SQL semantics (NULLs skipped;
-    all-NULL pair → NULL, which the callers route to the engine).
-    Returns None when any partial sum leaves int64 — the engine's
-    BIGINT SUM would ANSI-abort there (the _wund_rows_py contract)."""
-    agg: dict = {}
-    for r in erows:
-        s, d, w = r[0], r[1], r[2]
-        if s is None or d is None:
-            continue
-        key = (s, d)
-        if w is not None:
-            cur = agg.get(key)
-            t = w if cur is None else cur + w
-            if not (-(2**63) <= t < 2**63):
-                return None
-            agg[key] = t
-        else:
-            agg.setdefault(key, None)
-    return [_SsspERow(s, d, w) for (s, d), w in agg.items()]
+    return local_df(dist0.sparkSession, sorted(hops.items()), schema)
 
 
 def sssp_weighted(
@@ -1796,94 +1378,33 @@ def sssp_weighted(
     longest shortest-path EDGE COUNT (small-world graphs: single
     digits); convergence is one ``isEmpty`` probe on the already-
     checkpointed improvement frame; superseded checkpoints are released
-    (:func:`_free_local_checkpoint`). ``max_iter`` is the loud backstop.
+    (:func:`free_local_checkpoint`). ``max_iter`` is the loud backstop.
     """
     if len(edges.columns) < 3:
         raise ValueError(
             "edges needs (src, dst, weight) columns — for unit costs pass"
             " F.lit(1) as the weight"
         )
-    src, dst, w = edges.columns[:3]
-    ecast = edges.select(
-        F.col(src).alias("src"),
-        F.col(dst).alias("dst"),
-        F.col(w).cast("long").alias("w"),
-    )
+    # canonical MIN aggregate per directed pair, self-loops and NULL
+    # endpoints dropped; the weight guard and the frontier Bellman-Ford
+    # run in Python when the aggregate and the source set fit
+    ew = weighted_edges(edges, driver_threshold, "min")
     src_proj = sources.select(
         F.col(sources.columns[0]).alias("node")
     ).filter(F.col("node").isNotNull())
     dist0 = src_proj.distinct().select(
         "node", F.lit(0).cast("long").alias("dist")
     )
-    # fully-local fast path (the label_propagation discipline): a
-    # driver-built local relation (e.g. x_sssp_trade's VALUES cost
-    # frame) collects job-free — the min-aggregation canonicalization,
-    # the weight guard and the frontier Bellman-Ford all run in Python,
-    # skipping the eager checkpoint + probe jobs entirely. NULL weights
-    # route to the engine (SQL MIN NULL-skipping semantics).
-    if driver_threshold > 0 and _is_local_plan(ecast):
-        raw = ecast.limit(driver_threshold + 1).collect()
-        if len(raw) <= driver_threshold:
-            agg: dict = {}
-            nullw = False
-            for r in raw:
-                if r.src is None or r.dst is None or r.src == r.dst:
-                    continue
-                if r.w is None:
-                    nullw = True
-                    break
-                key = (r.src, r.dst)
-                cur = agg.get(key)
-                if cur is None or r.w < cur:
-                    agg[key] = r.w
-            if not nullw:
-                mn = min(agg.values(), default=None)
-                if mn is not None and mn <= 0:
-                    raise ValueError(
-                        f"edge weights must be positive (min={mn})"
-                    )
-                srows = _distinct_probe_rows(src_proj, driver_threshold)
-                if srows is not None:
-                    erows = [
-                        _SsspERow(s, d, wv) for (s, d), wv in agg.items()
-                    ]
-                    return _sssp_driver(erows, srows, ecast, dist0, max_iter)
-    e = (
-        ecast.filter(
-            F.col("src").isNotNull()
-            & F.col("dst").isNotNull()
-            & (F.col("src") != F.col("dst"))
-        )
-        .groupBy("src", "dst")
-        .agg(F.min("w").alias("w"))
-        .localCheckpoint(eager=True)
-    )
-    # one-job dispatch probe: weight guard + frontier Bellman-Ford in
-    # Python over the probe rows (same checks, same messages, same
-    # round/raise structure)
-    erows = (
-        _probe_rows(e, driver_threshold)
-        if driver_threshold > 0
+    weight_guard(ew, ew.rows)
+    srows = (
+        distinct_probe_rows(src_proj, driver_threshold)
+        if ew.rows is not None
         else None
     )
-    if erows is not None and any(r.w is None for r in erows):
-        erows = None  # all-NULL-weight pairs: engine MIN semantics
-    if erows is not None:
-        mn = min((r.w for r in erows), default=None)
-        if mn is not None and mn <= 0:
-            raise ValueError(f"edge weights must be positive (min={mn})")
-        srows = (
-            _distinct_probe_rows(src_proj, driver_threshold)
-            if driver_threshold > 0
-            else None
-        )
-        if srows is not None:
-            _free_local_checkpoint(e)
-            return _sssp_driver(erows, srows, e, dist0, max_iter)
-    else:
-        wb = e.agg(F.min("w").alias("mn")).first()
-        if wb.mn is not None and wb.mn <= 0:
-            raise ValueError(f"edge weights must be positive (min={wb.mn})")
+    if srows is not None:
+        ew.free()
+        return _sssp_driver(ew.rows, srows, ew.plan, dist0, max_iter)
+    e = ew.frame
     dist = dist0.localCheckpoint(eager=True)
     frontier = dist
     for _ in range(max_iter):
@@ -1910,9 +1431,9 @@ def sssp_weighted(
             .localCheckpoint(eager=True)
         )
         frontier = improved
-        _free_local_checkpoint(old_dist)
+        free_local_checkpoint(old_dist)
         if old_frontier is not old_dist:
-            _free_local_checkpoint(old_frontier)
+            free_local_checkpoint(old_frontier)
     raise RuntimeError(
         f"sssp_weighted did not converge within max_iter={max_iter} rounds;"
         " raise max_iter (rounds are bounded by the longest shortest-path"
@@ -1968,7 +1489,7 @@ def _sssp_driver(
         if discovered
         else dist0.schema
     )
-    return _local_df(e.sparkSession, sorted(dist.items()), schema)
+    return local_df(e.sparkSession, sorted(dist.items()), schema)
 
 
 def k_core(
@@ -1997,7 +1518,7 @@ def k_core(
     in the same pass — two separate ``count()`` actions would double the
     per-round job-scheduling latency on deep peels). Superseded rounds'
     checkpoints are released as soon as the next round materializes
-    (:func:`_free_local_checkpoint`), so retained storage is O(1) rounds,
+    (:func:`free_local_checkpoint`), so retained storage is O(1) rounds,
     not O(peel depth). Deterministic: the surviving set is unique (the
     k-core is closed under order of deletions — a classic invariant — so
     no tie-breaking is even needed). ``max_iter`` is a loud configuration
@@ -2026,8 +1547,8 @@ def k_core(
             surv = {n for n, d in degm.items() if d >= k}
             if len(surv) == len(degm):
                 if und is not None:
-                    _free_local_checkpoint(und)
-                return _local_df(
+                    free_local_checkpoint(und)
+                return local_df(
                     edges.sparkSession,
                     sorted((n, degm[n]) for n in surv),
                     schema,
@@ -2039,7 +1560,7 @@ def k_core(
             # the middle-case dispatch checkpoint (raw above threshold,
             # deduped fits) is owned here — free it before raising so a
             # non-convergence backstop doesn't leak its storage blocks
-            _free_local_checkpoint(und)
+            free_local_checkpoint(und)
         raise RuntimeError(
             f"k_core did not converge within max_iter={max_iter} peel"
             " rounds; raise max_iter (rounds are bounded by the graph's"
@@ -2058,7 +1579,7 @@ def k_core(
         # one materializes (nothing references it: survivors/und of the
         # NEW round read only the new deg and the current und)
         if prev_deg is not None:
-            _free_local_checkpoint(prev_deg)
+            free_local_checkpoint(prev_deg)
         prev_deg = deg
         survivors = deg.filter(F.col("degree") >= k)
         n_all, n_surv = deg.agg(
@@ -2085,7 +1606,7 @@ def k_core(
         # itself checkpointed (prev_und starts None: round 1's input und
         # may be shared via _simple_undirected's contract)
         if prev_und is not None:
-            _free_local_checkpoint(prev_und)
+            free_local_checkpoint(prev_und)
         prev_und = new_und
         und = new_und
     raise RuntimeError(
@@ -2138,7 +1659,7 @@ def label_propagation(
     combinable (node, label) weight sum + a deterministic struct-max
     argmax — two exchanges per round on the label-mass aggregate, the
     checkpointed edge list never reshuffles; superseded label
-    checkpoints are released (:func:`_free_local_checkpoint`).
+    checkpoints are released (:func:`free_local_checkpoint`).
     """
     if len(edges.columns) < 3:
         raise ValueError(
@@ -2147,93 +1668,38 @@ def label_propagation(
         )
     if n_iter < 0:
         raise ValueError(f"n_iter must be >= 0 (got {n_iter})")
-    src, dst, w = edges.columns[:3]
     nd_proj = nodes.select(
         F.col(nodes.columns[0]).cast(node_type).alias("node")
     ).filter(F.col("node").isNotNull())
     nd_plan = nd_proj.distinct()
-    # fully-local fast path (optimization round 1): when the edge input
-    # is a driver-built local relation (the sparsify fast path's VALUES
-    # output), collecting it schedules NO job — the canonical weighted
-    # aggregate, the subgraph restriction and the whole loop run in
-    # Python, replacing the node checkpoint + und checkpoint + two probe
-    # jobs (measured ~0.55 s / 3 jobs for the und checkpoint alone over
-    # a 625-row local input). _wund_rows_py returns None on any int64
-    # sum overflow, falling back to the engine's ANSI-abort semantics.
-    ecast = edges.select(
-        F.col(src).cast(node_type).alias("src"),
-        F.col(dst).cast(node_type).alias("dst"),
-        F.col(w).cast("long").alias("w"),
-    )
-    if driver_threshold > 0 and _is_local_plan(ecast):
-        nrows = _distinct_probe_rows(nd_proj, driver_threshold)
-        if nrows is not None:
-            if len(nrows) == 0:
-                return nd_plan.select(
-                    "node", F.col("node").cast("long").alias("community")
-                )
-            erows = ecast.limit(driver_threshold + 1).collect()
-            if len(erows) <= driver_threshold:
-                urows = _wund_rows_py(erows, {r.node for r in nrows})
-                if (
-                    urows is not None
-                    and len(urows) <= driver_threshold
-                    # all-NULL-weight pairs sum to NULL; the engine's
-                    # NULL-skipping MIN/SUM define that behavior, so
-                    # those inputs take the distributed spelling
-                    and not any(r.w is None for r in urows)
-                ):
-                    _check_weights_rows(r.w for r in urows)
-                    return _lpa_driver(urows, nrows, nd_plan, n_iter)
-    node_df = nd_plan.localCheckpoint(eager=True)
-    # eager checkpoint BEFORE the first action (the hits_fixedpoint
-    # discipline): the weight guard, the size probe and the driver
-    # collect below are three separate actions — without the pin each
-    # would re-run the caller's upstream derivation (typically the
-    # fact-table aggregation, the expensive part; measured 4.7 → 2.0 s
-    # on x_communities_trade)
-    und = (
-        edges.select(
-            F.least(
-                F.col(src).cast(node_type), F.col(dst).cast(node_type)
-            ).alias("u"),
-            F.greatest(
-                F.col(src).cast(node_type), F.col(dst).cast(node_type)
-            ).alias("v"),
-            F.col(w).cast("long").alias("w"),
-        )
-        .filter(
-            F.col("u").isNotNull()
-            & F.col("v").isNotNull()
-            & (F.col("u") != F.col("v"))
-        )
-        .groupBy("u", "v")
-        .agg(F.sum("w").alias("w"))
-        .join(node_df.select(F.col("node").alias("u")), "u", "left_semi")
-        .join(node_df.select(F.col("node").alias("v")), "v", "left_semi")
-        .localCheckpoint(eager=True)
-    )
-    # one-job dispatch probe (the pagerank_fixedpoint discipline): the
-    # probe rows ARE the collected inputs on the driver path; the weight
-    # guard runs in Python over them — same check, same message
     nrows = (
-        _probe_rows(node_df, driver_threshold)
+        distinct_probe_rows(nd_proj, driver_threshold)
         if driver_threshold > 0
         else None
     )
-    if nrows is not None and len(nrows) == 0:
-        return node_df.select(
+    if nrows == []:
+        return nd_plan.select(
             "node", F.col("node").cast("long").alias("community")
         )
-    urows = _probe_rows(und, driver_threshold) if nrows is not None else None
-    if urows is not None and any(r.w is None for r in urows):
-        urows = None  # NULL-weight pairs: engine semantics (see above)
+    # the SQL spelling restricts both endpoints to the node set (the
+    # subgraph contract); the node checkpoint it joins is built only off
+    # the fully-local path — it is also the distributed loop's node set
+    ew = weighted_edges(
+        edges,
+        driver_threshold if nrows is not None else 0,
+        "und",
+        node_type,
+        nodes=lambda: nd_plan.localCheckpoint(eager=True),
+    )
+    urows = None
+    if ew.rows is not None:
+        ns = {r.node for r in nrows}
+        urows = [r for r in ew.rows if r.u in ns and r.v in ns]
+    weight_guard(ew, urows)
     if urows is not None:
-        _check_weights_rows(r.w for r in urows)
-        return _lpa_driver(urows, nrows, node_df, n_iter)
-    wb = und.agg(F.min("w").alias("mn")).first()
-    if wb.mn is not None and wb.mn <= 0:
-        raise ValueError(f"edge weights must be positive (min={wb.mn})")
+        return _lpa_driver(urows, nrows, nd_plan, n_iter)
+    und = ew.frame
+    node_df = ew.nodes
     n = node_df.count()
     if n == 0:
         return node_df.select(
@@ -2279,7 +1745,7 @@ def label_propagation(
             )
             .localCheckpoint(eager=True)
         )
-        _free_local_checkpoint(old)
+        free_local_checkpoint(old)
     return lab.select("node", F.col("label").alias("community"))
 
 
@@ -2307,7 +1773,7 @@ def _lpa_driver(
             for v, sc in scores.items()
         }
     out_type = dict(node_df.dtypes)["node"]
-    return _local_df(
+    return local_df(
         spark,
         [(v, lab[v]) for v in nodes],
         f"node {out_type}, community long",
@@ -2354,7 +1820,6 @@ def modularity(
             "edges needs (src, dst, weight) columns — for an unweighted"
             " graph pass F.lit(1) as the weight"
         )
-    src, dst, w = edges.columns[:3]
     lab = labels.select(
         F.col(labels.columns[0]).cast(node_type).alias("node"),
         F.col(labels.columns[1]).cast("long").alias("community"),
@@ -2364,7 +1829,7 @@ def modularity(
     # the probe rows (same check, same message) and — if the joined edge
     # aggregate also fits — the whole Q decomposition does too
     lrows = (
-        _probe_rows(lab, driver_threshold)
+        probe_rows(lab, driver_threshold)
         if driver_threshold > 0
         else None
     )
@@ -2385,73 +1850,28 @@ def modularity(
                 "labels must map each node to exactly one community"
                 f" (duplicates: {[r.node for r in dup.limit(5).collect()]})"
             )
-    # fully-local fast path (the label_propagation discipline): when the
-    # edge input is a driver-built local relation (sparsify VALUES) and
-    # the label table is already in hand, the canonical weighted
-    # aggregate + both label joins run in Python — the distributed und
-    # checkpoint over a 625-row local input measured ~0.5 s / 3 jobs.
-    # _wund_rows_py returns None on int64 sum overflow (engine ANSI
-    # semantics preserved via the distributed fallback).
-    if lrows is not None:
-        ecast = edges.select(
-            F.col(src).cast(node_type).alias("src"),
-            F.col(dst).cast(node_type).alias("dst"),
-            F.col(w).cast("long").alias("w"),
-        )
-        if _is_local_plan(ecast):
-            erows = ecast.limit(driver_threshold + 1).collect()
-            if len(erows) <= driver_threshold:
-                pairs = _wund_rows_py(erows, None)
-                if (
-                    pairs is not None
-                    and len(pairs) <= driver_threshold
-                    # all-NULL-weight pairs: engine NULL-skipping
-                    # semantics — distributed spelling (the LPA rule)
-                    and not any(p.w is None for p in pairs)
-                ):
-                    labm = {r.node: r.community for r in lrows}
-                    urows = [
-                        _MUndRow(p.u, p.v, p.w, labm[p.u], labm[p.v])
-                        for p in pairs
-                        if p.u in labm and p.v in labm
-                    ]
-                    return _modularity_driver(urows, lrows, lab, scale)
-    und = (
-        edges.select(
-            F.least(
-                F.col(src).cast(node_type), F.col(dst).cast(node_type)
-            ).alias("u"),
-            F.greatest(
-                F.col(src).cast(node_type), F.col(dst).cast(node_type)
-            ).alias("v"),
-            F.col(w).cast("long").alias("w"),
-        )
-        .filter(
-            F.col("u").isNotNull()
-            & F.col("v").isNotNull()
-            & (F.col("u") != F.col("v"))
-        )
-        .groupBy("u", "v")
-        .agg(F.sum("w").alias("w"))
-        .join(
-            lab.select(F.col("node").alias("u"), F.col("community").alias("cu")),
-            "u",
-        )
-        .join(
-            lab.select(F.col("node").alias("v"), F.col("community").alias("cv")),
-            "v",
-        )
-        .localCheckpoint(eager=True)
+    # the SQL spelling joins each endpoint's community (cu / cv); edges
+    # whose endpoint has no label row drop (the subgraph contract)
+    ew = weighted_edges(
+        edges,
+        driver_threshold if lrows is not None else 0,
+        "und",
+        node_type,
+        nodes=lambda: lab.select("node", F.col("community").alias("c")),
     )
-    urows = _probe_rows(und, driver_threshold) if lrows is not None else None
-    if urows is not None and any(r.w is None for r in urows):
-        urows = None  # NULL-weight pairs: engine semantics (see above)
+    urows = labm = None
+    if ew.rows is not None:
+        labm = {r.node: r.community for r in lrows}
+        urows = [r for r in ew.rows if r.u in labm and r.v in labm]
+    m = weight_guard(ew, urows).tw or 0
+    if (2 * m) ** 2 * scale >= 2**63:
+        raise ValueError(
+            f"fixed-point scale overflows int64: need (2m)^2*scale"
+            f" ((2*{m})^2*{scale}) below 2^63 — lower scale or"
+            " pre-normalize weights"
+        )
     if urows is not None:
-        return _modularity_driver(urows, lrows, lab, scale)
-    wb = und.agg(F.min("w").alias("mn"), F.sum("w").alias("m")).first()
-    if wb.mn is not None and wb.mn <= 0:
-        raise ValueError(f"edge weights must be positive (min={wb.mn})")
-    m = wb.m or 0
+        return _modularity_driver(urows, labm, lab, scale, m)
     if m == 0:
         return lab.select("community").distinct().select(
             "community",
@@ -2459,12 +1879,7 @@ def modularity(
             F.lit(0).cast("long").alias("d_tot"),
             F.lit(0).cast("long").alias("contrib_fp"),
         )
-    if (2 * m) ** 2 * scale >= 2**63 or 2 * m * 2 * m * scale >= 2**63:
-        raise ValueError(
-            f"fixed-point scale overflows int64: need (2m)^2*scale"
-            f" ((2*{m})^2*{scale}) below 2^63 — lower scale or"
-            " pre-normalize weights"
-        )
+    und = ew.frame
     w_in = (
         und.filter(F.col("cu") == F.col("cv"))
         .groupBy(F.col("cu").alias("community"))
@@ -2502,50 +1917,35 @@ def modularity(
 
 
 def _modularity_driver(
-    urows: list, lrows: list, lab: DataFrame, scale: int
+    urows: list, labm: dict, lab: DataFrame, scale: int, m: int
 ) -> DataFrame:
-    """Driver fast path: the same Q decomposition over the probed
-    (u, v, w, cu, cv) edge aggregate — pure integer arithmetic, same
-    guards, same messages, bit-identical to the distributed
-    aggregations (the test suite pins both against each other).
-    SQL-semantics notes carried over exactly: a NULL community label
-    never equi-joins, so its row reports (community, 0, 0, 0); the
-    fixed-point quotient truncates toward zero (Spark DIV / DuckDB //),
-    NOT Python's flooring ``//`` — spelled with the sign split below."""
+    """Driver fast path: the same Q decomposition over the in-universe
+    canonical edge rows, with ``labm`` the node → community map and
+    ``m`` the guarded total weight — pure integer arithmetic,
+    bit-identical to the distributed aggregations (the test suite pins
+    both against each other). SQL-semantics notes carried over exactly:
+    a NULL community label never equi-joins, so its row reports
+    (community, 0, 0, 0); the fixed-point quotient truncates toward zero
+    (Spark DIV / DuckDB //), NOT Python's flooring ``//`` — spelled with
+    the sign split below."""
     spark = lab.sparkSession
-    mn = None
-    m = 0
-    for r in urows:
-        w = r.w
-        if mn is None or w < mn:
-            mn = w
-        m += w
-    if mn is not None and mn <= 0:
-        raise ValueError(f"edge weights must be positive (min={mn})")
-    comms = sorted(
-        {r.community for r in lrows}, key=lambda c: (c is None, c)
-    )
+    comms = sorted(set(labm.values()), key=lambda c: (c is None, c))
     out_schema = "community long, w_in long, d_tot long, contrib_fp long"
     if m == 0:
-        return _local_df(spark, [(c, 0, 0, 0) for c in comms], out_schema)
-    if (2 * m) ** 2 * scale >= 2**63 or 2 * m * 2 * m * scale >= 2**63:
-        raise ValueError(
-            f"fixed-point scale overflows int64: need (2m)^2*scale"
-            f" ((2*{m})^2*{scale}) below 2^63 — lower scale or"
-            " pre-normalize weights"
-        )
+        return local_df(spark, [(c, 0, 0, 0) for c in comms], out_schema)
     w_in: dict = {}
     d_tot: dict = {}
     for r in urows:
+        cu, cv = labm[r.u], labm[r.v]
         # cu == cv under SQL semantics: NULL labels compare unknown —
         # never intra; NULL groupBy keys aggregate but never re-join,
         # so skipping them entirely reproduces the coalesce(_, 0) rows
-        if r.cu is not None:
-            if r.cu == r.cv:
-                w_in[r.cu] = w_in.get(r.cu, 0) + r.w
-            d_tot[r.cu] = d_tot.get(r.cu, 0) + r.w
-        if r.cv is not None:
-            d_tot[r.cv] = d_tot.get(r.cv, 0) + r.w
+        if cu is not None:
+            if cu == cv:
+                w_in[cu] = w_in.get(cu, 0) + r.w
+            d_tot[cu] = d_tot.get(cu, 0) + r.w
+        if cv is not None:
+            d_tot[cv] = d_tot.get(cv, 0) + r.w
     two_m = 2 * m
     den = two_m * two_m
     rows = []
@@ -2555,7 +1955,7 @@ def _modularity_driver(
         num = (2 * wi * two_m - dt * dt) * scale
         q = num // den if num >= 0 else -((-num) // den)
         rows.append((c, wi, dt, q))
-    return _local_df(spark, rows, out_schema)
+    return local_df(spark, rows, out_schema)
 
 
 # -- deterministic random walks (DeepWalk-style corpus generation) ----------
@@ -2641,8 +2041,8 @@ def random_walks(
     )
     if urows is not None:
         if und is not None:
-            _free_local_checkpoint(und)
-        return _local_df(
+            free_local_checkpoint(und)
+        return local_df(
             spark, _walks_driver(urows, walk_len, num_walks), out_schema
         )
     adj = und.selectExpr("u AS node", "v AS nbr").unionByName(
@@ -2865,8 +2265,8 @@ def node2vec_walks(
     )
     if urows is not None:
         if und is not None:
-            _free_local_checkpoint(und)
-        return _local_df(
+            free_local_checkpoint(und)
+        return local_df(
             spark,
             _node2vec_driver(
                 urows, walk_len, num_walks, w_return, w_common, w_out

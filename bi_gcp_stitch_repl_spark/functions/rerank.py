@@ -276,7 +276,7 @@ def mmr_rerank_scored(
         del remaining[best_id]
     # one-slice local relation: createDataFrame on a plain list would
     # parallelize ≤ k rows into defaultParallelism near-empty tasks
-    # (same rationale as functions/graph._local_df)
+    # (same rationale as functions/dispatch.local_df)
     return spark.createDataFrame(
         spark.sparkContext.parallelize(selected, 1), _SCHEMA
     )

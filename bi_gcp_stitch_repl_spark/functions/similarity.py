@@ -665,26 +665,6 @@ SQDIST = (
 )
 
 
-def sqdist_sql(a: str, b: str, dim: int | None = None) -> str:
-    """:data:`SQDIST` with an optional guarded unrolled spelling (the
-    :func:`dot_sql` discipline): bit-identical left-fold doubles, flat
-    codegen expression when both arrays are exactly ``dim`` long, fold
-    fallback otherwise. Inputs are double arrays (callers cast first),
-    matching SQDIST's cast-free lambda."""
-    fold = SQDIST.format(a=a, b=b)
-    if dim is None:
-        return fold
-    unr = _unrolled_lfold(
-        f"((try_element_at({a}, {{i}}) - try_element_at({b}, {{i}}))"
-        f" * (try_element_at({a}, {{i}}) - try_element_at({b}, {{i}})))",
-        dim,
-    )
-    return (
-        f"(CASE WHEN size({a}) = {dim} AND size({b}) = {dim}"
-        f" THEN {unr} ELSE {fold} END)"
-    )
-
-
 def _kmeans_rows_ok(rows: list) -> bool:
     """Driver-path gate: distinct non-NULL ids, non-NULL uniform-length
     vectors, every element a finite float — the domain where the Python
@@ -813,10 +793,10 @@ def kmeans_lloyd(
     ):
         rows = emb.limit(driver_threshold + 1).collect()
         if len(rows) <= driver_threshold and _kmeans_rows_ok(rows):
-            from .graph import _local_df
+            from .dispatch import local_df
 
             out_type = emb.schema[id_col].dataType.simpleString()
-            return _local_df(
+            return local_df(
                 corpus.sparkSession,
                 _kmeans_lloyd_driver(rows, k, n_iter),
                 f"{id_col} {out_type}, cluster bigint",

@@ -1776,6 +1776,28 @@ DSIR_SCALE = 1_000_000_000
 _TOKS_SPARK = "filter(split(lower(trim(text)), '\\\\s+'), t -> t <> '')"
 
 
+def _dsir_ratio_rows(brows: list) -> list | None:
+    """Driver fit of the DSIR bucket model: ``(bucket, q9)`` per
+    ``(bucket, cr, ct)`` row, or None when the distributed spelling must
+    rule — a total outside BIGINT (the engine's ``sum`` of the BIGINT
+    counts would abort), a product at or past the decimal(38,0)
+    envelope, or a quotient past the final BIGINT cast."""
+    r_tot = sum(r.cr for r in brows)
+    t_tot = sum(r.ct for r in brows)
+    if r_tot >= 2**63 or t_tot >= 2**63:
+        return None
+    lim = 10**38
+    qrows = []
+    for r in brows:
+        num = (r.ct + 1) * (r_tot + DSIR_BUCKETS) * DSIR_SCALE
+        den = (r.cr + 1) * (t_tot + DSIR_BUCKETS)
+        q = num // den
+        if num >= lim or den >= lim or q >= 2**63:
+            return None
+        qrows.append((r.bucket, q))
+    return qrows
+
+
 @register(
     "x_dsir_weights",
     oracle=f"""
@@ -1897,28 +1919,15 @@ def x_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ratio table embeds as a broadcastable VALUES local relation,
     # replacing the tot aggregate job, its 1-row broadcast and the
     # bc-recomputing ratio broadcast (the fit previously re-ran bc for
-    # BOTH). Any product at or past 10^38 falls back to the distributed
-    # spelling so the engine's decimal(38,0) overflow behavior rules.
-    from ..functions.graph import _local_df
+    # BOTH). Any total outside BIGINT or product at or past 10^38 falls
+    # back to the distributed spelling so the engine's overflow behavior
+    # rules (_dsir_ratio_rows).
+    from ..functions.dispatch import local_df
     from pyspark.sql.types import LongType, StructField, StructType
 
-    brows = bc.collect()  # ≤ DSIR_BUCKETS rows by construction
-    r_tot = sum(r.cr for r in brows)
-    t_tot = sum(r.ct for r in brows)
-    lim = 10**38
-    qrows: list | None = []
-    for r in brows:
-        num = (r.ct + 1) * (r_tot + DSIR_BUCKETS) * DSIR_SCALE
-        den = (r.cr + 1) * (t_tot + DSIR_BUCKETS)
-        q = num // den
-        # num/den < 10^38 is the engine's decimal(38,0) envelope; the
-        # quotient itself must also fit the final BIGINT cast
-        if num >= lim or den >= lim or q >= 2**63:
-            qrows = None
-            break
-        qrows.append((r.bucket, q))
+    qrows = _dsir_ratio_rows(bc.collect())  # ≤ DSIR_BUCKETS rows
     if qrows is not None:
-        ratio = _local_df(
+        ratio = local_df(
             spark,
             qrows,
             StructType(

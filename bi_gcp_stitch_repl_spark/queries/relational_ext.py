@@ -1016,11 +1016,7 @@ def _trade_edge_frame(
     nothing and costs a full shuffle; the same row-count argument holds
     at 100 TB (suppkeys are ~unique within an order), where the added
     exchange would carry the whole fact table once more."""
-    from ..functions.graph import (
-        _free_local_checkpoint,
-        _local_df,
-        _probe_rows,
-    )
+    from ..functions.dispatch import free_local_checkpoint, local_df, probe_rows
 
     li, orders, cust, supp, nat = tables(
         spark, sf_dir, "lineitem", "orders", "customer", "supplier", "nation"
@@ -1035,11 +1031,11 @@ def _trade_edge_frame(
         .agg(F.count(F.lit(1)).alias("w"))
     ).localCheckpoint(eager=True)
     rows = (
-        _probe_rows(edges, driver_threshold) if driver_threshold > 0 else None
+        probe_rows(edges, driver_threshold) if driver_threshold > 0 else None
     )
     if rows is not None:
-        out = _local_df(spark, [tuple(r) for r in rows], edges.schema)
-        _free_local_checkpoint(edges)
+        out = local_df(spark, [tuple(r) for r in rows], edges.schema)
+        free_local_checkpoint(edges)
         return out, nat
     return edges, nat
 
@@ -1064,7 +1060,7 @@ def _sparsify_mean_relative(
     checkpointed frame is the POST-aggregation edge list (≤ |src|·|dst|
     distinct pairs), bounded far below the fact table at any scale.
 
-    **Driver fast path** (the graph family's ``_probe_rows`` dispatch,
+    **Driver fast path** (the ``dispatch.probe_rows`` dispatch,
     optimization round 1): when the checkpointed aggregate fits
     ``driver_threshold`` rows — the probe rows ARE the aggregate — the
     totals and the filter run in exact Python integer arithmetic and the
@@ -1081,14 +1077,14 @@ def _sparsify_mean_relative(
     aggregation provably cannot ANSI-abort where the Python total
     succeeded; mixed signs (or any bound breach) fall back to the
     distributed spelling so the engine's own overflow behavior rules."""
-    from ..functions.graph import (
-        _free_local_checkpoint,
-        _is_local_plan,
-        _local_df,
-        _probe_rows,
+    from ..functions.dispatch import (
+        free_local_checkpoint,
+        is_local_plan,
+        local_df,
+        probe_rows,
     )
 
-    local_in = _is_local_plan(edges)
+    local_in = is_local_plan(edges)
     if not local_in:
         # a driver-built VALUES input (the _trade_edge_frame fast path)
         # probes job-free — its defensive checkpoint would be the only
@@ -1096,7 +1092,7 @@ def _sparsify_mean_relative(
         edges = edges.localCheckpoint(eager=True)
     cols = ["src", "dst", "w"] if keep_weight else ["src", "dst"]
     rows = (
-        _probe_rows(edges, driver_threshold) if driver_threshold > 0 else None
+        probe_rows(edges, driver_threshold) if driver_threshold > 0 else None
     )
     if rows is not None:
         ne = len(rows)
@@ -1117,8 +1113,8 @@ def _sparsify_mean_relative(
             ]
             spark = edges.sparkSession
             if not local_in:
-                _free_local_checkpoint(edges)
-            return _local_df(spark, kept, schema)
+                free_local_checkpoint(edges)
+            return local_df(spark, kept, schema)
     tot = edges.agg(F.sum("w").alias("tw"), F.count(F.lit(1)).alias("ne"))
     return (
         edges.crossJoin(F.broadcast(tot))
@@ -1559,11 +1555,12 @@ def x_sssp_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed edge list with a map-side combinable min, convergence
     is one isEmpty probe, superseded checkpoints released (the bfs_hops
     storage contract)."""
-    from ..functions.graph import _local_df, _probe_rows, sssp_weighted
+    from ..functions.dispatch import local_df, probe_rows
+    from ..functions.graph import sssp_weighted
 
     edges, nat = _trade_edge_frame(spark, sf_dir)
     ec = None
-    rows = _probe_rows(edges, 100_000)
+    rows = probe_rows(edges, 100_000)
     if rows is not None:
         ws = [r["w"] for r in rows]
         ne = len(rows)
@@ -1582,7 +1579,7 @@ def x_sssp_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
                 and r["dst"] is not None
                 and r["src"] != r["dst"]
             ]
-            ec = _local_df(spark, kept, schema)
+            ec = local_df(spark, kept, schema)
     if ec is None:
         tot = edges.agg(
             F.sum("w").alias("tw"), F.count(F.lit(1)).alias("ne")

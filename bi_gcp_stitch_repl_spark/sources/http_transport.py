@@ -75,16 +75,6 @@ class BearerTokenAuth(AuthProvider):
 
 
 @dataclass
-class HeaderAuth(AuthProvider):
-    """Fixed API headers (reference: bexio's static Accept/Authorization)."""
-
-    fixed: dict[str, str]
-
-    def headers(self) -> dict[str, str]:
-        return dict(self.fixed)
-
-
-@dataclass
 class OAuthPasswordGrant(AuthProvider):
     """OAuth2 resource-owner-password grant with lazy fetch + 401 refresh
     (reference: ``get_access_token``, biilwerk_contracts.py:36-48)."""

@@ -191,3 +191,20 @@ def test_dsir_weights_rank_target_slice_higher(spark):
         (F.sum("sum_q9") / (F.sum("n_tokens") * F.lit(1e9))).alias("g")
     ).first()["g"]
     assert 0.99 < tot < 1.01, tot
+
+
+def test_dsir_driver_fit_declines_totals_outside_bigint():
+    """The driver fit of x_dsir_weights must decline a bucket
+    model whose raw or target token total leaves BIGINT — the
+    distributed spelling's SUM of BIGINT counts would abort there. Every
+    product below stays far inside decimal(38,0), which is all the old
+    guard checked, so it fitted this model on the driver."""
+    from collections import namedtuple
+
+    from bi_gcp_stitch_repl_spark.queries.curation import _dsir_ratio_rows
+
+    Row = namedtuple("Row", ["bucket", "cr", "ct"])
+    fits = [Row(0, 10, 4), Row(1, 6, 2)]
+    assert [b for b, _ in _dsir_ratio_rows(fits)] == [0, 1]
+    assert _dsir_ratio_rows([Row(0, 2**62, 1), Row(1, 2**62, 1)]) is None
+    assert _dsir_ratio_rows([Row(0, 2**62, 2**62), Row(1, 2**62, 2**62)]) is None

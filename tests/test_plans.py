@@ -465,7 +465,7 @@ def test_no_forced_broadcast_on_scaled_sides_in_package():
         ("functions/graph.py", "dangling"): "1-row dangling-mass aggregate",
         ("functions/graph.py", "dmn"): "1-row dangling-mass aggregate",
         ("functions/graph.py", "at"): "1-row HITS L1-normalization total",
-        ("functions/graph.py", "df"):
+        ("functions/dispatch.py", "df"):
             "driver-path local relation — hint gated on the ACTUAL row"
             " count in hand (<= the probe bound), not an estimate",
         ("functions/graph.py", "ht"): "1-row HITS L1-normalization total",

@@ -1183,11 +1183,11 @@ def test_sparsify_driver_path_matches_distributed(spark):
 def test_lpa_modularity_local_input_fast_path(spark):
     """r11-opt: the fully-local LPA/modularity fast path (VALUES edge
     input + Python weighted aggregate) must be bit-identical to the
-    forced-distributed loops, and _wund_rows_py must refuse (None) any
-    pair sum outside int64 so the engine's ANSI overflow semantics are
-    preserved by the distributed fallback."""
+    forced-distributed loops, and dispatch.canonical_rows must refuse
+    (None) any pair whose Σ|w| leaves int64 so the engine's ANSI overflow
+    semantics are preserved by the distributed fallback."""
+    from bi_gcp_stitch_repl_spark.functions.dispatch import canonical_rows
     from bi_gcp_stitch_repl_spark.functions.graph import (
-        _wund_rows_py,
         label_propagation,
         modularity,
     )
@@ -1214,15 +1214,14 @@ def test_lpa_modularity_local_input_fast_path(spark):
     # the in-universe restriction: node 9's edge must not contribute
     assert all(r is not None for r in drv)
     # overflow refusal (int64 boundary): Python would happily sum past
-    # 2^63 — the helper must return None instead
+    # 2^63 — the helper must return None instead, also when this order's
+    # partial sums stay in range (the bound is Σ|w|, not a prefix sum)
     big = 2**62
     rows = [(1, 2, big), (2, 1, big), (3, 4, 1)]
-    assert _wund_rows_py(rows, None) is None
-    assert _wund_rows_py([(1, 2, 5), (2, 1, None)], None) == [
-        __import__(
-            "bi_gcp_stitch_repl_spark.functions.graph", fromlist=["_WUndRow"]
-        )._WUndRow(1, 2, 5)
-    ]
+    assert canonical_rows(rows, "und") is None
+    assert canonical_rows([(1, 2, big), (2, 1, -big), (1, 2, big)], "und") is None
+    assert canonical_rows([(1, 2, 5), (2, 1, None)], "und") == [(1, 2, 5)]
+    assert canonical_rows([(1, 2, 5), (2, 1, None)], "und")[0].w == 5
 
 
 def test_null_weight_fast_paths_match_distributed_r12(spark):
@@ -1279,6 +1278,99 @@ def test_null_weight_fast_paths_match_distributed_r12(spark):
     assert got == want and got
 
 
+def test_mixed_sign_overflow_same_outcome_both_paths(spark):
+    """Mixed-sign weights whose partial sums leave int64 in one
+    summation order but not in another. The engine sums each input
+    slice first; the driver canonicalization sums in collection order.
+    The default threshold and ``driver_threshold=0`` must reach the same
+    outcome — the same rows or the same error — for both orders."""
+    from bi_gcp_stitch_repl_spark.functions.graph import (
+        label_propagation,
+        modularity,
+        pagerank_fixedpoint,
+    )
+
+    big = 2**62
+    n = 2 * spark.sparkContext.defaultParallelism
+    nd = spark.createDataFrame([(v,) for v in range(1, 5)], "node long")
+    lab = spark.createDataFrame(
+        [(1, 10), (2, 10), (3, 11), (4, 11)], "node long, community long"
+    )
+    ops = {
+        "pagerank": lambda e, **kw: pagerank_fixedpoint(e, nd, **kw),
+        "lpa": lambda e, **kw: label_propagation(e, nd, **kw),
+        "modularity": lambda e, **kw: modularity(e, lab, **kw),
+    }
+
+    def outcome(fn):
+        try:
+            return sorted(map(tuple, fn().collect()))
+        except Exception as exc:  # noqa: BLE001 — the outcome IS the error
+            return type(exc).__name__
+
+    # the VALUES relation is sliced two rows per task: the first order's
+    # prefix sums stay in range but its second slice (big + big) does
+    # not; the second order overflows only in collection order
+    for ws in ((-big, 5, big, big), (big, 5, big, -big)):
+        vals = [f"(1L, 2L, {w}L)" for w in ws]
+        vals += ["(3L, 4L, 1L)"] * (n - len(vals))
+        e = spark.sql(f"SELECT * FROM VALUES {', '.join(vals)} AS t(src, dst, w)")
+        for name, op in ops.items():
+            fast = outcome(lambda: op(e))
+            slow = outcome(lambda: op(e, driver_threshold=0))
+            assert fast == slow, (name, ws, fast, slow)
+
+
+@pytest.mark.parametrize(
+    "op, jobs",
+    [
+        # (VALUES edge frame, groupBy aggregate): default-threshold jobs
+        # of the operator call, measured before the dispatch seam existed
+        ("pagerank_fixedpoint", (1, 4)),
+        ("hits_fixedpoint", (1, 4)),
+        ("sssp_weighted", (2, 5)),
+        ("label_propagation", (1, 10)),
+        ("modularity", (1, 8)),
+    ],
+)
+def test_weighted_dispatch_job_counts(spark, op, jobs):
+    """The weighted operators' dispatch cost is pinned: a VALUES edge
+    frame canonicalizes job-free (only the node-side probe runs), a
+    groupBy aggregate pays one checkpoint plus one probe. A seam change
+    that adds a probe or a checkpoint fails here."""
+    from pyspark.sql import functions as F
+
+    from bi_gcp_stitch_repl_spark.functions import graph
+
+    sc = spark.sparkContext
+    vals = spark.sql(
+        "SELECT * FROM VALUES (1L, 2L, 5L), (2L, 1L, 3L), (2L, 3L, 1L),"
+        " (3L, 4L, 9L), (4L, 4L, 7L), (4L, 1L, 2L) AS t(src, dst, w)"
+    )
+    agg = (
+        spark.createDataFrame(vals.collect())
+        .groupBy("src", "dst")
+        .agg(F.sum("w").alias("w"))
+    )
+    nodes = spark.createDataFrame([(v,) for v in range(1, 5)], "node long")
+    side = {
+        "sssp_weighted": nodes.limit(1),
+        "modularity": spark.createDataFrame(
+            [(1, 10), (2, 10), (3, 11), (4, 11)], "node long, community long"
+        ),
+    }.get(op, nodes)
+    got = []
+    for i, edges in enumerate((vals, agg)):
+        group = f"dispatch_{op}_{i}"
+        sc.setJobGroup(group, "weighted dispatch cost")
+        try:
+            getattr(graph, op)(edges, side)
+        finally:
+            sc.setJobGroup(None, None)
+        got.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert tuple(got) == jobs
+
+
 def test_pagerank_teleport_probe_bounded_r12(spark):
     """r12-opt (r11 advice): the personalized-PageRank driver path must
     PROBE the teleport set instead of collecting it unbounded — a seed
@@ -1319,8 +1411,10 @@ def test_und_probe_skips_raw_checkpoint_on_nonaggregate_r12(spark):
     checkpoint; both dispatch outcomes stay correct."""
     from pyspark.sql import functions as F
 
+    from bi_gcp_stitch_repl_spark.functions.dispatch import (
+        plan_output_aggregated,
+    )
     from bi_gcp_stitch_repl_spark.functions.graph import (
-        _plan_output_aggregated,
         _simple_undirected,
         _und_probe,
     )
@@ -1329,11 +1423,11 @@ def test_und_probe_skips_raw_checkpoint_on_nonaggregate_r12(spark):
     raw = spark.createDataFrame(
         [(i % 7, (i * 3) % 7) for i in range(200)], "src long, dst long"
     )
-    assert not _plan_output_aggregated(raw)
+    assert not plan_output_aggregated(raw)
     agg = raw.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w")).select(
         "src", "dst"
     )
-    assert _plan_output_aggregated(agg)
+    assert plan_output_aggregated(agg)
     # non-aggregate input ABOVE the bound: the probe must leave no new
     # persisted RDD behind beyond the normalized checkpoint itself
     before = sc._jsc.sc().getPersistentRDDs().size()

@@ -51,6 +51,9 @@ LIB_CANARIES: dict[str, list[str]] = {
     "bi_gcp_stitch_repl_spark/functions/graph.py": [
         "x_dedup_clusters", "x_clustering_trade",
     ],
+    "bi_gcp_stitch_repl_spark/functions/dispatch.py": [
+        "x_pagerank_trade", "x_bpe_merges",
+    ],
     "bi_gcp_stitch_repl_spark/functions/codecs.py": [
         "x_image_roundtrip_meta", "x_video_frames_roundtrip",
     ],
