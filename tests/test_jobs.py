@@ -11,6 +11,7 @@ from pyspark.sql import Row
 from bi_gcp_stitch_repl_spark.jobs import pipelines
 from bi_gcp_stitch_repl_spark.sinks.merge import ParquetTable
 from bi_gcp_stitch_repl_spark.sinks.versioned import VersionedTable
+from bi_gcp_stitch_repl_spark.sources import rest
 
 
 def read_merged(spark, path):
@@ -1720,3 +1721,121 @@ def test_cli_runs_domain_authority_job(spark, tmp_path):
         pipelines.merge_table(spark, str(tmp_path / "authority")).read().count()
         == 3
     )
+
+
+# ---------------------------------------------------------------------------
+# extract landing: each REST extract is evaluated once per sync
+# ---------------------------------------------------------------------------
+
+
+def _count_extract_passes(spark, monkeypatch):
+    """Route every ``rest.to_dataframe`` frame through an identity
+    ``mapInArrow`` that adds each batch's row count to an accumulator:
+    after a sync it reads (rows fetched) × (evaluations of the extract)."""
+    passes = spark.sparkContext.accumulator(0)
+    to_dataframe = rest.to_dataframe
+
+    def counted(spark, pages, schema, *args, **kwargs):
+        df = to_dataframe(spark, pages, schema, *args, **kwargs)
+
+        def identity(batches):
+            for batch in batches:
+                passes.add(batch.num_rows)
+                yield batch
+
+        return df.mapInArrow(identity, df.schema)
+
+    monkeypatch.setattr(rest, "to_dataframe", counted)
+    return passes
+
+
+def _order(i, total="10.00", n_positions=2):
+    return {
+        "id": i,
+        "total": total,
+        "positions": [
+            {"id": i * 10 + p, "amount": f"{p + 1}.50"} for p in range(n_positions)
+        ],
+    }
+
+
+#: a BEXIO_ORDERS_DE-shaped spec, cut down: offset pages, header upsert,
+#: positions exploded into an upserted child table
+ORDER_SYNC = {
+    "source": {
+        "protocol": "offset",
+        "url": "https://api.example/orders",
+        "limit": 3,
+        "schema": "id bigint, total string,"
+        " positions array<struct<id:bigint,amount:string>>",
+    },
+    "select": [{"name": "id"}, {"name": "total", "sql": "try_cast(total as double)"}],
+    "sink": {"mode": "upsert", "keys": ["id"]},
+    "child": {
+        "array_col": "positions",
+        "parent_map": {"id": "order_id"},
+        "select": [
+            {"name": "order_id"},
+            {"name": "position_id", "sql": "id"},
+            {"name": "amount", "sql": "try_cast(amount as double)"},
+        ],
+        "keys": ["order_id"],
+    },
+}
+
+
+def sync_orders(spark, rows, wh, items):
+    return pipelines.entity_replication(
+        spark, bexio_transport(rows), wh, child_warehouse_path=items,
+        clock="2026-03-01 00:00:00", **ORDER_SYNC,
+    )
+
+
+def test_entity_replication_evaluates_extract_once(spark, tmp_path, monkeypatch):
+    """The extract is a Python-backed frame: every action over it re-runs
+    the conversion in Python workers. Landing it once means each sync —
+    initial load and changed re-sync alike — converts each fetched row
+    exactly once, however many counts, key frames and merges follow."""
+    passes = _count_extract_passes(spark, monkeypatch)
+    wh, items = str(tmp_path / "orders"), str(tmp_path / "items")
+
+    def sync(rows):
+        before = passes.value
+        return sync_orders(spark, rows, wh, items), passes.value - before
+
+    base = [_order(i) for i in range(1, 8)]
+    assert sync(base) == ((7, 14), 7)
+    resync = base[:3] + [_order(4, total="99.00", n_positions=1)] + base[4:] + [_order(8)]
+    assert sync(resync) == ((8, 15), 8)
+    got = {r["id"]: r["total"] for r in read_merged(spark, wh).collect()}
+    assert len(got) == 8 and got[4] == 99.0
+    assert read_merged(spark, items).filter("order_id = 4").count() == 1
+
+
+def test_bexio_invoice_replication_evaluates_extract_once(spark, tmp_path, monkeypatch):
+    passes = _count_extract_passes(spark, monkeypatch)
+    wh, li = str(tmp_path / "invoices"), str(tmp_path / "line_items")
+    invoices = [make_invoice(i) for i in range(1, 6)]
+    assert pipelines.bexio_invoice_replication(
+        spark, bexio_transport(invoices), wh, li, page_limit=2
+    ) == (5, 10)
+    assert passes.value == 5
+    invoices2 = [make_invoice(1, total="222.00")] + [make_invoice(9)]
+    assert pipelines.bexio_invoice_replication(
+        spark, bexio_transport(invoices2), wh, li, page_limit=2
+    ) == (2, 4)
+    assert passes.value == 5 + 2
+
+
+def test_entity_replication_wrong_typed_payload_fails_before_commit(spark, tmp_path):
+    """Landing the extract keeps the driver-side schema verification in
+    front of it: a string in a bigint column raises out of the sync, and
+    neither target gains a commit."""
+    wh, items = str(tmp_path / "orders"), str(tmp_path / "items")
+    sync_orders(spark, [_order(1), _order(2)], wh, items)
+    versions = [VersionedTable(spark, p).latest_version() for p in (wh, items)]
+    bad = [_order(1, total="11.00"), dict(_order(3), id="three")]
+    with pytest.raises(TypeError, match="LongType.*can not accept object 'three'"):
+        sync_orders(spark, bad, wh, items)
+    assert [VersionedTable(spark, p).latest_version() for p in (wh, items)] == versions
+    assert read_merged(spark, wh).filter("id = 1").first()["total"] == 10.0

@@ -19,6 +19,13 @@ from .conftest import SF_SMOKE
 
 QUERIES = catalog.queries()
 
+#: physical operators that evaluate rows in Python workers (SURVEY §2.11:
+#: the catalog ships without Python row evaluation)
+PYTHON_EVAL_OPS = ("BatchEvalPython", "ArrowEvalPython", "FlatMapsInPandas",
+                   "MapInPandas", "FlatMapGroupsInPandas")
+#: join strategies that are O(n·m) when neither side is tiny
+UNBOUNDED_JOIN_OPS = ("CartesianProduct", "BroadcastNestedLoopJoin")
+
 
 def plan_of(df, mode: str = "formatted") -> str:
     buf = io.StringIO()
@@ -249,8 +256,6 @@ def test_no_python_eval_anywhere_in_catalog(spark):
     in any plan. Python belongs only in connector fan-out and multimodal
     decode, which are library functions, not catalog queries. A regression
     here is a silent 10-100× on the hot path."""
-    banned = ("BatchEvalPython", "ArrowEvalPython", "FlatMapsInPandas",
-              "MapInPandas", "FlatMapGroupsInPandas")
     # sanctioned exceptions: S7 remote fan-out is impure and I/O-bound —
     # mapInPandas IS its correct form (SURVEY §2.11) — and the three codec
     # roundtrips exist to drive the multimodal decode seams, the other
@@ -273,7 +278,7 @@ def test_no_python_eval_anywhere_in_catalog(spark):
         if name in allowed:
             continue
         plan = plan_of(fn(spark, SF_SMOKE), mode="simple")
-        hits = [b for b in banned if b in plan]
+        hits = [b for b in PYTHON_EVAL_OPS if b in plan]
         if hits:
             offenders[name] = hits
     assert not offenders, offenders
@@ -316,10 +321,22 @@ def test_no_unbounded_join_strategies_in_catalog(spark):
         if name in allowed:
             continue
         plan = plan_of(fn(spark, SF_SMOKE), mode="simple")
-        hits = [
-            b for b in ("CartesianProduct", "BroadcastNestedLoopJoin")
-            if b in plan
-        ]
+        hits = [b for b in UNBOUNDED_JOIN_OPS if b in plan]
+        if hits:
+            offenders[name] = hits
+    assert not offenders, offenders
+
+
+def test_window_and_headline_plans_stay_engine_native(spark):
+    """Default-run sentinel for the two catalog-wide sweeps above (which
+    are opt-in): five headline/window queries, none of them on either
+    sweep's allowlist, plan without Python row evaluation and without an
+    O(n·m) join strategy."""
+    offenders = {}
+    for name in ("flagship_union_history", "q7_volume_shipping", "x_asof_join",
+                 "st_session_windows", "x_minhash_lsh_candidates"):
+        plan = plan_of(QUERIES[name](spark, SF_SMOKE), mode="simple")
+        hits = [b for b in PYTHON_EVAL_OPS + UNBOUNDED_JOIN_OPS if b in plan]
         if hits:
             offenders[name] = hits
     assert not offenders, offenders
