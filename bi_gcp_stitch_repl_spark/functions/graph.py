@@ -1,36 +1,42 @@
-"""Distributed connected components (dup-cluster resolution).
+"""Graph operators over Spark edge lists.
 
-Near-duplicate detection (functions.dedup, queries.extensions) produces
-PAIRS; a training-data pipeline needs CLUSTERS — if A~B and B~C, all
-three are one duplicate group even when A~C was never emitted, and one
-representative per group survives. That closure is connected components
-over the candidate-pair graph.
+Reachability and structure (connected components, BFS hops, k-core,
+triangle counts, clustering coefficients, random walks and their
+skip-gram pairs) and fixed-point integer scores (PageRank, HITS,
+weighted shortest paths, label propagation, modularity). Integer
+operators are bit-exact, so the catalog's hash gate and DuckDB twins
+pin them.
 
-Implementation: alternating large-star / small-star (Kiveris et al.,
-"Connected Components in MapReduce and Beyond", SoCC'14) — converges in
-O(log n) rounds on any graph, each round two hash-shuffle jobs
-(groupBy-min + join), no driver-side graph state, no vertex ever holds
-more than its neighbor list implicitly (we use groupBy().min() + join
-rather than collect_list, so even a star center never materializes its
-adjacency in one task). This is the construction that survives
-billions of edges; simple min-label propagation needs O(diameter)
-rounds and dies on long chains.
+Every operator but the float :func:`pagerank` and
+:func:`walk_skipgrams` canonicalizes its edges through
+:func:`.dispatch.weighted_edges` — one canonicalize-and-probe seam.
+When the canonical edge list fits ``driver_threshold`` rows the
+operator's Python kernel runs on the driver and its result is emitted
+as a local relation; above it the distributed loop runs on the
+checkpointed canonical frame. Both paths give the same rows (pinned per
+operator in the test suite); the unweighted operators pass unit weights
+to the undirected spelling (:func:`_und_edges`).
+
+Connected components (dup-cluster resolution): near-duplicate detection
+(functions.dedup, queries.extensions) produces PAIRS, a training-data
+pipeline needs CLUSTERS. The distributed path is alternating
+large-star / small-star (Kiveris et al., "Connected Components in
+MapReduce and Beyond", SoCC'14): O(log n) rounds on any graph, each
+round two hash-shuffle jobs (groupBy-min + join), no vertex ever holding
+its adjacency in one task — where min-label propagation needs
+O(diameter) rounds and dies on long chains.
 """
 
 from __future__ import annotations
-
-from collections import namedtuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dispatch import (
-    PY_ORDERED_SIMPLE,
+    WeightedEdges,
     distinct_probe_rows,
     free_local_checkpoint,
-    is_local_plan,
     local_df,
-    plan_output_aggregated,
     probe_rows,
     weight_guard,
     weighted_edges,
@@ -119,10 +125,10 @@ def connected_components(
     common = e.select(F.array("src", "dst").alias("_x")).schema[0].dataType.elementType
     e = e.select(F.col("src").cast(common).alias("src"), F.col("dst").cast(common).alias("dst"))
     # a node appearing ONLY in self-loop edges must still be labeled (a
-    # singleton component): the src != dst filter below would otherwise
-    # erase it from both label paths and the output would silently drop
-    # it — fold self-loop-only nodes into the ``nodes`` frame before the
-    # filter so the existing isolated-node path covers them
+    # singleton component): the canonical aggregate below drops
+    # self-loops, which would erase it from both label paths — fold
+    # self-loop-only nodes into the ``nodes`` frame so the existing
+    # isolated-node path covers them
     loop_only = e.filter(F.col("src") == F.col("dst")).select(
         F.col("src").alias("node")
     )
@@ -132,7 +138,7 @@ def connected_components(
             loop_only
         ).distinct()
     else:
-        # built BEFORE the src != dst filter, so loop-only nodes are in —
+        # built from the raw edges, so loop-only nodes are in —
         # taken unconditionally: the former "probe for self-loops first"
         # optimization ran an EAGER limit(1).count() job over the
         # un-checkpointed edge frame on every call (a full upstream
@@ -141,17 +147,16 @@ def connected_components(
         nodes = e.select(F.col("src").alias("node")).unionByName(
             e.select(F.col("dst").alias("node"))
         ).distinct()
-    e = e.filter(F.col("src") != F.col("dst")).distinct().localCheckpoint(eager=True)
-    # one-job dispatch probe: when the edge list fits, the probe rows ARE
-    # the union-find input (the old count()-then-collect() pair was two
-    # driver round-trips over the same checkpointed frame)
-    erows = (
-        probe_rows(e, driver_threshold)
-        if driver_threshold > 0
-        else None
-    )
-    if erows is not None:
-        return _cc_driver(erows, e, nodes, driver_threshold)
+    # the directed, distinct, self-loop-free edge list is the "min"
+    # canonical aggregate (its unit weight is ignored) — not "und", whose
+    # least/greatest re-keying adds a shuffle over pair lists that are
+    # already distinct. When it fits, the probe rows ARE the union-find
+    # input.
+    ew = weighted_edges(e.withColumn("w", F.lit(1)), driver_threshold, "min")
+    if ew.rows is not None:
+        ew.free()
+        return _cc_driver(ew.rows, nodes, common, driver_threshold)
+    e = ew.frame.select("src", "dst")
     changed = False
     for _ in range(max_iter):
         after = _small_star(_large_star(e), pre_oriented=True).localCheckpoint(
@@ -184,30 +189,26 @@ def connected_components(
     labels = e.select(F.col("src").alias("node"), F.col("dst").alias("component"))
     roots = e.select(F.col("dst").alias("node"), F.col("dst").alias("component"))
     labels = labels.unionByName(roots).distinct()
-    if nodes is not None:
-        node_col = nodes.columns[0]
-        all_nodes = nodes.select(F.col(node_col).alias("node")).distinct()
-        singletons = all_nodes.join(labels, "node", "left_anti").select(
-            "node", F.col("node").alias("component")
-        )
-        labels = labels.unionByName(singletons)
-    return labels
+    singletons = nodes.join(labels, "node", "left_anti").select(
+        "node", F.col("node").alias("component")
+    )
+    return labels.unionByName(singletons)
 
 
 def _cc_driver(
-    erows: list, e: DataFrame, nodes: DataFrame | None,
-    driver_threshold: int = 100_000,
+    erows: list, nodes: DataFrame, id_type, driver_threshold: int
 ) -> DataFrame:
     """Small-graph path: union-find over the collected edge list, labels
-    re-emitted as a DataFrame. Deterministic min-label components —
-    identical output to the distributed star algorithm. The singleton
-    attach dispatches the same way the edge side did: when the node set
-    also fits ``driver_threshold`` (one probe job) the full label list —
-    including singletons — is built in Python and emitted as ONE local
-    relation, replacing the distributed anti-join + union the downstream
-    consumer would otherwise execute (and typically checkpoint) against
-    a broadcast of the edge labels; past the threshold the anti-join
-    runs unchanged."""
+    re-emitted as a DataFrame of ``id_type`` ids; ``nodes`` is the
+    distinct one-column ``node`` frame. Deterministic min-label
+    components — identical output to the distributed star algorithm. The
+    singleton attach dispatches the same way the edge side did: when the
+    node set also fits ``driver_threshold`` (one probe job) the full
+    label list — including singletons — is built in Python and emitted as
+    ONE local relation, replacing the distributed anti-join + union the
+    downstream consumer would otherwise execute (and typically
+    checkpoint) against a broadcast of the edge labels; past the
+    threshold the anti-join runs unchanged."""
     parent: dict = {}
 
     def find(x):
@@ -220,52 +221,37 @@ def _cc_driver(
 
     touched = set()
     for row in erows:
-        a, b = row["src"], row["dst"]
+        a, b = row.src, row.dst
         touched.add(a)
         touched.add(b)
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     label_rows = [(n, find(n)) for n in sorted(touched)]
-    spark = e.sparkSession
-    # label schema inherits the node id type from the edge frame — the
-    # driver path must accept whatever id type the distributed path does
+    spark = nodes.sparkSession
     import pyspark.sql.types as T
 
-    id_type = e.schema["src"].dataType
     schema = T.StructType(
         [T.StructField("node", id_type), T.StructField("component", id_type)]
     )
-    if nodes is not None:
-        node_col = nodes.columns[0]
-        all_nodes = nodes.select(F.col(node_col).alias("node")).distinct()
-        nrows = (
-            probe_rows(all_nodes, driver_threshold)
-            if driver_threshold > 0
-            else None
+    nrows = probe_rows(nodes, driver_threshold)
+    if nrows is not None:
+        # full label list driver-side: same (node, component) set as
+        # labels ∪ (anti-join singletons), one local relation. A NULL
+        # node id rides along as a (NULL, NULL) singleton — exactly
+        # what the anti-join emits (NULL never equals a label key) —
+        # and sorts after every real id (row order is cosmetic).
+        label_rows = sorted(
+            label_rows
+            + [(r.node, r.node) for r in nrows if r.node not in touched],
+            key=lambda t: (t[0] is None, t[0]),
         )
-        if nrows is not None:
-            # full label list driver-side: same (node, component) set as
-            # labels ∪ (anti-join singletons), one local relation. A NULL
-            # node id rides along as a (NULL, NULL) singleton — exactly
-            # what the anti-join emits (NULL never equals a label key) —
-            # and sorts after every real id (row order is cosmetic).
-            label_rows = sorted(
-                label_rows
-                + [
-                    (r.node, r.node)
-                    for r in nrows
-                    if r.node not in touched
-                ],
-                key=lambda t: (t[0] is None, t[0]),
-            )
-            return local_df(spark, label_rows, schema)
-        labels = spark.createDataFrame(label_rows, schema)
-        singletons = all_nodes.join(
-            F.broadcast(labels), "node", "left_anti"
-        ).select("node", F.col("node").alias("component"))
-        return labels.unionByName(singletons)
-    return local_df(spark, label_rows, schema)
+        return local_df(spark, label_rows, schema)
+    labels = spark.createDataFrame(label_rows, schema)
+    singletons = nodes.join(
+        F.broadcast(labels), "node", "left_anti"
+    ).select("node", F.col("node").alias("component"))
+    return labels.unionByName(singletons)
 
 
 def pagerank(
@@ -843,136 +829,35 @@ def _hits_fp_driver(
     )
 
 
-_UndRow = namedtuple("_UndRow", ["u", "v"])
-
-
-def _und_rows_py(rows: list) -> list:
-    """Driver spelling of :func:`_simple_undirected` over probed raw edge
-    rows: least/greatest endpoint ordering, NULL endpoints and self-loops
-    dropped, exact dedup — bit-identical to the distributed
-    distinct for the :data:`PY_ORDERED_SIMPLE` types (the only ones the
-    caller dispatches here)."""
-    s = set()
-    for r in rows:
-        a, b = r[0], r[1]
-        if a is None or b is None or a == b:
-            continue
-        s.add((a, b) if a <= b else (b, a))
-    return [_UndRow(u, v) for u, v in s]
-
-
-def _und_probe(
-    edges: DataFrame, driver_threshold: int
-) -> tuple[DataFrame | None, list | None, "object"]:
-    """Fused normalize+dispatch for the simple-undirected consumers
-    (triangle/clustering/k-core/BFS/walks): ONE materialization of the
-    caller's upstream + ONE probe, with the least/greatest/distinct
-    normalization running in PYTHON on the driver path instead of paying
-    a distinct exchange + eager checkpoint job per query (measured: the
-    normalization job plus its planning gap was ~0.2-0.4 s of every
-    25-node trade-graph query's build; guide §1.2 "remove passes",
-    §2.4 "remove shuffles outright").
-
-    Returns ``(und, urows, utype)``:
-
-    - ``(None, rows, t)`` — driver path, ``rows`` are the normalized
-      ``(u, v)`` tuples (every row in hand; nothing remains persisted);
-    - ``(und, rows, t)`` — the RAW edge list was above the threshold but
-      the deduped undirected frame fits (today's dispatch bound kept):
-      caller owns the checkpointed ``und``;
-    - ``(und, None, t)`` — distributed path, ``und`` checkpointed.
-
-    ``driver_threshold <= 0`` keeps the EXACT legacy shape (one
-    ``_simple_undirected`` checkpoint, no probes) so the forced-
-    distributed job/storage pins stay valid. ``utype`` is the normalized
-    endpoint type (the least/greatest common supertype — analysis only,
-    no job).
-    """
+def _und_edges(
+    edges: DataFrame, threshold: int, node_type: str | None = None
+) -> WeightedEdges:
+    """The simple undirected graph of ``edges``' first two columns —
+    endpoints least/greatest-ordered into ``(u, v)``, NULL endpoints,
+    self-loops and duplicates dropped — as :func:`.dispatch.weighted_edges`'
+    ``"und"`` spelling over unit weights (``w`` counts the duplicates
+    and is ignored). ``rows`` feeds the driver kernels; the lazily
+    checkpointed ``frame`` feeds the distributed loops, so a
+    join-bearing upstream runs once on either path."""
     src, dst = edges.columns[:2]
-    utype = edges.select(
-        F.least(F.col(src), F.col(dst)).alias("u")
-    ).schema["u"].dataType
-    if driver_threshold <= 0:
-        return _simple_undirected(edges), None, utype
-    if utype.simpleString() in PY_ORDERED_SIMPLE:
-        proj = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        if is_local_plan(proj):
-            # a driver-built local relation (e.g. the sparsify fast
-            # path's VALUES output): probing collects straight off the
-            # driver — LocalTableScanExec.executeCollect schedules NO
-            # job — so the checkpoint below would be pure overhead
-            rows = probe_rows(proj, driver_threshold)
-            if rows is not None:
-                return None, _und_rows_py(rows), utype
-            und = _simple_undirected(proj)
-            return und, probe_rows(und, driver_threshold), utype
-        if plan_output_aggregated(proj):
-            # aggregate upstream (the trade/domain edge frames): a limit
-            # probe would run the FULL aggregation, so materialize it
-            # ONCE (output bounded by the group count — storage-safe),
-            # probe the checkpoint, and normalize in Python when it
-            # fits; the checkpoint is released either way (the driver
-            # path consumed it, the distributed path re-reads it exactly
-            # once into the normalized checkpoint)
-            ck = proj.localCheckpoint(eager=True)
-            rows = probe_rows(ck, driver_threshold)
-            if rows is not None:
-                free_local_checkpoint(ck)
-                return None, _und_rows_py(rows), utype
-            und = _simple_undirected(ck)
-            free_local_checkpoint(ck)
-            return und, probe_rows(und, driver_threshold), utype
-        # non-aggregate upstream (raw edge scans, persisted RDDs): the
-        # limit probe short-circuits — it reads ~threshold rows whatever
-        # the input size — so probe WITHOUT a checkpoint: a raw eager
-        # checkpoint here would materialize the full PRE-dedup edge list
-        # into executor storage at 100 TB scale just to decide a
-        # dispatch that will say "distributed" (r11 verdict #3). Below
-        # threshold the rows are in hand (upstream ran once); above it
-        # the probe cost is bounded and the normalization pass runs the
-        # upstream exactly once, as the legacy shape did.
-        rows = probe_rows(proj, driver_threshold)
-        if rows is not None:
-            return None, _und_rows_py(rows), utype
-        und = _simple_undirected(proj)
-        return und, probe_rows(und, driver_threshold), utype
-    und = _simple_undirected(edges)
-    return und, probe_rows(und, driver_threshold), utype
-
-
-def _simple_undirected(edges: DataFrame) -> DataFrame:
-    """Normalize an edge list to the simple undirected graph — endpoints
-    least/greatest-ordered into ``(u, v)``, self-loops / NULL endpoints /
-    duplicate edges dropped — and eagerly ``localCheckpoint`` the result.
-
-    Shared by :func:`triangle_counts`, :func:`clustering_coefficients`
-    and :func:`k_core` (the ``pre_normalized`` contract, the
-    ``_small_star(pre_oriented=)`` precedent): each consumer reads the
-    normalized frame several times, and without the pin every read would
-    re-run the caller's upstream derivation (typically a fact-table
-    aggregation — the expensive part). Composing operators pass the
-    SAME checkpointed frame through instead of paying a second
-    distinct + checkpoint of an identical edge set.
-    """
-    src, dst = edges.columns[:2]
-    return (
+    return weighted_edges(
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(
-            F.col("u").isNotNull()
-            & F.col("v").isNotNull()
-            & (F.col("u") != F.col("v"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
+            F.col(src).alias("src"), F.col(dst).alias("dst"),
+            F.lit(1).alias("w"),
+        ),
+        threshold, "und", node_type,
     )
+
+
+def _node_schema(ew: WeightedEdges, cols: str) -> str:
+    """Driver-path result schema: ``node`` of the canonical endpoint type
+    (the least/greatest common type — analysis only, no job), then
+    ``cols``."""
+    return f"node {ew.plan.schema['u'].dataType.simpleString()}, {cols}"
 
 
 def triangle_counts(
     edges: DataFrame,
-    pre_normalized: bool = False,
     driver_threshold: int = 100_000,
 ) -> DataFrame:
     """Per-node triangle counts: ``(node, n_triangles)`` — how many
@@ -997,65 +882,43 @@ def triangle_counts(
     a<b<c) would root every wedge of a hub's neighborhood at the hub.
     All joins are hash equi-joins on node keys; counts are integers, so
     the result is partition-order-independent and hash-gate safe. The
-    oriented edge frame is checkpointed once — three joins read it, and
-    its upstream (often a fact-table aggregation) must not run thrice.
+    oriented edge frame is checkpointed once — three joins read it.
 
     Determinism: the (degree, key) order is total (key breaks degree
     ties), so the orientation — and therefore every intermediate frame —
     is unique for a given input graph; counts are orientation-invariant
     anyway.
 
-    ``pre_normalized=True`` declares the input already IS a
-    :func:`_simple_undirected` frame (least/greatest ``(u, v)``, no
-    dups/self-loops/NULLs, checkpointed) and skips re-deriving it — the
-    :func:`clustering_coefficients` composition shares ONE normalization
-    pass + checkpoint instead of paying a redundant full distinct and a
-    second checkpointed copy of the same edge set (the
-    ``_small_star(pre_oriented=)`` precedent).
+    When the canonical edges fit ``driver_threshold`` the same
+    degree-oriented wedge count runs in Python over the probe rows
+    (bounded by the same Σ outdeg² ≤ O(m^1.5)) instead of three joins
+    over a 25-node frame.
     """
-    # checkpoint the simple undirected edge set BEFORE it fans out: deg
-    # reads it twice (the union) and the orientation join once more, and
-    # without the pin all three reads would re-run the caller's upstream
-    # derivation (typically a fact-table aggregation — the expensive part)
-    # fused one-materialization dispatch (_und_probe): the probe rows ARE
-    # the edge list on the driver path — normalization AND the same
-    # degree-oriented wedge count run in Python (bounded by the same
-    # Σ outdeg² ≤ O(m^1.5)) instead of a distinct exchange + three joins
-    # over a 25-node frame
-    if pre_normalized:
-        und = edges
-        utype = und.schema["u"].dataType
-        urows = (
-            probe_rows(und, driver_threshold)
-            if driver_threshold > 0
-            else None
-        )
-    else:
-        und, urows, utype = _und_probe(edges, driver_threshold)
-    if urows is not None:
-        tri = _tri_counts_py(urows)
-        import pyspark.sql.types as T
-
-        schema = T.StructType(
-            [
-                T.StructField("node", utype),
-                T.StructField("n_triangles", T.LongType()),
-            ]
-        )
-        if und is not None and not pre_normalized:
-            # this call owns the normalization checkpoint and has fully
-            # consumed it; a shared pre-normalized frame stays persisted
-            free_local_checkpoint(und)
+    ew = _und_edges(edges, driver_threshold)
+    if ew.rows is not None:
+        ew.free()
+        _, tri = _tri_counts_py(ew.rows)
         return local_df(
-            edges.sparkSession, sorted(tri.items()), schema
+            edges.sparkSession, sorted(tri.items()),
+            _node_schema(ew, "n_triangles long"),
         )
+    tri = _triangles(ew.frame)
+    # the result reads only the oriented checkpoint
+    ew.free()
+    return tri
+
+
+def _triangles(und: DataFrame) -> DataFrame:
+    """The distributed degree-oriented wedge count over a checkpointed
+    canonical ``(u, v, …)`` frame (see :func:`triangle_counts`):
+    ``(node, n_triangles)`` for nodes in at least one triangle."""
     deg = (
         und.select(F.col("u").alias("node"))
         .unionByName(und.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("d"))
     )
-    w = und.join(
+    w = und.select("u", "v").join(
         deg.select(F.col("node").alias("u"), F.col("d").alias("du")), "u"
     ).join(deg.select(F.col("node").alias("v"), F.col("d").alias("dv")), "v")
     fwd = (F.col("du") < F.col("dv")) | (
@@ -1078,12 +941,13 @@ def triangle_counts(
     )
 
 
-def _tri_counts_py(urows: list) -> dict:
-    """Per-node triangle counts over probed simple-undirected edge rows —
-    the driver spelling of the degree-oriented wedge count: orient each
-    edge from its lower-(degree, key) endpoint, intersect out-adjacency
-    per oriented edge. Same Σ outdeg² wedge bound as the distributed
-    joins, counts identical (orientation-invariant integers)."""
+def _tri_counts_py(urows: list) -> tuple[dict, dict]:
+    """``(degrees, triangle counts)`` per node over canonical undirected
+    edge rows — the driver spelling of the degree-oriented wedge count:
+    orient each edge from its lower-(degree, key) endpoint, intersect
+    out-adjacency per oriented edge. Same Σ outdeg² wedge bound as the
+    distributed joins, counts identical (orientation-invariant
+    integers)."""
     deg: dict = {}
     for r in urows:
         deg[r.u] = deg.get(r.u, 0) + 1
@@ -1105,7 +969,7 @@ def _tri_counts_py(urows: list) -> dict:
                 tri[a] = tri.get(a, 0) + 1
                 tri[b] = tri.get(b, 0) + 1
                 tri[c] = tri.get(c, 0) + 1
-    return tri
+    return deg, tri
 
 
 def clustering_coefficients(
@@ -1126,10 +990,12 @@ def clustering_coefficients(
     Integer arithmetic end to end (the pagerank_fixedpoint discipline):
     the ratio is a BIGINT floor-divide, so results are
     partition-order-independent and the catalog twin (x_clustering_trade)
-    hash-pins them. Costs exactly triangle_counts + one degree aggregate
-    reusing the SAME :func:`_simple_undirected` frame (ONE normalization
-    pass + checkpoint, passed via ``pre_normalized=True``); one extra
-    join on the node key.
+    hash-pins them. Costs exactly triangle_counts' wedge joins + one
+    degree aggregate, both over the SAME checkpointed canonical edge
+    frame (one normalization pass); one extra join on the node key.
+    Below ``driver_threshold`` degrees, triangles and the ratio all run
+    in Python over the probe rows (nonnegative ints, so Python // IS the
+    BIGINT DIV).
 
     Overflow headroom (stated, not discovered): the intermediate
     ``2·n_triangles·coeff_scale`` needs ``n_triangles < 2^62/coeff_scale``
@@ -1138,26 +1004,10 @@ def clustering_coefficients(
     (the coefficient itself is always ≤ coeff_scale); ANSI mode aborts
     rather than wraps.
     """
-    # fused one-materialization dispatch (_und_probe): normalization,
-    # degrees, triangles and the fixed-point ratio all run in Python over
-    # the probe rows (nonnegative ints, so Python // IS the BIGINT DIV)
-    und, urows, utype = _und_probe(edges, driver_threshold)
-    if urows is not None:
-        degm: dict = {}
-        for r in urows:
-            degm[r.u] = degm.get(r.u, 0) + 1
-            degm[r.v] = degm.get(r.v, 0) + 1
-        tri = _tri_counts_py(urows)
-        import pyspark.sql.types as T
-
-        schema = T.StructType(
-            [
-                T.StructField("node", utype),
-                T.StructField("degree", T.LongType()),
-                T.StructField("n_triangles", T.LongType()),
-                T.StructField("coeff_fp", T.LongType()),
-            ]
-        )
+    ew = _und_edges(edges, driver_threshold)
+    if ew.rows is not None:
+        ew.free()
+        degm, tri = _tri_counts_py(ew.rows)
         rows = [
             (
                 n,
@@ -1169,19 +1019,18 @@ def clustering_coefficients(
             )
             for n, d in sorted(degm.items())
         ]
-        if und is not None:
-            free_local_checkpoint(und)
-        return local_df(edges.sparkSession, rows, schema)
+        return local_df(
+            edges.sparkSession, rows,
+            _node_schema(ew, "degree long, n_triangles long, coeff_fp long"),
+        )
+    und = ew.frame
     deg = (
         und.select(F.col("u").alias("node"))
         .unionByName(und.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).cast("long").alias("degree"))
     )
-    tri = triangle_counts(
-        und, pre_normalized=True, driver_threshold=driver_threshold
-    )
-    out = deg.join(tri, "node", "left").select(
+    out = deg.join(_triangles(und), "node", "left").select(
         "node",
         "degree",
         F.coalesce(F.col("n_triangles"), F.lit(0)).cast("long").alias(
@@ -1216,7 +1065,7 @@ def bfs_hops(
     when isolated (a seed is at distance 0 from itself by definition).
 
     Semantics: simple undirected graph (direction / duplicate edges /
-    self-loops / NULL endpoints ignored — the :func:`_simple_undirected`
+    self-loops / NULL endpoints ignored — the :func:`triangle_counts`
     contract); deterministic by construction (a node's hop count is its
     FIRST discovery round — min over arrival orders, no tie to break).
 
@@ -1229,7 +1078,9 @@ def bfs_hops(
     cheap ``isEmpty`` on the already-checkpointed new-nodes frame, and
     superseded rounds' checkpoints are released as they die
     (:func:`free_local_checkpoint`, the k_core storage contract).
-    ``max_iter`` is a loud backstop: non-convergence raises.
+    ``max_iter`` is a loud backstop: non-convergence raises. When both
+    the canonical edges and the seed set fit ``driver_threshold`` the
+    whole frontier loop runs in Python over the probe rows.
     """
     src_proj = sources.select(
         F.col(sources.columns[0]).alias("node")
@@ -1237,34 +1088,25 @@ def bfs_hops(
     dist0 = src_proj.distinct().select(
         "node", F.lit(0).cast("long").alias("hops")
     )
-    # fused one-materialization dispatch (_und_probe): below threshold
-    # the normalization AND the whole frontier loop run in Python over
-    # the probe rows — the distinct checkpoint, symmetric checkpoint,
-    # per-round semi/anti-joins and isEmpty probes were ~10 scheduled
-    # jobs on a 25-node graph
-    und, urows, utype = _und_probe(edges, driver_threshold)
+    ew = _und_edges(edges, driver_threshold)
     srows = (
         distinct_probe_rows(src_proj, driver_threshold)
-        if urows is not None
+        if ew.rows is not None
         else None
     )
     if srows is not None:
-        if und is not None:
-            free_local_checkpoint(und)
-        return _bfs_driver(urows, srows, utype, dist0, max_iter)
-    if und is None:
-        # driver-eligible edges but a seed set above threshold (>100k
-        # sources on a <100k-edge graph): rebuild the distributed frame —
-        # correct, just re-derives the (small) upstream once more
-        und = _simple_undirected(edges)
-    sym = (
-        und.unionByName(
-            und.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        ew.free()
+        return _bfs_driver(
+            ew.rows, srows, ew.plan.schema["u"].dataType, dist0, max_iter
         )
+    und = ew.frame
+    sym = (
+        und.select("u", "v")
+        .unionByName(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .localCheckpoint(eager=True)
     )
     # the one-directional frame is fully consumed by sym's materialization
-    free_local_checkpoint(und)
+    ew.free()
     dist = dist0.localCheckpoint(eager=True)
     frontier = dist
     for i in range(1, max_iter + 1):
@@ -1524,21 +1366,13 @@ def k_core(
     no tie-breaking is even needed). ``max_iter`` is a loud configuration
     backstop, not a silent truncation: non-convergence raises.
     """
-    # fused one-materialization dispatch (_und_probe): normalization and
-    # the peel loop run in Python over the probe rows (the k-core is
-    # unique under any deletion order, and the round structure —
-    # including the max_iter raise — mirrors exactly)
-    und, urows, utype = _und_probe(edges, driver_threshold)
-    if urows is not None:
-        edges_py = [(r.u, r.v) for r in urows]
-        import pyspark.sql.types as T
-
-        schema = T.StructType(
-            [
-                T.StructField("node", utype),
-                T.StructField("degree", T.LongType()),
-            ]
-        )
+    # below the bound the peel loop runs in Python over the probe rows
+    # (the k-core is unique under any deletion order, and the round
+    # structure — including the max_iter raise — mirrors exactly)
+    ew = _und_edges(edges, driver_threshold)
+    if ew.rows is not None:
+        ew.free()
+        edges_py = [(r.u, r.v) for r in ew.rows]
         for _ in range(max_iter):
             degm: dict = {}
             for u, v in edges_py:
@@ -1546,27 +1380,21 @@ def k_core(
                 degm[v] = degm.get(v, 0) + 1
             surv = {n for n, d in degm.items() if d >= k}
             if len(surv) == len(degm):
-                if und is not None:
-                    free_local_checkpoint(und)
                 return local_df(
                     edges.sparkSession,
                     sorted((n, degm[n]) for n in surv),
-                    schema,
+                    _node_schema(ew, "degree long"),
                 )
             edges_py = [
                 (u, v) for u, v in edges_py if u in surv and v in surv
             ]
-        if und is not None:
-            # the middle-case dispatch checkpoint (raw above threshold,
-            # deduped fits) is owned here — free it before raising so a
-            # non-convergence backstop doesn't leak its storage blocks
-            free_local_checkpoint(und)
         raise RuntimeError(
             f"k_core did not converge within max_iter={max_iter} peel"
             " rounds; raise max_iter (rounds are bounded by the graph's"
             " peel depth)"
         )
-    prev_und = prev_deg = None
+    # the canonical checkpoint is released with the first superseded round
+    und, prev_und, prev_deg = ew.frame.select("u", "v"), ew.frame, None
     for _ in range(max_iter):
         deg = (
             und.select(F.col("u").alias("node"))
@@ -1587,8 +1415,8 @@ def k_core(
         ).first()
         if n_surv == n_all:
             # the returned frame reads THIS round's deg checkpoint — it
-            # (and the final und, by paranoia of callers re-deriving)
-            # stays persisted; only superseded rounds were released
+            # (and the current edge set) stays persisted; only superseded
+            # rounds were released
             return survivors.select("node", "degree")
         new_und = (
             und.join(
@@ -1601,12 +1429,8 @@ def k_core(
             .localCheckpoint(eager=True)
         )
         # likewise: the shrunken edge set is materialized, its parent
-        # round's edges are dead — EXCEPT the caller's input frame when
-        # pre-normalized elsewhere; we only ever free frames this loop
-        # itself checkpointed (prev_und starts None: round 1's input und
-        # may be shared via _simple_undirected's contract)
-        if prev_und is not None:
-            free_local_checkpoint(prev_und)
+        # round's edges are dead
+        free_local_checkpoint(prev_und)
         prev_und = new_und
         und = new_und
     raise RuntimeError(
@@ -2026,25 +1850,16 @@ def random_walks(
         raise ValueError(f"walk_len must be >= 0 (got {walk_len})")
     if num_walks < 1:
         raise ValueError(f"num_walks must be >= 1 (got {num_walks})")
-    src, dst = edges.columns[:2]
     spark = edges.sparkSession
     out_schema = f"start {node_type}, wid int, step int, node {node_type}"
-    # fused one-materialization dispatch (_und_probe): the probe rows ARE
-    # the collected adjacency on the driver path, normalized in Python
-    # (old shape: distinct exchange + checkpoint, then count + collect)
-    und, urows, _ = _und_probe(
-        edges.select(
-            F.col(src).cast(node_type).alias("src"),
-            F.col(dst).cast(node_type).alias("dst"),
-        ),
-        driver_threshold,
-    )
-    if urows is not None:
-        if und is not None:
-            free_local_checkpoint(und)
+    # the probe rows ARE the collected adjacency on the driver path
+    ew = _und_edges(edges, driver_threshold, node_type)
+    if ew.rows is not None:
+        ew.free()
         return local_df(
-            spark, _walks_driver(urows, walk_len, num_walks), out_schema
+            spark, _walks_driver(ew.rows, walk_len, num_walks), out_schema
         )
+    und = ew.frame
     adj = und.selectExpr("u AS node", "v AS nbr").unionByName(
         und.selectExpr("v AS node", "u AS nbr")
     )
@@ -2176,212 +1991,3 @@ def walk_skipgrams(walks: DataFrame, window: int = 2) -> DataFrame:
     return pairs.groupBy(
         F.col("p.center").alias("center"), F.col("p.context").alias("context")
     ).agg(F.count(F.lit(1)).alias("cnt"))
-
-
-#: second-order walk hash: adds the PREVIOUS node to the linear pass so
-#: the step choice is a pure function of the full walker state
-#: (prev, cur, t, wid). (P-1)·(A+F) ≈ 2.3e18 would overflow past 2^63 if
-#: both products peaked together, so the prev term is reduced mod P
-#: BEFORE adding: each product < 1.2e18, the sum < 2.4e18 — still over?
-#: No: ((cur%P)*A) % P and ((prev%P)*F) % P are each < P ≈ 1e9 after the
-#: inner mod, so the combined linear form stays far below 2^63.
-WALK_F = 69_069
-
-
-def _walk_h2_sql(prev: str, cur: str, step: int, wid: str) -> str:
-    """Linear pass of the SECOND-ORDER walk-step hash — one spelling for
-    the Spark loop and the DuckDB oracle twin. Inner mods keep every
-    intermediate below 2^63 (see WALK_F note)."""
-    return (
-        f"(((({cur}) % {WALK_P}) * {WALK_A}) % {WALK_P}"
-        f" + ((({prev}) % {WALK_P}) * {WALK_F}) % {WALK_P}"
-        f" + {step} * {WALK_B} + ({wid}) * {WALK_C} + {WALK_D}) % {WALK_P}"
-    )
-
-
-def node2vec_walks(
-    edges: DataFrame,
-    walk_len: int = 4,
-    num_walks: int = 2,
-    w_return: int = 1,
-    w_common: int = 4,
-    w_out: int = 2,
-    node_type: str = "long",
-    driver_threshold: int = 100_000,
-) -> DataFrame:
-    """Deterministic second-order (node2vec-style) biased walks over the
-    simple undirected graph — Grover & Leskovec 2016's p/q bias,
-    re-expressed with INTEGER class weights so the walk stays
-    hash-gate-exact: from ``cur`` with previous node ``prev``, each
-    sorted neighbor ``x`` weighs
-        w_return  if x == prev            (backtrack;   ≈ 1/p)
-        w_common  if x adjacent to prev   (triangle/BFS-ish; ≈ 1)
-        w_out     otherwise               (exploration; ≈ 1/q)
-    and the step picks the first sorted neighbor whose cumulative weight
-    exceeds ``((h2² + E) mod P) mod T`` (T = total weight), with ``h2``
-    linear in (prev, cur, t, wid) — a pure function of the walker state,
-    reproducible across engines, partitionings and retries. ``prev``
-    initializes to the start node itself, which makes step 1 uniform
-    over the weighted classes naturally: every neighbor of the start is
-    trivially adjacent to prev == start, so all candidates weigh
-    ``w_common`` (no special case in either dialect).
-
-    All three weights must be >= 1: a zero class could strand a walker
-    on a total weight of 0 (degree-1 node whose only neighbor is prev,
-    w_return = 0) — approximate "never backtrack" with a LARGE
-    w_common/w_out instead (the integer-ratio spelling of small 1/p).
-
-    **Scale shape** (the honest second-order cost): unlike first-order
-    ``random_walks`` (two fixed-width joins, no fan-out), each step
-    joins every walker to ALL of cur's neighbors (Σ deg(cur) rows),
-    classifies them with one LEFT join against the canonical undirected
-    edge set on (prev, x), and resolves the pick with ONE window
-    cumulative sum per walker — two exchanges per step on the fan-out
-    frame. That is still linear in touched adjacency, where the
-    reference node2vec's alias tables cost O(Σ deg²) PREPROCESSED
-    memory per node pair; at 100 TB the per-step fan-out join is the
-    strategy that survives. Driver fast path below ``driver_threshold``
-    edges, property-pinned bit-identical to the distributed loop."""
-    if walk_len < 0:
-        raise ValueError(f"walk_len must be >= 0 (got {walk_len})")
-    if num_walks < 1:
-        raise ValueError(f"num_walks must be >= 1 (got {num_walks})")
-    if min(w_return, w_common, w_out) < 1:
-        raise ValueError(
-            "all class weights must be >= 1 (a zero class can strand a"
-            f" walker): got w_return={w_return} w_common={w_common}"
-            f" w_out={w_out}"
-        )
-    src, dst = edges.columns[:2]
-    spark = edges.sparkSession
-    out_schema = f"start {node_type}, wid int, step int, node {node_type}"
-    # fused one-materialization dispatch (the random_walks discipline)
-    und, urows, _ = _und_probe(
-        edges.select(
-            F.col(src).cast(node_type).alias("src"),
-            F.col(dst).cast(node_type).alias("dst"),
-        ),
-        driver_threshold,
-    )
-    if urows is not None:
-        if und is not None:
-            free_local_checkpoint(und)
-        return local_df(
-            spark,
-            _node2vec_driver(
-                urows, walk_len, num_walks, w_return, w_common, w_out
-            ),
-            out_schema,
-        )
-    from pyspark.sql import Window
-    adj = und.selectExpr("u AS node", "v AS nbr").unionByName(
-        und.selectExpr("v AS node", "u AS nbr")
-    ).localCheckpoint(eager=True)
-    dg = adj.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
-    w = dg.select(
-        F.col("node").alias("start"),
-        F.explode(
-            F.array([F.lit(i).cast("int") for i in range(num_walks)])
-        ).alias("wid"),
-        F.col("node").alias("prev"),
-        F.col("node").alias("cur"),
-    ).localCheckpoint(eager=True)
-    outs = [
-        w.select(
-            "start", "wid", F.lit(0).cast("int").alias("step"),
-            F.col("cur").alias("node"),
-        )
-    ]
-    adjj = adj.selectExpr("node AS _anode", "nbr AS _anbr")
-    # canonical edge probe for the "x adjacent to prev" class
-    undj = und.selectExpr("u AS _eu", "v AS _ev", "1 AS _hit")
-    wcls = (
-        F.when(F.col("_anbr") == F.col("prev"), F.lit(w_return))
-        .when(F.col("_hit").isNotNull(), F.lit(w_common))
-        .otherwise(F.lit(w_out))
-    )
-    win = Window.partitionBy("start", "wid").orderBy("_anbr")
-    for t in range(1, walk_len + 1):
-        h2 = _walk_h2_sql(
-            "prev", "cur", t, "CAST(wid AS BIGINT)"
-        )
-        cand = (
-            w.join(adjj, F.col("cur") == F.col("_anode"))
-            .join(
-                undj,
-                (F.least("prev", "_anbr") == F.col("_eu"))
-                & (F.greatest("prev", "_anbr") == F.col("_ev")),
-                "left",
-            )
-            .withColumn("_w", wcls)
-            .withColumn("_cum", F.sum("_w").over(win))
-            .withColumn(
-                "_tot", F.sum("_w").over(Window.partitionBy("start", "wid"))
-            )
-            .withColumn("_h2", F.expr(h2))
-            .withColumn(
-                "_r",
-                F.expr(f"((_h2 * _h2 + {WALK_E}) % {WALK_P}) % _tot"),
-            )
-        )
-        stepped = cand.filter(
-            (F.col("_cum") - F.col("_w") <= F.col("_r"))
-            & (F.col("_r") < F.col("_cum"))
-        ).select(
-            "start", "wid", F.col("cur").alias("prev"),
-            F.col("_anbr").alias("cur"),
-        )
-        w = stepped.localCheckpoint(eager=True)
-        outs.append(
-            w.select(
-                "start", "wid", F.lit(t).cast("int").alias("step"),
-                F.col("cur").alias("node"),
-            )
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
-
-
-def _node2vec_driver(
-    und_rows, walk_len, num_walks, w_return, w_common, w_out
-):
-    """Driver fast path: the same second-order walk with Python ints —
-    bit-identical to the distributed loop (property-pinned)."""
-    adj: dict = {}
-    eset = set()
-    for r in und_rows:
-        adj.setdefault(r.u, set()).add(r.v)
-        adj.setdefault(r.v, set()).add(r.u)
-        eset.add((min(r.u, r.v), max(r.u, r.v)))
-    nbrs = {n: sorted(s) for n, s in adj.items()}
-    rows = []
-    for start in sorted(nbrs):
-        for wid in range(num_walks):
-            prev, cur = start, start
-            rows.append((start, wid, 0, cur))
-            for t in range(1, walk_len + 1):
-                ws = []
-                for x in nbrs[cur]:
-                    if x == prev:
-                        ws.append(w_return)
-                    elif (min(prev, x), max(prev, x)) in eset:
-                        ws.append(w_common)
-                    else:
-                        ws.append(w_out)
-                tot = sum(ws)
-                h2 = (
-                    ((cur % WALK_P) * WALK_A) % WALK_P
-                    + ((prev % WALK_P) * WALK_F) % WALK_P
-                    + t * WALK_B + wid * WALK_C + WALK_D
-                ) % WALK_P
-                r_ = ((h2 * h2 + WALK_E) % WALK_P) % tot
-                cum = 0
-                for x, wx in zip(nbrs[cur], ws):
-                    cum += wx
-                    if r_ < cum:
-                        prev, cur = cur, x
-                        break
-                rows.append((start, wid, t, cur))
-    return rows

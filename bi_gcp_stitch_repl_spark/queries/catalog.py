@@ -259,8 +259,8 @@ def spread_narrow(df: DataFrame, *key_cols: str) -> DataFrame:
 #:    of the r11 window, so their driver rows predate the rewrites.
 #:    Seated: x_bfs_trade, x_sssp_trade, x_kcore_trade,
 #:    x_pagerank_trade, x_hits_trade, x_ppr_trade, x_triangle_trade
-#:    (the wedge-join rewrite's twin; also this round's _und_probe
-#:    dispatch restructure runs under all seven). Slots funded by
+#:    (the wedge-join rewrite's twin; also this round's undirected
+#:    probe restructure runs under all seven). Slots funded by
 #:    releasing seven r11-fresh cohort members whose libraries are
 #:    untouched this round (the w_topk_per_group precedent):
 #:    x_bigram_stats, x_bm25_topk, x_ccnet_buckets, x_jl_project,

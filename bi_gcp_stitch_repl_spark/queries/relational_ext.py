@@ -1001,9 +1001,9 @@ def _trade_edge_frame(
     fits the dispatch bound, re-emitted as a VALUES local relation
     (optimization round 2): every downstream graph operator then probes
     it JOB-FREE and takes its fully-local fast path (sparsify / LPA /
-    modularity / sssp / pagerank / hits / the _und_probe family),
-    instead of each consumer paying its own re-aggregation exchange +
-    checkpoint + probe jobs over a 625-row frame. Above the bound the
+    modularity / sssp / pagerank / hits / the unweighted graph
+    operators), instead of each consumer paying its own re-aggregation
+    exchange + checkpoint + probe jobs over a 625-row frame. Above the bound the
     checkpointed distributed frame returns unchanged — consumers keep
     their exact distributed shapes, now guaranteed to share the single
     materialization.
@@ -1406,9 +1406,9 @@ def x_clustering_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     no qualifying edge keep explicit 0 rows (dimension LEFT join).
 
     Scale shape: exactly x_triangle_trade + one degree aggregate — the
-    composition shares ONE simple-undirected normalization + checkpoint
-    (triangle_counts(pre_normalized=True), the r10 fix; persistent-RDD-
-    probed in tests/test_sketch.py), the degree-oriented wedge joins run
+    wedge joins and the degree aggregate share ONE checkpointed
+    canonical edge frame (persistent-RDD-probed in
+    tests/test_sketch.py), the degree-oriented wedge joins run
     on the checkpointed aggregate, and the coefficient is one row-local
     BIGINT expression over the (node, degree, triangles) join."""
     from ..functions.graph import clustering_coefficients

@@ -438,32 +438,21 @@ def test_clustering_coefficients_single_normalization(spark):
         [(a, b) for a in range(4) for b in range(4) if a < b] + [(3, 4)],
         "x long, y long",
     )
-    def persistent_ids():
-        ids = set()
-        it = sc._jsc.sc().getPersistentRDDs().keysIterator()
-        while it.hasNext():
-            ids.add(it.next())
-        return ids
-
-    # probe on ADDED ids, not a size delta: the async ContextCleaner can
-    # unpersist OTHER tests' stale checkpoints mid-probe (full-suite run
-    # measured the set shrinking by 8 during this test), but it can only
-    # REMOVE entries — additions during the call are ours alone
-    before = persistent_ids()
+    before = _persistent_rdd_ids(sc)
     # force the distributed composition (r11 added a driver fast path;
     # this probe pins the DISTRIBUTED single-normalization contract)
     out = clustering_coefficients(k4_tail, driver_threshold=0)
     rows = {r.node: r.coeff_fp for r in out.collect()}
     assert rows[0] == 10**6 and rows[4] == 0  # semantics unchanged
-    assert len(persistent_ids() - before) == 2
+    assert len(_persistent_rdd_ids(sc) - before) == 2
     # driver path: the normalization checkpoint is released once the
     # probe rows are in hand — nothing stays pinned
-    before = persistent_ids()
+    before = _persistent_rdd_ids(sc)
     rows = {
         r.node: r.coeff_fp for r in clustering_coefficients(k4_tail).collect()
     }
     assert rows[0] == 10**6 and rows[4] == 0
-    assert len(persistent_ids() - before) == 0
+    assert len(_persistent_rdd_ids(sc) - before) == 0
 
 
 def test_k_core_one_fixpoint_action_and_bounded_checkpoints(spark):
@@ -779,85 +768,6 @@ def test_walk_skipgrams_known_and_selfjoin_pin(spark):
         walk_skipgrams(w.drop("wid"))
 
 
-def test_node2vec_walks_replica_distributed_pin_and_bias(spark):
-    """Second-order biased walks: known graph matches an INDEPENDENT
-    Python replica (recomputing class weights and the cumulative pick
-    from the edge list); forced-distributed loop bit-identical to the
-    driver fast path; step-1 uniformity (prev == start makes every
-    candidate the w_common class, so changing w_return/w_out does not
-    move step 1); every step lands on a neighbor; guards raise."""
-    from pyspark.sql import functions as F  # noqa: F401
-
-    from bi_gcp_stitch_repl_spark.functions.graph import (
-        WALK_A, WALK_B, WALK_C, WALK_D, WALK_E, WALK_F, WALK_P,
-        node2vec_walks,
-    )
-
-    edges = [(0, 1), (1, 2), (2, 3), (3, 0), (0, 2), (4, 5), (2, 0)]
-    e = spark.createDataFrame(edges, "src long, dst long")
-    params = dict(walk_len=3, num_walks=2, w_return=1, w_common=4, w_out=2)
-    out = node2vec_walks(e, **params).collect()
-
-    und = {(min(s, d), max(s, d)) for s, d in edges if s != d}
-    nbr: dict = {}
-    for u, v in und:
-        nbr.setdefault(u, []).append(v)
-        nbr.setdefault(v, []).append(u)
-    nbr = {k: sorted(vs) for k, vs in nbr.items()}
-
-    def replica(w_return, w_common, w_out, walk_len=3, num_walks=2):
-        got = set()
-        for start in nbr:
-            for wid in range(num_walks):
-                prev, cur = start, start
-                got.add((start, wid, 0, cur))
-                for t in range(1, walk_len + 1):
-                    ws = [
-                        w_return if x == prev
-                        else w_common if (min(prev, x), max(prev, x)) in und
-                        else w_out
-                        for x in nbr[cur]
-                    ]
-                    h2 = (
-                        ((cur % WALK_P) * WALK_A) % WALK_P
-                        + ((prev % WALK_P) * WALK_F) % WALK_P
-                        + t * WALK_B + wid * WALK_C + WALK_D
-                    ) % WALK_P
-                    r = ((h2 * h2 + WALK_E) % WALK_P) % sum(ws)
-                    cum = 0
-                    for x, wx in zip(nbr[cur], ws):
-                        cum += wx
-                        if r < cum:
-                            prev, cur = cur, x
-                            break
-                    got.add((start, wid, t, cur))
-        return got
-
-    got = {(r.start, r.wid, r.step, r.node) for r in out}
-    assert got == replica(1, 4, 2)
-    assert len(out) == 6 * 2 * 4
-
-    dist = node2vec_walks(e, driver_threshold=0, **params).collect()
-    assert {(r.start, r.wid, r.step, r.node) for r in dist} == got
-    byw: dict = {}
-    for r in dist:
-        byw.setdefault((r.start, r.wid), {})[r.step] = r.node
-    for key, steps in byw.items():
-        assert steps[0] == key[0]
-        for t in (1, 2, 3):
-            assert steps[t] in nbr[steps[t - 1]]
-
-    # step 1 is class-uniform: w_return/w_out cannot move it (prev==start
-    # makes every candidate w_common); later steps CAN move
-    alt = replica(7, 4, 9)
-    assert {x for x in got if x[2] <= 1} == {x for x in alt if x[2] <= 1}
-
-    with pytest.raises(ValueError, match="class weights"):
-        node2vec_walks(e, w_return=0)
-    with pytest.raises(ValueError, match="walk_len"):
-        node2vec_walks(e, walk_len=-1)
-
-
 def test_walk_skipgrams_duckdb_oracle_parity(spark):
     """Cross-engine pin ahead of the r12 catalog registration: the
     skip-gram aggregation over REAL library-generated walks must match a
@@ -904,89 +814,6 @@ def test_walk_skipgrams_duckdb_oracle_parity(spark):
         ).fetchall()
     }
     assert got == oracle and len(got) > 10
-
-
-def test_node2vec_walks_duckdb_oracle_parity(spark):
-    """Cross-engine pin ahead of the r12 catalog registration: the full
-    second-order walk replayed RELATIONALLY in DuckDB (per step: fan-out
-    join to cur's neighbors, classification LEFT JOIN against canonical
-    edges, window cumulative-sum pick) must reproduce node2vec_walks
-    step for step on a seeded graph. The step hash's linear pass comes
-    from graph.py's _walk_h2_sql — one spelling, two engines."""
-    import random as _random
-
-    import duckdb
-
-    from bi_gcp_stitch_repl_spark.functions.graph import (
-        WALK_E, WALK_P, _walk_h2_sql, node2vec_walks,
-    )
-
-    rng = _random.Random(1107)
-    edges = sorted({(rng.randrange(16), rng.randrange(16)) for _ in range(48)})
-    e = spark.createDataFrame(edges, "src long, dst long")
-    WL, NW, WR, WC, WO = 3, 2, 1, 4, 2
-    got = {
-        (r.start, r.wid, r.step, r.node)
-        for r in node2vec_walks(
-            e, walk_len=WL, num_walks=NW,
-            w_return=WR, w_common=WC, w_out=WO,
-        ).collect()
-    }
-
-    con = duckdb.connect()
-    con.execute("CREATE TABLE edges(src BIGINT, dst BIGINT)")
-    con.executemany("INSERT INTO edges VALUES (?, ?)", edges)
-    head = f"""
-WITH und AS MATERIALIZED (
-  SELECT DISTINCT LEAST(src, dst) AS u, GREATEST(src, dst) AS v
-  FROM edges WHERE src <> dst
-),
-adj AS MATERIALIZED (
-  SELECT u AS node, v AS nbr FROM und
-  UNION ALL SELECT v AS node, u AS nbr FROM und
-),
-w0 AS MATERIALIZED (
-  SELECT n.node AS start, CAST(ws.wid AS INTEGER) AS wid,
-         n.node AS prev, n.node AS cur
-  FROM (SELECT DISTINCT node FROM adj) n
-  CROSS JOIN (SELECT UNNEST(range({NW})) AS wid) ws
-)"""
-    steps = []
-    for t in range(1, WL + 1):
-        h2 = _walk_h2_sql(
-            "CAST(s.prev AS BIGINT)", "CAST(s.cur AS BIGINT)", t,
-            "CAST(s.wid AS BIGINT)",
-        )
-        steps.append(f""",
-c{t} AS MATERIALIZED (
-  SELECT w.start, w.wid, w.prev, w.cur, a.nbr,
-         CASE WHEN a.nbr = w.prev THEN {WR}
-              WHEN e.u IS NOT NULL THEN {WC}
-              ELSE {WO} END AS wgt
-  FROM w{t-1} w
-  JOIN adj a ON w.cur = a.node
-  LEFT JOIN und e ON LEAST(w.prev, a.nbr) = e.u
-                 AND GREATEST(w.prev, a.nbr) = e.v
-),
-s{t} AS MATERIALIZED (
-  SELECT *,
-         SUM(wgt) OVER (PARTITION BY start, wid ORDER BY nbr) AS cum,
-         SUM(wgt) OVER (PARTITION BY start, wid) AS tot
-  FROM c{t}
-),
-w{t} AS MATERIALIZED (
-  SELECT start, wid, cur AS prev, nbr AS cur FROM (
-    SELECT s.*, ((({h2}) * ({h2}) + {WALK_E}) % {WALK_P}) % s.tot AS r
-    FROM s{t} s
-  ) WHERE cum - wgt <= r AND r < cum
-)""")
-    unions = "\n  UNION ALL\n".join(
-        f"  SELECT start, wid, CAST({t} AS INTEGER) AS step, cur AS node"
-        f" FROM w{t}"
-        for t in range(WL + 1)
-    )
-    rows = con.execute(head + "".join(steps) + f"\n{unions}").fetchall()
-    assert {tuple(r) for r in rows} == got and len(got) > 50
 
 
 def test_modularity_driver_matches_distributed(spark):
@@ -1051,45 +878,14 @@ def test_cc_driver_singleton_attach_matches_distributed(spark):
 
 
 def test_graph_driver_paths_match_distributed_r11(spark):
-    """The r11 driver fast paths (triangle_counts, clustering_
-    coefficients, k_core, bfs_hops, sssp_weighted) must be row-identical
-    to their forced-distributed twins on graphs that exercise hubs,
-    tails, unreachable nodes, string keys and weighted corridors."""
-    from bi_gcp_stitch_repl_spark.functions.graph import (
-        bfs_hops,
-        clustering_coefficients,
-        k_core,
-        sssp_weighted,
-        triangle_counts,
-    )
+    """The r11 sssp_weighted driver fast path must be row-identical to
+    its forced-distributed twin on a weighted corridor graph with an
+    isolated source, a self-loop and unreachable nodes, and keep the
+    positive-weight guard. (The unweighted operators' cases live in
+    test_unweighted_graph_paths_agree_at_threshold.)"""
+    from bi_gcp_stitch_repl_spark.functions.graph import sssp_weighted
 
-    e = spark.createDataFrame(
-        [(a, b) for a in range(4) for b in range(4) if a < b]
-        + [(3, 4), (4, 5), (5, 6), (6, 4), (7, 8)],
-        "x long, y long",
-    )
-    for fn, kw in (
-        (triangle_counts, {}),
-        (clustering_coefficients, {}),
-        (lambda d, **k: k_core(d, 2, **k), {}),
-    ):
-        drv = sorted(map(tuple, fn(e, **kw).collect()))
-        dist = sorted(map(tuple, fn(e, driver_threshold=0, **kw).collect()))
-        assert drv == dist and drv, fn
-    # string keys through the driver triangle path
-    es = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d")], "x string, y string"
-    )
-    drv = sorted(map(tuple, triangle_counts(es).collect()))
-    dist = sorted(map(tuple, triangle_counts(es, driver_threshold=0).collect()))
-    assert drv == dist == [("a", 1), ("b", 1), ("c", 1)]
-    # BFS: seeds incl. an isolated source (hops 0) and unreachable nodes
     seeds = spark.createDataFrame([(0,), (42,)], "node long")
-    drv = sorted(map(tuple, bfs_hops(e, seeds).collect()))
-    dist = sorted(
-        map(tuple, bfs_hops(e, seeds, driver_threshold=0).collect())
-    )
-    assert drv == dist and (42, 0) in drv and (7, 1) not in dict(drv).items()
     # SSSP over the directed weighted spelling
     ew = spark.createDataFrame(
         [(0, 1, 5), (1, 2, 1), (0, 2, 9), (2, 3, 1), (9, 9, 7), (4, 0, 2)],
@@ -1107,45 +903,48 @@ def test_graph_driver_paths_match_distributed_r11(spark):
         sssp_weighted(bad, seeds)
 
 
-def test_fused_und_probe_matches_simple_undirected(spark):
-    """r11-opt: _und_probe's driver-path Python normalization must emit
-    exactly the _simple_undirected row set (least/greatest, NULL/self-loop
-    drop, dedup) for every dispatch-eligible endpoint type — and the
-    VALUES-local input branch must probe without building a checkpoint."""
-    from bi_gcp_stitch_repl_spark.functions.graph import (
-        _simple_undirected,
-        _und_probe,
+def test_undirected_canonical_rows_python_matches_sql(spark):
+    """The undirected canonicalization the unweighted graph operators run
+    on: the Python spelling (dispatch.canonical_rows, the driver-local
+    path) and the SQL spelling (weighted_edges' plan) emit the same
+    ``(u, v, w)`` rows — least/greatest keys, NULL endpoints and
+    self-loops dropped, duplicates counted — for long and string keys;
+    a VALUES input canonicalizes without scheduling a job."""
+    from pyspark.sql import functions as F
+
+    from bi_gcp_stitch_repl_spark.functions.dispatch import (
+        canonical_rows,
+        weighted_edges,
     )
 
     fixtures = [
         (
-            [(1, 2), (2, 1), (3, 3), (None, 4), (5, None), (2, 7), (7, 2)],
+            [(1, 2), (2, 1), (3, 3), (None, 4), (5, None), (2, 7), (7, 2),
+             (7, 2)],
             "src long, dst long",
         ),
         (
-            [("b", "a"), ("a", "b"), ("z", "z"), ("m", "q")],
+            [("b", "a"), ("a", "b"), ("z", "z"), (None, "q"), ("m", "q"),
+             ("q", "m")],
             "src string, dst string",
         ),
     ]
     for rows, ddl in fixtures:
-        df = spark.createDataFrame(rows, ddl)
-        und, urows, utype = _und_probe(df, 100_000)
-        assert und is None and urows is not None
-        got = sorted((r.u, r.v) for r in urows)
-        want = sorted(
-            map(tuple, _simple_undirected(df).collect())
-        )
-        assert got == want, (got, want)
-    # VALUES-local input: zero jobs scheduled by the probe
+        df = spark.createDataFrame(rows, ddl).withColumn("w", F.lit(1))
+        py = sorted(map(tuple, canonical_rows([r + (1,) for r in rows], "und")))
+        sql = sorted(map(tuple, weighted_edges(df, 0, "und").plan.collect()))
+        assert py == sql and py, (py, sql)
     sc = spark.sparkContext
     vals = spark.sql(
-        "SELECT * FROM VALUES (1, 2), (2, 1), (4, 4) AS t(src, dst)"
+        "SELECT * FROM VALUES (1, 2, 1), (2, 1, 1), (4, 4, 1) AS t(src, dst, w)"
     )
-    before = len(sc.statusTracker().getJobIdsForGroup() or [])
-    und, urows, _ = _und_probe(vals, 100_000)
-    after = len(sc.statusTracker().getJobIdsForGroup() or [])
-    assert und is None and sorted((r.u, r.v) for r in urows) == [(1, 2)]
-    assert after == before, "local-relation probe must schedule no job"
+    sc.setJobGroup("und_values_probe", "VALUES canonicalization")
+    try:
+        ew = weighted_edges(vals, 100_000, "und")
+    finally:
+        sc.setJobGroup(None, None)
+    assert sorted(map(tuple, ew.rows)) == [(1, 2, 2)]
+    assert not sc.statusTracker().getJobIdsForGroup("und_values_probe")
 
 
 def test_sparsify_driver_path_matches_distributed(spark):
@@ -1371,6 +1170,113 @@ def test_weighted_dispatch_job_counts(spark, op, jobs):
     assert tuple(got) == jobs
 
 
+@pytest.mark.parametrize(
+    "op, jobs",
+    [
+        # (VALUES edge frame, groupBy aggregate): default-threshold jobs
+        # of the operator call. A VALUES frame canonicalizes job-free;
+        # bfs_hops adds its seed probe, connected_components its
+        # node-set probe. An aggregate pays the canonical checkpoint
+        # plus one probe.
+        ("triangle_counts", (0, 4)),
+        ("clustering_coefficients", (0, 4)),
+        ("k_core", (0, 4)),
+        ("bfs_hops", (1, 5)),
+        ("random_walks", (0, 4)),
+        ("connected_components", (2, 6)),
+    ],
+)
+def test_undirected_dispatch_job_counts(spark, op, jobs):
+    """The unweighted graph operators' and connected components'
+    dispatch cost is pinned: a VALUES edge frame canonicalizes job-free,
+    a groupBy aggregate pays one canonical checkpoint plus one probe."""
+    from pyspark.sql import functions as F
+
+    from bi_gcp_stitch_repl_spark.functions import graph
+
+    sc = spark.sparkContext
+    vals = spark.sql(
+        "SELECT * FROM VALUES (1L, 2L), (2L, 1L), (2L, 3L), (3L, 4L),"
+        " (4L, 4L), (4L, 1L), (1L, 3L) AS t(src, dst)"
+    )
+    agg = (
+        spark.createDataFrame(vals.collect())
+        .groupBy("src", "dst")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    seeds = spark.createDataFrame([(1,)], "node long")
+    fn = {
+        "k_core": lambda e: graph.k_core(e, 2),
+        "bfs_hops": lambda e: graph.bfs_hops(e, seeds),
+    }.get(op, getattr(graph, op))
+    got = []
+    for i, edges in enumerate((vals, agg)):
+        group = f"und_dispatch_{op}_{i}"
+        sc.setJobGroup(group, "undirected dispatch cost")
+        try:
+            fn(edges)
+        finally:
+            sc.setJobGroup(None, None)
+        got.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert tuple(got) == jobs
+
+
+#: parity inputs: the hub-and-tail graph (K4 with a tail into a triangle,
+#: plus a separate pair), string keys, an empty frame, a lone self-loop
+_PARITY_INPUTS = {
+    "hub_tail": (
+        [(a, b) for a in range(4) for b in range(4) if a < b]
+        + [(3, 4), (4, 5), (5, 6), (6, 4), (7, 8)],
+        "long",
+    ),
+    "strings": ([("a", "b"), ("b", "c"), ("a", "c"), ("c", "d")], "string"),
+    "empty": ([], "long"),
+    "self_loop": ([(5, 5)], "long"),
+}
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "triangle_counts", "clustering_coefficients", "k_core", "bfs_hops",
+        "random_walks", "connected_components",
+    ],
+)
+def test_unweighted_graph_paths_agree_at_threshold(spark, op):
+    """Driver and distributed paths give the same rows: the default
+    threshold and thresholds k-1, k and k+1 around the canonical edge
+    count k all match ``driver_threshold=0``. random_walks skips the
+    string keys: its step hash is integer arithmetic."""
+    from bi_gcp_stitch_repl_spark.functions import graph
+    from bi_gcp_stitch_repl_spark.functions.dispatch import canonical_rows
+
+    how = "min" if op == "connected_components" else "und"
+    for name, (rows, key) in _PARITY_INPUTS.items():
+        if op == "random_walks" and key == "string":
+            continue
+        e = spark.createDataFrame(rows, f"x {key}, y {key}")
+        seeds = spark.createDataFrame(
+            [("a",), ("zz",)] if key == "string" else [(0,), (42,)],
+            f"node {key}",
+        )
+        fn = {
+            "k_core": lambda **kw: graph.k_core(e, 2, **kw),
+            "bfs_hops": lambda **kw: graph.bfs_hops(e, seeds, **kw),
+        }.get(op, lambda **kw: getattr(graph, op)(e, **kw))
+        k = len(canonical_rows([(a, b, 1) for a, b in rows], how))
+        want = sorted(map(tuple, fn(driver_threshold=0).collect()))
+        # a threshold <= 0 IS the forced-distributed call: not re-run
+        bounds = [t for t in (k - 1, k, k + 1) if t > 0]
+        for kw in ({}, *({"driver_threshold": t} for t in bounds)):
+            got = sorted(map(tuple, fn(**kw).collect()))
+            assert got == want, (name, kw, got, want)
+        assert want or name != "hub_tail"
+        if (op, name) == ("triangle_counts", "strings"):
+            assert want == [("a", 1), ("b", 1), ("c", 1)]
+        if (op, name) == ("bfs_hops", "hub_tail"):
+            assert (42, 0) in want and 7 not in dict(want)
+
+
 def test_pagerank_teleport_probe_bounded_r12(spark):
     """r12-opt (r11 advice): the personalized-PageRank driver path must
     PROBE the teleport set instead of collecting it unbounded — a seed
@@ -1403,47 +1309,81 @@ def test_pagerank_teleport_probe_bounded_r12(spark):
     assert got == want and got
 
 
-def test_und_probe_skips_raw_checkpoint_on_nonaggregate_r12(spark):
-    """r12-opt (r11 verdict #3): _und_probe must not eagerly checkpoint
-    a NON-aggregate upstream — above the dispatch bound that would
-    materialize the full pre-dedup edge list in executor storage just to
-    decide "distributed". Aggregate upstreams (bounded output) keep the
-    checkpoint; both dispatch outcomes stay correct."""
-    from pyspark.sql import functions as F
+def _persistent_rdd_ids(sc) -> set:
+    """Ids of the context's persisted RDDs. Compare ADDED ids, not sizes:
+    the async ContextCleaner may unpersist other tests' stale
+    checkpoints mid-call, but it only ever removes entries."""
+    ids = set()
+    it = sc._jsc.sc().getPersistentRDDs().keysIterator()
+    while it.hasNext():
+        ids.add(it.next())
+    return ids
 
-    from bi_gcp_stitch_repl_spark.functions.dispatch import (
-        plan_output_aggregated,
-    )
-    from bi_gcp_stitch_repl_spark.functions.graph import (
-        _simple_undirected,
-        _und_probe,
-    )
+
+def test_undirected_edges_checkpoint_lifecycle(spark):
+    """Storage of the unweighted graph operators' dispatch. Above the
+    bound exactly one persisted RDD remains and it holds the canonical
+    (deduplicated) edge list — never the raw pre-dedup list, which at
+    scale would fill executor storage just to decide "distributed".
+    Below the bound nothing stays persisted after an operator call."""
+    from bi_gcp_stitch_repl_spark.functions import graph
 
     sc = spark.sparkContext
-    raw = spark.createDataFrame(
-        [(i % 7, (i * 3) % 7) for i in range(200)], "src long, dst long"
+    pairs = [(i % 7, (i * 3) % 7) for i in range(200)]
+    raw = spark.createDataFrame(pairs, "src long, dst long")
+    want = sorted({(min(a, b), max(a, b)) for a, b in pairs if a != b})
+    before = _persistent_rdd_ids(sc)
+    ew = graph._und_edges(raw, 5)
+    added = _persistent_rdd_ids(sc) - before
+    assert ew.rows is None and len(want) > 5
+    assert added == {ew.frame._jdf.queryExecution().analyzed().rdd().id()}
+    assert sorted((r.u, r.v) for r in ew.frame.collect()) == want
+    ew.free()
+    seeds = spark.createDataFrame([(1,)], "node long")
+    for call in (
+        lambda: graph.triangle_counts(raw),
+        lambda: graph.clustering_coefficients(raw),
+        lambda: graph.k_core(raw, 2),
+        lambda: graph.bfs_hops(raw, seeds),
+        lambda: graph.random_walks(raw),
+        lambda: graph.connected_components(raw),
+    ):
+        before = _persistent_rdd_ids(sc)
+        call()
+        assert not _persistent_rdd_ids(sc) - before
+
+
+@pytest.mark.parametrize("op", ["triangle_counts", "k_core"])
+def test_join_upstream_evaluated_once_above_bound(spark, op):
+    """An edge frame whose root is a shuffle join (no aggregate on top)
+    is evaluated ONCE per operator call above the dispatch bound: the
+    canonical edge list is checkpointed once and both the probe and the
+    distributed loop read the checkpoint. Upstream rows are counted
+    through an identity mapInArrow below the join."""
+    from bi_gcp_stitch_repl_spark.functions import graph
+
+    passes = spark.sparkContext.accumulator(0)
+
+    def identity(batches):
+        for batch in batches:
+            passes.add(batch.num_rows)
+            yield batch
+
+    n = 60
+    left = spark.createDataFrame(
+        [(i, i % 7) for i in range(n)], "k long, src long"
+    ).mapInArrow(identity, "k long, src long")
+    right = spark.createDataFrame(
+        [(i, (i * 2) % 7) for i in range(n)], "k long, dst long"
     )
-    assert not plan_output_aggregated(raw)
-    agg = raw.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w")).select(
-        "src", "dst"
-    )
-    assert plan_output_aggregated(agg)
-    # non-aggregate input ABOVE the bound: the probe must leave no new
-    # persisted RDD behind beyond the normalized checkpoint itself
-    before = sc._jsc.sc().getPersistentRDDs().size()
-    und, urows, _ = _und_probe(raw, 5)
-    after = sc._jsc.sc().getPersistentRDDs().size()
-    assert urows is None or len(urows) <= 5
-    assert after - before <= 1, "raw pre-dedup edge list was checkpointed"
-    got = sorted(map(tuple, und.collect()))
-    want = sorted(map(tuple, _simple_undirected(raw).collect()))
-    assert got == want
-    # below the bound: Python normalization, rows in hand, nothing kept
-    before = sc._jsc.sc().getPersistentRDDs().size()
-    und2, urows2, _ = _und_probe(raw, 100_000)
-    after = sc._jsc.sc().getPersistentRDDs().size()
-    assert und2 is None and sorted((r.u, r.v) for r in urows2) == want
-    assert after == before
+    edges = left.join(right.hint("merge"), "k").select("src", "dst")
+    fn = {
+        "triangle_counts": graph.triangle_counts,
+        "k_core": lambda e, **kw: graph.k_core(e, 2, **kw),
+    }[op]
+    # 6 canonical edges (two triangles), above the bound of 5
+    out = fn(edges, driver_threshold=5).collect()
+    assert out and passes.value == n, (op, passes.value)
 
 
 def test_sssp_local_input_fast_path_r12(spark):
