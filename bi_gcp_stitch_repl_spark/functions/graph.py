@@ -95,7 +95,9 @@ def connected_components(
 
     ``edges``: two-column DataFrame (any names; first = src, second = dst).
     ``nodes``: optional one-column DataFrame of all node ids — isolated
-    nodes (no edges) come back as singleton components. Each iteration is
+    nodes (no edges) come back as singleton components. Without it the
+    nodes are the edges' non-NULL endpoints: an edge with a NULL end adds
+    its other end as a singleton and no connectivity. Each iteration is
     localCheckpoint()ed: iterative algorithms otherwise stack an
     unbounded lineage that blows up planning time and executor stacks.
 
@@ -124,39 +126,34 @@ def connected_components(
     # take the same types on both paths
     common = e.select(F.array("src", "dst").alias("_x")).schema[0].dataType.elementType
     e = e.select(F.col("src").cast(common).alias("src"), F.col("dst").cast(common).alias("dst"))
-    # a node appearing ONLY in self-loop edges must still be labeled (a
-    # singleton component): the canonical aggregate below drops
-    # self-loops, which would erase it from both label paths — fold
-    # self-loop-only nodes into the ``nodes`` frame so the existing
-    # isolated-node path covers them
-    loop_only = e.filter(F.col("src") == F.col("dst")).select(
-        F.col("src").alias("node")
-    )
-    if nodes is not None:
-        n0, = nodes.columns[:1]
-        nodes = nodes.select(F.col(n0).cast(common).alias("node")).unionByName(
-            loop_only
-        ).distinct()
+    if nodes is None:
+        # every non-NULL endpoint is a node: an edge with one NULL end
+        # keeps its other end, as a self-loop
+        e = e.select(
+            F.coalesce("src", "dst").alias("src"), F.coalesce("dst", "src").alias("dst")
+        )
     else:
-        # built from the raw edges, so loop-only nodes are in —
-        # taken unconditionally: the former "probe for self-loops first"
-        # optimization ran an EAGER limit(1).count() job over the
-        # un-checkpointed edge frame on every call (a full upstream
-        # re-evaluation) to sometimes save one bounded anti-join on the
-        # node set — a bad trade at any scale
-        nodes = e.select(F.col("src").alias("node")).unionByName(
-            e.select(F.col("dst").alias("node"))
-        ).distinct()
-    # the directed, distinct, self-loop-free edge list is the "min"
-    # canonical aggregate (its unit weight is ignored) — not "und", whose
-    # least/greatest re-keying adds a shuffle over pair lists that are
-    # already distinct. When it fits, the probe rows ARE the union-find
-    # input.
-    ew = weighted_edges(e.withColumn("w", F.lit(1)), driver_threshold, "min")
+        n0, = nodes.columns[:1]
+        nodes = nodes.select(F.col(n0).cast(common).alias("node"))
+    # the directed, distinct edge list is the "sum" canonical aggregate
+    # (its unit weights are ignored) — not "und", whose least/greatest
+    # re-keying adds a shuffle over pair lists that are already
+    # distinct. It keeps self-loops, so a node appearing ONLY in
+    # self-loop edges is labelled (a singleton component) from the
+    # canonical list on both paths, and the raw edges are read once.
+    # When it fits, the probe rows ARE the union-find input.
+    ew = weighted_edges(e.withColumn("w", F.lit(1)), driver_threshold, "sum")
     if ew.rows is not None:
         ew.free()
-        return _cc_driver(ew.rows, nodes, common, driver_threshold)
-    e = ew.frame.select("src", "dst")
+        if nodes is not None:
+            nodes = nodes.distinct()
+        return _cc_driver(ew.rows, nodes, e.sparkSession, common, driver_threshold)
+    # the star rounds label every endpoint of a non-loop edge; what is
+    # left to attach as singletons is the loop-only nodes and the
+    # caller's isolated nodes
+    loops = ew.frame.filter(F.col("src") == F.col("dst")).select(F.col("src").alias("node"))
+    nodes = loops if nodes is None else nodes.unionByName(loops).distinct()
+    e = ew.frame.filter(F.col("src") != F.col("dst")).select("src", "dst")
     changed = False
     for _ in range(max_iter):
         after = _small_star(_large_star(e), pre_oriented=True).localCheckpoint(
@@ -196,13 +193,14 @@ def connected_components(
 
 
 def _cc_driver(
-    erows: list, nodes: DataFrame, id_type, driver_threshold: int
+    erows: list, nodes: DataFrame | None, spark, id_type, driver_threshold: int
 ) -> DataFrame:
-    """Small-graph path: union-find over the collected edge list, labels
-    re-emitted as a DataFrame of ``id_type`` ids; ``nodes`` is the
-    distinct one-column ``node`` frame. Deterministic min-label
-    components — identical output to the distributed star algorithm. The
-    singleton attach dispatches the same way the edge side did: when the
+    """Small-graph path: union-find over the collected edge list (self-loops
+    included, so loop-only nodes label themselves), labels re-emitted as a
+    DataFrame of ``id_type`` ids; ``nodes`` is the distinct one-column
+    ``node`` frame, or None when the edges name every node. Deterministic
+    min-label components — identical output to the distributed star
+    algorithm. The singleton attach dispatches the same way the edge side did: when the
     node set also fits ``driver_threshold`` (one probe job) the full
     label list — including singletons — is built in Python and emitted as
     ONE local relation, replacing the distributed anti-join + union the
@@ -228,12 +226,13 @@ def _cc_driver(
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     label_rows = [(n, find(n)) for n in sorted(touched)]
-    spark = nodes.sparkSession
     import pyspark.sql.types as T
 
     schema = T.StructType(
         [T.StructField("node", id_type), T.StructField("component", id_type)]
     )
+    if nodes is None:
+        return local_df(spark, label_rows, schema)
     nrows = probe_rows(nodes, driver_threshold)
     if nrows is not None:
         # full label list driver-side: same (node, component) set as

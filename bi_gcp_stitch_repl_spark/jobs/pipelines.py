@@ -40,19 +40,6 @@ def merge_table(spark: SparkSession, path: str, table_factory=None):
     return (table_factory or VersionedTable)(spark, path)
 
 
-def _landed(extract: DataFrame) -> DataFrame:
-    """Land a driver-built extract in the JVM once, right after its source
-    call. ``createDataFrame`` over Python rows leaves a plan that PySpark
-    re-serializes through Python workers on EVERY action — each count,
-    sink read, key frame and merge bounds probe pays that pass again (on
-    4 vCPUs a 5,500-row nested extract costs ~0.4 s per pass against
-    ~0.1 s for the same action over a checkpoint). The one eager
-    checkpoint is that pass, paid once; the
-    driver-side schema verification inside ``createDataFrame`` still runs
-    first, so a malformed payload fails before anything commits."""
-    return extract.localCheckpoint(eager=True)
-
-
 def bexio_invoice_replication(
     spark: SparkSession,
     transport: rest.Transport,
@@ -73,7 +60,7 @@ def bexio_invoice_replication(
     Returns (header_rows, line_item_rows) upserted.
     """
     pages = rest.paginate_offset(transport, api_base, limit=page_limit)
-    raw = _landed(rest.to_dataframe(spark, pages, schemas.BEXIO_INVOICE))
+    raw = rest.to_dataframe(spark, pages, schemas.BEXIO_INVOICE)
 
     headers_tbl = merge_table(spark, warehouse_path, table_factory)
     existing = (
@@ -157,7 +144,7 @@ def billwerk_contract_refresh(
     truncate-refresh. The reference's CSV/GCS staging hop (and its quoting
     pathology, F2) has no equivalent — parquet overwrite is the load."""
     pages = rest.paginate_keyset(transport, api_base, take=500)
-    raw = _landed(rest.to_dataframe(spark, pages, schemas.BILLWERK_CONTRACT))
+    raw = rest.to_dataframe(spark, pages, schemas.BILLWERK_CONTRACT)
     flat = raw.select(
         F.col("Id").alias("contract_id"),
         F.col("CustomerId").alias("customer_id"),
@@ -197,7 +184,7 @@ def billwerk_incremental_invoices(
     # after an outage with row_limit=None) is exactly when the slice is
     # the WHOLE upstream history — driver residency must stay one chunk
     schema = "Id long, amount double, status string"
-    batch = _landed(rest.to_dataframe(spark, pages, schema))
+    batch = rest.to_dataframe(spark, pages, schema)
     stats = batch.agg(
         F.count(F.lit(1)).alias("n"), F.max("Id").alias("hi")
     ).collect()[0]
@@ -234,7 +221,7 @@ def lexoffice_invoice_items(
     pages = rest.paginate_page_flag(
         list_transport, api_base, size=page_size, items_key="content"
     )
-    vouchers = _landed(rest.to_dataframe(spark, pages, schemas.LEXOFFICE_VOUCHER))
+    vouchers = rest.to_dataframe(spark, pages, schemas.LEXOFFICE_VOUCHER)
     invoice_ids = vouchers.filter(
         (F.col("voucherType") == "invoice") & ~F.col("archived")
     ).select(F.col("id"))
@@ -346,18 +333,16 @@ def sheet_import_snapshot(
     is O(sheet), not O(table)."""
     from ..sources.sheets import sheet_source
 
-    df = _landed(
-        sheet_source(
-            spark,
-            transport,
-            spreadsheet_id,
-            range_a1,
-            api_base=api_base,
-            header_row=header_row,
-            data_start=data_start,
-            data_end=data_end,
-            col_slice=tuple(col_slice) if col_slice is not None else None,
-        )
+    df = sheet_source(
+        spark,
+        transport,
+        spreadsheet_id,
+        range_a1,
+        api_base=api_base,
+        header_row=header_row,
+        data_start=data_start,
+        data_end=data_end,
+        col_slice=tuple(col_slice) if col_slice is not None else None,
     )
     for col, fmt in (date_cols or {}).items():
         df = df.withColumn(col, F.try_to_date(F.col(col), fmt))
@@ -401,7 +386,7 @@ def hubspot_ticket_refresh(
         },
         items_key="results",
     )
-    raw = _landed(rest.to_dataframe(spark, pages, schemas.HUBSPOT_TICKET))
+    raw = rest.to_dataframe(spark, pages, schemas.HUBSPOT_TICKET)
     flat = raw.select(
         F.col("id").alias("ticket_id"),
         F.col("createdAt").alias("created_at"),
@@ -427,7 +412,7 @@ def stripe_account_rollup(
     reference's per-row python accumulation as one grouped pass) →
     staging-merge into the warehouse."""
     pages = rest.paginate_starting_after(transport, api_base, limit=100)
-    txns = _landed(rest.to_dataframe(spark, pages, schemas.STRIPE_BALANCE_TXN))
+    txns = rest.to_dataframe(spark, pages, schemas.STRIPE_BALANCE_TXN)
     t = F.col("type")
     rollup = txns.groupBy("account_id").agg(
         F.sum(F.when(t.isin("available", "connect_reserved", "pending"), F.col("amount")).otherwise(0.0)).alias("balance"),
@@ -543,7 +528,7 @@ def entity_replication(
     schema = _ddl_schema(src.pop("schema"))
     url = src.pop("url")
     pages = _PAGINATORS[protocol](transport, url, **src)
-    raw = _landed(rest.to_dataframe(spark, pages, schema))
+    raw = rest.to_dataframe(spark, pages, schema)
 
     if detail is not None:
         if detail_fetch is None:

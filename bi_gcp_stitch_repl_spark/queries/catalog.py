@@ -274,6 +274,11 @@ def spread_narrow(df: DataFrame, *key_cols: str) -> DataFrame:
 #:    trio. The rest of the r11 window keeps its slots — every member's
 #:    freshest driver row is r11, far above the machine-checked >=r08
 #:    staleness bar, and rotation churn is itself a correctness risk.
+#: 4. Changed sink/source canaries: k1_merge_upsert (sinks/versioned.py —
+#:    the undistinct bounds probe and footer-schema reads) and
+#:    s4_keyset_increment + s7_detail_fanout (sources/rest.py — the Arrow
+#:    extract) take the slots of x_split_shard, x_stratified_sample and
+#:    x_string_agg, released: each r12-fresh, its library untouched.
 #: Names absent from this list keep registration order after it.
 _PRIORITY: list[str] = [
     # §2 spine
@@ -291,7 +296,6 @@ _PRIORITY: list[str] = [
     "x_minhash_lsh_candidates", "x_mixture_sample",
     "x_multimodal_meta", "x_semantic_decontaminate",
     "x_semdedup", "x_simhash", "x_simhash_pairs", "x_sparse_cosine_pairs",
-    "x_split_shard", "x_stratified_sample", "x_string_agg",
     "x_token_budget_plan", "x_vocab_encode", "x_weighted_sample",
     "x_winnowing_fingerprints", "x_winnowing_pairs",
     # r11 new-query cohort (keeps slots)
@@ -300,6 +304,8 @@ _PRIORITY: list[str] = [
     # re-oracled graph-family rewrites (7): see header
     "x_bfs_trade", "x_sssp_trade", "x_kcore_trade", "x_pagerank_trade",
     "x_hits_trade", "x_ppr_trade", "x_triangle_trade",
+    # changed sink/source canaries (see header)
+    "k1_merge_upsert", "s4_keyset_increment", "s7_detail_fanout",
 ]
 
 

@@ -44,10 +44,24 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .merge import _null_safe_on
 
 _LOG_DIR = "_log"
+#: parquet footer key under which Spark stores the row schema it wrote
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(path: str) -> T.StructType | None:
+    """The Spark schema embedded in a parquet footer, or None."""
+    import pyarrow.parquet as pq
+
+    try:
+        raw = (pq.read_metadata(path).metadata or {}).get(_SPARK_SCHEMA_KEY)
+        return T.StructType.fromJson(json.loads(raw)) if raw else None
+    except Exception:  # noqa: BLE001 — unreadable or legacy: infer instead
+        return None
 
 
 class CommitConflict(Exception):
@@ -363,6 +377,8 @@ class VersionedTable:
         round-trips JSON exactly (ints, floats, strings, ISO-encoded
         dates/timestamps — see ``_encode_bound``); a column without an
         entry simply never prunes."""
+        import pyarrow as pa
+
         try:
             import pyarrow.parquet as pq
 
@@ -376,8 +392,11 @@ class VersionedTable:
                 st = col.statistics
                 if st is None or not st.has_min_max:
                     continue
-                lo = VersionedTable._encode_bound(st.min)
-                hi = VersionedTable._encode_bound(st.max)
+                try:
+                    lo = VersionedTable._encode_bound(st.min)
+                    hi = VersionedTable._encode_bound(st.max)
+                except pa.ArrowNotImplementedError:
+                    continue  # e.g. an INT64-backed decimal: no stats decoder
                 if lo is None or hi is None:
                     continue
                 name = col.path_in_schema
@@ -489,14 +508,48 @@ class VersionedTable:
                 out.append(fname)
         return out
 
+    @staticmethod
+    def _key_bounds(keys_df: DataFrame, key0: str):
+        """One aggregate job over a (possibly duplicated) key set: its
+        ``keys[0]`` (lo, hi) and whether any key is NULL, or None for an
+        empty set."""
+        row = keys_df.agg(
+            F.min(key0).alias("lo"),
+            F.max(key0).alias("hi"),
+            F.count(F.lit(1)).alias("n"),
+            F.count(key0).alias("n_nonnull"),
+        ).collect()[0]
+        if row["n"] == 0:
+            return None
+        return row["lo"], row["hi"], row["n_nonnull"] < row["n"]
+
+    def _touched(self, state: dict, key0: str, bounds: tuple) -> list[str]:
+        """The live files whose logged ``keys[0]`` [min,max] overlaps the
+        key bounds. NULL-key rows match null-safely (see _null_safe_on) but
+        parquet min/max stats ignore NULLs — a file holding a NULL-key row
+        can sit entirely outside [lo,hi], so any NULL key disables pruning
+        and every file is touched."""
+        lo, hi, any_null = bounds
+        if any_null or self._encode_bound(lo) is None:
+            return sorted(state["files"])
+        return self._prune_from_stats(state["files"], {key0: (lo, hi)})
+
     def _read_files(self, files: list[str], evolved: bool) -> DataFrame:
-        """Read table-relative part files, honoring mergeSchema when the
-        snapshot is schema-evolved (a plain multi-file read takes ONE
-        footer's schema and would silently drop evolved columns)."""
+        """Read table-relative part files. An evolved snapshot is read with
+        mergeSchema (a plain multi-file read takes ONE footer's schema and
+        would silently drop evolved columns). Otherwise the reader gets the
+        Spark schema Spark embeds in every parquet footer it writes, taken
+        from the file inference would read (the first by path), so no
+        schema-inference job runs; a file without it keeps inference."""
+        paths = [os.path.join(self.path, f) for f in files]
         reader = self.spark.read
         if evolved:
             reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*[os.path.join(self.path, f) for f in files])
+        else:
+            schema = _footer_schema(min(paths))
+            if schema is not None:
+                reader = reader.schema(schema)
+        return reader.parquet(*paths)
 
     def read(
         self, version: int | None = None, where: dict[str, tuple] | None = None
@@ -905,45 +958,22 @@ class VersionedTable:
             return self.overwrite(batch)
         base = self.latest_version()
         state = self._snapshot_state(base)
-        all_files = sorted(state["files"])
-        touched = all_files
         key0 = keys[0]
-        # ONE consistent batch snapshot: the plan feeds the bounds agg,
-        # the anti-join, the CDC joins and the final union — without the
-        # checkpoint a non-deterministic upstream (live source, rand())
-        # is re-evaluated per consumer and the CDC records can disagree
-        # with the rows actually committed; deterministic batches simply
-        # stop paying ~5 recomputations of their plan
+        # ONE consistent batch snapshot: the bounds probe, the anti-join,
+        # the CDC joins and the final union all read it, so a
+        # non-deterministic upstream (live source, rand()) cannot give the
+        # CDC records other rows than the commit
         batch = batch.localCheckpoint(eager=False)
-        batch_keys = batch.select(*keys).distinct()
+        # no distinct: the bounds ignore duplicates and so do the semi/anti
+        # joins that read this key set
+        batch_keys = batch.select(*keys)
+        delete_keys = batch_keys
         if key_frame is not None:
-            delete_keys = batch_keys.unionByName(
-                key_frame.select(*keys)
-            ).distinct()
-        else:
-            delete_keys = batch_keys
-        bounds = delete_keys.agg(
-            F.min(key0).alias("lo"),
-            F.max(key0).alias("hi"),
-            F.count(F.lit(1)).alias("n"),
-            F.count(key0).alias("n_nonnull"),
-        ).collect()[0]
-        if bounds["n"] == 0:
+            delete_keys = batch_keys.unionByName(key_frame.select(*keys))
+        bounds = self._key_bounds(delete_keys, key0)
+        if bounds is None:
             return base  # nothing to insert or purge: snapshot IS the result
-        # NULL-key rows match null-safely (see _null_safe_on) but parquet
-        # min/max stats ignore NULLs — a file holding a NULL-key row can sit
-        # entirely outside the batch's [lo,hi]. Any NULL in key0 therefore
-        # disables pruning; the rewrite falls back to the full file set.
-        if (
-            bounds["n_nonnull"] == bounds["n"]
-            and self._encode_bound(bounds["lo"]) is not None
-        ):
-            pruned = set(
-                self._prune_from_stats(
-                    state["files"], {key0: (bounds["lo"], bounds["hi"])}
-                )
-            )
-            touched = [f for f in all_files if f in pruned]
+        touched = self._touched(state, key0, bounds)
         self._check_schema(batch, schema_evolution, state, verb="merging into")
         cdc_actions: list[dict] = []
         if touched:
@@ -987,7 +1017,7 @@ class VersionedTable:
                         "_change_type", F.lit("update_preimage")
                     )
                     dels = None
-                ex_keys = existing.select(*keys).distinct()
+                ex_keys = existing.select(*keys)
                 post = batch.join(
                     ex_keys, _null_safe_on(batch, ex_keys, keys), "left_semi"
                 ).withColumn("_change_type", F.lit("update_postimage"))
@@ -1044,8 +1074,6 @@ class VersionedTable:
             return 0
         base = self.latest_version()
         state = self._snapshot_state(base)
-        all_files = sorted(state["files"])
-        touched = all_files
         key0 = keys[0]
         # ONE consistent request snapshot (merge_upsert's rule): the key
         # set feeds four independent actions — the bounds collect, the
@@ -1055,27 +1083,11 @@ class VersionedTable:
         # survivors can disagree with the CDC audit trail and the
         # returned count — for a GDPR-erasure primitive, the audit
         # evidence MUST match the rows actually removed.
-        rhs = keys_df.select(*keys).distinct().localCheckpoint(eager=False)
-        bounds = rhs.agg(
-            F.min(key0).alias("lo"),
-            F.max(key0).alias("hi"),
-            F.count(F.lit(1)).alias("n"),
-            F.count(key0).alias("n_nonnull"),
-        ).collect()[0]
-        if bounds["n"] == 0:
+        rhs = keys_df.select(*keys).localCheckpoint(eager=False)
+        bounds = self._key_bounds(rhs, key0)
+        if bounds is None:
             return 0  # empty request set: nothing to erase
-        # NULL keys match null-safely but never appear in parquet min/max
-        # stats — any NULL in key0 disables file pruning (see merge_upsert)
-        if (
-            bounds["n_nonnull"] == bounds["n"]
-            and self._encode_bound(bounds["lo"]) is not None
-        ):
-            pruned = set(
-                self._prune_from_stats(
-                    state["files"], {key0: (bounds["lo"], bounds["hi"])}
-                )
-            )
-            touched = [f for f in all_files if f in pruned]
+        touched = self._touched(state, key0, bounds)
         if not touched:
             return 0
         existing = self._read_files(touched, state["schema_evolved"])

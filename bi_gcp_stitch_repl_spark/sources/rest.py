@@ -8,8 +8,10 @@ detail fan-out against six SaaS APIs; this module re-expresses them as:
   data-bound: page counts are 10²-10⁴, so the driver loop is not the
   bottleneck — the *fetch latency* is, which the reference also serialized
   per page);
-- ``to_dataframe``: pages → ``spark.createDataFrame`` with an explicit
-  schema (autodetect only as dev fallback, SURVEY §1.3);
+- ``to_dataframe``: pages → a JVM-held frame with an explicit schema
+  (SURVEY §1.3): each chunk is checked by PySpark's row verifier, then
+  shipped as an Arrow table, so no later action re-runs the conversion in
+  Python workers;
 - ``fanout_fetch``: the per-key detail fetch (S7/J6) as ``mapInPandas``
   over the key DataFrame — Spark's distributed replacement for the
   reference's ThreadPoolExecutor (MAX_WORKERS 2-10,
@@ -40,7 +42,11 @@ from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _make_type_verifier
 
 Transport = Callable[[str, dict], Any]
 
@@ -300,41 +306,98 @@ def paginate_starting_after(
 # ---------------------------------------------------------------------------
 
 
+#: leaf types whose Python → Spark conversion Arrow reproduces exactly for
+#: every value the row verifier accepts, or refuses (a refusal takes the
+#: list conversion). Datetime-family types stay on the list conversion: it
+#: reads a naive ``datetime`` in the host zone, Arrow reads it as UTC.
+_ARROW_LEAVES = (
+    T.StringType, T.BooleanType, T.ByteType, T.ShortType, T.IntegerType,
+    T.LongType, T.FloatType, T.DoubleType, T.DecimalType, T.BinaryType,
+    T.NullType,
+)
+
+
+def _arrow_exact(dt: T.DataType) -> bool:
+    if isinstance(dt, T.StructType):
+        return all(_arrow_exact(f.dataType) for f in dt.fields)
+    if isinstance(dt, T.ArrayType):
+        return _arrow_exact(dt.elementType)
+    if isinstance(dt, T.MapType):
+        return _arrow_exact(dt.keyType) and _arrow_exact(dt.valueType)
+    return type(dt) in _ARROW_LEAVES
+
+
+def _chunk_frame(spark: SparkSession, rows: list, schema, verify, arrow_schema):
+    """One chunk of fetched rows → a JVM-held frame.
+
+    PySpark's own row verifier runs first, so every payload
+    ``createDataFrame(list)`` rejects still raises here, before anything
+    commits — Arrow alone would, e.g., turn 1.5 into 1 in a ``bigint``.
+    Then the rows become an Arrow table, and the frame reads its batches
+    from the JVM: no Python worker runs on any later action. Rows Arrow
+    cannot take exactly (a non-``str`` scalar in a ``string`` field, a
+    non-dict row, a datetime-family schema) take the list conversion
+    instead, landed once with an eager local checkpoint so later actions
+    do not re-run it through Python workers; those rows are rendered as
+    the list conversion always rendered them (``5`` → ``'5'``). Arrow does
+    take ``bytes`` in a ``string`` field: it decodes them as UTF-8 where
+    the list conversion stored their repr (``"b'ab'"``)."""
+    arrow = arrow_schema is not None
+    for row in rows:
+        verify(row)
+        # from_pylist reads a non-dict row by key lookup and would turn
+        # it into NULLs without complaint
+        arrow = arrow and isinstance(row, dict)
+    if arrow:
+        try:
+            table = pa.Table.from_pylist(rows, schema=arrow_schema)
+        except Exception:  # noqa: BLE001 — any refusal: list conversion
+            table = None
+        if table is not None:
+            return spark.createDataFrame(table, schema)
+    return spark.createDataFrame(rows, schema, verifySchema=False).localCheckpoint(
+        eager=True
+    )
+
+
 def to_dataframe(
     spark: SparkSession,
     pages: Iterator[list[dict]],
     schema,
     chunk_rows: int = 50_000,
 ) -> DataFrame:
-    """Materialize a page iterator into a DataFrame with an explicit schema.
+    """Materialize a page iterator into a DataFrame with an explicit schema
+    (a ``StructType`` or a DDL string).
 
     The reference pickles whole pandas frames through Airflow XCom between
     tasks (SURVEY §3.1 stage 3); here pages are shipped to the JVM in
     ``chunk_rows`` slices as they arrive, so driver residency is bounded
     by one chunk of Python dicts — not the whole extract (the API-side
-    pagination is inherently driver-sequential; holding 5M dicts for a
-    large pull was the old cost). The list-of-dicts conversion is kept
-    per chunk because it is the one path that handles the nested
-    struct/array payloads (vouchers, invoices) robustly; rows missing
-    keys get NULL (the reference's required_columns padding) — explicit
-    schema = schema-on-write (SURVEY §1.3)."""
+    pagination is inherently driver-sequential). Each chunk is verified
+    against the schema and converted through Arrow (``_chunk_frame``);
+    nested struct/array payloads convert as dicts and lists, and rows
+    missing keys get NULL (the reference's required_columns padding) —
+    explicit schema = schema-on-write (SURVEY §1.3). The result is held
+    in the JVM, so counts, key frames and merges over it never re-run the
+    conversion."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    verify = _make_type_verifier(schema)
+    arrow_schema = to_arrow_schema(schema) if _arrow_exact(schema) else None
     chunks: list[DataFrame] = []
     buf: list[dict] = []
 
     def flush() -> None:
         nonlocal buf
-        if not buf:
-            return
-        chunks.append(spark.createDataFrame(buf, schema=schema))
+        chunks.append(_chunk_frame(spark, buf, schema, verify, arrow_schema))
         buf = []
 
     for page in pages:
         buf.extend(page)
         if len(buf) >= chunk_rows:
             flush()
-    flush()
-    if not chunks:
-        return spark.createDataFrame([], schema=schema)
+    if buf or not chunks:
+        flush()
     # balanced union tree, not a left-leaning chain: a large backfill's
     # thousands of chunks would otherwise build an O(n)-deep Union plan
     # (quadratic analysis time, driver StackOverflow risk) — pairwise

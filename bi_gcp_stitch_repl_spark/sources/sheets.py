@@ -8,7 +8,8 @@ cols 0:7 + drop-empty-column ``dags/price-increase/import_bi_dev_gross_margin.py
 35-46``).
 
 Sheets are driver-sized by nature (≤ a few 10⁵ cells), so the fetch is
-driver-side; everything after ``createDataFrame`` is distributed. The sheet
+driver-side; the rows reach the JVM through the REST sources' conversion
+(``rest.to_dataframe``), and everything after it is distributed. The sheet
 client is injectable — the engine takes the values matrix, not a live API.
 """
 
@@ -16,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from .rest import to_dataframe
 
 
 def fetch_sheet_values(
@@ -104,10 +107,6 @@ def sheet_to_dataframe(
     if drop_empty_cols:
         keep = [i for i in keep if (header[i] or "").strip() != ""]
     names = [_clean_header(header[i], i) for i in keep]
-    data = [
-        tuple((r[i] if i < len(r) else None) for i in keep)
-        for r in rows
-    ]
     # sanitize to plain identifiers: dots would parse as struct access in
     # every downstream F.col()/ops.clean reference and most punctuation
     # needs backticks; then de-duplicate (two identical headers would
@@ -129,4 +128,8 @@ def sheet_to_dataframe(
     schema = T.StructType(
         [T.StructField(n, T.StringType()) for n in out_names]
     )
-    return spark.createDataFrame(data, schema=schema)
+    data = [
+        {n: (r[i] if i < len(r) else None) for n, i in zip(out_names, keep)}
+        for r in rows
+    ]
+    return to_dataframe(spark, [data], schema)

@@ -1724,29 +1724,34 @@ def test_cli_runs_domain_authority_job(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# extract landing: each REST extract is evaluated once per sync
+# extract: converted once per sync, then read from the JVM
 # ---------------------------------------------------------------------------
 
 
-def _count_extract_passes(spark, monkeypatch):
-    """Route every ``rest.to_dataframe`` frame through an identity
-    ``mapInArrow`` that adds each batch's row count to an accumulator:
-    after a sync it reads (rows fetched) × (evaluations of the extract)."""
-    passes = spark.sparkContext.accumulator(0)
-    to_dataframe = rest.to_dataframe
+def _watch_extract(monkeypatch):
+    """Record every frame ``rest.to_dataframe`` returns and count the rows
+    handed to its driver-side conversion (``rest._chunk_frame``)."""
+    seen = {"rows": 0, "frames": []}
+    to_dataframe, chunk_frame = rest.to_dataframe, rest._chunk_frame
 
-    def counted(spark, pages, schema, *args, **kwargs):
-        df = to_dataframe(spark, pages, schema, *args, **kwargs)
+    def counted_chunk(spark, rows, *args):
+        seen["rows"] += len(rows)
+        return chunk_frame(spark, rows, *args)
 
-        def identity(batches):
-            for batch in batches:
-                passes.add(batch.num_rows)
-                yield batch
+    def recorded(*args, **kwargs):
+        df = to_dataframe(*args, **kwargs)
+        seen["frames"].append(df)
+        return df
 
-        return df.mapInArrow(identity, df.schema)
+    monkeypatch.setattr(rest, "_chunk_frame", counted_chunk)
+    monkeypatch.setattr(rest, "to_dataframe", recorded)
+    return seen
 
-    monkeypatch.setattr(rest, "to_dataframe", counted)
-    return passes
+
+def _runs_python_worker(df) -> bool:
+    """Whether executing ``df`` runs a Python worker (a PythonRDD in the
+    lineage of its executed plan)."""
+    return "PythonRDD" in df._jdf.queryExecution().toRdd().toDebugString()
 
 
 def _order(i, total="10.00", n_positions=2):
@@ -1792,44 +1797,47 @@ def sync_orders(spark, rows, wh, items):
 
 
 def test_entity_replication_evaluates_extract_once(spark, tmp_path, monkeypatch):
-    """The extract is a Python-backed frame: every action over it re-runs
-    the conversion in Python workers. Landing it once means each sync —
-    initial load and changed re-sync alike — converts each fetched row
-    exactly once, however many counts, key frames and merges follow."""
-    passes = _count_extract_passes(spark, monkeypatch)
+    """The extract is held in the JVM: no action over it — counts, key
+    frames, merges — runs a Python worker, and each sync (initial load
+    and changed re-sync alike) converts each fetched row exactly once."""
+    seen = _watch_extract(monkeypatch)
     wh, items = str(tmp_path / "orders"), str(tmp_path / "items")
 
     def sync(rows):
-        before = passes.value
-        return sync_orders(spark, rows, wh, items), passes.value - before
+        before = seen["rows"]
+        return sync_orders(spark, rows, wh, items), seen["rows"] - before
 
     base = [_order(i) for i in range(1, 8)]
     assert sync(base) == ((7, 14), 7)
     resync = base[:3] + [_order(4, total="99.00", n_positions=1)] + base[4:] + [_order(8)]
     assert sync(resync) == ((8, 15), 8)
+    assert len(seen["frames"]) == 2
+    assert not any(_runs_python_worker(df) for df in seen["frames"])
     got = {r["id"]: r["total"] for r in read_merged(spark, wh).collect()}
     assert len(got) == 8 and got[4] == 99.0
     assert read_merged(spark, items).filter("order_id = 4").count() == 1
 
 
 def test_bexio_invoice_replication_evaluates_extract_once(spark, tmp_path, monkeypatch):
-    passes = _count_extract_passes(spark, monkeypatch)
+    seen = _watch_extract(monkeypatch)
     wh, li = str(tmp_path / "invoices"), str(tmp_path / "line_items")
     invoices = [make_invoice(i) for i in range(1, 6)]
     assert pipelines.bexio_invoice_replication(
         spark, bexio_transport(invoices), wh, li, page_limit=2
     ) == (5, 10)
-    assert passes.value == 5
+    assert seen["rows"] == 5
     invoices2 = [make_invoice(1, total="222.00")] + [make_invoice(9)]
     assert pipelines.bexio_invoice_replication(
         spark, bexio_transport(invoices2), wh, li, page_limit=2
     ) == (2, 4)
-    assert passes.value == 5 + 2
+    assert seen["rows"] == 5 + 2
+    assert len(seen["frames"]) == 2
+    assert not any(_runs_python_worker(df) for df in seen["frames"])
 
 
 def test_entity_replication_wrong_typed_payload_fails_before_commit(spark, tmp_path):
-    """Landing the extract keeps the driver-side schema verification in
-    front of it: a string in a bigint column raises out of the sync, and
+    """The driver-side schema verification runs in front of the extract's
+    conversion: a string in a bigint column raises out of the sync, and
     neither target gains a commit."""
     wh, items = str(tmp_path / "orders"), str(tmp_path / "items")
     sync_orders(spark, [_order(1), _order(2)], wh, items)

@@ -94,8 +94,9 @@ def test_driver_window_covers_survey_gates():
     w_topk_per_group precedent), and the SEVEN re-oracled graph-family
     twins (r11 verdict #3): their library operators gained driver fast
     paths in the r11 optimization session AFTER the twins rotated out of
-    the window, so the driver must re-oracle them now. It additionally
-    proves the coverage-closure invariant: the union of the prior
+    the window, so the driver must re-oracle them now; three changed
+    sink/source canaries replace three more released r11-cohort members.
+    It additionally proves the coverage-closure invariant: the union of the prior
     rounds' driver windows and this window is the ENTIRE catalog."""
     import json
     import os
@@ -126,8 +127,7 @@ def test_driver_window_covers_survey_gates():
         "x_minhash_lsh_candidates", "x_mixture_sample",
         "x_multimodal_meta", "x_semantic_decontaminate",
         "x_semdedup", "x_simhash", "x_simhash_pairs",
-        "x_sparse_cosine_pairs", "x_split_shard", "x_stratified_sample",
-        "x_string_agg", "x_token_budget_plan", "x_vocab_encode",
+        "x_sparse_cosine_pairs", "x_token_budget_plan", "x_vocab_encode",
         "x_weighted_sample", "x_winnowing_fingerprints",
         "x_winnowing_pairs",
         # r11 new-query cohort (keeps slots)
@@ -137,6 +137,10 @@ def test_driver_window_covers_survey_gates():
         "x_bfs_trade", "x_sssp_trade", "x_kcore_trade",
         "x_pagerank_trade", "x_hits_trade", "x_ppr_trade",
         "x_triangle_trade",
+        # changed sink/source canaries (sinks/versioned.py,
+        # sources/rest.py), seated in place of x_split_shard,
+        # x_stratified_sample and x_string_agg
+        "k1_merge_upsert", "s4_keyset_increment", "s7_detail_fanout",
     }
     assert len(required) == 50
     missing = required - set(first50)

@@ -382,3 +382,96 @@ def test_cursor_link_two_link_cycle_stops():
     pages = list(rest.paginate_cursor_link(t, "a"))
     assert pages == [[1], [2]]
     assert len(t.calls) == 2  # each page fetched exactly once
+
+
+# -- to_dataframe conversion edges ---------------------------------------------
+
+#: nested payload schema for the conversion-edge tests
+EDGE_SCHEMA = (
+    "id bigint, amount double, label string,"
+    " meta struct<src:string,n:bigint>, tags array<string>"
+)
+
+
+def _lineage(df) -> str:
+    return df._jdf.queryExecution().toRdd().toDebugString()
+
+
+def _offset_sync(spark, wh, rows):
+    from bi_gcp_stitch_repl_spark.jobs import pipelines
+
+    def transport(url, p):
+        return rows[p["offset"] : p["offset"] + p["limit"]]
+
+    return pipelines.entity_replication(
+        spark, transport, wh,
+        source={"protocol": "offset", "url": "u", "limit": 10, "schema": EDGE_SCHEMA},
+        select=[{"name": "id"}, {"name": "amount"}],
+        sink={"mode": "upsert", "keys": ["id"]},
+    )
+
+
+@pytest.mark.parametrize(
+    "field, value, spark_type",
+    [("id", 1.5, "LongType"), ("id", True, "LongType"), ("amount", 1, "DoubleType")],
+)
+def test_to_dataframe_wrong_typed_scalar_raises_before_commit(
+    spark, tmp_path, field, value, spark_type
+):
+    """The row verifier runs before the Arrow conversion, which on its own
+    would turn 1.5 into 1 in a bigint: a float or bool in a bigint field
+    and an int in a double field raise out of the sync, and the target
+    gains no commit."""
+    from bi_gcp_stitch_repl_spark.sinks.versioned import VersionedTable
+
+    wh = str(tmp_path / "t")
+    _offset_sync(spark, wh, [{"id": 1, "amount": 2.0}])
+    version = VersionedTable(spark, wh).latest_version()
+    bad = dict({"id": 2, "amount": 3.0}, **{field: value})
+    with pytest.raises(TypeError, match=f"{spark_type}.*can not accept object"):
+        _offset_sync(spark, wh, [{"id": 1, "amount": 9.0}, bad])
+    t = VersionedTable(spark, wh)
+    assert t.latest_version() == version
+    assert [tuple(r) for r in t.read().collect()] == [(1, 2.0)]
+
+
+def test_to_dataframe_non_str_scalars_in_string_field_render_as_before(spark):
+    """Arrow refuses a non-str value in a string field; such a chunk takes
+    the list conversion and renders it as ``createDataFrame(list)`` does,
+    landed so later actions run no Python worker."""
+    schema = T.StructType.fromDDL("id bigint, label string")
+    rows = [
+        {"id": 1, "label": 5}, {"id": 2, "label": True},
+        {"id": 3, "label": 1e-05}, {"id": 4, "label": "x"},
+    ]
+    df = rest.to_dataframe(spark, iter([rows]), schema)
+    assert "PythonRDD" not in _lineage(df)
+    got = sorted(tuple(r) for r in df.collect())
+    assert got == [(1, "5"), (2, "true"), (3, "1e-05"), (4, "x")]
+    assert got == sorted(tuple(r) for r in spark.createDataFrame(rows, schema).collect())
+
+
+def test_to_dataframe_nested_padding_empty_and_chunking(spark):
+    """A missing nested key is NULL; an empty extract is an empty frame
+    with the schema; chunk_rows=2 gives the single-chunk rows; neither
+    frame runs a Python worker on its actions."""
+    schema = T.StructType.fromDDL(EDGE_SCHEMA)
+    rows = [
+        {"id": 1, "amount": 1.5, "meta": {"src": "a"}, "tags": ["x", None]},
+        {"id": 2, "label": "b", "meta": {"n": 7}},
+        {"id": 3, "amount": None, "tags": []},
+        {"id": 4, "amount": -0.0, "label": "", "meta": None, "extra": 1},
+        {"id": 5, "amount": 2.5, "meta": {"src": "e", "n": -(2**63)}},
+    ]
+    one = rest.to_dataframe(spark, iter([rows[:3], rows[3:]]), schema)
+    two = rest.to_dataframe(spark, iter([rows[:3], rows[3:]]), schema, chunk_rows=2)
+    for df in (one, two):
+        assert df.schema == schema
+        assert "PythonRDD" not in _lineage(df)
+    got = sorted(one.collect())
+    assert got == sorted(two.collect())
+    assert got == sorted(spark.createDataFrame(rows, schema).collect())
+    assert got[0]["meta"]["n"] is None and got[1]["meta"]["src"] is None
+    assert got[2]["meta"] is None and got[2]["tags"] == []
+    empty = rest.to_dataframe(spark, iter([]), schema)
+    assert empty.schema == schema and empty.collect() == []

@@ -1175,15 +1175,15 @@ def test_weighted_dispatch_job_counts(spark, op, jobs):
     [
         # (VALUES edge frame, groupBy aggregate): default-threshold jobs
         # of the operator call. A VALUES frame canonicalizes job-free;
-        # bfs_hops adds its seed probe, connected_components its
-        # node-set probe. An aggregate pays the canonical checkpoint
-        # plus one probe.
+        # bfs_hops adds its seed probe (connected_components reads its
+        # nodes from the canonical list). An aggregate pays the
+        # canonical checkpoint plus one probe.
         ("triangle_counts", (0, 4)),
         ("clustering_coefficients", (0, 4)),
         ("k_core", (0, 4)),
         ("bfs_hops", (1, 5)),
         ("random_walks", (0, 4)),
-        ("connected_components", (2, 6)),
+        ("connected_components", (0, 4)),
     ],
 )
 def test_undirected_dispatch_job_counts(spark, op, jobs):
@@ -1384,6 +1384,46 @@ def test_join_upstream_evaluated_once_above_bound(spark, op):
     # 6 canonical edges (two triangles), above the bound of 5
     out = fn(edges, driver_threshold=5).collect()
     assert out and passes.value == n, (op, passes.value)
+
+
+@pytest.mark.parametrize("driver_threshold", [100_000, 3])
+def test_connected_components_evaluates_upstream_once(spark, driver_threshold):
+    """connected_components reads a lazy edge upstream once per call, on
+    the driver path and above the bound: the canonical edges and the node
+    set (which keeps self-loop-only nodes) share one evaluation. Upstream
+    rows are counted through an identity mapInArrow."""
+    from bi_gcp_stitch_repl_spark.functions import graph
+
+    passes = spark.sparkContext.accumulator(0)
+
+    def identity(batches):
+        for batch in batches:
+            passes.add(batch.num_rows)
+            yield batch
+
+    rows = [(i, i + 1) for i in range(0, 18, 2)] + [(30, 30), (31, 31)] + [(1, 3)] * 9
+    edges = spark.createDataFrame(rows, "src long, dst long")
+    out = graph.connected_components(
+        edges.mapInArrow(identity, edges.schema), driver_threshold=driver_threshold
+    ).collect()
+    assert passes.value == len(rows) == 20
+    labels = {r["node"]: r["component"] for r in out}
+    assert len(out) == len(labels) == 20
+    assert labels[3] == labels[2] == 0 and labels[30] == 30 and labels[31] == 31
+
+
+def test_connected_components_null_endpoint_without_node_frame(spark):
+    """Without a node frame the nodes are the edges' non-NULL endpoints on
+    both paths: an edge with one NULL end adds its other end as a
+    singleton, and a NULL end names no node."""
+    from bi_gcp_stitch_repl_spark.functions import graph
+
+    e = spark.createDataFrame(
+        [(1, 2), (5, None), (None, 7), (None, None), (9, 9)], "src long, dst long"
+    )
+    for threshold in (100_000, 0):
+        got = sorted(map(tuple, graph.connected_components(e, driver_threshold=threshold).collect()))
+        assert got == [(1, 1), (2, 1), (5, 5), (7, 7), (9, 9)], threshold
 
 
 def test_sssp_local_input_fast_path_r12(spark):

@@ -1138,3 +1138,106 @@ def test_append_retry_schema_failure_aborts_staged_parts(spark, tmp_path):
     }
     assert on_disk == live, "staged parts leaked after a retry-attempt raise"
     assert t.read().count() == 3  # table unchanged
+
+
+def _jobs_of(spark, group, fn):
+    """(result, Spark jobs) of ``fn()`` run under its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_merge_and_delete_job_counts(spark, tmp_path):
+    """Each merge or erasure probes its key bounds with one aggregate (two
+    jobs under adaptive execution) over the undistinct key set and reads
+    its files without a schema-inference job: a merge is the probe, the
+    broadcast of its key set and the write."""
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    t.append(_df(spark, [(1, "a"), (2, "b"), (3, "c")]))
+    batch = spark.sql("SELECT * FROM VALUES (1L, 'A'), (4L, 'D') AS t(k, v)")
+    frame = spark.sql("SELECT * FROM VALUES (2L, 'x'), (2L, 'y') AS t(k, v)")
+    assert _jobs_of(spark, "merge", lambda: t.merge_upsert(batch, keys=["k"])) == (1, 4)
+    assert _jobs_of(
+        spark, "merge_kf", lambda: t.merge_upsert(batch, keys=["k"], key_frame=frame)
+    ) == (2, 4)
+    assert _jobs_of(spark, "delete", lambda: t.delete_matching(batch, keys=["k"])) == (2, 7)
+    assert sorted(tuple(r) for r in t.read().collect()) == [(3, "c")]
+    assert _jobs_of(spark, "read", t.read)[1] == 0
+    empty = batch.limit(0)
+    assert _jobs_of(spark, "merge_empty", lambda: t.merge_upsert(empty, keys=["k"])) == (
+        t.latest_version(), 1,
+    )
+
+
+def test_merge_duplicate_keys_in_batch_and_key_frame(spark, tmp_path):
+    """Duplicate keys on the delete side change nothing: every batch row
+    lands, every existing row of a batch or frame key goes, once."""
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    t.append(_df(spark, [(1, "a"), (2, "b"), (3, "c"), (4, "d")]))
+    t.merge_upsert(
+        _df(spark, [(1, "A1"), (1, "A2"), (5, "E"), (5, "E")]),
+        keys=["k"],
+        key_frame=_df(spark, [(2, "x"), (2, "y"), (1, "z")]),
+    )
+    assert sorted(tuple(r) for r in t.read().collect()) == [
+        (1, "A1"), (1, "A2"), (3, "c"), (4, "d"), (5, "E"), (5, "E"),
+    ]
+    # a key_frame-only purge still deletes, duplicates and all
+    t.merge_upsert(_df(spark, []), keys=["k"], key_frame=_df(spark, [(4, "x"), (4, "x")]))
+    assert sorted(r["k"] for r in t.read().collect()) == [1, 1, 3, 5, 5]
+    assert t.delete_matching(_df(spark, [(5, "x"), (5, "y")]), keys=["k"]) == 2
+
+
+def test_merge_null_key_disables_pruning(spark, tmp_path):
+    """Parquet min/max stats skip NULLs, so a file holding a NULL-key row
+    can sit outside the batch's [lo, hi]: a NULL ``keys[0]`` in the batch
+    touches every file, and the NULL-key row is replaced, not doubled."""
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    t.append(_df(spark, [(1, "a")]))
+    t.append(_df(spark, [(None, "n"), (50, "x")]))
+    files = set(t.files_at())
+    assert len(files) >= 2
+    v = t.merge_upsert(_df(spark, [(None, "N"), (1, "A")]), keys=["k"])
+    assert files.isdisjoint(t.files_at(v))
+    assert sorted(tuple(r) for r in t.read().collect() if r["k"] is not None) == [
+        (1, "A"), (50, "x"),
+    ]
+    assert [r["v"] for r in t.read().collect() if r["k"] is None] == ["N"]
+
+
+def test_read_schema_equals_inference_without_a_job(spark, tmp_path):
+    """``read()`` takes its schema from the parquet footer Spark wrote
+    instead of running an inference job, and equals the inferred read —
+    schema, nullability and rows — on a table of mixed types, on one
+    whose append wrote its columns in another order, and on an evolved
+    table (read with mergeSchema, as before)."""
+    mixed = spark.sql(
+        "SELECT 1L AS k, CAST(1.5 AS DECIMAL(10, 2)) AS d, DATE'2024-01-02' AS dt,"
+        " TIMESTAMP'2024-01-02 03:04:05' AS ts,"
+        " TIMESTAMP_NTZ'2024-01-02 03:04:05' AS tn,"
+        " array(named_struct('a', 1, 'b', 'x')) AS arr, map('m', 2.5D) AS mp,"
+        " X'0102' AS bin, true AS b, CAST(NULL AS STRING) AS s"
+    )
+    t1 = VersionedTable(spark, str(tmp_path / "mixed"))
+    t1.append(mixed)
+    t2 = VersionedTable(spark, str(tmp_path / "reordered"))
+    t2.append(_df(spark, [(1, "a")]))
+    t2.append(spark.createDataFrame([("b", 2)], "v string, k long"))
+    t3 = VersionedTable(spark, str(tmp_path / "evolved"))
+    t3.append(_df(spark, [(1, "a")]))
+    t3.merge_upsert(
+        spark.createDataFrame([(2, "b", 2.0)], "k long, v string, w double"),
+        keys=["k"], schema_evolution=True,
+    )
+    for t, evolved, jobs in ((t1, False, 0), (t2, False, 0), (t3, True, 1)):
+        paths = [os.path.join(t.path, f) for f in t.files_at()]
+        reader = spark.read.option("mergeSchema", "true") if evolved else spark.read
+        inferred = reader.parquet(*paths)
+        got, n_jobs = _jobs_of(spark, f"read_{os.path.basename(t.path)}", t.read)
+        assert n_jobs == jobs
+        assert got.schema == inferred.schema
+        assert sorted(map(str, got.collect())) == sorted(map(str, inferred.collect()))
