@@ -11,8 +11,10 @@ API→cluster and cluster→table.
 from __future__ import annotations
 
 import os
+from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark import InheritableThread
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import schemas
@@ -484,6 +486,39 @@ def _apply_select(df: DataFrame, select: list[dict]) -> DataFrame:
     return df.select(*cols)
 
 
+def _observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a row count observed by whichever action runs it first
+    — the sink's own write or eager checkpoint — so counting costs no job
+    of its own. Read it only after that action: ``Observation.get`` waits
+    for one. A lazy checkpoint above it would report zero rows."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
+
+
+def _run_sinks(spark: SparkSession, main, side=None) -> None:
+    """Run ``side`` (if any) on its own thread while ``main`` runs on this
+    one, so their Spark jobs overlap. Returns only after both have ended;
+    the first error either raised is re-raised then."""
+    errors: list[BaseException] = []
+
+    def guarded(fn) -> None:
+        try:
+            fn()
+        except BaseException as e:  # noqa: BLE001 — re-raised below
+            errors.append(e)
+
+    worker = None
+    if side is not None:
+        # inherits the caller's job group and local properties
+        worker = InheritableThread(lambda: guarded(side), session=spark)
+        worker.start()
+    guarded(main)
+    if worker is not None:
+        worker.join()
+    if errors:
+        raise errors[0]
+
+
 def entity_replication(
     spark: SparkSession,
     transport,
@@ -521,8 +556,22 @@ def entity_replication(
       5. sink (``sink``: mode ∈ truncate/upsert/append_dedup + keys — K1/
          K2/K7; truncate is the reference's WRITE_TRUNCATE norm).
 
-    Returns rows written (or ``(parent_rows, child_rows)`` with a child).
+    The parent and child sinks run concurrently — the child on its own
+    thread — like the reference's two independent load jobs, and the call
+    returns only after both have ended. Each sink commits atomically on
+    its own table, but not together: if one fails, the other is still
+    attempted and may commit, and the first error is raised once both are
+    done. Re-running the sync is idempotent in every mode, so the repair
+    is a re-run.
+
+    Returns the rows handed to the sink (or ``(parent_rows, child_rows)``
+    with a child), counted by the sinks' own jobs.
     """
+    sink = sink or {"mode": "truncate"}
+    mode = sink.get("mode", "truncate")
+    if mode not in ("truncate", "upsert", "append_dedup"):
+        raise ValueError(f"unknown sink mode {mode!r}")
+    keys = sink.get("keys") or []
     src = dict(source)
     protocol = src.pop("protocol")
     schema = _ddl_schema(src.pop("schema"))
@@ -579,12 +628,9 @@ def entity_replication(
             explode_map,
         )
     frame = raw.withColumn("_now", now)
-    out = _apply_select(frame, select)
+    out, out_obs = _observe_rows(_apply_select(frame, select))
 
-    sink = sink or {"mode": "truncate"}
-    mode = sink.get("mode", "truncate")
-    keys = sink.get("keys") or []
-    n_child = None
+    child_sink = child_obs = None
     if child is not None:
         parent_map = dict(child["parent_map"])  # {raw col -> child-side name}
         items = explode_with_parent(
@@ -593,10 +639,10 @@ def entity_replication(
             parent_map,
         )
         items = _apply_select(items.withColumn("_now", now), child["select"])
-        n_child = items.count()
+        items, child_obs = _observe_rows(items)
         ctbl = merge_table(spark, child_warehouse_path, table_factory)
         if mode == "truncate":
-            ctbl.overwrite(items)
+            child_sink = partial(ctbl.overwrite, items)
         else:
             # child rows merge on the PARENT key: each parent's batch rows
             # are its complete current item set (bexio_invoice_replication's
@@ -633,12 +679,11 @@ def entity_replication(
                     ckf = src.select(
                         *[F.col(rev[c]).alias(c) for c in ckeys]
                     )
-            ctbl.merge_upsert(items, keys=ckeys, key_frame=ckf)
+            child_sink = partial(ctbl.merge_upsert, items, keys=ckeys, key_frame=ckf)
 
-    n = out.count()
     tbl = merge_table(spark, warehouse_path, table_factory)
     if mode == "truncate":
-        tbl.overwrite(out)
+        parent_sink = partial(tbl.overwrite, out)
     elif mode == "upsert":
         # explode-path main merge: same per-parent DELETE+INSERT contract
         # as the child sink — the fetched-parent key set widens the delete
@@ -658,12 +703,17 @@ def entity_replication(
             explode_parents.columns
         ):
             kf = explode_parents.select(*keys)
-        tbl.merge_upsert(out, keys=keys, key_frame=kf)
-    elif mode == "append_dedup":
-        tbl.append_if_absent(out, keys=keys)
-    else:
-        raise ValueError(f"unknown sink mode {mode!r}")
-    return n if n_child is None else (n, n_child)
+        parent_sink = partial(tbl.merge_upsert, out, keys=keys, key_frame=kf)
+    else:  # append_dedup
+        # snapshot first: when every row is already present the anti-join
+        # comes out empty, and adaptive execution then replaces the stage
+        # holding the row-count observation, which reports no metrics
+        def parent_sink():
+            tbl.append_if_absent(out.localCheckpoint(eager=True), keys=keys)
+
+    _run_sinks(spark, parent_sink, child_sink)
+    n = out_obs.get["n"]
+    return n if child_obs is None else (n, child_obs.get["n"])
 
 
 def validated_merge(

@@ -42,7 +42,7 @@ import shutil
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -509,19 +509,24 @@ class VersionedTable:
         return out
 
     @staticmethod
-    def _key_bounds(keys_df: DataFrame, key0: str):
-        """One aggregate job over a (possibly duplicated) key set: its
-        ``keys[0]`` (lo, hi) and whether any key is NULL, or None for an
-        empty set."""
-        row = keys_df.agg(
+    def _observed_snapshot(df: DataFrame, key0: str):
+        """ONE eager local checkpoint of ``df`` plus, from an observation
+        riding that same job, the ``keys[0]`` (lo, hi) of its (possibly
+        duplicated) rows and whether any key is NULL — None for an empty
+        frame. Returns (snapshot, bounds). The checkpoint must be eager:
+        an observation under a lazy checkpoint reports zero rows."""
+        obs = Observation()
+        snap = df.observe(
+            obs,
             F.min(key0).alias("lo"),
             F.max(key0).alias("hi"),
             F.count(F.lit(1)).alias("n"),
             F.count(key0).alias("n_nonnull"),
-        ).collect()[0]
-        if row["n"] == 0:
-            return None
-        return row["lo"], row["hi"], row["n_nonnull"] < row["n"]
+        ).localCheckpoint(eager=True)
+        m = obs.get
+        if m["n"] == 0:
+            return snap, None
+        return snap, (m["lo"], m["hi"], m["n_nonnull"] < m["n"])
 
     def _touched(self, state: dict, key0: str, bounds: tuple) -> list[str]:
         """The live files whose logged ``keys[0]`` [min,max] overlaps the
@@ -730,6 +735,35 @@ class VersionedTable:
             raise
         self._abort_adds(adds)
         raise CommitConflict("append_txn retries exhausted")
+
+    def append_if_absent(self, batch: DataFrame, keys: list[str]) -> DataFrame:
+        """K7 history capture, ``ParquetTable.append_if_absent``'s contract:
+        append only the batch rows (deduplicated on ``keys``) whose key is
+        not yet live — matched null-safely, as ``dropDuplicates`` treats
+        NULL keys as equal — and return that appended delta. One add-only
+        commit on the exact snapshot the anti-join read (base + 1), so an
+        interleaved commit raises CommitConflict instead of landing a key
+        twice; re-run on the fresh snapshot."""
+        os.makedirs(self.path, exist_ok=True)
+        delta = batch.dropDuplicates(keys)
+        base = self.latest_version()
+        state = self._snapshot_state(base) if base is not None else None
+        self._check_schema(delta, False, state=state)
+        if state is not None and state["files"]:
+            live = self._read_files(
+                sorted(state["files"]), state["schema_evolved"]
+            ).select(*keys)
+            delta = delta.join(
+                live, on=_null_safe_on(delta, live, keys), how="left_anti"
+            )
+        adds = [{"add": n, "stats": st} for n, st in self._write_parts(delta)]
+        adds.append({"meta": {"columns": sorted(delta.columns)}})
+        try:
+            self._commit(0 if base is None else base + 1, adds)
+        except CommitConflict:
+            self._abort_adds(adds)
+            raise
+        return delta
 
     def _feed_versions(self, from_version: int, to_version: int) -> list[int]:
         """Commit versions serving a feed over ``(from_version,
@@ -959,18 +993,34 @@ class VersionedTable:
         base = self.latest_version()
         state = self._snapshot_state(base)
         key0 = keys[0]
-        # ONE consistent batch snapshot: the bounds probe, the anti-join,
-        # the CDC joins and the final union all read it, so a
+        # ONE consistent batch snapshot, taken by one eager job: the batch
+        # rows and the key_frame's key projection are checkpointed together
+        # (one union, batch rows tagged by a marker column), and the bounds
+        # come from an observation on that job. The anti-join, the CDC
+        # joins and the final union all read the snapshot, so a
         # non-deterministic upstream (live source, rand()) cannot give the
-        # CDC records other rows than the commit
-        batch = batch.localCheckpoint(eager=False)
-        # no distinct: the bounds ignore duplicates and so do the semi/anti
-        # joins that read this key set
-        batch_keys = batch.select(*keys)
-        delete_keys = batch_keys
-        if key_frame is not None:
-            delete_keys = batch_keys.unionByName(key_frame.select(*keys))
-        bounds = self._key_bounds(delete_keys, key0)
+        # CDC records other rows than the commit, and the key_frame is
+        # evaluated once. No distinct: the bounds ignore duplicates and so
+        # do the semi/anti joins that read the delete key set.
+        if key_frame is None:
+            batch, bounds = self._observed_snapshot(batch, key0)
+            delete_keys = batch.select(*keys)
+        else:
+            marker = f"_batch_{uuid.uuid4().hex}"
+            snap, bounds = self._observed_snapshot(
+                batch.withColumn(marker, F.lit(True)).unionByName(
+                    key_frame.select(*keys).withColumn(marker, F.lit(False)),
+                    allowMissingColumns=True,
+                ),
+                key0,
+            )
+            delete_keys = snap.select(*keys)
+            # the union may widen a key column to the frame's type; the
+            # batch keeps its own
+            types = {f.name: f.dataType for f in batch.schema}
+            batch = snap.filter(marker).drop(marker).withColumns(
+                {k: F.col(k).cast(types[k]) for k in keys}
+            )
         if bounds is None:
             return base  # nothing to insert or purge: snapshot IS the result
         touched = self._touched(state, key0, bounds)
@@ -1003,6 +1053,7 @@ class VersionedTable:
                 if key_frame is not None:
                     # purged-only keys (in the frame, absent from the
                     # batch) are true deletes, not update pre-images
+                    batch_keys = batch.select(*keys)
                     bkeys = (
                         F.broadcast(batch_keys) if broadcast_batch else batch_keys
                     )
@@ -1076,15 +1127,14 @@ class VersionedTable:
         state = self._snapshot_state(base)
         key0 = keys[0]
         # ONE consistent request snapshot (merge_upsert's rule): the key
-        # set feeds four independent actions — the bounds collect, the
-        # removed count, the CDC delete records, and the survivors
-        # anti-join write. Without the checkpoint a non-deterministic
+        # set feeds the removed count, the CDC delete records and the
+        # survivors anti-join write, and the bounds are observed on the
+        # checkpoint job itself. Without the checkpoint a non-deterministic
         # upstream is re-evaluated per action, and the committed
         # survivors can disagree with the CDC audit trail and the
         # returned count — for a GDPR-erasure primitive, the audit
         # evidence MUST match the rows actually removed.
-        rhs = keys_df.select(*keys).localCheckpoint(eager=False)
-        bounds = self._key_bounds(rhs, key0)
+        rhs, bounds = self._observed_snapshot(keys_df.select(*keys), key0)
         if bounds is None:
             return 0  # empty request set: nothing to erase
         touched = self._touched(state, key0, bounds)

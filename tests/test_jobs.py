@@ -4,14 +4,18 @@ extract → normalize → merge → re-run idempotency."""
 
 from __future__ import annotations
 
+import threading
+
 import pytest
 
 from pyspark.sql import Row
 
 from bi_gcp_stitch_repl_spark.jobs import pipelines
 from bi_gcp_stitch_repl_spark.sinks.merge import ParquetTable
-from bi_gcp_stitch_repl_spark.sinks.versioned import VersionedTable
+from bi_gcp_stitch_repl_spark.sinks.versioned import CommitConflict, VersionedTable
 from bi_gcp_stitch_repl_spark.sources import rest
+
+from .test_versioned import _jobs_of
 
 
 def read_merged(spark, path):
@@ -1847,3 +1851,103 @@ def test_entity_replication_wrong_typed_payload_fails_before_commit(spark, tmp_p
         sync_orders(spark, bad, wh, items)
     assert [VersionedTable(spark, p).latest_version() for p in (wh, items)] == versions
     assert read_merged(spark, wh).filter("id = 1").first()["total"] == 10.0
+
+
+def _sync_as(spark, rows, wh, items, mode, factory):
+    spec = dict(ORDER_SYNC, sink={"mode": mode, "keys": ["id"]})
+    return pipelines.entity_replication(
+        spark, bexio_transport(rows), wh, child_warehouse_path=items,
+        clock="2026-03-01 00:00:00", table_factory=factory, **spec,
+    )
+
+
+@pytest.mark.parametrize("factory", [VersionedTable, ParquetTable])
+@pytest.mark.parametrize("mode", ["truncate", "upsert"])
+def test_entity_replication_counts_rows_on_the_sink_jobs(spark, tmp_path, mode, factory):
+    """The returned ``(parent_rows, child_rows)`` are observed on the sinks'
+    own jobs and equal the extract's row and position counts: initial load,
+    changed re-sync and an empty extract, on both table factories."""
+    wh, items = str(tmp_path / "orders"), str(tmp_path / "items")
+    base = [_order(i) for i in range(1, 6)]
+    resync = [_order(2, total="5.00", n_positions=0), _order(6, n_positions=3)]
+    for rows in (base, resync, []):
+        expected = (len(rows), sum(len(r["positions"]) for r in rows))
+        assert _sync_as(spark, rows, wh, items, mode, factory) == expected
+    got = [factory(spark, p).read().count() for p in (wh, items)]
+    # upsert keeps orders 1-6; order 2's positions were purged by the re-sync
+    assert got == ([0, 0] if mode == "truncate" else [6, 4 * 2 + 3])
+
+
+@pytest.mark.parametrize("factory", [VersionedTable, ParquetTable])
+def test_entity_replication_append_dedup_sink(spark, tmp_path, factory):
+    """``append_dedup`` appends only orders whose id is not yet in the
+    parent table, so a second identical sync appends nothing."""
+    wh, items = str(tmp_path / "orders"), str(tmp_path / "items")
+    rows = [_order(1), _order(2)]
+    for _ in range(2):
+        assert _sync_as(spark, rows, wh, items, "append_dedup", factory) == (2, 4)
+        assert sorted(r["id"] for r in factory(spark, wh).read().collect()) == [1, 2]
+    _sync_as(spark, [_order(2, total="7.00"), _order(3)], wh, items, "append_dedup", factory)
+    got = {r["id"]: r["total"] for r in factory(spark, wh).read().collect()}
+    assert got == {1: 10.0, 2: 10.0, 3: 10.0}
+    assert factory(spark, items).read().count() == 6
+
+
+def test_entity_replication_unknown_sink_mode_fails_before_extract(spark, tmp_path):
+    def transport(url, params):
+        raise AssertionError("extract must not run")
+
+    with pytest.raises(ValueError, match="unknown sink mode 'merge'"):
+        pipelines.entity_replication(
+            spark, transport, str(tmp_path / "t"),
+            **dict(ORDER_SYNC, sink={"mode": "merge", "keys": ["id"]}),
+        )
+
+
+def test_entity_replication_child_failure_raised_after_parent_sink(
+    spark, tmp_path, monkeypatch
+):
+    """The sinks run concurrently: a failing child merge does not stop the
+    parent merge, its error leaves the sync only once the parent has
+    committed, and no thread outlives the call. A re-run repairs the child
+    table."""
+    wh, items = str(tmp_path / "orders"), str(tmp_path / "items")
+    sync_orders(spark, [_order(1)], wh, items)
+    merge, events = VersionedTable.merge_upsert, []
+
+    def child_conflicts(self, batch, keys, **kwargs):
+        if self.path == items:
+            events.append("child raised")
+            raise CommitConflict("injected")
+        v = merge(self, batch, keys, **kwargs)
+        events.append("parent committed")
+        return v
+
+    monkeypatch.setattr(VersionedTable, "merge_upsert", child_conflicts)
+    threads = threading.active_count()
+    versions = [VersionedTable(spark, p).latest_version() for p in (wh, items)]
+    rows = [_order(1, total="20.00"), _order(2)]
+    with pytest.raises(CommitConflict, match="injected"):
+        sync_orders(spark, rows, wh, items)
+    assert sorted(events) == ["child raised", "parent committed"]
+    assert threading.active_count() == threads
+    assert [VersionedTable(spark, p).latest_version() for p in (wh, items)] == [
+        versions[0] + 1, versions[1],
+    ]
+    monkeypatch.undo()
+    assert sync_orders(spark, rows, wh, items) == (2, 4)
+    assert sorted(r["order_id"] for r in read_merged(spark, items).collect()) == [1, 1, 2, 2]
+
+
+def test_entity_replication_resync_job_count(spark, tmp_path):
+    """A changed re-sync is six Spark jobs: per merge (parent and child,
+    run concurrently) one eager checkpoint of the batch and its key frame,
+    which also yields the key bounds and the returned row count, the
+    broadcast of the delete keys, and the write."""
+    wh, items = str(tmp_path / "orders"), str(tmp_path / "items")
+    base = [_order(i) for i in range(1, 8)]
+    sync_orders(spark, base, wh, items)
+    resync = base[:3] + [_order(4, total="99.00", n_positions=1)] + base[4:] + [_order(8)]
+    assert _jobs_of(spark, "resync", lambda: sync_orders(spark, resync, wh, items)) == (
+        (8, 15), 6,
+    )

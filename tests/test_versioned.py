@@ -1152,25 +1152,77 @@ def _jobs_of(spark, group, fn):
 
 
 def test_merge_and_delete_job_counts(spark, tmp_path):
-    """Each merge or erasure probes its key bounds with one aggregate (two
-    jobs under adaptive execution) over the undistinct key set and reads
-    its files without a schema-inference job: a merge is the probe, the
-    broadcast of its key set and the write."""
+    """Each merge or erasure takes ONE eager snapshot of its batch (plus
+    the key frame) or request set, with the key bounds observed on that
+    same job, and reads its files without a schema-inference job: a merge
+    is the snapshot, the broadcast of its key set and the write; an empty
+    batch is a job-free no-op."""
     t = VersionedTable(spark, str(tmp_path / "t"))
     t.append(_df(spark, [(1, "a"), (2, "b"), (3, "c")]))
     batch = spark.sql("SELECT * FROM VALUES (1L, 'A'), (4L, 'D') AS t(k, v)")
     frame = spark.sql("SELECT * FROM VALUES (2L, 'x'), (2L, 'y') AS t(k, v)")
-    assert _jobs_of(spark, "merge", lambda: t.merge_upsert(batch, keys=["k"])) == (1, 4)
+    assert _jobs_of(spark, "merge", lambda: t.merge_upsert(batch, keys=["k"])) == (1, 3)
     assert _jobs_of(
         spark, "merge_kf", lambda: t.merge_upsert(batch, keys=["k"], key_frame=frame)
-    ) == (2, 4)
-    assert _jobs_of(spark, "delete", lambda: t.delete_matching(batch, keys=["k"])) == (2, 7)
+    ) == (2, 3)
+    assert _jobs_of(spark, "delete", lambda: t.delete_matching(batch, keys=["k"])) == (2, 6)
     assert sorted(tuple(r) for r in t.read().collect()) == [(3, "c")]
     assert _jobs_of(spark, "read", t.read)[1] == 0
     empty = batch.limit(0)
     assert _jobs_of(spark, "merge_empty", lambda: t.merge_upsert(empty, keys=["k"])) == (
-        t.latest_version(), 1,
+        t.latest_version(), 0,
     )
+
+
+def _counted(spark, df):
+    """``df`` through an identity ``mapInArrow`` and an accumulator of the
+    rows it passed: how often (in rows) the frame was evaluated."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def identity(batches):
+        for b in batches:
+            acc.add(b.num_rows)
+            yield b
+
+    return df.mapInArrow(identity, df.schema), acc
+
+
+def test_merge_evaluates_batch_and_key_frame_once(spark, tmp_path):
+    """The batch and the key frame are each evaluated once per merge —
+    by the one snapshot job — so the bounds, the anti-join and the CDC
+    records all see the same rows; the batch keeps its own key type when
+    the frame's is wider."""
+    t = VersionedTable(spark, str(tmp_path / "t"), enable_cdc=True)
+    t.append(spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "k int, v string"))
+    batch, n_batch = _counted(
+        spark, spark.createDataFrame([(1, "A"), (4, "D")], "k int, v string")
+    )
+    frame, n_frame = _counted(spark, _df(spark, [(2, "x"), (2, "y")]))
+    v = t.merge_upsert(batch, keys=["k"], key_frame=frame)
+    assert (n_batch.value, n_frame.value) == (2, 2)
+    assert sorted(tuple(r) for r in t.read().collect()) == [(1, "A"), (3, "c"), (4, "D")]
+    assert t.read().schema["k"].dataType.simpleString() == "int"
+    feed = {(r["k"], r["_change_type"]) for r in t.changes_feed(v - 1, v).collect()}
+    assert feed == {
+        (1, "update_preimage"), (1, "update_postimage"), (2, "delete"), (4, "insert"),
+    }
+
+
+def test_append_if_absent_is_null_safe_and_idempotent(spark, tmp_path):
+    """``append_if_absent`` appends the batch rows (deduplicated on the
+    keys) whose key is not live yet, NULL keys included, as one add-only
+    commit, and returns that delta; an identical re-run appends nothing."""
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    batch = _df(spark, [(1, "a"), (1, "a2"), (None, "n")])
+    assert t.append_if_absent(batch, keys=["k"]).count() == 2
+    assert t.latest_version() == 0
+    files = set(t.files_at())
+    assert t.append_if_absent(batch, keys=["k"]).count() == 0
+    assert files <= set(t.files_at()) and t.read().count() == 2
+    delta = t.append_if_absent(_df(spark, [(None, "m"), (2, "b")]), keys=["k"])
+    assert [tuple(r) for r in delta.collect()] == [(2, "b")]
+    keys = [r["k"] for r in t.read().collect()]
+    assert keys.count(None) == 1 and sorted(k for k in keys if k is not None) == [1, 2]
 
 
 def test_merge_duplicate_keys_in_batch_and_key_frame(spark, tmp_path):
