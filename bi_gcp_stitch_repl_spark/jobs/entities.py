@@ -12,6 +12,15 @@ family rides ``reverse_etl_company_status``. Runtime concerns (transport,
 warehouse paths) come from the ``--config`` file; everything below is the
 entity's identity and is byte-stable across deployments.
 
+The REST syncs of the core ``schedule.JOB_MANIFEST`` are specs here too:
+``BEXIO_INVOICES`` (J1 carry-forward + line items),
+``LEXOFFICE_INVOICE_ITEMS`` (filtered list → detail fan-out → line items,
+with a dead-letter path at deployment), ``BILLWERK_CONTRACTS`` and
+``HUBSPOT_TICKETS``. They keep their manifest names and crons and are not
+in ``ENTITY_MANIFEST``.
+Only two REST syncs keep a function of their own: the billwerk invoice
+watermark and the stripe account rollup (see ``pipelines``).
+
 Each entry's ``ref`` cites the reference DAG it replaces; the README's
 parity table is generated from this module, and ``tests/test_entities.py``
 runs one hermetic end-to-end per family over fixture transports.
@@ -347,6 +356,50 @@ BILLWERK_COMPONENT_SUBSCRIPTIONS = JobSpec(
     },
 )
 
+BILLWERK_CONTRACTS = JobSpec(
+    "entity_replication", "30 22 * * *",
+    "Billwerk contract snapshot truncate-refresh",
+    ref="dags/billwerk/biilwerk_contracts.py",
+    params={
+        "source": {
+            **_billwerk("contracts"),
+            "schema": (
+                "Id string NOT NULL, LastBillingDate string,"
+                " NextBillingDate string, PlanId string, CustomerId string,"
+                " LifecycleStatus string, CustomerName string,"
+                " Balance double, ReferenceCode string, Currency string,"
+                " PlanGroupId string,"
+                " PaymentBearer struct<EmailAddress:string,Type:string>,"
+                " CurrentPhase struct<Type:string,StartDate:string,"
+                "PlanVariantId:string,PlanId:string,Quantity:bigint,"
+                "InheritStartDate:boolean>,"
+                " StartDate string, BilledUntil string, PlanVariantId string,"
+                " EndDate string, CustomFields map<string,string>"
+            ),
+        },
+        # biilwerk_contracts.py:126-169: nested gets with defaults (F23)
+        # and the custom-fields dict serialized to a string (F25)
+        "select": [
+            {"name": "contract_id", "sql": "Id"},
+            {"name": "customer_id", "sql": "CustomerId"},
+            {"name": "customer_name", "sql": "CustomerName"},
+            {"name": "lifecycle_status", "sql": "LifecycleStatus"},
+            {"name": "balance", "sql": "Balance"},
+            {
+                "name": "payment_email",
+                "sql": "coalesce(PaymentBearer.EmailAddress, '')",
+            },
+            {
+                "name": "plan_variant_id",
+                "sql": "coalesce(CurrentPhase.PlanVariantId, '')",
+            },
+            {"name": "quantity", "sql": "coalesce(CurrentPhase.Quantity, 0)"},
+            {"name": "custom_fields", "sql": "to_json(CustomFields)"},
+        ],
+        "sink": {"mode": "truncate"},
+    },
+)
+
 # --------------------------------------------------------------------------
 # bexio: offset pagination, per-id detail fan-outs, DELETE+INSERT loads
 # (dags/bexio/*.py; the engine's atomic merge replaces the delete window).
@@ -609,6 +662,80 @@ def _bexio_intervals(country: str, cron: str) -> JobSpec:
 BEXIO_INTERVALS_DE = _bexio_intervals("de", "5 21 * * *")
 BEXIO_INTERVALS_CH = _bexio_intervals("ch", "10 21 * * *")
 
+
+#: the reference's richest pipeline (SURVEY §3.1): invoice headers with the
+#: J1 carry-forward, positions exploded into line items
+#: (bexio_invoice_and_line_items_de.py:155-234,262-286)
+BEXIO_INVOICES = JobSpec(
+    "entity_replication", "35 21 * * *",
+    "Bexio invoice + line-item upsert replication",
+    ref="dags/bexio/bexio_invoice_and_line_items_de.py",
+    params={
+        "source": {
+            "protocol": "offset",
+            "url": "https://api.bexio.com/2.0/kb_invoice",
+            "limit": 2000,
+            "schema": (
+                "id bigint NOT NULL, contact_id bigint,"
+                " kb_item_status_id bigint, document_nr string,"
+                " is_valid_from string, title string, total_gross string,"
+                " total_net string, total_taxes string, total string,"
+                " mwst_type bigint, mwst_is_net boolean,"
+                " contact_address string, updated_at string,"
+                " taxs array<struct<percentage:string,value:string>>,"
+                " positions array<struct<id:bigint,type:string,"
+                "amount:string,unit_price:string,position_total:string,"
+                "tax_id:bigint,tax_value:string,discount_in_percent:string,"
+                "account_id:bigint,unit_id:bigint,unit_name:string,"
+                "text:string,is_optional:boolean>>"
+            ),
+        },
+        "select": [
+            {"name": "bexio_id", "sql": "id"},
+            {"name": "contact_id"},
+            {"name": "document_nr"},
+            # F1: embedded newlines to spaces
+            {"name": "title", "sql": r"regexp_replace(title, '[\\n\\r]+', ' ')"},
+            {"name": "total", "sql": "try_cast(total as double)"},
+            {"name": "total_net", "sql": "try_cast(total_net as double)"},
+            # F20: NULL-safe taxs[0]['percentage'] (empty taxs is normal)
+            {"name": "tax_percentage", "sql": "try_element_at(taxs, 1).percentage"},
+            {"name": "updated_at", "sql": "to_timestamp(updated_at)"},
+            # minted for new invoices only (sink carry); key-derived, so a
+            # re-run mints the same values — the reference used
+            # uuid4()/now() (SURVEY §7.5)
+            {
+                "name": "u_id",
+                "sql": "sha2(concat('bexio:', cast(id as string)), 256)",
+            },
+            {"name": "created_at", "sql": "to_timestamp(updated_at)"},
+        ],
+        "sink": {
+            "mode": "upsert",
+            "keys": ["bexio_id"],
+            "carry": ["u_id", "created_at"],
+        },
+        "child": {
+            "array_col": "positions",
+            "parent_map": {"id": "invoice_id", "updated_at": "updated_at"},
+            "select": [
+                {"name": "invoice_id"},
+                {"name": "updated_at", "sql": "to_timestamp(updated_at)"},
+                {"name": "position_id", "sql": "id"},
+                {"name": "type"},
+                {"name": "amount", "sql": "try_cast(amount as double)"},
+                {"name": "unit_price", "sql": "try_cast(unit_price as double)"},
+                {
+                    "name": "discount_amount",
+                    "sql": "if(type = 'KbPositionDiscount',"
+                    " try_cast(unit_price as double), 0D)",
+                },
+            ],
+            "keys": ["invoice_id"],
+        },
+    },
+)
+
 # --------------------------------------------------------------------------
 # lexoffice: page-counter voucherlist + per-voucher detail fetches
 # (dags/lex_office/*.py)
@@ -757,6 +884,62 @@ LEXOFFICE_CREDIT_ITEMS = JobSpec(
     },
 )
 
+#: lex_office_invoice_items.py:187-298: live invoices only, one detail
+#: fetch per invoice, line items exploded with the nested unitPrice read
+#: through defaults (F22/F23)
+LEXOFFICE_INVOICE_ITEMS = JobSpec(
+    "entity_replication", "0 22 * * *",
+    "LexOffice voucher list + detail fan-out + line items",
+    ref="dags/lex_office/lex_office_invoice_items.py",
+    params={
+        "source": {
+            "protocol": "page_flag",
+            "url": "https://api.lexoffice.io/v1/voucherlist",
+            "size": 250,
+            "schema": (
+                "id string NOT NULL, voucherType string,"
+                " voucherStatus string, voucherNumber string,"
+                " voucherDate string, contactId string, contactName string,"
+                " totalAmount string, currency string, archived boolean"
+            ),
+            "where": "voucherType = 'invoice' AND NOT archived",
+        },
+        "detail": {
+            "key_col": "id",
+            "parallelism": 5,
+            "schema": (
+                "id string NOT NULL, organizationId string,"
+                " address struct<countryCode:string>,"
+                " totalPrice struct<currency:string,totalNetAmount:double,"
+                "totalGrossAmount:double,totalTaxAmount:double>,"
+                " lineItems array<struct<id:string,type:string,name:string,"
+                "quantity:double,unitName:string,unitPrice:struct<"
+                "netAmount:double,grossAmount:double,"
+                "taxRatePercentage:double>,discountPercentage:double,"
+                "lineItemAmount:double>>"
+            ),
+        },
+        "explode": {"array_col": "lineItems", "parent_map": {"id": "invoice_id"}},
+        "select": [
+            {"name": "invoice_id"},
+            {"name": "line_id", "sql": "id"},
+            {"name": "type"},
+            {"name": "name"},
+            {"name": "quantity"},
+            {"name": "unit_net", "sql": "coalesce(unitPrice.netAmount, 0D)"},
+            {
+                "name": "tax_rate",
+                "sql": "coalesce(unitPrice.taxRatePercentage, 0D)",
+            },
+            {"name": "discount_pct", "sql": "coalesce(discountPercentage, 0D)"},
+            {"name": "amount", "sql": "lineItemAmount"},
+        ],
+        # the delete scope is every fetched invoice: one whose items all
+        # went upstream loses its stale rows, a failed fetch keeps them
+        "sink": {"mode": "upsert", "keys": ["invoice_id"]},
+    },
+)
+
 # --------------------------------------------------------------------------
 # hubspot: cursor-link ticket scans with per-DAG property sets
 # (dags/hubspot/churn_reasons, tickets/*) and CRM batch write-backs (BM/POS)
@@ -802,6 +985,42 @@ HUBSPOT_CHURN_REASONS = JobSpec(
     params={
         "source": _hubspot_tickets(_CHURN_PROPS),
         "select": _props_select(_CHURN_PROPS),
+        "sink": {"mode": "truncate"},
+    },
+)
+
+#: get_tickets.py:43-104: the first associated company per ticket (F21),
+#: NULL for a ticket with none (the reference's np.nan passthrough)
+HUBSPOT_TICKETS = JobSpec(
+    "entity_replication", "30 7 * * *",
+    "HubSpot tickets cursor scan + company-association extraction "
+    "-> truncate load",
+    ref="dags/hubspot/tickets/get_tickets.py",
+    params={
+        "source": {
+            "protocol": "cursor_link",
+            "url": "https://api.hubapi.com/crm/v3/objects/tickets",
+            "params": {
+                "associations": "companies",
+                "properties": "createdate",
+                "limit": 100,
+                "archived": "false",
+            },
+            "schema": (
+                "id string NOT NULL, createdAt string, updatedAt string,"
+                " associations struct<companies:struct<results:"
+                "array<struct<id:string,type:string>>>>"
+            ),
+        },
+        "select": [
+            {"name": "ticket_id", "sql": "id"},
+            {"name": "created_at", "sql": "createdAt"},
+            {"name": "updated_at", "sql": "updatedAt"},
+            {
+                "name": "company_id",
+                "sql": "try_element_at(associations.companies.results, 1).id",
+            },
+        ],
         "sink": {"mode": "truncate"},
     },
 )

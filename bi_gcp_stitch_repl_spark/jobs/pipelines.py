@@ -1,4 +1,14 @@
-"""The six reference pipeline families, engine-composed.
+"""The scheduled jobs, engine-composed.
+
+Every REST sync but two runs on one declarative archetype,
+``entity_replication`` (paginate → optional detail fan-out → SQL
+projection → optional child explode → sink), configured per entity by a
+``JobSpec`` in ``jobs.entities``. The two that keep their own function
+need state or a shape the archetype has no stage for:
+``billwerk_incremental_invoices`` (a persisted keyset watermark) and
+``stripe_account_rollup`` (a grouped rollup). Beside them sit the sheet
+import, history capture, reverse-ETL, table maintenance and the corpus
+ingest/curation jobs.
 
 Each job takes (spark, transport, warehouse paths) — transport injectable,
 so the whole pipeline runs hermetically in tests and against live APIs in
@@ -10,17 +20,18 @@ API→cluster and cluster→table.
 
 from __future__ import annotations
 
+import itertools
 import os
 from functools import partial
 
 from pyspark import InheritableThread
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .. import schemas
-from ..ops.clean import array_head_field, money, strip_newlines, strip_thousands
+from ..ops.clean import strip_thousands
 from ..ops.keys import carry_forward_keys
-from ..ops.normalize import explode_with_parent, maps_to_json, struct_get
+from ..ops.normalize import explode_with_parent
 from ..sinks.merge import ParquetTable, WatermarkStore
 from ..sinks.reverse import post_batches
 from ..sinks.versioned import VersionedTable
@@ -42,128 +53,6 @@ def merge_table(spark: SparkSession, path: str, table_factory=None):
     return (table_factory or VersionedTable)(spark, path)
 
 
-def bexio_invoice_replication(
-    spark: SparkSession,
-    transport: rest.Transport,
-    warehouse_path: str,
-    line_items_path: str,
-    api_base: str = "https://api.example/invoices",
-    page_limit: int = 2000,
-    table_factory=None,
-) -> tuple[int, int]:
-    """Reference entry point A (SURVEY §3.1): the richest pipeline.
-
-    offset-paged invoice scan (S1) → carry-forward of u_id/created_at
-    against the existing table (J1) → K1 merge-upsert of headers →
-    explode positions with parent attach (F22/J7) → K1 merge-upsert of
-    line items. Replaces bexio_invoice_and_line_items_de.py's 12-task DAG;
-    the DELETE+INSERT pair becomes one atomic merge (no data-loss window).
-
-    Returns (header_rows, line_item_rows) upserted.
-    """
-    pages = rest.paginate_offset(transport, api_base, limit=page_limit)
-    raw = rest.to_dataframe(spark, pages, schemas.BEXIO_INVOICE)
-
-    headers_tbl = merge_table(spark, warehouse_path, table_factory)
-    existing = (
-        headers_tbl.read().select("u_id", "created_at", "bexio_id")
-        if headers_tbl.exists()
-        else spark.createDataFrame([], schemas.EXISTING_KEYS)
-    )
-
-    headers = raw.select(
-        F.col("id").alias("bexio_id"),
-        "contact_id",
-        "document_nr",
-        strip_newlines("title").alias("title"),
-        money("total").alias("total"),
-        money("total_net").alias("total_net"),
-        array_head_field("taxs", "percentage").alias("tax_percentage"),
-        F.to_timestamp("updated_at").alias("updated_at"),
-        "positions",
-    )
-    # J1: keep existing surrogate key + created_at; mint for new rows.
-    # Deterministic minting (key-derived uuid, updated_at as created_at)
-    # keeps re-runs idempotent — reference used uuid4()/now() (SURVEY §7.5).
-    headers = carry_forward_keys(
-        headers,
-        existing,
-        "bexio_id",
-        carried={
-            "u_id": F.sha2(F.concat(F.lit("bexio:"), F.col("bexio_id")), 256),
-            "created_at": F.col("updated_at"),
-        },
-    )
-    header_out = headers.drop("positions")
-    items = explode_with_parent(
-        headers.select("bexio_id", "updated_at", "positions"),
-        "positions",
-        {"bexio_id": "invoice_id", "updated_at": "updated_at"},
-    ).select(
-        "invoice_id",
-        "updated_at",
-        F.col("id").alias("position_id"),
-        "type",
-        money("amount").alias("amount"),
-        money("unit_price").alias("unit_price"),
-        F.when(F.col("type") == "KbPositionDiscount", money("unit_price")).otherwise(
-            F.lit(0.0)
-        ).alias("discount_amount"),
-    )
-    # All reads/counts happen BEFORE any table mutation: header_out/items
-    # lineage includes the pre-merge headers table, and merge_upsert's
-    # atomic swap invalidates outstanding plans over the old files
-    # (ParquetTable docstring contract).
-    n_headers, n_items = header_out.count(), items.count()
-    # line items merge on the PARENT key alone: each fetched invoice's
-    # batch rows are its complete current position set, so the anti-join
-    # removes every existing row of that invoice before inserting — the
-    # reference's per-invoice DELETE+INSERT as ONE atomic commit. A
-    # composite (invoice, position) key would only upsert and leave
-    # positions deleted upstream alive in the warehouse forever. The
-    # delete scope is the FULL fetched invoice-id set (key_frame), not
-    # the batch's ids: an invoice whose position list became empty
-    # upstream contributes zero exploded rows, and without the key
-    # frame its stale items would survive the merge.
-    merge_table(spark, line_items_path, table_factory).merge_upsert(
-        items,
-        keys=["invoice_id"],
-        key_frame=headers.select(F.col("bexio_id").alias("invoice_id")),
-    )
-    headers_tbl.merge_upsert(header_out, keys=["bexio_id"])
-    return n_headers, n_items
-
-
-def billwerk_contract_refresh(
-    spark: SparkSession,
-    transport: rest.Transport,
-    warehouse_path: str,
-    api_base: str = "https://api.example/contracts",
-    table_factory=None,
-) -> int:
-    """Reference entry point B (SURVEY §3.2): keyset-paged snapshot (S3) →
-    manual flatten with defaults (F23) + CustomFields→JSON (F25) → K2
-    truncate-refresh. The reference's CSV/GCS staging hop (and its quoting
-    pathology, F2) has no equivalent — parquet overwrite is the load."""
-    pages = rest.paginate_keyset(transport, api_base, take=500)
-    raw = rest.to_dataframe(spark, pages, schemas.BILLWERK_CONTRACT)
-    flat = raw.select(
-        F.col("Id").alias("contract_id"),
-        F.col("CustomerId").alias("customer_id"),
-        F.col("CustomerName").alias("customer_name"),
-        F.col("LifecycleStatus").alias("lifecycle_status"),
-        F.col("Balance").alias("balance"),
-        struct_get("PaymentBearer.EmailAddress", "").alias("payment_email"),
-        struct_get("CurrentPhase.PlanVariantId", "").alias("plan_variant_id"),
-        F.coalesce(F.col("CurrentPhase.Quantity"), F.lit(0)).alias("quantity"),
-        F.col("CustomFields").alias("custom_fields"),
-    )
-    flat = maps_to_json(flat, ["custom_fields"])
-    n = flat.count()  # count BEFORE the swap invalidates lineage
-    merge_table(spark, warehouse_path, table_factory).overwrite(flat)
-    return n
-
-
 def billwerk_incremental_invoices(
     spark: SparkSession,
     transport: rest.Transport,
@@ -182,113 +71,26 @@ def billwerk_incremental_invoices(
     pages = rest.paginate_keyset(
         transport, api_base, take=500, start_after=cursor, row_limit=row_limit
     )
+    # the paginator yields only non-empty pages: a slice with nothing new
+    # returns here, before any job, commit or watermark write
+    first = next(pages, None)
+    if first is None:
+        return 0
     # to_dataframe, not a driver list: the catch-up run (first load, or
     # after an outage with row_limit=None) is exactly when the slice is
     # the WHOLE upstream history — driver residency must stay one chunk
     schema = "Id long, amount double, status string"
-    batch = rest.to_dataframe(spark, pages, schema)
-    stats = batch.agg(
-        F.count(F.lit(1)).alias("n"), F.max("Id").alias("hi")
-    ).collect()[0]
-    if not stats["n"]:
-        return 0
-    tbl = merge_table(spark, warehouse_path, table_factory)
-    tbl.merge_upsert(batch.withColumnRenamed("Id", "invoice_id"), keys=["invoice_id"])
-    ws.advance("billwerk_invoices", stats["hi"])
-    return stats["n"]
-
-
-def lexoffice_invoice_items(
-    spark: SparkSession,
-    list_transport: rest.Transport,
-    fetch_detail,
-    warehouse_path: str,
-    api_base: str = "https://api.example/voucherlist",
-    page_size: int = 250,
-    fanout_parallelism: int = 5,
-    dead_letter_path: str | None = None,
-    table_factory=None,
-) -> int:
-    """LexOffice pipeline family (SURVEY §2.1 S2 + S7, §2.9 F22/F23):
-    page-flag voucher list scan → per-invoice detail fan-out (mapInPandas,
-    MAX_WORKERS≈partitions, rate-limited in production via
-    rate_limit_interval) → explode lineItems with parent attach → nested
-    unitPrice struct access → K1 merge.
-
-    Replaces lex_office_invoices.py + lex_office_invoice_items.py
-    (reference: two DAGs, a temp BigQuery staging table, 500-row INSERT
-    batching with a fixed task fan-out that silently drops overflow —
-    SURVEY §4.4). ``fetch_detail(voucher_id) -> dict | None`` is the
-    injectable detail transport."""
-    pages = rest.paginate_page_flag(
-        list_transport, api_base, size=page_size, items_key="content"
+    batch, stats = _observe_rows(
+        rest.to_dataframe(spark, itertools.chain([first], pages), schema)
+        .withColumnRenamed("Id", "invoice_id"),
+        F.max("invoice_id").alias("hi"),
     )
-    vouchers = rest.to_dataframe(spark, pages, schemas.LEXOFFICE_VOUCHER)
-    invoice_ids = vouchers.filter(
-        (F.col("voucherType") == "invoice") & ~F.col("archived")
-    ).select(F.col("id"))
-    fetched = rest.fanout_fetch(
-        invoice_ids,
-        fetch_detail,
-        schemas.LEXOFFICE_INVOICE_DETAIL,
-        key_col="id",
-        parallelism=fanout_parallelism,
-        error_col="_fetch_err",
-    # REMOTE fan-out: materialize ONCE. The frame is consumed by up to
-    # three actions (dead-letter append, count, merge), and each would
-    # otherwise re-run the mapInPandas fetch — one HTTP call per invoice
-    # per pass, tripling API quota — with INDEPENDENT outcomes between
-    # passes (an invoice flaking in one pass but not another could be
-    # both dead-lettered and merged).
-    ).localCheckpoint(eager=True)
-    if dead_letter_path is not None:
-        # failed fetches land in a dead-letter table for replay instead of
-        # disappearing (reference merely filters them out, SURVEY §2.12);
-        # the captured error string separates "API flaked for a few keys"
-        # from "every key failed identically" (a systematic bug).
-        # append_if_absent on the invoice id: the daily full re-scan plus
-        # retries would otherwise append a fresh row (current_timestamp
-        # differs every run) for the same persistently-failing invoice,
-        # growing the dead-letter table without bound
-        failed = fetched.filter(~F.col("_fetch_ok")).select(
-            F.col("id").alias("invoice_id"),
-            F.col("_fetch_err").alias("error"),
-            F.current_timestamp().alias("failed_at"),
-        )
-        ParquetTable(spark, dead_letter_path).append_if_absent(
-            failed, keys=["invoice_id"]
-        )
-    details = fetched.filter(F.col("_fetch_ok")).drop("_fetch_err")
-    items = explode_with_parent(
-        details.select(F.col("id").alias("invoice_id"), "lineItems"),
-        "lineItems",
-        {"invoice_id": "invoice_id"},
-    ).select(
-        "invoice_id",
-        F.col("id").alias("line_id"),
-        "type",
-        "name",
-        "quantity",
-        struct_get("unitPrice.netAmount", 0.0).alias("unit_net"),
-        struct_get("unitPrice.taxRatePercentage", 0.0).alias("tax_rate"),
-        F.coalesce(F.col("discountPercentage"), F.lit(0.0)).alias("discount_pct"),
-        F.col("lineItemAmount").alias("amount"),
-    )
-    n = items.count()
-    # parent-key merge = per-invoice DELETE+INSERT in one commit (see
-    # bexio_invoice_replication): line items removed upstream disappear
-    # here too instead of surviving a composite-key upsert forever. The
-    # delete scope is every SUCCESSFULLY fetched invoice id (key_frame):
-    # an invoice whose current item set is empty explodes to zero batch
-    # rows, and without the key frame its stale items would never be
-    # purged. Failed fetches stay OUT of the frame — an API flake must
-    # not delete a warehouse invoice's items.
+    # the slice's size and top key come from the merge's own jobs
     merge_table(spark, warehouse_path, table_factory).merge_upsert(
-        items,
-        keys=["invoice_id"],
-        key_frame=details.select(F.col("id").alias("invoice_id")),
+        batch, keys=["invoice_id"]
     )
-    return n
+    ws.advance("billwerk_invoices", stats.get["hi"])
+    return stats.get["n"]
 
 
 def sheet_import_snapshot(
@@ -361,47 +163,6 @@ def sheet_import_snapshot(
     return n
 
 
-def hubspot_ticket_refresh(
-    spark: SparkSession,
-    transport: rest.Transport,
-    warehouse_path: str,
-    api_base: str = "https://api.example/crm/v3/objects/tickets",
-    table_factory=None,
-) -> int:
-    """HubSpot forward CRM ingest (``dags/hubspot/tickets/get_tickets.py:
-    43-104``): cursor-link scan (S5) over the tickets collection →
-    first-company association extraction (F21 — the reference's
-    ``r[0]['id']`` over ``associations.companies.results``) → K9
-    truncate load. The association extraction is a row-local
-    try_element_at (NULL-safe on tickets with no company, like the
-    reference's np.nan passthrough) — scan-speed, zero shuffle; the
-    table swap is atomic (WRITE_TRUNCATE equivalent without the
-    mid-load visibility window)."""
-    pages = rest.paginate_cursor_link(
-        transport,
-        api_base,
-        params={
-            "associations": "companies",
-            "properties": "createdate",
-            "limit": 100,
-            "archived": "false",
-        },
-        items_key="results",
-    )
-    raw = rest.to_dataframe(spark, pages, schemas.HUBSPOT_TICKET)
-    flat = raw.select(
-        F.col("id").alias("ticket_id"),
-        F.col("createdAt").alias("created_at"),
-        F.col("updatedAt").alias("updated_at"),
-        F.try_element_at(F.col("associations.companies.results"), F.lit(1))[
-            "id"
-        ].alias("company_id"),
-    )
-    n = flat.count()  # count BEFORE the swap invalidates lineage
-    merge_table(spark, warehouse_path, table_factory).overwrite(flat)
-    return n
-
-
 def stripe_account_rollup(
     spark: SparkSession,
     transport: rest.Transport,
@@ -414,7 +175,13 @@ def stripe_account_rollup(
     reference's per-row python accumulation as one grouped pass) →
     staging-merge into the warehouse."""
     pages = rest.paginate_starting_after(transport, api_base, limit=100)
-    txns = rest.to_dataframe(spark, pages, schemas.STRIPE_BALANCE_TXN)
+    txns = rest.to_dataframe(
+        spark,
+        pages,
+        # created: epoch seconds
+        "id string NOT NULL, account_id string NOT NULL, type string,"
+        " amount double, created bigint",
+    )
     t = F.col("type")
     rollup = txns.groupBy("account_id").agg(
         F.sum(F.when(t.isin("available", "connect_reserved", "pending"), F.col("amount")).otherwise(0.0)).alias("balance"),
@@ -466,12 +233,6 @@ _PAGINATORS = {
 }
 
 
-def _ddl_schema(ddl: str):
-    from pyspark.sql import types as T
-
-    return T.StructType.fromDDL(ddl)
-
-
 def _apply_select(df: DataFrame, select: list[dict]) -> DataFrame:
     """Project the declarative column list: each entry is
     ``{"name": out_col, "sql": <spark SQL expr over the raw columns>}``
@@ -486,19 +247,20 @@ def _apply_select(df: DataFrame, select: list[dict]) -> DataFrame:
     return df.select(*cols)
 
 
-def _observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
-    """``df`` with a row count observed by whichever action runs it first
-    — the sink's own write or eager checkpoint — so counting costs no job
-    of its own. Read it only after that action: ``Observation.get`` waits
-    for one. A lazy checkpoint above it would report zero rows."""
+def _observe_rows(df: DataFrame, *aggs) -> tuple[DataFrame, Observation]:
+    """``df`` with a row count ``n`` (and ``aggs``) observed by whichever
+    action runs it first — the sink's own write or eager checkpoint — so
+    counting costs no job of its own. Read it only after that action:
+    ``Observation.get`` waits for one. A lazy checkpoint above it would
+    report zero rows."""
     obs = Observation()
-    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
+    return df.observe(obs, F.count(F.lit(1)).alias("n"), *aggs), obs
 
 
-def _run_sinks(spark: SparkSession, main, side=None) -> None:
-    """Run ``side`` (if any) on its own thread while ``main`` runs on this
-    one, so their Spark jobs overlap. Returns only after both have ended;
-    the first error either raised is re-raised then."""
+def _run_sinks(spark: SparkSession, main, *sides) -> None:
+    """Run each of ``sides`` that is not None on its own thread while
+    ``main`` runs on this one, so their Spark jobs overlap. Returns only
+    after all have ended; the first error raised is re-raised then."""
     errors: list[BaseException] = []
 
     def guarded(fn) -> None:
@@ -507,14 +269,17 @@ def _run_sinks(spark: SparkSession, main, side=None) -> None:
         except BaseException as e:  # noqa: BLE001 — re-raised below
             errors.append(e)
 
-    worker = None
-    if side is not None:
-        # inherits the caller's job group and local properties
-        worker = InheritableThread(lambda: guarded(side), session=spark)
-        worker.start()
+    # each inherits the caller's job group and local properties
+    workers = [
+        InheritableThread(partial(guarded, fn), session=spark)
+        for fn in sides
+        if fn is not None
+    ]
+    for w in workers:
+        w.start()
     guarded(main)
-    if worker is not None:
-        worker.join()
+    for w in workers:
+        w.join()
     if errors:
         raise errors[0]
 
@@ -533,20 +298,28 @@ def entity_replication(
     child: dict | None = None,
     child_warehouse_path: str | None = None,
     clock: str | None = None,
+    dead_letter_path: str | None = None,
     table_factory=None,
 ):
     """Declarative per-entity replication: the archetype behind the
     reference's per-entity DAG files. One pipeline, N JSON configs — each
     ``jobs.entities.ENTITY_MANIFEST`` entry is one reference DAG expressed
-    as data (SURVEY §2.12's "52 DAGs" story at its real breadth).
+    as data (SURVEY §2.12's "52 DAGs" story at its real breadth), and so
+    are the bexio, lexoffice, billwerk-contract and hubspot-ticket syncs
+    of ``JOB_MANIFEST``.
 
     Stages (each optional piece mirrors a reference family):
       1. paginate (``source``: protocol ∈ offset/page_flag/keyset/
          cursor_link/starting_after + endpoint/limits/keys, schema as a
-         DDL string — S1-S6) → DataFrame;
+         DDL string — S1-S6; ``where``: a SQL predicate over the listed
+         rows, so a filtered-out key costs no detail call) → DataFrame;
       2. optional per-key detail fan-out (``detail``: key_col + DDL
          schema; ``detail_fetch`` callable — S7/J6, the reference's
-         ThreadPoolExecutor loops, distributed via mapInPandas);
+         ThreadPoolExecutor loops, distributed via mapInPandas). Failed
+         fetches are dropped; with ``dead_letter_path`` they are also
+         appended there once per key (``append_if_absent``), as
+         ``(<key>, error, failed_at)``, the key under its ``explode``
+         alias if it has one;
       3. declarative projection (``select``: SQL exprs — the reference's
          flat_entry dict/required_columns padding; an injectable ``_now``
          audit column replaces ``pd.to_datetime('now')`` so tests pin
@@ -555,14 +328,17 @@ def entity_replication(
          keys — F22/J7 line items) to ``child_warehouse_path``;
       5. sink (``sink``: mode ∈ truncate/upsert/append_dedup + keys — K1/
          K2/K7; truncate is the reference's WRITE_TRUNCATE norm).
+         ``carry``: output columns whose value already in the table wins
+         for keys it holds (J1 surrogate key / created_at carry-forward;
+         upsert with a single key only).
 
-    The parent and child sinks run concurrently — the child on its own
-    thread — like the reference's two independent load jobs, and the call
-    returns only after both have ended. Each sink commits atomically on
-    its own table, but not together: if one fails, the other is still
-    attempted and may commit, and the first error is raised once both are
-    done. Re-running the sync is idempotent in every mode, so the repair
-    is a re-run.
+    The parent and child sinks (and the dead-letter append) run
+    concurrently — all but the parent on their own threads — like the
+    reference's independent load jobs, and the call returns only after
+    all have ended. Each sink commits atomically on its own table, but not
+    together: if one fails, the others are still attempted and may
+    commit, and the first error is raised once all are done. Re-running
+    the sync is idempotent in every mode, so the repair is a re-run.
 
     Returns the rows handed to the sink (or ``(parent_rows, child_rows)``
     with a child), counted by the sinks' own jobs.
@@ -572,35 +348,61 @@ def entity_replication(
     if mode not in ("truncate", "upsert", "append_dedup"):
         raise ValueError(f"unknown sink mode {mode!r}")
     keys = sink.get("keys") or []
+    carry = sink.get("carry")
+    if carry and (mode != "upsert" or len(keys) != 1):
+        raise ValueError("sink carry needs upsert mode with a single key")
+    if detail is not None and detail_fetch is None:
+        raise ValueError("detail config needs a detail_fetch callable")
+    if dead_letter_path is not None and detail is None:
+        raise ValueError("dead_letter_path needs a detail config")
     src = dict(source)
     protocol = src.pop("protocol")
-    schema = _ddl_schema(src.pop("schema"))
+    schema = src.pop("schema")
     url = src.pop("url")
+    where = src.pop("where", None)
     pages = _PAGINATORS[protocol](transport, url, **src)
     raw = rest.to_dataframe(spark, pages, schema)
+    if where is not None:
+        raw = raw.filter(F.expr(where))
 
+    dead_letter_sink = None
     if detail is not None:
-        if detail_fetch is None:
-            raise ValueError("detail config needs a detail_fetch callable")
-        from pyspark.sql import types as T
-
         d = dict(detail)
-        detail_schema = _ddl_schema(d.pop("schema")).add(
+        detail_schema = T.StructType.fromDDL(d.pop("schema")).add(
             T.StructField("_fetch_ok", T.BooleanType())
         )
-        # checkpoint BEFORE anything consumes the fan-out: the count and
-        # each sink are separate actions, and an unmaterialized
-        # mapInPandas fetch would re-call the API once per action
-        # (double traffic + rate-limit burn — the lexoffice pipelines'
-        # established discipline, pipelines.py:241)
-        raw = rest.fanout_fetch(
+        # checkpoint BEFORE anything consumes the fan-out: the two
+        # concurrent sinks and the dead-letter append all read it, and an
+        # unmaterialized mapInPandas fetch would re-call the API once per
+        # reader — more traffic, a faster rate-limit burn, and outcomes
+        # that differ between readers (a key flaking in one pass only
+        # could be both dead-lettered and merged)
+        fanout = rest.fanout_fetch(
             raw,
             detail_fetch,
             detail_schema,
+            error_col="_fetch_err" if dead_letter_path is not None else None,
             **d,
-        ).filter(F.col("_fetch_ok")).drop("_fetch_ok").localCheckpoint(
-            eager=True
-        )
+        ).localCheckpoint(eager=True)
+        raw = fanout.filter(F.col("_fetch_ok")).drop("_fetch_ok", "_fetch_err")
+        if dead_letter_path is not None:
+            # the captured error separates "the API flaked for a few keys"
+            # from "every key failed the same way"; append_if_absent keeps
+            # one row per key across the daily re-scan and its retries
+            key_col = d.get("key_col", "id")
+            # keyed by the name the config gives the key: its explode alias
+            aliases = explode["parent_map"] if explode is not None else {}
+            dead_key = aliases.get(key_col, key_col)
+            failed = fanout.filter(~F.col("_fetch_ok")).select(
+                F.col(key_col).alias(dead_key),
+                F.col("_fetch_err").alias("error"),
+                F.current_timestamp().alias("failed_at"),
+            )
+            dead_letter_sink = partial(
+                ParquetTable(spark, dead_letter_path).append_if_absent,
+                failed,
+                keys=[dead_key],
+            )
 
     now = (
         F.lit(clock).cast("timestamp")
@@ -616,8 +418,7 @@ def entity_replication(
         # Keep the PRE-explode parent key set: a parent whose array became
         # empty upstream explodes to ZERO batch rows, and an upsert merge
         # keyed only on the batch would leave its stale rows alive forever
-        # — the key_frame contract bexio_invoice_replication (above,
-        # :116-130) and lexoffice_invoice_items (:279-288) implement.
+        # — the key_frame contract of the child sink below.
         explode_map = dict(explode["parent_map"])
         explode_parents = raw.select(
             *[F.col(r).alias(c) for r, c in explode_map.items()]
@@ -628,7 +429,15 @@ def entity_replication(
             explode_map,
         )
     frame = raw.withColumn("_now", now)
-    out, out_obs = _observe_rows(_apply_select(frame, select))
+    tbl = merge_table(spark, warehouse_path, table_factory)
+    out = _apply_select(frame, select)
+    if carry and tbl.exists():
+        # J1: a key already in the table keeps its carried values; new
+        # keys keep the minted ones from the select
+        out = carry_forward_keys(
+            out, tbl.read(), keys[0], {c: F.col(c) for c in carry}
+        ).select(*out.columns)
+    out, out_obs = _observe_rows(out)
 
     child_sink = child_obs = None
     if child is not None:
@@ -645,8 +454,9 @@ def entity_replication(
             child_sink = partial(ctbl.overwrite, items)
         else:
             # child rows merge on the PARENT key: each parent's batch rows
-            # are its complete current item set (bexio_invoice_replication's
-            # contract — stale items of refetched parents must die). The
+            # are its complete current item set (the reference's
+            # per-parent DELETE+INSERT — stale items of refetched parents
+            # must die). The
             # delete scope must be the FULL fetched parent set (key_frame),
             # not the batch's keys: a refetched parent whose child array
             # became EMPTY contributes zero batch rows, and without the
@@ -681,7 +491,6 @@ def entity_replication(
                     )
             child_sink = partial(ctbl.merge_upsert, items, keys=ckeys, key_frame=ckf)
 
-    tbl = merge_table(spark, warehouse_path, table_factory)
     if mode == "truncate":
         parent_sink = partial(tbl.overwrite, out)
     elif mode == "upsert":
@@ -711,51 +520,9 @@ def entity_replication(
         def parent_sink():
             tbl.append_if_absent(out.localCheckpoint(eager=True), keys=keys)
 
-    _run_sinks(spark, parent_sink, child_sink)
+    _run_sinks(spark, parent_sink, child_sink, dead_letter_sink)
     n = out_obs.get["n"]
     return n if child_obs is None else (n, child_obs.get["n"])
-
-
-def validated_merge(
-    spark: SparkSession,
-    batch: DataFrame,
-    warehouse_path: str,
-    keys: list[str],
-    build_expectations,
-    quarantine_path: str | None = None,
-    table_factory=None,
-) -> dict[str, int]:
-    """Quality-gated load: run declared expectations over the batch, merge
-    only the rows that pass every row-local check, and append the
-    violating rows (tagged with a timestamp) to a quarantine table for
-    triage/replay.
-
-    ``build_expectations(batch) -> ops.validate.Expectations`` declares the
-    suite. The split is a pure projection (ops/validate.py::flag_rows — no
-    extra scan); the merge keeps the K1 atomic-swap idempotency, so a
-    re-run after a crash quarantines and merges the same rows again with
-    no duplication (quarantine uses append_if_absent on the keys).
-
-    Returns {"merged": n, "quarantined": n}. The reference has no
-    equivalent — bad payloads went straight into BigQuery under
-    autodetect (SURVEY §1.3).
-    """
-    from ..ops.validate import Expectations  # noqa: F401  (typing aid)
-
-    exp = build_expectations(batch)
-    flagged = exp.flag_rows().localCheckpoint(eager=True)
-    bad = flagged.filter(F.col("_violated")).drop("_violated")
-    good = flagged.filter(~F.col("_violated")).drop("_violated")
-    n_bad = bad.count()
-    n_good = good.count()
-    if quarantine_path is not None and n_bad:
-        q = ParquetTable(spark, quarantine_path)
-        q.append_if_absent(
-            bad.withColumn("quarantined_reason", F.lit("row_check")), keys
-        )
-    if n_good:
-        merge_table(spark, warehouse_path, table_factory).merge_upsert(good, keys=keys)
-    return {"merged": n_good, "quarantined": n_bad}
 
 
 def _table_for(spark: SparkSession, path: str):
@@ -1009,120 +776,6 @@ def incremental_ann_ingest(
     return index.append(assigned)
 
 
-def incremental_span_dedup(
-    spark: SparkSession,
-    index_path: str,
-    batch: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    span_words: int = 10,
-    app_id: str | None = None,
-    batch_id: int | None = None,
-) -> DataFrame:
-    """Continuous-ingest C4-style span dedup: clean the NEW batch against
-    the persisted segment-hash index, then commit the batch's surviving
-    segment hashes as an O(1) versioned append. Batches arriving in id
-    order reproduce ``functions.dedup.span_dedup`` over the concatenated
-    corpus exactly (tested ≡ full recompute).
-
-    Scale shape: the index stores only ``xxhash64(seg)`` (8 bytes per
-    distinct segment — ~1-2% of corpus bytes at a 10-word span). Probing
-    broadcasts the BATCH side, so the index is scanned column-pruned but
-    never shuffled, and per-load cost is O(index scan + batch) with zero
-    exchanges on the corpus side. In-batch first occurrences resolve by
-    the same (id, position) rule as the batch operator.
-
-    Crash ordering: the cleaned output is materialized BEFORE the index
-    commit, so a pre-commit failure just re-cleans the same batch
-    against the same snapshot. The POST-commit window needs the txn
-    seam: without it, a caller crashing after the index commit (but
-    before persisting the returned batch) replays the batch against an
-    index that already contains its OWN segment hashes — every segment
-    looks seen, and the whole batch comes back emptied. With
-    ``app_id``/``batch_id``, a replay of an already-committed batch
-    rebuilds ``seen`` from the snapshot BEFORE that batch's commit
-    (located by its txn marker) and the re-commit is an append_txn
-    no-op — byte-identical output to the original run. At-least-once
-    callers (streaming foreachBatch, retrying schedulers) MUST pass the
-    txn ids."""
-    from ..functions.dedup import _word_segments
-    from ..sinks.versioned import VersionedTable
-
-    index = VersionedTable(spark, index_path)
-    replay_base: int | None = None
-    if app_id is not None and batch_id is not None and index.exists():
-        last = index.last_txn(app_id)
-        if last is not None and batch_id <= last:
-            v = next(
-                (
-                    h["version"]
-                    for h in index.history()
-                    if h["txn"]
-                    and h["txn"]["app"] == app_id
-                    and h["txn"]["batch"] == batch_id
-                ),
-                None,
-            )
-            if v is None:
-                raise FileNotFoundError(
-                    f"replay of ({app_id}, {batch_id}) against {index_path}: "
-                    "the original commit was expired (expire_log) — the "
-                    "pre-batch snapshot cannot be reproduced"
-                )
-            replay_base = v - 1
-    if replay_base is not None:
-        seen = (
-            index.read(replay_base)
-            if replay_base >= 0
-            else spark.createDataFrame([], "h long")
-        )
-    else:
-        seen = (
-            index.read()
-            if index.exists()
-            else spark.createDataFrame([], "h long")
-        )
-    segs = _word_segments(batch, text_col, id_col, span_words).withColumn(
-        "h", F.xxhash64("seg")
-    )
-    batch_first = segs.groupBy("h").agg(F.min("pos").alias("first_pos"))
-    # index side: column-pruned scan, probe set broadcast -> no index shuffle
-    hits = seen.join(
-        F.broadcast(batch_first.select("h")), "h", "left_semi"
-    ).withColumn("in_index", F.lit(1))
-    flagged = (
-        segs.join(F.broadcast(batch_first), "h")
-        .join(F.broadcast(hits), "h", "left")
-        .withColumn(
-            "kept",
-            (
-                (F.col("pos") == F.col("first_pos"))
-                & F.col("in_index").isNull()
-            ).cast("int"),
-        )
-    )
-    cleaned = flagged.groupBy(id_col).agg(
-        F.count("*").alias("n_segs"),
-        F.sum("kept").alias("n_kept"),
-        F.array_join(
-            F.expr(
-                "transform(filter(array_sort(collect_list(struct(seg_no, seg, kept)))"
-                ", x -> x.kept = 1), x -> x.seg)"
-            ),
-            " ",
-        ).alias("cleaned_text"),
-    )
-    cleaned = cleaned.localCheckpoint(eager=True)
-    # kept rows carry one occurrence per hash by construction
-    # (pos == global-in-batch min), so no distinct pass is needed
-    new_hashes = flagged.filter(F.col("kept") == 1).select("h")
-    if app_id is not None and batch_id is not None:
-        index.append_txn(new_hashes, app_id=app_id, batch_id=batch_id)
-    else:
-        index.append(new_hashes)
-    return cleaned
-
-
 def export_training_shards(
     spark: SparkSession,
     docs: DataFrame,
@@ -1227,65 +880,6 @@ def incremental_summary_refresh(
     # fully materializes the new state before the commit, and the log-based
     # overwrite never deletes the old files (vacuum does, later)
     summary.overwrite(merged, txn=("summary_fold", cur))
-    return cur
-
-
-def incremental_summary_refresh_cdc(
-    spark: SparkSession,
-    source_path: str,
-    summary_path: str,
-    group_cols: list[str],
-    sum_cols: list[str],
-) -> int | None:
-    """``incremental_summary_refresh`` made exact under UPDATES and
-    DELETES: folds the source's typed CDC feed with SIGNED partial
-    aggregates — +row for insert/update_postimage, −row for delete/
-    update_preimage — so an update contributes (new − old) and a delete
-    retracts its group, the classic retraction trick for additive
-    aggregates. Groups whose row count reaches zero drop out of the
-    summary. The source must commit with ``enable_cdc`` (a non-CDC
-    rewrite in the range fails loudly via ``changes_feed``).
-
-    Exactly-once contract is identical to the append-only version: one
-    atomic overwrite commit carrying the ``("summary_fold_cdc",
-    source_version)`` txn marker. Per-refresh cost tracks the range's
-    change files, never the source table."""
-    from ..sinks.versioned import VersionedTable
-
-    source = VersionedTable(spark, source_path)
-    summary = VersionedTable(spark, summary_path)
-    last = summary.last_txn("summary_fold_cdc")
-    cur = source.latest_version()
-    if cur is None or (last is not None and cur <= last):
-        return None
-
-    feed = source.changes_feed(last if last is not None else -1, cur)
-    sign = F.when(
-        F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
-    ).otherwise(F.lit(-1))
-    agg = feed.withColumn("_sign", sign).groupBy(*group_cols).agg(
-        *[
-            F.sum(F.col(c).cast("decimal(28,10)") * F.col("_sign")).alias(
-                f"sum_{c}"
-            )
-            for c in sum_cols
-        ],
-        F.sum("_sign").cast("long").alias("n_rows"),
-    )
-    if summary.exists():
-        merged = (
-            summary.read()
-            .unionByName(agg)
-            .groupBy(*group_cols)
-            .agg(
-                *[F.sum(f"sum_{c}").alias(f"sum_{c}") for c in sum_cols],
-                F.sum("n_rows").cast("long").alias("n_rows"),
-            )
-        )
-    else:
-        merged = agg
-    merged = merged.filter(F.col("n_rows") > 0)
-    summary.overwrite(merged, txn=("summary_fold_cdc", cur))
     return cur
 
 

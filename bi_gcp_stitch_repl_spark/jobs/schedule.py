@@ -23,7 +23,13 @@ Example Airflow DAG (deployment-side, not part of the engine):
 
 from __future__ import annotations
 
-from .entities import ENTITY_MANIFEST
+from .entities import (
+    BEXIO_INVOICES,
+    BILLWERK_CONTRACTS,
+    ENTITY_MANIFEST,
+    HUBSPOT_TICKETS,
+    LEXOFFICE_INVOICE_ITEMS,
+)
 from .spec import JobSpec
 
 __all__ = ["JOB_MANIFEST", "JobSpec"]
@@ -32,18 +38,9 @@ __all__ = ["JOB_MANIFEST", "JobSpec"]
 #: cadences mirror the reference's staggered schedule_interval values
 #: (e.g. dags/bexio/bexio_invoice_and_line_items_de.py:47 '35 21 * * *')
 JOB_MANIFEST: dict[str, JobSpec] = {
-    "bexio_invoices": JobSpec(
-        "bexio_invoice_replication", "35 21 * * *",
-        "Bexio invoice + line-item upsert replication",
-    ),
-    "lexoffice_invoice_items": JobSpec(
-        "lexoffice_invoice_items", "0 22 * * *",
-        "LexOffice voucher list + detail fan-out + line items",
-    ),
-    "billwerk_contracts": JobSpec(
-        "billwerk_contract_refresh", "30 22 * * *",
-        "Billwerk contract snapshot truncate-refresh",
-    ),
+    "bexio_invoices": BEXIO_INVOICES,
+    "lexoffice_invoice_items": LEXOFFICE_INVOICE_ITEMS,
+    "billwerk_contracts": BILLWERK_CONTRACTS,
     "billwerk_invoices_incremental": JobSpec(
         "billwerk_incremental_invoices", "0 23 * * *",
         "Billwerk invoices keyset-watermark incremental",
@@ -66,11 +63,7 @@ JOB_MANIFEST: dict[str, JobSpec] = {
         "Sheet-import archetype: key-accounts Active Orgs sheet -> "
         "truncate-refresh (active_orgs.py config)",
     ),
-    "hubspot_tickets": JobSpec(
-        "hubspot_ticket_refresh", "30 7 * * *",
-        "HubSpot tickets cursor scan + company-association extraction "
-        "-> truncate load",
-    ),
+    "hubspot_tickets": HUBSPOT_TICKETS,
     "reverse_etl_company_status": JobSpec(
         "reverse_etl_company_status", "30 9 * * *",
         "Warehouse aggregates -> CRM batch update",

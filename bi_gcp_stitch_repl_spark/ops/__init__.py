@@ -1,5 +1,5 @@
 from .asof import asof_join
-from .clean import money, null_if_in, strip_newlines
+from .clean import null_if_in
 from .history import append_only_delta, latest_per_key
 from .keys import carry_forward_keys
 from .layout import zorder_key, zorder_layout
@@ -16,10 +16,8 @@ __all__ = [
     "explode_with_parent",
     "flatten_structs",
     "latest_per_key",
-    "money",
     "null_if_in",
     "pad_columns",
-    "strip_newlines",
     "zorder_key",
     "zorder_layout",
 ]

@@ -11,25 +11,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def strip_newlines(c: Column | str) -> Column:
-    """F1/F2 remnant: normalize embedded newlines/CRs to spaces.
-
-    Reference ``convert_value`` / ``clean_text``
-    (``dags/bexio/bexio_invoice_and_line_items_de.py:106-124``,
-    ``dags/billwerk/biilwerk_invoices_line_items.py:65-77``). The SQL-literal
-    and CSV escaping halves of those functions are obsolete under
-    parameterized parquet writes.
-    """
-    return F.regexp_replace(F.col(c) if isinstance(c, str) else c, "[\\n\\r]+", " ")
-
-
-def money(c: Column | str) -> Column:
-    """F16: numeric-in-string to double, NULL on garbage
-    (``pd.to_numeric(errors='coerce')``,
-    ``dags/bexio/bexio_invoice_and_line_items_de.py:167-171``)."""
-    return (F.col(c) if isinstance(c, str) else c).try_cast("double")
-
-
 def percent_to_fraction(c: Column | str, scale: int = 3) -> Column:
     """F4: strip a ``%`` suffix, /100, round
     (``dags/price-increase/import_bi_dev_gross_margin.py:56-58``)."""
@@ -56,7 +37,7 @@ def unix_micros_ts(c: Column | str) -> Column:
     ``dags/bexio/bexio_invoice_and_line_items_de.py:96-100``). try_cast,
     not cast: under ANSI (Spark 4 default) a stray '' or 'null' string in
     an epoch column would throw and kill the job — this module's surface
-    is coerce-to-NULL throughout (the money() contract)."""
+    is coerce-to-NULL throughout."""
     return F.timestamp_micros(
         (F.col(c) if isinstance(c, str) else c).try_cast("long")
     )
@@ -104,11 +85,3 @@ def int_key(c: Column | str) -> Column:
     return F.coalesce(
         col.try_cast("long"), col.try_cast("double").try_cast("long"), F.lit(0)
     )
-
-
-def array_head_field(array_col: str, field: str) -> Column:
-    """F20: NULL-safe first-element field access (``taxs[0]['percentage']``,
-    ``dags/bexio/bexio_invoice_and_line_items_de.py:164``). try_element_at,
-    not element_at: under ANSI mode (Spark 4 default) element_at THROWS on
-    an empty array, and empty ``taxs`` is a normal payload."""
-    return F.try_element_at(F.col(array_col), F.lit(1))[field]

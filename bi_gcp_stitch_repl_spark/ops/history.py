@@ -71,8 +71,8 @@ def latest_per_key(
     explicit unique column (e.g. the event id) in hot paths so the sort
     key stays narrow."""
     if tiebreak_cols is None:
-        # skip unorderable types: a map column (the property-bag payloads
-        # ops.normalize.maps_to_json exists for) in the default tiebreak
+        # skip unorderable types: a map column (a property-bag payload
+        # such as billwerk's CustomFields) in the default tiebreak
         # list fails analysis with INVALID_ORDERING_TYPE — the default
         # must work on any frame, and map contents are not a meaningful
         # tiebreaker anyway

@@ -16,12 +16,6 @@ expressions (no Python row functions — SURVEY.md §2.11 rule):
 - ``pad_columns`` — add missing columns as typed NULLs to meet a required
   schema (reference ``required_columns`` loop,
   ``dags/billwerk/biilwerk_customers.py:153-161``; SURVEY §1.3).
-- ``struct_get`` — NULL-safe dot-path access with a default (reference
-  ``entry.get('PaymentBearer',{}).get('EmailAddress','')``,
-  ``dags/billwerk/biilwerk_contracts.py:126-169``; SURVEY F23).
-- ``maps_to_json`` — property-bag columns serialized for sinking (reference
-  ``json.dumps(CustomFields)``, ``dags/billwerk/biilwerk_contracts.py:167``;
-  SURVEY F25).
 
 All of these are narrow (no shuffle); explode multiplies row count, which at
 100 TB argues for exploding *after* pushing every parent-level filter down —
@@ -134,25 +128,3 @@ def _lit_col(name: str) -> Column:
     """Column reference treating ``name`` as ONE literal column name
     (dots and all), never a struct path."""
     return F.col("`" + name.replace("`", "``") + "`")
-
-
-def struct_get(path: str, default=None) -> Column:
-    """NULL-safe nested access with a default: ``struct_get('a.b.c', '')``.
-
-    NULL anywhere along the path yields the default, matching chained
-    ``dict.get(..., {}).get(..., default)`` in the reference.
-    """
-    col = F.col(path)
-    if default is None:
-        return col
-    return F.coalesce(col, F.lit(default))
-
-
-def maps_to_json(df: DataFrame, map_cols: list[str]) -> DataFrame:
-    """Serialize map/struct property-bag columns to JSON strings (sink prep).
-    Backtick-quoted references: dotted names from ``flatten_structs``
-    must resolve as literal columns, not struct paths."""
-    out = df
-    for c in map_cols:
-        out = out.withColumn(c, F.to_json(_lit_col(c)))
-    return out

@@ -279,6 +279,10 @@ def spread_narrow(df: DataFrame, *key_cols: str) -> DataFrame:
 #:    s4_keyset_increment + s7_detail_fanout (sources/rest.py — the Arrow
 #:    extract) take the slots of x_split_shard, x_stratified_sample and
 #:    x_string_agg, released: each r12-fresh, its library untouched.
+#: 5. Changed ops canaries: n_nested_battery (ops/normalize.py) and
+#:    f_string_clean_coerce (ops/clean.py) — both modules lost helpers no
+#:    query used — take the slots of x_mixture_sample and
+#:    x_weighted_sample, released: each r12-fresh, its library untouched.
 #: Names absent from this list keep registration order after it.
 _PRIORITY: list[str] = [
     # §2 spine
@@ -293,10 +297,10 @@ _PRIORITY: list[str] = [
     "x_dedup_normalized", "x_dsir_weights", "x_embedding_quantize",
     "x_feature_hash_embed", "x_fingerprint", "x_gopher_rules",
     "x_ivf_topk", "x_knn_cosine_topk",
-    "x_minhash_lsh_candidates", "x_mixture_sample",
+    "x_minhash_lsh_candidates",
     "x_multimodal_meta", "x_semantic_decontaminate",
     "x_semdedup", "x_simhash", "x_simhash_pairs", "x_sparse_cosine_pairs",
-    "x_token_budget_plan", "x_vocab_encode", "x_weighted_sample",
+    "x_token_budget_plan", "x_vocab_encode",
     "x_winnowing_fingerprints", "x_winnowing_pairs",
     # r11 new-query cohort (keeps slots)
     "x_communities_trade", "x_bpe_merges", "x_modularity_trade",
@@ -306,6 +310,8 @@ _PRIORITY: list[str] = [
     "x_hits_trade", "x_ppr_trade", "x_triangle_trade",
     # changed sink/source canaries (see header)
     "k1_merge_upsert", "s4_keyset_increment", "s7_detail_fanout",
+    # changed ops canaries (see header)
+    "n_nested_battery", "f_string_clean_coerce",
 ]
 
 

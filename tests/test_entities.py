@@ -223,7 +223,7 @@ def test_bexio_orders_child_purges_emptied_parent_positions(spark, tmp_path):
     whose positions array became EMPTY contributes zero batch rows, and
     only the key_frame (the full fetched parent-id set) purges its stale
     positions — a batch-keyed merge would keep them alive forever
-    (bexio_invoice_replication's contract, pipelines.py:116-130)."""
+    (the reference's per-invoice DELETE+INSERT)."""
 
     def order(i, n_pos):
         return {

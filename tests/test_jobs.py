@@ -4,6 +4,7 @@ extract → normalize → merge → re-run idempotency."""
 
 from __future__ import annotations
 
+import os
 import threading
 
 import pytest
@@ -11,7 +12,8 @@ import pytest
 from pyspark.sql import Row
 
 from bi_gcp_stitch_repl_spark.jobs import pipelines
-from bi_gcp_stitch_repl_spark.sinks.merge import ParquetTable
+from bi_gcp_stitch_repl_spark.jobs.schedule import JOB_MANIFEST
+from bi_gcp_stitch_repl_spark.sinks.merge import ParquetTable, WatermarkStore
 from bi_gcp_stitch_repl_spark.sinks.versioned import CommitConflict, VersionedTable
 from bi_gcp_stitch_repl_spark.sources import rest
 
@@ -22,6 +24,21 @@ def read_merged(spark, path):
     """Jobs default their merge targets to the commit-log VersionedTable
     (pipelines.merge_table); reads go through its snapshot view."""
     return VersionedTable(spark, path).read()
+
+
+def run_job(
+    spark, name, transport, warehouse_path, source=None, detail=None, **runtime
+):
+    """Run a JOB_MANIFEST entry as ``__main__`` does: its baked params under
+    the runtime kwargs. ``source``/``detail`` override single keys of the
+    baked dicts (page size, fan-out width)."""
+    spec = JOB_MANIFEST[name]
+    params = dict(spec.params)
+    for key, override in (("source", source), ("detail", detail)):
+        if override:
+            params[key] = {**params[key], **override}
+    fn = getattr(pipelines, spec.pipeline)
+    return fn(spark, transport, warehouse_path, **{**params, **runtime})
 
 
 def bexio_transport(invoices):
@@ -54,32 +71,45 @@ def make_invoice(i, title="inv", total="100.00", n_positions=2):
     }
 
 
+def sync_invoices(spark, invoices, wh, li, **runtime):
+    """One ``bexio_invoices`` sync over two-invoice pages."""
+    return run_job(
+        spark, "bexio_invoices", bexio_transport(invoices), wh,
+        source={"limit": 2}, child_warehouse_path=li, **runtime,
+    )
+
+
 def test_bexio_pipeline_end_to_end_and_idempotent(spark, tmp_path):
     wh = str(tmp_path / "invoices")
     li = str(tmp_path / "line_items")
-    invoices = [make_invoice(i) for i in range(1, 6)]
-    n_h, n_i = pipelines.bexio_invoice_replication(
-        spark, bexio_transport(invoices), wh, li, page_limit=2
-    )
-    assert (n_h, n_i) == (5, 10)
+    # invoice 6 carries a garbage total and no taxes: both coerce to NULL
+    garbled = dict(make_invoice(6, total="n/a"), taxs=[])
+    invoices = [make_invoice(i) for i in range(1, 6)] + [garbled]
+    n_h, n_i = sync_invoices(spark, invoices, wh, li)
+    assert (n_h, n_i) == (6, 12)
     headers = read_merged(spark, wh)
-    assert headers.count() == 5
+    assert headers.count() == 6
     first = {r["bexio_id"]: r for r in headers.collect()}
     assert first[1]["title"] == "inv 1"  # newline normalized
     assert first[1]["total"] == 100.0
     assert first[1]["tax_percentage"] == "7.7"
+    assert first[6]["total"] is None and first[6]["tax_percentage"] is None
 
     # re-run with one updated + one new invoice: upsert, keys carried
-    invoices2 = [make_invoice(1, total="222.00")] + [make_invoice(9)]
-    pipelines.bexio_invoice_replication(spark, bexio_transport(invoices2), wh, li, page_limit=2)
+    updated = dict(make_invoice(1, total="222.00"), updated_at="2024-04-01 10:00:00")
+    invoices2 = [updated] + [make_invoice(9)]
+    sync_invoices(spark, invoices2, wh, li)
     after = {r["bexio_id"]: r for r in read_merged(spark, wh).collect()}
-    assert len(after) == 6
+    assert len(after) == 7
     assert after[1]["total"] == 222.0            # updated
     assert after[1]["u_id"] == first[1]["u_id"]  # surrogate key carried (J1)
+    assert after[1]["updated_at"] > first[1]["updated_at"]
+    assert after[1]["created_at"] == first[1]["created_at"]  # carried (J1)
+    assert after[9]["created_at"] == after[9]["updated_at"]  # minted
     assert after[2]["total"] == 100.0            # untouched survivor
 
     items = read_merged(spark, li)
-    assert items.count() == 12
+    assert items.count() == 14
     disc = items.filter("type = 'KbPositionDiscount'").collect()
     assert all(r["discount_amount"] == r["unit_price"] for r in disc)
 
@@ -116,7 +146,7 @@ def test_billwerk_contract_refresh_flattens_with_defaults(spark, tmp_path):
         },
     ]
     wh = str(tmp_path / "contracts")
-    n = pipelines.billwerk_contract_refresh(spark, billwerk_keyset_transport(rows), wh)
+    n = run_job(spark, "billwerk_contracts", billwerk_keyset_transport(rows), wh)
     assert n == 2
     got = {r["contract_id"]: r for r in read_merged(spark, wh).collect()}
     assert got["c1"]["payment_email"] == "a@b.c"
@@ -125,30 +155,44 @@ def test_billwerk_contract_refresh_flattens_with_defaults(spark, tmp_path):
     assert got["c1"]["custom_fields"] == '{"tier":"gold"}'
 
     # refresh is truncate semantics: second run with fewer rows shrinks
-    pipelines.billwerk_contract_refresh(spark, billwerk_keyset_transport(rows[:1]), wh)
+    run_job(spark, "billwerk_contracts", billwerk_keyset_transport(rows[:1]), wh)
     assert read_merged(spark, wh).count() == 1
 
 
 def test_billwerk_incremental_watermark_cycle(spark, tmp_path):
+    """Resume from the watermark, load only the delta, advance after the
+    merge — on both table factories. The slice's size and top key ride
+    the merge's own jobs, so a delta sync is the snapshot and the write
+    (no key range overlaps the table's), plus the anti-join's broadcast
+    on the plain table. An empty slice returns 0 without running a job:
+    no commit, no rewrite, the watermark file untouched."""
     all_rows = [{"Id": i, "amount": i * 1.0, "status": "open"} for i in range(1, 21)]
-    wh = str(tmp_path / "invoices")
-    wm = str(tmp_path / "wm.json")
+    delta_jobs = {VersionedTable: 2, ParquetTable: 3}
+    for factory in (VersionedTable, ParquetTable):
+        wh = str(tmp_path / factory.__name__ / "invoices")
+        wm = str(tmp_path / factory.__name__ / "wm.json")
 
-    n1 = pipelines.billwerk_incremental_invoices(
-        spark, billwerk_keyset_transport(all_rows[:10]), wh, wm
-    )
-    assert n1 == 10
-    # next run sees the full upstream; only the delta loads
-    n2 = pipelines.billwerk_incremental_invoices(
-        spark, billwerk_keyset_transport(all_rows), wh, wm
-    )
-    assert n2 == 10
-    assert read_merged(spark, wh).count() == 20
-    # nothing new → no-op
-    n3 = pipelines.billwerk_incremental_invoices(
-        spark, billwerk_keyset_transport(all_rows), wh, wm
-    )
-    assert n3 == 0
+        def sync(rows):
+            return pipelines.billwerk_incremental_invoices(
+                spark, billwerk_keyset_transport(rows), wh, wm, table_factory=factory
+            )
+
+        assert sync(all_rows[:10]) == 10
+        # next run sees the full upstream; only the delta loads
+        n2 = _jobs_of(spark, f"delta-{factory.__name__}", lambda: sync(all_rows))
+        assert n2 == (10, delta_jobs[factory])
+        assert factory(spark, wh).read().count() == 20
+        assert WatermarkStore(wm).get("billwerk_invoices") == 20
+        with open(wm) as f:
+            mark = f.read()
+        files = sorted(os.listdir(wh))
+        # nothing new → no-op
+        n3 = _jobs_of(spark, f"empty-{factory.__name__}", lambda: sync(all_rows))
+        assert n3 == (0, 0)
+        with open(wm) as f:
+            assert f.read() == mark  # watermark unmoved, not even re-stamped
+        assert sorted(os.listdir(wh)) == files  # no commit, no swap
+        assert factory(spark, wh).read().count() == 20
 
 
 def stripe_transport(rows):
@@ -247,12 +291,20 @@ def lexoffice_transports(n_invoices):
     return list_transport, fetch_detail
 
 
+def sync_lexoffice(spark, list_t, fetch, wh, **runtime):
+    """One ``lexoffice_invoice_items`` sync: six-voucher pages, three
+    concurrent detail streams."""
+    return run_job(
+        spark, "lexoffice_invoice_items", list_t, wh,
+        source={"size": 6}, detail={"parallelism": 3}, detail_fetch=fetch,
+        **runtime,
+    )
+
+
 def test_lexoffice_pipeline_fanout_and_nested(spark, tmp_path):
     list_t, detail_t = lexoffice_transports(20)
     wh = str(tmp_path / "lex_items")
-    n = pipelines.lexoffice_invoice_items(
-        spark, list_t, detail_t, wh, page_size=6, fanout_parallelism=3
-    )
+    n = sync_lexoffice(spark, list_t, detail_t, wh)
     items = read_merged(spark, wh)
     # 20 vouchers: 13 invoices (i%3!=0), minus archived (i%5==0 → 5,10 among
     # invoices) minus failed fetch v7 → each surviving invoice has 2 lines
@@ -276,9 +328,7 @@ def test_lexoffice_empty_item_set_purges_stale_lines(spark, tmp_path):
     frame). A FAILED fetch, by contrast, must leave its rows untouched."""
     list_t, detail_t = lexoffice_transports(20)
     wh = str(tmp_path / "lex_items")
-    pipelines.lexoffice_invoice_items(
-        spark, list_t, detail_t, wh, page_size=6, fanout_parallelism=3
-    )
+    sync_lexoffice(spark, list_t, detail_t, wh)
     before = {r["invoice_id"] for r in read_merged(spark, wh).collect()}
     assert "v1" in before and "v2" in before
 
@@ -290,9 +340,7 @@ def test_lexoffice_empty_item_set_purges_stale_lines(spark, tmp_path):
             return None  # API flake this run
         return d
 
-    pipelines.lexoffice_invoice_items(
-        spark, list_t, detail_t2, wh, page_size=6, fanout_parallelism=3
-    )
+    sync_lexoffice(spark, list_t, detail_t2, wh)
     after = {r["invoice_id"] for r in read_merged(spark, wh).collect()}
     assert "v1" not in after  # emptied invoice purged
     assert "v2" in after  # failed fetch preserved
@@ -308,46 +356,32 @@ def test_job_manifest_names_resolve(spark):
 
 
 def test_lexoffice_dead_letter_capture(spark, tmp_path):
+    """The failed fetch lands in the dead-letter table under the key's
+    explode alias, once across re-runs. Each live invoice is fetched exactly
+    once per sync although both the merge and the dead-letter append read
+    the fan-out, and a voucher the list filter drops is never fetched."""
     list_t, detail_t = lexoffice_transports(20)
     wh = str(tmp_path / "items")
     dl = str(tmp_path / "dead_letters")
-    pipelines.lexoffice_invoice_items(
-        spark, list_t, detail_t, wh, page_size=6, dead_letter_path=dl
-    )
-    dead = ParquetTable(spark, dl).read().collect()
-    assert [r["invoice_id"] for r in dead] == ["v7"]  # the failing fetch
+    calls_dir = tmp_path / "calls"
+    calls_dir.mkdir()
+    calls_path = str(calls_dir)  # workers share the local FS in local mode
 
+    def fetch(vid):
+        import os
+        import uuid
 
-def test_validated_merge_quarantines_bad_rows_and_is_idempotent(spark, tmp_path):
-    from bi_gcp_stitch_repl_spark.jobs.pipelines import validated_merge
-    from bi_gcp_stitch_repl_spark.ops.validate import Expectations
-    from bi_gcp_stitch_repl_spark.sinks.merge import ParquetTable
+        with open(os.path.join(calls_path, uuid.uuid4().hex), "w") as f:
+            f.write(vid)
+        return detail_t(vid)
 
-    batch = spark.createDataFrame(
-        [(1, "A", 10.0), (2, "Z", 20.0), (3, "B", -4.0), (4, "A", 30.0)],
-        "id long, status string, amount double",
-    )
-    wh, qr = str(tmp_path / "wh"), str(tmp_path / "qr")
-
-    def suite(df):
-        return (
-            Expectations(df)
-            .expect_accepted_values("status", ["A", "B"])
-            .expect_between("amount", 0, 100)
-        )
-
-    out = validated_merge(spark, batch, wh, ["id"], suite, quarantine_path=qr)
-    assert out == {"merged": 2, "quarantined": 2}
-    assert {r["id"] for r in read_merged(spark, wh).collect()} == {1, 4}
-    quarantined = ParquetTable(spark, qr).read()
-    assert {r["id"] for r in quarantined.collect()} == {2, 3}
-    assert quarantined.columns[-1] == "quarantined_reason"
-
-    # crash-retry: the same batch loads again with no duplication anywhere
-    out2 = validated_merge(spark, batch, wh, ["id"], suite, quarantine_path=qr)
-    assert out2 == {"merged": 2, "quarantined": 2}
-    assert read_merged(spark, wh).count() == 2
-    assert ParquetTable(spark, qr).read().count() == 2
+    listed = sorted(f"v{i}" for i in range(20) if i % 3 and i % 5)
+    for run in (1, 2):
+        sync_lexoffice(spark, list_t, fetch, wh, dead_letter_path=dl)
+        dead = ParquetTable(spark, dl).read().collect()
+        assert [r["invoice_id"] for r in dead] == ["v7"]  # the failing fetch
+        calls = sorted(p.read_text() for p in calls_dir.iterdir())
+        assert calls == sorted(listed * run)
 
 
 def test_erase_requested_keys_across_tables(spark, tmp_path):
@@ -588,97 +622,6 @@ def test_export_training_shards_layout_and_stability(spark, tmp_path):
     assert all(after[d] == s for d, s in first.items())
 
 
-def test_incremental_span_dedup_equals_full_recompute(spark, tmp_path):
-    """Two loads through the persisted segment-hash index produce exactly
-    the batch operator's result over the concatenated corpus, and the
-    index grows append-only."""
-    from bi_gcp_stitch_repl_spark.functions.dedup import span_dedup
-    from bi_gcp_stitch_repl_spark.jobs.pipelines import incremental_span_dedup
-    from bi_gcp_stitch_repl_spark.sinks.versioned import VersionedTable
-
-    W = 3
-    shared = "x1 x2 x3"          # full segment repeated across batches
-    batch1 = spark.createDataFrame(
-        [
-            (0, shared + " a1 a2 a3 " + shared),   # in-batch repeat too
-            (1, "b1 b2 b3 b4"),
-        ],
-        "doc_id long, text string",
-    )
-    batch2 = spark.createDataFrame(
-        [
-            (2, shared + " c1 c2 c3"),             # cross-batch repeat
-            (3, "b1 b2 b3 d1"),                    # prefix repeat, new tail
-        ],
-        "doc_id long, text string",
-    )
-    idx = str(tmp_path / "seg_index")
-    out1 = incremental_span_dedup(spark, idx, batch1, span_words=W)
-    out2 = incremental_span_dedup(spark, idx, batch2, span_words=W)
-    inc = {r["doc_id"]: (r["n_segs"], r["n_kept"], r["cleaned_text"])
-           for r in out1.union(out2).collect()}
-    full = {r["doc_id"]: (r["n_segs"], r["n_kept"], r["cleaned_text"])
-            for r in span_dedup(batch1.union(batch2), span_words=W).collect()}
-    assert inc == full
-    # sanity on the semantics themselves
-    assert inc[2] == (2, 1, "c1 c2 c3")            # shared prefix removed
-    assert inc[0][2].startswith(shared)            # first occurrence survived
-    # index is append-only: two commits, no removes
-    t = VersionedTable(spark, idx)
-    assert [e["n_remove"] for e in t.history()] == [0, 0]
-
-
-def test_incremental_summary_refresh_cdc_exact_under_updates_deletes(spark, tmp_path):
-    """Signed CDC folding keeps the summary equal to a full groupBy
-    recompute across inserts, updates, and deletes; replays are no-ops;
-    fully-retracted groups disappear."""
-    from bi_gcp_stitch_repl_spark.jobs.pipelines import incremental_summary_refresh_cdc
-    from bi_gcp_stitch_repl_spark.sinks.versioned import VersionedTable
-
-    src_path = str(tmp_path / "src")
-    sum_path = str(tmp_path / "sum")
-    src = VersionedTable(spark, src_path, enable_cdc=True)
-
-    def rows(*r):
-        return spark.createDataFrame(list(r), "k long, grp string, amt double")
-
-    def recompute():
-        from pyspark.sql import functions as F
-        return {
-            (r["grp"]): (float(r["s"]), r["n"])
-            for r in src.read()
-            .groupBy("grp")
-            .agg(
-                F.sum(F.col("amt").cast("decimal(28,10)")).alias("s"),
-                F.count("*").alias("n"),
-            )
-            .collect()
-        }
-
-    def summary():
-        t = VersionedTable(spark, sum_path)
-        return {
-            r["grp"]: (float(r["sum_amt"]), r["n_rows"])
-            for r in t.read().collect()
-        }
-
-    src.append(rows((1, "a", 10.0), (2, "a", 5.0), (3, "b", 7.0)))
-    assert incremental_summary_refresh_cdc(spark, src_path, sum_path, ["grp"], ["amt"]) == 0
-    assert summary() == recompute()
-
-    # update 2 (a: 5 -> 20), insert 4 (c), then delete ALL of b
-    src.merge_upsert(rows((2, "a", 20.0), (4, "c", 1.0)), keys=["k"])
-    src.delete_matching(rows((3, "b", 0.0)), keys=["k"])
-    assert incremental_summary_refresh_cdc(spark, src_path, sum_path, ["grp"], ["amt"]) == 2
-    got = summary()
-    assert got == recompute()
-    assert "b" not in got            # fully-retracted group dropped
-    assert got["a"] == (30.0, 2)     # 10 + updated 20
-
-    # nothing new -> no-op
-    assert incremental_summary_refresh_cdc(spark, src_path, sum_path, ["grp"], ["amt"]) is None
-
-
 def test_prepare_training_data_end_to_end(spark, tmp_path):
     """The full curation stack: span dedup drops shared runs, quality gate
     drops junk, decontamination drops benchmark overlap, survivors carry
@@ -854,29 +797,6 @@ def test_job_manifest_sweep_runs_every_entry(spark, tmp_path):
     deployment's DAG folder). Cron fields are also range-checked."""
     from bi_gcp_stitch_repl_spark.jobs.schedule import JOB_MANIFEST
 
-    def run_bexio_invoice_replication():
-        wh, li = str(tmp_path / "bx_wh"), str(tmp_path / "bx_li")
-        invoices = [make_invoice(i) for i in range(1, 4)]
-        assert pipelines.bexio_invoice_replication(
-            spark, bexio_transport(invoices), wh, li, page_limit=2
-        ) == (3, 6)
-
-    def run_lexoffice_invoice_items():
-        lt, fd = lexoffice_transports(6)
-        n = pipelines.lexoffice_invoice_items(
-            spark, lt, fd, str(tmp_path / "lx"), page_size=4
-        )
-        assert n > 0
-
-    def run_billwerk_contract_refresh():
-        rows = [
-            {"Id": "c1", "CustomerId": "k", "CustomerName": "A",
-             "LifecycleStatus": "Active", "Balance": 1.0},
-        ]
-        assert pipelines.billwerk_contract_refresh(
-            spark, billwerk_keyset_transport(rows), str(tmp_path / "bw")
-        ) == 1
-
     def run_billwerk_incremental_invoices():
         rows = [{"Id": i, "amount": 1.0 * i, "status": "open"} for i in range(1, 8)]
         assert pipelines.billwerk_incremental_invoices(
@@ -969,12 +889,6 @@ def test_job_manifest_sweep_runs_every_entry(spark, tmp_path):
         assert pipelines.sheet_import_snapshot(
             spark, sheets_values_transport(values), str(tmp_path / "sheet"),
             spreadsheet_id="s", range_a1="A",
-        ) == 1
-
-    def run_hubspot_ticket_refresh():
-        assert pipelines.hubspot_ticket_refresh(
-            spark, hubspot_ticket_transport([[_ticket(1, company=5)]]),
-            str(tmp_path / "hs"), api_base="p0",
         ) == 1
 
     def run_incremental_summary_refresh():
@@ -1219,6 +1133,46 @@ def test_multimodal_corpus_ingest_null_payloads_catalog_once(spark, tmp_path):
     assert VersionedTable(spark, cat).read().count() == 1
 
 
+def test_cli_runs_rest_sync_specs(spark, tmp_path):
+    """The four REST syncs that became ``entity_replication`` specs run
+    through the spark-submit CLI from a JSON config: transports (and the
+    lexoffice detail fetch) via the $transport resolver, deployment paths
+    as plain keys, everything else from the baked JobSpec params."""
+    import json
+
+    from bi_gcp_stitch_repl_spark.jobs.__main__ import main
+
+    def factory(name):
+        return {"$transport": f"tests.fixture_transport:make_{name}"}
+
+    dl = str(tmp_path / "lexoffice_dead_letters")
+    runs = {
+        "bexio_invoices": (
+            {"transport": factory("bexio_invoice_transport"),
+             "child_warehouse_path": str(tmp_path / "bexio_line_items")},
+            3,
+        ),
+        "lexoffice_invoice_items": (
+            {"transport": factory("lexoffice_voucher_transport"),
+             "detail_fetch": factory("lexoffice_detail_fetch"),
+             "dead_letter_path": dl},
+            1,
+        ),
+        "billwerk_contracts": ({"transport": factory("billwerk_contract_transport")}, 2),
+        "hubspot_tickets": ({"transport": factory("hubspot_ticket_transport")}, 2),
+    }
+    for job, (config, rows) in runs.items():
+        cfg = tmp_path / f"{job}.json"
+        cfg.write_text(json.dumps({**config, "warehouse_path": str(tmp_path / job)}))
+        assert main([job, "--config", str(cfg)]) == 0
+        assert read_merged(spark, str(tmp_path / job)).count() == rows, job
+    assert read_merged(spark, str(tmp_path / "bexio_line_items")).count() == 4
+    dead = ParquetTable(spark, dl).read().collect()
+    assert [(r["invoice_id"], r["error"]) for r in dead] == [
+        ("v2", "ConnectionError: upstream timeout")
+    ]
+
+
 def test_jobs_cli_skips_doc_keys_and_resolves_parquet(spark, tmp_path):
     """Review-r04: the shipped example config carries a __doc__ metadata
     key (previously passed through as a kwarg -> TypeError at startup),
@@ -1249,48 +1203,13 @@ def test_line_item_merge_removes_upstream_deleted_positions(spark, tmp_path):
     Parent-key merge must drop them in the same atomic commit."""
     wh = str(tmp_path / "invoices")
     li = str(tmp_path / "line_items")
-    pipelines.bexio_invoice_replication(
-        spark, bexio_transport([make_invoice(1, n_positions=3)]), wh, li,
-        page_limit=2,
-    )
+    sync_invoices(spark, [make_invoice(1, n_positions=3)], wh, li)
     assert read_merged(spark, li).count() == 3
     # upstream edit removes a position; the re-fetched invoice has 2
-    pipelines.bexio_invoice_replication(
-        spark, bexio_transport([make_invoice(1, n_positions=2)]), wh, li,
-        page_limit=2,
-    )
+    sync_invoices(spark, [make_invoice(1, n_positions=2)], wh, li)
     items = read_merged(spark, li)
     assert items.count() == 2  # the deleted position is GONE
     assert sorted(r["position_id"] for r in items.collect()) == [10, 11]
-
-
-def test_incremental_span_dedup_replay_after_commit_is_identical(spark, tmp_path):
-    """Review-r04: a replay AFTER a successful index commit previously
-    cleaned the batch against its own hashes — every segment 'seen',
-    whole batch emptied. With txn ids the replay rebuilds the pre-batch
-    snapshot and returns byte-identical output, and the index does not
-    double-append."""
-    from bi_gcp_stitch_repl_spark.sinks.versioned import VersionedTable
-
-    idx = str(tmp_path / "segidx")
-    words = lambda tag, n: " ".join(f"{tag}{i}" for i in range(n))  # noqa: E731
-    b1 = spark.createDataFrame(
-        [(1, words("a", 20)), (2, words("a", 20))], "doc_id long, text string"
-    )
-    out1 = pipelines.incremental_span_dedup(
-        spark, idx, b1, app_id="seg", batch_id=0
-    )
-    first = {r["doc_id"]: (r["n_kept"], r["cleaned_text"]) for r in out1.collect()}
-    assert first[1][0] > 0 and first[2][0] == 0  # doc2 is a dup of doc1
-    n_index = VersionedTable(spark, idx).read().count()
-
-    # caller crashed before persisting out1 → replays the same batch
-    out2 = pipelines.incremental_span_dedup(
-        spark, idx, b1, app_id="seg", batch_id=0
-    )
-    replay = {r["doc_id"]: (r["n_kept"], r["cleaned_text"]) for r in out2.collect()}
-    assert replay == first  # NOT emptied
-    assert VersionedTable(spark, idx).read().count() == n_index  # no dup append
 
 
 def test_incremental_ann_ingest_txn_replay_is_noop(spark, tmp_path):
@@ -1477,9 +1396,7 @@ def test_hubspot_ticket_refresh(spark, tmp_path):
     load, re-run replaces."""
     wh = str(tmp_path / "tickets")
     pages = [[_ticket(1, company=77), _ticket(2)], [_ticket(3, company=88)]]
-    n = pipelines.hubspot_ticket_refresh(
-        spark, hubspot_ticket_transport(pages), wh, api_base="p0"
-    )
+    n = run_job(spark, "hubspot_tickets", hubspot_ticket_transport(pages), wh)
     assert n == 3
     rows = {r["ticket_id"]: r for r in read_merged(spark, wh).collect()}
     assert set(rows) == {"1", "2", "3"}
@@ -1488,9 +1405,8 @@ def test_hubspot_ticket_refresh(spark, tmp_path):
     assert rows["3"]["company_id"] == "88"
     assert rows["1"]["created_at"] == "2024-01-01T00:00:00Z"
     # truncate semantics
-    n2 = pipelines.hubspot_ticket_refresh(
-        spark, hubspot_ticket_transport([[_ticket(9, company=1)]]), wh,
-        api_base="p0",
+    n2 = run_job(
+        spark, "hubspot_tickets", hubspot_ticket_transport([[_ticket(9, company=1)]]), wh
     )
     assert n2 == 1
     assert {r["ticket_id"] for r in read_merged(spark, wh).collect()} == {"9"}
@@ -1826,14 +1742,10 @@ def test_bexio_invoice_replication_evaluates_extract_once(spark, tmp_path, monke
     seen = _watch_extract(monkeypatch)
     wh, li = str(tmp_path / "invoices"), str(tmp_path / "line_items")
     invoices = [make_invoice(i) for i in range(1, 6)]
-    assert pipelines.bexio_invoice_replication(
-        spark, bexio_transport(invoices), wh, li, page_limit=2
-    ) == (5, 10)
+    assert sync_invoices(spark, invoices, wh, li) == (5, 10)
     assert seen["rows"] == 5
     invoices2 = [make_invoice(1, total="222.00")] + [make_invoice(9)]
-    assert pipelines.bexio_invoice_replication(
-        spark, bexio_transport(invoices2), wh, li, page_limit=2
-    ) == (2, 4)
+    assert sync_invoices(spark, invoices2, wh, li) == (2, 4)
     assert seen["rows"] == 5 + 2
     assert len(seen["frames"]) == 2
     assert not any(_runs_python_worker(df) for df in seen["frames"])
@@ -1894,14 +1806,34 @@ def test_entity_replication_append_dedup_sink(spark, tmp_path, factory):
 
 
 def test_entity_replication_unknown_sink_mode_fails_before_extract(spark, tmp_path):
+    """A config the archetype cannot run raises ValueError before any page
+    is fetched: an unknown sink mode, ``carry`` outside upsert mode or
+    with more than one key, and a dead-letter path without a detail
+    fan-out."""
+
     def transport(url, params):
         raise AssertionError("extract must not run")
 
-    with pytest.raises(ValueError, match="unknown sink mode 'merge'"):
-        pipelines.entity_replication(
-            spark, transport, str(tmp_path / "t"),
-            **dict(ORDER_SYNC, sink={"mode": "merge", "keys": ["id"]}),
-        )
+    bad_configs = [
+        ({"sink": {"mode": "merge", "keys": ["id"]}}, "unknown sink mode 'merge'"),
+        (
+            {"sink": {"mode": "truncate", "keys": ["id"], "carry": ["total"]}},
+            "carry needs upsert mode with a single key",
+        ),
+        (
+            {"sink": {"mode": "upsert", "keys": ["id", "total"], "carry": ["total"]}},
+            "carry needs upsert mode with a single key",
+        ),
+        (
+            {"dead_letter_path": str(tmp_path / "dead")},
+            "dead_letter_path needs a detail config",
+        ),
+    ]
+    for bad, match in bad_configs:
+        with pytest.raises(ValueError, match=match):
+            pipelines.entity_replication(
+                spark, transport, str(tmp_path / "t"), **dict(ORDER_SYNC, **bad),
+            )
 
 
 def test_entity_replication_child_failure_raised_after_parent_sink(
@@ -1951,3 +1883,68 @@ def test_entity_replication_resync_job_count(spark, tmp_path):
     assert _jobs_of(spark, "resync", lambda: sync_orders(spark, resync, wh, items)) == (
         (8, 15), 6,
     )
+
+
+def test_rest_syncs_run_on_entity_replication():
+    """Every REST-extract entry of JOB_MANIFEST is an ``entity_replication``
+    spec, save two whose shape the archetype has no stage for:
+
+    - ``billwerk_invoices_incremental`` resumes from a persisted keyset
+      watermark and advances it only after the merge commits — state that
+      outlives the sync;
+    - ``stripe_accounts`` rolls the transactions up per account
+      (grouped conditional sums), where the archetype's projection is
+      row by row."""
+    import inspect
+
+    rest_syncs = {
+        name: spec.pipeline
+        for name, spec in JOB_MANIFEST.items()
+        if "rest." in inspect.getsource(getattr(pipelines, spec.pipeline))
+    }
+    bespoke = {n: p for n, p in rest_syncs.items() if p != "entity_replication"}
+    assert bespoke == {
+        "billwerk_invoices_incremental": "billwerk_incremental_invoices",
+        "stripe_accounts": "stripe_account_rollup",
+    }
+    for name in ("hubspot_tickets", "billwerk_contracts", "bexio_invoices",
+                 "lexoffice_invoice_items"):
+        assert rest_syncs[name] == "entity_replication", name
+
+
+def test_bexio_invoices_resync_job_count(spark, tmp_path):
+    """A changed ``bexio_invoices`` re-sync is eight Spark jobs (twelve for
+    the bespoke pipeline it replaced): per merge (header and line items,
+    run concurrently) the observed snapshot of the batch and its key
+    frame, the broadcast of the delete keys and the write, plus the J1
+    lookup under the header snapshot — one existing row per key, an
+    aggregate and its broadcast."""
+    wh, li = str(tmp_path / "invoices"), str(tmp_path / "line_items")
+    sync_invoices(spark, [make_invoice(i) for i in range(1, 6)], wh, li)
+    resync = [make_invoice(1, total="222.00", n_positions=1), make_invoice(9)]
+    assert _jobs_of(spark, "bexio-resync", lambda: sync_invoices(spark, resync, wh, li)) == (
+        (2, 3), 8,
+    )
+
+
+def test_lexoffice_invoice_items_resync_job_count(spark, tmp_path):
+    """A changed ``lexoffice_invoice_items`` re-sync with a dead-letter
+    path is nine Spark jobs (eleven for the bespoke pipeline it replaced):
+    the fan-out's repartition and eager checkpoint, the merge's snapshot,
+    broadcast and write, and the dead-letter append's read, anti-join and
+    append, which runs beside the merge."""
+    list_t, detail_t = lexoffice_transports(20)
+    wh, dl = str(tmp_path / "items"), str(tmp_path / "dead_letters")
+    sync_lexoffice(spark, list_t, detail_t, wh, dead_letter_path=dl)
+
+    def detail_t2(vid):
+        d = detail_t(vid)
+        if d is not None and vid == "v1":
+            d["lineItems"] = []
+        return d
+
+    n, jobs = _jobs_of(
+        spark, "lexoffice-resync",
+        lambda: sync_lexoffice(spark, list_t, detail_t2, wh, dead_letter_path=dl),
+    )
+    assert (n, jobs) == (18, 9)

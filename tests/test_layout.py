@@ -95,7 +95,8 @@ def test_driver_window_covers_survey_gates():
     twins (r11 verdict #3): their library operators gained driver fast
     paths in the r11 optimization session AFTER the twins rotated out of
     the window, so the driver must re-oracle them now; three changed
-    sink/source canaries replace three more released r11-cohort members.
+    sink/source canaries replace three more released r11-cohort members,
+    and two changed ops canaries replace two more.
     It additionally proves the coverage-closure invariant: the union of the prior
     rounds' driver windows and this window is the ENTIRE catalog."""
     import json
@@ -124,11 +125,11 @@ def test_driver_window_covers_survey_gates():
         "x_embedding_quantize", "x_feature_hash_embed", "x_fingerprint",
         "x_gopher_rules", "x_ivf_topk",
         "x_knn_cosine_topk",
-        "x_minhash_lsh_candidates", "x_mixture_sample",
+        "x_minhash_lsh_candidates",
         "x_multimodal_meta", "x_semantic_decontaminate",
         "x_semdedup", "x_simhash", "x_simhash_pairs",
         "x_sparse_cosine_pairs", "x_token_budget_plan", "x_vocab_encode",
-        "x_weighted_sample", "x_winnowing_fingerprints",
+        "x_winnowing_fingerprints",
         "x_winnowing_pairs",
         # r11 new-query cohort (keeps slots)
         "x_communities_trade", "x_bpe_merges", "x_modularity_trade",
@@ -141,6 +142,9 @@ def test_driver_window_covers_survey_gates():
         # sources/rest.py), seated in place of x_split_shard,
         # x_stratified_sample and x_string_agg
         "k1_merge_upsert", "s4_keyset_increment", "s7_detail_fanout",
+        # changed ops canaries (ops/normalize.py, ops/clean.py), seated in
+        # place of x_mixture_sample and x_weighted_sample
+        "n_nested_battery", "f_string_clean_coerce",
     }
     assert len(required) == 50
     missing = required - set(first50)

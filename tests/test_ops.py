@@ -10,13 +10,10 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from bi_gcp_stitch_repl_spark.ops.clean import (
-    array_head_field,
     euro_date,
     int_key,
-    money,
     null_if_in,
     percent_to_fraction,
-    strip_newlines,
     strip_thousands,
     unix_micros_ts,
     unix_seconds_ts,
@@ -26,9 +23,7 @@ from bi_gcp_stitch_repl_spark.ops.keys import carry_forward_keys
 from bi_gcp_stitch_repl_spark.ops.normalize import (
     explode_with_parent,
     flatten_structs,
-    maps_to_json,
     pad_columns,
-    struct_get,
 )
 from bi_gcp_stitch_repl_spark.sources.sheets import sheet_to_dataframe
 
@@ -91,32 +86,6 @@ def test_pad_columns_adds_typed_nulls_in_order(spark):
     assert out.columns == ["b", "a", "c"]
     row = out.collect()[0]
     assert row["b"] is None and row["a"] == 1 and row["c"] is None
-
-
-def test_struct_get_default_on_missing(spark):
-    df = spark.createDataFrame(
-        [Row(pb=Row(EmailAddress="x@y.z")), Row(pb=None)]
-    )
-    out = df.select(struct_get("pb.EmailAddress", "").alias("email")).collect()
-    assert sorted(r["email"] for r in out) == ["", "x@y.z"]
-
-
-def test_maps_to_json(spark):
-    df = spark.createDataFrame([({"a": "1"},)], "m map<string,string>")
-    assert maps_to_json(df, ["m"]).collect()[0]["m"] == '{"a":"1"}'
-
-
-def test_clean_battery(spark):
-    df = invoice_fixture(spark)
-    out = df.select(
-        strip_newlines("title").alias("t"),
-        money("total").alias("total"),
-        array_head_field("taxs", "percentage").alias("tax_pct"),
-    ).orderBy("total")
-    rows = out.collect()
-    assert rows[-1]["t"] == "line1 line2'q"
-    assert rows[-1]["total"] == 123.45 and rows[0]["total"] is None
-    assert rows[-1]["tax_pct"] == "7.7" and rows[0]["tax_pct"] is None
 
 
 def test_scalar_coercions(spark):
@@ -298,7 +267,6 @@ def test_sheet_headers_sanitized_and_deduplicated(spark):
     """Review-r04: dots parse as struct access and duplicate headers make
     every later select ambiguous — both must be sanitized at the
     source."""
-    from bi_gcp_stitch_repl_spark.ops.clean import money
     from bi_gcp_stitch_repl_spark.sources.sheets import sheet_to_dataframe
 
     df = sheet_to_dataframe(
@@ -306,7 +274,9 @@ def test_sheet_headers_sanitized_and_deduplicated(spark):
         [["Rev. 2024", "Amount", "Amount"], ["1.5", "2", "3"]],
     )
     assert df.columns == ["Rev__2024", "Amount", "Amount_2"]
-    got = df.select(money("Rev__2024").alias("r"), "Amount_2").collect()[0]
+    got = df.select(
+        F.col("Rev__2024").try_cast("double").alias("r"), "Amount_2"
+    ).collect()[0]
     assert got["r"] == 1.5 and got["Amount_2"] == "3"
 
 

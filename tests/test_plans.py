@@ -496,11 +496,6 @@ def test_no_forced_broadcast_on_scaled_sides_in_package():
             "1-row array of the k KMeans centroids (k bounded)",
         # --- jobs/ -----------------------------------------------------
         ("jobs/pipelines.py", "cents"): "IVF centroid set (cells ≈ √N)",
-        ("jobs/pipelines.py", "batch_first.select('h')"):
-            "micro-batch-bounded probe hashes (trigger sizes the batch)",
-        ("jobs/pipelines.py", "batch_first"): "micro-batch-bounded segments",
-        ("jobs/pipelines.py", "hits"):
-            "semi-join of index vs micro-batch probe — batch-bounded",
         # --- functions/pq.py: bounded ANN model objects ----------------
         ("functions/pq.py", "centers"):
             "coarse-center model frame (n_cells ≈ √N rows)",
