@@ -420,28 +420,6 @@ def encode_y4m(
     return b"".join(out)
 
 
-def video_meta(payload: bytes) -> dict:
-    """Stream metadata without decoding pixel data: frame count comes
-    from walking the fixed-size FRAME records (an O(n_frames) seek, zero
-    pixel copies)."""
-    meta, pos = _parse_y4m_header(payload)
-    w, h, chroma = meta["width"], meta["height"], _Y4M_CHROMA[meta["colorspace"]]
-    frame_bytes = w * h
-    if chroma is not None:
-        frame_bytes += 2 * ((w // chroma[0]) * (h // chroma[1]))
-    n = 0
-    while pos < len(payload):
-        nl = payload.find(b"\n", pos)
-        if nl < 0 or payload[pos : pos + 5] != b"FRAME":
-            raise ValueError("bad FRAME marker")
-        pos = nl + 1 + frame_bytes
-        if pos > len(payload):
-            raise ValueError("truncated Y4M frame")
-        n += 1
-    meta["n_frames"] = n
-    return meta
-
-
 def audio_features(payload: bytes, n_features: int) -> list[float]:
     """Real extractor for the ``extract_audio_features`` seam: per-chunk
     RMS energy over ``n_features`` equal time slices of the decoded mono

@@ -297,17 +297,6 @@ def simhash_fingerprints(
     return votes.select(id_col, F.expr(recombine).alias("simhash"))
 
 
-def dedup_keep_first(
-    docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Representative selection: drop any doc appearing as the larger id of
-    a near-duplicate pair (transitive chains collapse to their smallest
-    member over repeated application; single-pass is the standard
-    training-data approximation)."""
-    dups = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return docs.join(dups, id_col, "left_anti")
-
-
 def _word_segments(
     docs: DataFrame, text_col: str, id_col: str, span_words: int
 ) -> DataFrame:

@@ -5,8 +5,7 @@ small (a nation-pair edge aggregate, a vocabulary table) and a
 distributed loop otherwise. This module owns that decision:
 
 - the probe primitives (:func:`probe_rows`, :func:`distinct_probe_rows`,
-  :func:`is_local_plan`, :func:`plan_output_aggregated`) decide the path
-  in at most one job;
+  :func:`is_local_plan`) decide the path in at most one job;
 - :func:`local_df` emits a driver-path result and
   :func:`free_local_checkpoint` releases a superseded checkpoint;
 - :func:`weighted_edges` canonicalizes and probes a weighted edge list
@@ -190,30 +189,6 @@ def is_local_plan(df: DataFrame) -> bool:
     try:
         plan = df._jdf.queryExecution().optimizedPlan()
         return plan.getClass().getName().endswith("LocalRelation")
-    except Exception:  # noqa: BLE001 — conservative fallback
-        return False
-
-
-def plan_output_aggregated(df: DataFrame) -> bool:
-    """True when the frame's optimized plan is an Aggregate (possibly
-    under Project/Filter nodes) — its output cardinality is the GROUP
-    count, which for the graph callers (nation-pair / domain-pair edge
-    aggregates) is bounded far below the upstream fact table, so an
-    eager checkpoint of it is storage-safe at any input scale. A
-    ``limit`` probe over an Aggregate must run the FULL aggregation
-    anyway (no pushdown through the blocking operator), which is exactly
-    why those inputs are checkpointed before probing. Best-effort (py4j
-    introspection): False on any doubt, which routes the caller to the
-    no-checkpoint probe — never a correctness decision."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        for _ in range(8):
-            name = plan.getClass().getSimpleName()
-            if name in ("Project", "Filter"):
-                plan = plan.child()
-                continue
-            return name == "Aggregate"
-        return False
     except Exception:  # noqa: BLE001 — conservative fallback
         return False
 

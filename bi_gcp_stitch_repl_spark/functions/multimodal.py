@@ -425,40 +425,6 @@ def extract_video_frames(
     return src.mapInPandas(run, schema=schema)
 
 
-def pyav_frame_decoder(payload: bytes, every_n: int = 1) -> Iterator:
-    """PyAV adapter for ``extract_video_frames``'s ``decoder=`` seam —
-    the production-container path (MP4/H.264/VP9/...), kept import-lazy
-    so the engine has NO hard PyAV/ffmpeg dependency (reference parity:
-    the engine's own codecs cover Y4M/MJPEG-AVI; anything else is this
-    one function plus ``pip install av`` at deployment).
-
-    Contract match (the stub demuxer test pins the same one):
-    - yields ``(H, W, 3)`` uint8 RGB per frame, in presentation order;
-    - honors the ``every_n`` stride pushdown: skipped frames yield
-      ``None`` after the packet decode advances — no ndarray conversion
-      or pixel copy (PyAV must still entropy-decode inter-frame video,
-      so the saving is the colorspace convert + copy, not the decode;
-      a keyframe-only fast path would change ``n_frames`` semantics);
-    - raises on corrupt/non-video payloads (extract_video_frames maps
-      that to its one ``_decode_ok=false`` row).
-
-    Verified against a real MP4 by
-    ``tests/test_functions.py::test_extract_video_frames_real_pyav_mp4``
-    (importorskip: runs wherever ``av`` is installed, skips here).
-    """
-    import io
-
-    import av
-
-    with av.open(io.BytesIO(payload)) as container:
-        stream = container.streams.video[0]
-        for i, frame in enumerate(container.decode(stream)):
-            if every_n > 1 and i % every_n:
-                yield None
-            else:
-                yield frame.to_ndarray(format="rgb24")
-
-
 def dhash64(payload: bytes) -> int:
     """64-bit difference hash (dHash) of an image payload — the standard
     perceptual fingerprint for IMAGE near-dup dedup (a re-encoded,

@@ -354,7 +354,8 @@ def kmeans_ivf_index(
     centroid derivation. ``n_cells=None`` applies the
     cells-grow-with-corpus rule (``auto_n_cells`` ≈ sqrt(N)) so the
     index geometry scales with the table instead of being pinned at a
-    fixture size (measured trend: tools/ann_scale_trend.py → PERF.md).
+    fixture size (measured recall trend: PERF.md, "Round 6:
+    cells-grow-with-corpus rule").
 
     The fit is a few passes over the data (distributed; the model itself is
     tiny — n_cells × dim floats on the driver); the assignment pass is one

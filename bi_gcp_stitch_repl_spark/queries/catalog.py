@@ -283,6 +283,13 @@ def spread_narrow(df: DataFrame, *key_cols: str) -> DataFrame:
 #:    f_string_clean_coerce (ops/clean.py) — both modules lost helpers no
 #:    query used — take the slots of x_mixture_sample and
 #:    x_weighted_sample, released: each r12-fresh, its library untouched.
+#: 6. Changed-library canaries after the test-only surface was deleted:
+#:    x_image_roundtrip_meta + x_video_frames_roundtrip (functions/codecs.py
+#:    lost ``video_meta``), x_dedup_exact (functions/dedup.py lost
+#:    ``dedup_keep_first``) and s9_sql_scan (sources/warehouse.py lost
+#:    ``load_tables``) take the slots of x_bfs_trade, x_kcore_trade,
+#:    x_hits_trade and x_ppr_trade, released: each was seated for its
+#:    r11 re-oracle, is r12-fresh, and functions/graph.py is untouched.
 #: Names absent from this list keep registration order after it.
 _PRIORITY: list[str] = [
     # §2 spine
@@ -305,13 +312,15 @@ _PRIORITY: list[str] = [
     # r11 new-query cohort (keeps slots)
     "x_communities_trade", "x_bpe_merges", "x_modularity_trade",
     "x_bpe_encode", "x_image_dhash_near_dups", "x_random_walks_trade",
-    # re-oracled graph-family rewrites (7): see header
-    "x_bfs_trade", "x_sssp_trade", "x_kcore_trade", "x_pagerank_trade",
-    "x_hits_trade", "x_ppr_trade", "x_triangle_trade",
+    # re-oracled graph-family rewrites (3 of the 7 left): see header
+    "x_sssp_trade", "x_pagerank_trade", "x_triangle_trade",
     # changed sink/source canaries (see header)
     "k1_merge_upsert", "s4_keyset_increment", "s7_detail_fanout",
     # changed ops canaries (see header)
     "n_nested_battery", "f_string_clean_coerce",
+    # changed-library canaries after the test-only deletions (see header)
+    "x_image_roundtrip_meta", "x_video_frames_roundtrip", "x_dedup_exact",
+    "s9_sql_scan",
 ]
 
 

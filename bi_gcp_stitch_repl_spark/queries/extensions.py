@@ -884,10 +884,11 @@ def x_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-uniform synthetic vectors are the hardest case for coarse
     quantization and recall tracks the probed-mass fraction, NOT the
     absolute cell count (40%→0.81-0.82, 75%→0.94-0.97 at both scales;
-    /tmp-reproducible via tools/ann_scale_trend.py + the fixture sweep).
-    On realistic CLUSTERED corpora the same sqrt(N) rule needs only a
-    constant few probes: measured recall@5 = 1.000 at n_probe=5 (1.1%
-    of cells) on a 200 k-vector clustered corpus (PERF.md trend table).
+    PERF.md, "Round 6: cells-grow-with-corpus rule", probe-fraction
+    table). On realistic CLUSTERED corpora the same sqrt(N) rule needs
+    only a constant few probes: measured recall@5 = 1.000 at n_probe=5
+    (1.1% of cells) on a 200 k-vector clustered corpus (the clustered
+    table in the same PERF.md section).
     A recall regression is a hard hash mismatch, not a silent quality
     drop. The audit cost is 20 × corpus — constant in query count,
     linear in corpus. Per-configuration recall curves are additionally

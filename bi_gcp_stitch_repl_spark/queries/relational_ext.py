@@ -1765,7 +1765,7 @@ def x_communities_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # modularity of the LPA partition (catalog twin of functions.graph.modularity
 # — the quality metric that says whether the communities x_communities_trade
-# found are BETTER than random edge placement; NOTES_r11 backlog item)
+# found are BETTER than random edge placement)
 # ---------------------------------------------------------------------------
 
 MODULARITY_SCALE = 10**6

@@ -43,6 +43,21 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+#: parquet footer key under which Spark stores the row schema it wrote
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(path: str) -> T.StructType | None:
+    """The Spark schema embedded in a parquet footer, or None."""
+    import pyarrow.parquet as pq
+
+    try:
+        raw = (pq.read_metadata(path).metadata or {}).get(_SPARK_SCHEMA_KEY)
+        return T.StructType.fromJson(json.loads(raw)) if raw else None
+    except Exception:  # noqa: BLE001 — unreadable or legacy: infer instead
+        return None
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -126,7 +141,7 @@ class ParquetTable:
         for _ in range(3):
             self._recover()
             try:
-                return self.spark.read.parquet(self.path)
+                return self._reader().parquet(self.path)
             except Exception as e:  # AnalysisException: PATH_NOT_FOUND
                 if "PATH_NOT_FOUND" not in str(e) and not isinstance(
                     e, FileNotFoundError
@@ -135,6 +150,19 @@ class ParquetTable:
                 last_err = e
                 time.sleep(0.05)
         raise last_err
+
+    def _reader(self):
+        """A reader given the Spark schema of the first top-level part file
+        (the file inference would read), so resolving the scan runs no
+        schema-inference job. A partitioned layout (no top-level part
+        files) or a footer without the schema keeps inference."""
+        parts = [
+            f for f in os.listdir(self.path)
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        ]
+        schema = _footer_schema(os.path.join(self.path, min(parts))) if parts else None
+        reader = self.spark.read
+        return reader.schema(schema) if schema is not None else reader
 
     # -- write primitives ----------------------------------------------------
 

@@ -44,24 +44,10 @@ import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from .merge import _null_safe_on
+from .merge import _footer_schema, _null_safe_on
 
 _LOG_DIR = "_log"
-#: parquet footer key under which Spark stores the row schema it wrote
-_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
-
-
-def _footer_schema(path: str) -> T.StructType | None:
-    """The Spark schema embedded in a parquet footer, or None."""
-    import pyarrow.parquet as pq
-
-    try:
-        raw = (pq.read_metadata(path).metadata or {}).get(_SPARK_SCHEMA_KEY)
-        return T.StructType.fromJson(json.loads(raw)) if raw else None
-    except Exception:  # noqa: BLE001 — unreadable or legacy: infer instead
-        return None
 
 
 class CommitConflict(Exception):

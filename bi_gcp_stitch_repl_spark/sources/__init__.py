@@ -1,3 +1,3 @@
-from .warehouse import Warehouse, load_tables
+from .warehouse import Warehouse
 
-__all__ = ["Warehouse", "load_tables"]
+__all__ = ["Warehouse"]

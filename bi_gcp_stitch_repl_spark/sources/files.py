@@ -1,9 +1,9 @@
-"""Raw-file document sources: JSONL and CSV with corrupt-record quarantine.
+"""Raw-file document sources: JSONL with corrupt-record quarantine.
 
 The reference ingests only APIs/warehouse/sheets, but a training-data
 pipeline's largest input class is raw text dumps — JSONL shards (one JSON
-doc per line, the de-facto corpus interchange format) and CSV exports.
-These readers parse with the contract a 100 TB ingest needs:
+doc per line, the de-facto corpus interchange format). The reader parses
+with the contract a 100 TB ingest needs:
 
 - **Schema is REQUIRED, never inferred.** Inference reads the entire input
   once before the real scan (2× I/O at corpus scale) and silently changes
@@ -19,16 +19,16 @@ These readers parse with the contract a 100 TB ingest needs:
   decoded rows when the upstream shard layout is coarse.
 
 Implementation note: we deliberately parse ``spark.read.text`` +
-``from_json``/``from_csv`` rather than the json/csv DataSource readers.
-The raw readers refuse plans that query only the corrupt-record column
+``from_json`` rather than the json DataSource reader.
+The raw reader refuses plans that query only the corrupt-record column
 (Spark's UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN — the
 documented workaround is ``cache()``, which is exactly what a 100 TB
-ingest cannot do), and their corrupt column is reconstructed rather than
+ingest cannot do), and its corrupt column is reconstructed rather than
 the verbatim input. Parsing computed columns over the text source gives
 the same PERMISSIVE semantics, needs no cache, keeps the TRUE raw line
 for the quarantine, and both frames still share one file scan.
 
-Spark reference: ``from_json`` / ``from_csv`` options (``mode``,
+Spark reference: ``from_json`` options (``mode``,
 ``columnNameOfCorruptRecord``) — public Spark SQL function API.
 """
 
@@ -82,65 +82,6 @@ def read_jsonl(
         raw = raw.repartition(repartition_hint)
     parsed = raw.select(
         F.from_json(F.col("value"), full, opts).alias("r"), "value"
-    )
-    return _split(parsed, schema)
-
-
-def _ddl(schema: T.StructType) -> str:
-    return ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
-    )
-
-
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    *,
-    header: bool = True,
-    delimiter: str = ",",
-    repartition_hint: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Read line-based CSV into ``(clean, quarantine)`` frames, same
-    contract as :func:`read_jsonl`. A row quarantines when it fails to
-    parse OR any cell fails its declared type. ``header=True`` drops
-    lines equal to the schema's header row (line-based parsing has no
-    per-file first-line state — the literal match is the distributed-safe
-    form, and also removes headers mid-stream after shard concatenation).
-    Embedded newlines in quoted fields are unsupported by design: they
-    are what makes CSV unsplittable."""
-    full = _with_corrupt(schema)
-    raw = spark.read.text(path).filter(F.length(F.trim("value")) > 0)
-    if header:
-        # compare the NORMALIZED line (quotes stripped, cells trimmed):
-        # exporters commonly quote headers ('"name","city"') or pad them,
-        # and with an all-string schema a missed header parses cleanly
-        # and pollutes the clean frame as a data row
-        hdr = delimiter.join(f.name for f in schema.fields)
-        # collapse padding around the ACTUAL delimiter — hardcoding ','
-        # lets padded headers ('name ; city') through for ';'-delimited
-        # exports (common in DACH-locale CSVs where ',' is the decimal)
-        import re as _re
-
-        sep = _re.escape(delimiter)
-        # the REPLACEMENT side has its own metacharacters ($ = group ref,
-        # \ = escape): a '$'-delimited export previously failed every scan
-        # task with INVALID_REGEXP_REPLACE ('illegal group reference') —
-        # Java's Matcher.quoteReplacement escaping, by hand
-        repl = delimiter.replace("\\", "\\\\").replace("$", "\\$")
-        norm = F.regexp_replace(
-            F.regexp_replace("value", '"', ""), rf"\s*{sep}\s*", repl
-        )
-        raw = raw.filter(F.trim(norm) != hdr)
-    if repartition_hint:
-        raw = raw.repartition(repartition_hint)
-    opts = {
-        "mode": "PERMISSIVE",
-        "columnNameOfCorruptRecord": CORRUPT_COL,
-        "sep": delimiter,
-    }
-    parsed = raw.select(
-        F.from_csv(F.col("value"), _ddl(full), opts).alias("r"), "value"
     )
     return _split(parsed, schema)
 

@@ -24,40 +24,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-#: Every driver-provided table (TESTDATA.md).
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
-def load_tables(
-    spark: SparkSession,
-    sf_dir: str,
-    names: tuple[str, ...] = TESTDATA_TABLES,
-    register_views: bool = False,
-) -> dict[str, DataFrame]:
-    """Read the given parquet tables from ``sf_dir``.
-
-    With ``register_views=True`` each table is also registered as a temp view
-    so ``spark.sql`` text can reference it (the S9 path).
-    """
-    out: dict[str, DataFrame] = {}
-    for name in names:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        if register_views:
-            df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
-
 
 class Warehouse:
     """A directory-of-parquet-tables warehouse with projected reads.

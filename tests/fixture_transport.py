@@ -1,37 +1,7 @@
-"""Executor-side transport factory for the rest DataSource tests (must be
-importable by module path — transports are constructed on executors)."""
+"""Transport factories for the CLI ``$transport`` resolver tests (must be
+importable by module path — the resolver imports ``module:function``)."""
 
 from __future__ import annotations
-
-TOTAL = 1234
-
-
-def make_transport():
-    def transport(url, params):
-        lo, limit = params["offset"], params["limit"]
-        return [
-            {"id": i, "amount": i * 0.5}
-            for i in range(lo, min(lo + limit, TOTAL))
-        ]
-
-    return transport
-
-
-def make_keyset_transport(path):
-    """Keyset-protocol transport over the JSON file at ``path`` — the
-    mutable 'upstream API table' for streaming tests (append rows to the
-    file between micro-batches)."""
-    import json
-
-    def transport(url, params):
-        with open(path) as f:
-            rows = sorted(json.load(f), key=lambda r: r["Id"])
-        start = params.get("from")
-        if start is not None:
-            rows = [r for r in rows if r["Id"] >= start]  # cursor row re-included
-        return rows[: params["take"]]
-
-    return transport
 
 
 def make_billwerk_customer_transport():

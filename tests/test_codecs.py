@@ -295,14 +295,6 @@ def test_y4m_420_luma_exact_chroma_blocky():
             assert d[y, x, 2] == f[(y // 2) * 2, (x // 2) * 2, 2]
 
 
-def test_y4m_video_meta_walks_without_decoding():
-    frames = [np.zeros((10, 12), np.uint8)] * 5
-    meta = codecs.video_meta(codecs.encode_y4m(frames, fps=(24, 1)))
-    assert meta["n_frames"] == 5
-    assert (meta["width"], meta["height"]) == (12, 10)
-    assert meta["colorspace"] == "mono"
-
-
 def test_y4m_rejects_truncated_and_garbage():
     pay = codecs.encode_y4m([np.zeros((4, 4), np.uint8)])
     import pytest as _pytest

@@ -1,4 +1,4 @@
-"""Raw-file ingestion: JSONL/CSV with schema enforcement + quarantine."""
+"""Raw-file ingestion: JSONL with schema enforcement + quarantine."""
 
 from __future__ import annotations
 
@@ -59,17 +59,6 @@ def test_ingest_documents_jsonl_computes_n_chars_and_persists_quarantine(
     assert spark.read.parquet(qdir).count() == 1
 
 
-def test_csv_clean_and_quarantine_split(spark, tmp_path):
-    p = tmp_path / "table.csv"
-    p.write_text("k,v\n1,alpha\n2,beta\nnot-a-number,gamma\n")
-    schema = T.StructType(
-        [T.StructField("k", T.LongType()), T.StructField("v", T.StringType())]
-    )
-    clean, bad = files.read_csv(spark, str(p), schema)
-    assert sorted((r.k, r.v) for r in clean.collect()) == [(1, "alpha"), (2, "beta")]
-    assert [r.raw_line for r in bad.collect()] == ["not-a-number,gamma"]
-
-
 def test_schema_with_reserved_corrupt_column_rejected(spark):
     import pytest
 
@@ -93,41 +82,3 @@ def test_jsonl_gzip_shard_reads_transparently(spark, tmp_path):
         )
     clean, bad = files.read_jsonl(spark, str(p), files.DOCUMENT_SCHEMA)
     assert clean.count() == 5 and bad.count() == 0
-
-
-def test_csv_padded_header_filtered_for_custom_delimiter(spark, tmp_path):
-    """ADVICE r05: the header-normalization collapse must be built from the
-    ACTUAL delimiter — with ';' (DACH-locale exports) a padded header like
-    'name ; city' slipped past the comma-hardcoded regex and polluted the
-    clean frame as a data row."""
-    p = tmp_path / "t.csv"
-    p.write_text('name ; city\nada ; berlin\n"name" ; "city"\n')
-    schema = T.StructType(
-        [T.StructField("name", T.StringType()), T.StructField("city", T.StringType())]
-    )
-    clean, bad = files.read_csv(spark, str(p), schema, delimiter=";")
-    rows = [(r.name.strip(), r.city.strip()) for r in clean.collect()]
-    assert rows == [("ada", "berlin")]
-    assert bad.count() == 0
-
-
-def test_read_csv_dollar_delimiter_header_filter(spark, tmp_path):
-    """'$' in the delimiter reaches regexp_replace's REPLACEMENT side,
-    where it is a group-reference metacharacter — previously every scan
-    task failed with INVALID_REGEXP_REPLACE."""
-    from bi_gcp_stitch_repl_spark.sources.files import read_csv
-
-    p = tmp_path / "d.csv"
-    p.write_text("name $ city\na$b\nname$city\n")
-    from pyspark.sql import types as T
-
-    clean, quarantine = read_csv(
-        spark,
-        str(p),
-        schema=T.StructType.fromDDL("name string, city string"),
-        delimiter="$",
-        header=True,
-    )
-    rows = [(r["name"], r["city"]) for r in clean.collect()]
-    assert rows == [("a", "b")]  # padded header AND repeat both filtered
-    assert quarantine.count() == 0

@@ -96,7 +96,8 @@ def test_driver_window_covers_survey_gates():
     paths in the r11 optimization session AFTER the twins rotated out of
     the window, so the driver must re-oracle them now; three changed
     sink/source canaries replace three more released r11-cohort members,
-    and two changed ops canaries replace two more.
+    and two changed ops canaries replace two more; four changed-library
+    canaries replace four graph twins that r12 re-oracled.
     It additionally proves the coverage-closure invariant: the union of the prior
     rounds' driver windows and this window is the ENTIRE catalog."""
     import json
@@ -134,10 +135,10 @@ def test_driver_window_covers_survey_gates():
         # r11 new-query cohort (keeps slots)
         "x_communities_trade", "x_bpe_merges", "x_modularity_trade",
         "x_bpe_encode", "x_image_dhash_near_dups", "x_random_walks_trade",
-        # the seven re-oracled graph-family twins (r11 verdict #3)
-        "x_bfs_trade", "x_sssp_trade", "x_kcore_trade",
-        "x_pagerank_trade", "x_hits_trade", "x_ppr_trade",
-        "x_triangle_trade",
+        # three of the seven re-oracled graph-family twins (r11 verdict
+        # #3); x_bfs_trade, x_kcore_trade, x_hits_trade and x_ppr_trade
+        # were released once r12 re-oracled them
+        "x_sssp_trade", "x_pagerank_trade", "x_triangle_trade",
         # changed sink/source canaries (sinks/versioned.py,
         # sources/rest.py), seated in place of x_split_shard,
         # x_stratified_sample and x_string_agg
@@ -145,6 +146,11 @@ def test_driver_window_covers_survey_gates():
         # changed ops canaries (ops/normalize.py, ops/clean.py), seated in
         # place of x_mixture_sample and x_weighted_sample
         "n_nested_battery", "f_string_clean_coerce",
+        # changed-library canaries after the test-only deletions
+        # (functions/codecs.py, functions/dedup.py, sources/warehouse.py),
+        # seated in place of the four released graph twins
+        "x_image_roundtrip_meta", "x_video_frames_roundtrip",
+        "x_dedup_exact", "s9_sql_scan",
     }
     assert len(required) == 50
     missing = required - set(first50)
@@ -240,3 +246,163 @@ def test_changed_queries_hold_window_slots():
         if any(n not in all_names for n in names)
     }
     assert not unknown, f"LIB_CANARIES names not in the catalog: {unknown}"
+
+
+#: Package defs that no catalog query, pipeline, manifest entry, example or
+#: benchmark reaches, kept on purpose — ``module::name`` → reason.
+_API = "library API whose catalog twin spells the operator inline (COVERAGE.md)"
+_STREAM = "Structured Streaming extension started from a user's driver (SURVEY §2.10)"
+_STUB = "injectable stub for hermetic multimodal plumbing tests"
+KEPT_UNREACHED: dict[str, str] = {
+    "ops/history.py::latest_per_key": _API + "; w_latest_per_key",
+    "ops/normalize.py::pad_columns": "P8 schema padding (COVERAGE.md)",
+    "ops/skew.py::salted_join":
+        "the skew remedy beside AQE skew-join (COVERAGE.md)",
+    "sources/http_transport.py::BearerTokenAuth":
+        "static bearer auth for the non-billwerk APIs (COVERAGE S12)",
+    "sources/warehouse.py::Warehouse":
+        "S8/S9 warehouse reads; s9_sql_scan is the catalog twin",
+    "sources/files.py::ingest_documents_jsonl":
+        "batch corpus ingest; streaming.ingest is its exactly-once twin",
+    "functions/dedup.py::exact_dedup": _API + "; x_dedup_exact",
+    "functions/dedup.py::minhash_lsh_pairs":
+        "the reference minhash_lsh_pairs_incremental is tested against",
+    "functions/dedup.py::jaccard_pairs": _API + "; x_jaccard_ngram_pairs",
+    "functions/dedup.py::simhash_fingerprints": _API + "; x_simhash (32-bit)",
+    "functions/dedup.py::winnowing_fingerprints":
+        _API + "; x_winnowing_fingerprints",
+    "functions/codecs.py::decode_y4m":
+        "the decoder the Y4M round-trip tests check encode_y4m with",
+    "functions/text.py::shingles":
+        "exported by functions/__init__ and called by nothing; goes with the"
+        " next text.py change, whose canary x_token_count needs a window slot",
+    "functions/text.py::lang_scores": _API + "; x_lang_id",
+    "functions/multimodal.py::_stub_image_decoder": _STUB,
+    "functions/multimodal.py::_stub_image_resizer": _STUB,
+    "functions/multimodal.py::_stub_audio_features": _STUB,
+    "functions/multimodal.py::resize_images":
+        "image resample stage of the multimodal surface (COVERAGE.md)",
+    "functions/graph.py::pagerank":
+        "float PageRank; pagerank_fixedpoint is the hash-pinnable twin",
+    "functions/graph.py::walk_skipgrams":
+        "DuckDB-pinned skip-gram step; catalog registration pending",
+    "functions/curation.py::pack_first_fit":
+        "hard-budget variant of pack_sequences (COVERAGE.md)",
+    "functions/similarity.py::embedding_near_dup":
+        _API + "; x_dedup_embedding_pairs",
+    "functions/similarity.py::lsh_bucket_topk": _API + "; x_lsh_cosine_buckets",
+    **{
+        f"streaming/jobs.py::{name}": _STREAM
+        for name in (
+            "events_stream", "tumbling_counts", "session_counts",
+            "running_user_totals", "user_ledger_tws",
+            "incremental_merge_stream", "versioned_append_stream",
+            "dedup_stream", "click_attribution_stream",
+            "scd2_dimension_stream", "near_dedup_stream",
+            "web_corpus_stream",
+        )
+    },
+}
+
+
+def test_package_defs_reached_outside_tests():
+    """Every top-level def in the package is reachable from the package's
+    entry points: the catalog (``@register``), module-level code, or a
+    reference from ``examples/`` (``*.py`` and the ``module:function``
+    strings of ``*.json`` configs), ``perfbench/``, ``bench.py`` or
+    ``__spark_entry__.py`` — directly or through the body of a def that
+    is itself reachable. ``tests/`` and ``tools/`` do not count, so code
+    that only a test calls fails here unless ``KEPT_UNREACHED`` lists it
+    with its reason.
+
+    AST only, no Spark session. A reference is a name, an attribute, an
+    import outside ``__init__.py``, a string equal to a def's name (the
+    ``JobSpec.pipeline`` names ``jobs.__main__`` resolves with
+    ``getattr``) or a ``module:name`` string. ``__all__`` lists,
+    ``__init__`` re-exports and a def's references to itself are not."""
+    import ast
+    import re
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(repo, "bi_gcp_stitch_repl_spark")
+    module_ref = re.compile(r"\b[\w.]+:(\w+)\b")
+    sources = glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)
+    for d in ("examples", "perfbench"):
+        sources += glob.glob(os.path.join(repo, d, "**", "*.py"), recursive=True)
+    sources += [os.path.join(repo, f) for f in ("bench.py", "__spark_entry__.py")]
+
+    by_name: dict[str, set[str]] = {}  # def name -> "module::name" keys
+    uses: dict[str, set[str]] = {}  # def key -> names its body references
+    roots: set[str] = set()  # names referenced outside every package def
+    registered: set[str] = set()
+    for path in sources:
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        spans = []
+        if path.startswith(pkg + os.sep):
+            mod = os.path.relpath(path, pkg).replace(os.sep, "/")
+            for node in tree.body:
+                if not isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                    continue
+                key = f"{mod}::{node.name}"
+                lo = min([node.lineno] + [d.lineno for d in node.decorator_list])
+                spans.append((lo, node.end_lineno, key, node.name))
+                by_name.setdefault(node.name, set()).add(key)
+                uses[key] = set()
+                if any(
+                    isinstance(d, ast.Call) and getattr(d.func, "id", "") == "register"
+                    for d in node.decorator_list
+                ):
+                    registered.add(key)
+        exports = {
+            id(n)
+            for stmt in tree.body
+            if isinstance(stmt, ast.Assign)
+            and any(getattr(t, "id", "") == "__all__" for t in stmt.targets)
+            for n in ast.walk(stmt)
+        }
+        is_init = os.path.basename(path) == "__init__.py"
+        for node in ast.walk(tree):
+            if id(node) in exports:
+                continue
+            if isinstance(node, ast.Name):
+                names = [node.id]
+            elif isinstance(node, ast.Attribute):
+                names = [node.attr]
+            elif isinstance(node, ast.ImportFrom) and not is_init:
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                names = [node.value, *module_ref.findall(node.value)]
+            else:
+                continue
+            owner = next(
+                (s for s in spans if s[0] <= node.lineno <= s[1]), None
+            )
+            if owner is None:
+                roots.update(names)
+            else:
+                uses[owner[2]].update(n for n in names if n != owner[3])
+    for path in glob.glob(os.path.join(repo, "examples", "*.json")):
+        with open(path) as f:
+            roots.update(module_ref.findall(f.read()))
+
+    def reach(seeds: set[str]) -> set[str]:
+        seen, todo = set(), list(seeds)
+        while todo:
+            key = todo.pop()
+            if key not in seen:
+                seen.add(key)
+                todo += [k for n in uses[key] for k in by_name.get(n, ())]
+        return seen
+
+    base = registered | {k for n in roots for k in by_name.get(n, ())}
+    checked = {k for k in uses if not k.split("::")[1].startswith("__")}
+    flagged = sorted(checked - reach(base | (set(KEPT_UNREACHED) & set(uses))))
+    assert not flagged, (
+        "package defs reached only from tests/ or tools/ — wire them in, "
+        f"delete them, or list them in KEPT_UNREACHED with a reason: {flagged}"
+    )
+    # the exception list must not rot: every entry is a def that exists
+    # and would be unreached without its entry
+    stale = sorted(set(KEPT_UNREACHED) - (checked - reach(base)))
+    assert not stale, f"KEPT_UNREACHED entries that are gone or now reached: {stale}"

@@ -4,19 +4,13 @@ absent optionals, property-bag maps)."""
 
 from __future__ import annotations
 
-import datetime
-
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from bi_gcp_stitch_repl_spark.ops.clean import (
-    euro_date,
-    int_key,
     null_if_in,
     percent_to_fraction,
     strip_thousands,
-    unix_micros_ts,
-    unix_seconds_ts,
 )
 from bi_gcp_stitch_repl_spark.ops.history import latest_per_key
 from bi_gcp_stitch_repl_spark.ops.keys import carry_forward_keys
@@ -90,25 +84,17 @@ def test_pad_columns_adds_typed_nulls_in_order(spark):
 
 def test_scalar_coercions(spark):
     df = spark.createDataFrame(
-        [("12.5%", "1,234.5", "05.03.2024", "n.a.", 1704451200000000, None)],
-        "pct string, thou string, dmy string, sentinel string, micros long, missing double",
+        [("12.5%", "1,234.5", "n.a.")],
+        "pct string, thou string, sentinel string",
     )
     row = df.select(
         percent_to_fraction("pct").alias("frac"),
         strip_thousands("thou").alias("thou"),
-        euro_date("dmy").alias("d"),
         null_if_in("sentinel", ["n.a.", ""]).alias("s"),
-        unix_micros_ts("micros").alias("ts"),
-        unix_seconds_ts(F.expr("micros div 1000000")).alias("ts_s"),
-        int_key("missing").alias("k"),
     ).collect()[0]
     assert row["frac"] == 0.125
     assert row["thou"] == "1234.5"
-    assert row["d"] == datetime.date(2024, 3, 5)
     assert row["s"] is None
-    assert row["ts"].year == 2024
-    assert row["ts_s"] == row["ts"]  # F10 seconds path agrees with F9 micros
-    assert row["k"] == 0
 
 
 def test_carry_forward_keys_preserves_existing_mints_new(spark):
@@ -228,21 +214,12 @@ def test_coercions_yield_null_not_ansi_errors(spark):
     from bi_gcp_stitch_repl_spark.ops import clean
 
     df = spark.createDataFrame(
-        [("", "", "", ""), ("n.a.", "x", "garbage", "abc"),
-         ("01.02.2024", "1700000000", "1700000000000000", "28.0")],
-        "d string, secs string, micros string, k string",
+        [("",), ("n.a.",), ("x%",), ("7%",)], "pct string"
     )
-    rows = df.select(
-        clean.euro_date("d").alias("d"),
-        clean.unix_seconds_ts("secs").alias("s"),
-        clean.unix_micros_ts("micros").alias("m"),
-        clean.int_key("k").alias("k"),
-    ).collect()
-    assert rows[0]["d"] is None and rows[0]["s"] is None and rows[0]["m"] is None
-    assert rows[0]["k"] == 0 and rows[1]["k"] == 0  # garbage keys coerce to 0
-    assert str(rows[2]["d"]) == "2024-02-01"
-    assert rows[2]["s"] is not None and rows[2]["m"] is not None
-    assert rows[2]["k"] == 28  # pandas float-formatted id truncates
+    got = [r["f"] for r in df.select(
+        clean.percent_to_fraction("pct").alias("f")
+    ).collect()]
+    assert got == [None, None, None, 0.07]
 
 
 def test_explode_with_parent_rejects_alias_collision(spark):

@@ -496,20 +496,6 @@ def test_no_forced_broadcast_on_scaled_sides_in_package():
             "1-row array of the k KMeans centroids (k bounded)",
         # --- jobs/ -----------------------------------------------------
         ("jobs/pipelines.py", "cents"): "IVF centroid set (cells ≈ √N)",
-        # --- functions/pq.py: bounded ANN model objects ----------------
-        ("functions/pq.py", "centers"):
-            "coarse-center model frame (n_cells ≈ √N rows)",
-        ("functions/pq.py",
-         "_centroid_array(centers.select('cell', 'cvec'), 'cell', 'cvec')"):
-            "1-row array of the coarse-center model frame (n_cells ≈ √N)",
-        ("functions/pq.py", "probes"):
-            "per-(query, cell) ADC tables — |queries|·n_probe rows,"
-            " IVFPQ_QUERY_LIMIT-guarded",
-        ("functions/pq.py", "qf"):
-            "query-vector frame — |queries| rows, IVFPQ_QUERY_LIMIT-guarded",
-        ("functions/pq.py", "cand"):
-            "refine candidate list — ≤ |queries|·k_top·refine_factor rows,"
-            " rebuilt literal (see dedup-bug note in function body)",
         # --- x_random_walks_trade name joins ---------------------------
         ("queries/relational_ext.py", "ns"): "25-row nation dim",
         ("queries/relational_ext.py", "na"): "25-row nation dim",

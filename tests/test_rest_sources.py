@@ -227,29 +227,6 @@ def test_fanout_fetch_retries_flaky_keys(spark):
     assert sorted(r["id"] for r in out if r["_fetch_ok"]) == [1, 2]
 
 
-# -- Python DataSource (partition-per-page, executor-side fetch) ---------------
-
-
-def test_rest_datasource_partition_per_page(spark):
-    from bi_gcp_stitch_repl_spark.sources.rest_datasource import RestDataSource
-
-    spark.dataSource.register(RestDataSource)
-    df = (
-        spark.read.format("rest")
-        .schema("id long, amount double")
-        .option("url", "https://api.example/items")
-        .option("transport", "tests.fixture_transport:make_transport")
-        .option("total_rows", "1234")
-        .option("page_size", "100")
-        .load()
-    )
-    assert df.rdd.getNumPartitions() == 13  # one partition per page
-    rows = df.collect()
-    assert len(rows) == 1234
-    assert {r["id"] for r in rows} == set(range(1234))
-    assert all(r["amount"] == r["id"] * 0.5 for r in rows[:50])
-
-
 def test_paginate_page_flag_missing_flag_raises_and_empty_page_stops():
     """Review-r04: a payload MISSING the last-flag (API drift) must raise
     loudly — defaulting to 'last' silently truncated multi-page extracts

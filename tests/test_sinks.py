@@ -482,3 +482,37 @@ def test_compact_default_packs_small_files(spark, tmp_path):
     assert t.compact() == 1000
     after = len(glob.glob(str(tmp_path / "t" / "*.parquet")))
     assert after < before  # packed, rows preserved
+
+
+def test_read_resolves_schema_from_footer_without_a_job(spark, tmp_path):
+    """``ParquetTable.read`` takes the schema Spark embedded in the first
+    part file's footer, so resolving the scan runs no schema-inference
+    job and yields the inferred schema. A hive-partitioned layout and a
+    footer without Spark's schema (a pyarrow-written file) keep
+    inference."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = ParquetTable(spark, str(tmp_path / "t"))
+    t.overwrite(spark.createDataFrame(
+        [(1, "a", {"x": 2.5})], "k long, v string, s struct<x: double>"
+    ))
+    inferred = spark.read.parquet(t.path).schema
+    sc = spark.sparkContext
+    sc.setJobGroup("parquet-table-read", "parquet-table-read")
+    try:
+        df = t.read()
+    finally:
+        sc.setJobGroup(None, None)
+    assert not sc.statusTracker().getJobIdsForGroup("parquet-table-read")
+    assert df.schema == inferred
+    assert [tuple(r) for r in df.collect()] == [(1, "a", (2.5,))]
+
+    part = ParquetTable(spark, str(tmp_path / "p"), partition_by=["d"])
+    part.overwrite(spark.createDataFrame([(1, "2024-01-01")], "k long, d string"))
+    assert part.read().columns == ["k", "d"]
+
+    foreign = tmp_path / "f"
+    foreign.mkdir()
+    pq.write_table(pa.table({"k": pa.array([7], pa.int64())}), str(foreign / "x.parquet"))
+    assert [r.k for r in ParquetTable(spark, str(foreign)).read().collect()] == [7]

@@ -1,73 +1,10 @@
-"""Misra-Gries frequent items: the mergeable-summary guarantees hold on
-every partitioning — estimate never exceeds truth, deficit bounded by
-n/(k+1), and every heavy hitter above the threshold survives the merge."""
+"""Graph operators (functions/graph.py): PageRank, triangles, k-core,
+BFS/SSSP, HITS, label propagation, modularity, random walks and the
+driver-vs-distributed dispatch pins."""
 
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
-from hypothesis import strategies as st
-
-from bi_gcp_stitch_repl_spark.functions.sketch import (
-    mg_frequent_items,
-    mg_partial_sketch,
-)
-
-# skewed streams: a few hot values over a long tail
-_stream = st.lists(
-    st.one_of(st.just(0), st.just(1), st.integers(0, 200)),
-    min_size=1,
-    max_size=400,
-)
-
-
-def test_partial_sketch_guarantee_plain_python():
-    stream = [1] * 50 + [2] * 30 + list(range(100, 140))
-    k = 8
-    sk = mg_partial_sketch(stream, k)
-    n = len(stream)
-    from collections import Counter
-
-    true = Counter(stream)
-    for item, est in sk.items():
-        assert est <= true[item]
-        assert true[item] - est <= n / (k + 1)
-    # every item above the error bound must be present
-    for item, cnt in true.items():
-        if cnt > n / (k + 1):
-            assert item in sk
-
-
-@settings(
-    max_examples=10,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(stream=_stream, n_parts=st.integers(1, 6), k=st.integers(2, 16))
-def test_distributed_merge_preserves_guarantees(spark, stream, n_parts, k):
-    from collections import Counter
-
-    df = spark.createDataFrame([(v,) for v in stream], "v long").repartition(
-        n_parts
-    )
-    got = {r.item: r.est for r in mg_frequent_items(df, "v", k=k).collect()}
-    true = Counter(stream)
-    n = len(stream)
-    bound = n / (k + 1)
-    for item, est in got.items():
-        assert est <= true[item], (item, est, true[item])
-        assert true[item] - est <= bound, (item, est, true[item], bound)
-    for item, cnt in true.items():
-        if cnt > bound:
-            assert item in got, (item, cnt, bound)
-
-
-def test_string_items_and_null_ignored(spark):
-    rows = [("a",)] * 20 + [("b",)] * 5 + [(None,)] * 3
-    df = spark.createDataFrame(rows, "v string").repartition(2)
-    got = {r.item: r.est for r in mg_frequent_items(df, "v", k=4).collect()}
-    assert got.get("a", 0) >= 20 - 28 / 5
-    assert None not in got
 
 
 # --- pagerank ---------------------------------------------------------------

@@ -278,53 +278,6 @@ def test_click_attribution_stream_matches_batch(spark, tmp_path):
     assert got == expect and len(got) > 0
 
 
-def test_rest_stream_source_resumes_from_checkpoint(spark, tmp_path):
-    """The keyset REST stream source: run 1 drains the upstream table, run 2
-    (same checkpoint) picks up ONLY rows appended in between — the S4
-    watermark contract with the cursor held by the engine's checkpoint."""
-    import json
-
-    from bi_gcp_stitch_repl_spark.sources.rest_datasource import RestDataSource
-
-    upstream = tmp_path / "api_table.json"
-    rows1 = [{"Id": i, "amount": float(i)} for i in range(1, 8)]
-    upstream.write_text(json.dumps(rows1))
-
-    spark.dataSource.register(RestDataSource)
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    def run_once():
-        (
-            spark.readStream.format("rest")
-            .schema("Id long, amount double")
-            .option("url", "https://api.example/invoices")
-            .option("transport", "tests.fixture_transport:make_keyset_transport")
-            .option("transport_arg", str(upstream))
-            .option("page_size", "3")
-            .load()
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination(120)
-        )
-
-    run_once()
-    got1 = {r["Id"] for r in spark.read.parquet(out).collect()}
-    assert got1 == set(range(1, 8))
-
-    # upstream grows; the next AvailableNow run must emit only the delta
-    upstream.write_text(
-        json.dumps(rows1 + [{"Id": i, "amount": float(i)} for i in range(8, 12)])
-    )
-    run_once()
-    df = spark.read.parquet(out)
-    assert df.count() == 11  # no re-emission of run-1 rows
-    assert {r["Id"] for r in df.collect()} == set(range(1, 12))
-
-
 def test_near_dedup_stream_probes_and_commits(spark, tmp_path):
     """Streaming near-dup: two JSONL micro-batch files land; the stream
     probes + commits per batch, pair detection spans batches (doc 11 in

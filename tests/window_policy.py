@@ -59,7 +59,6 @@ LIB_CANARIES: dict[str, list[str]] = {
     ],
     "bi_gcp_stitch_repl_spark/functions/jpeg.py": ["x_mjpeg_avi_roundtrip"],
     "bi_gcp_stitch_repl_spark/functions/multimodal.py": ["x_multimodal_meta"],
-    "bi_gcp_stitch_repl_spark/functions/sketch.py": ["x_approx_distinct"],
     "bi_gcp_stitch_repl_spark/ops/asof.py": ["x_asof_join"],
     "bi_gcp_stitch_repl_spark/ops/rangejoin.py": ["x_range_join_density"],
     "bi_gcp_stitch_repl_spark/ops/history.py": ["flagship_union_history"],
