@@ -9,7 +9,7 @@ from .dedup import (
 )
 from .graph import connected_components
 from .similarity import brute_force_topk, lsh_bucket_topk
-from .text import fingerprint, shingles, token_stats
+from .text import fingerprint, token_stats
 
 __all__ = [
     "brute_force_topk",
@@ -25,7 +25,6 @@ __all__ = [
     "mixture_sample",
     "pack_first_fit",
     "pack_sequences",
-    "shingles",
     "simhash_fingerprints",
     "token_stats",
 ]

@@ -104,7 +104,6 @@ def bpe_train(
     n_merges: int,
     word_col: str = "word",
     freq_col: str = "freq",
-    driver_threshold: int = 100_000,
 ) -> DataFrame:
     """Learn ``n_merges`` BPE merge rules from a ``(word, freq)`` table:
     ``(merge_rank, a, b, merged, cnt)`` in learned order, where round
@@ -117,7 +116,7 @@ def bpe_train(
     wanting one append it to the words first).
 
     **Adaptive physical strategy** (the pagerank_fixedpoint
-    discipline): a vocabulary at or below ``driver_threshold`` rows
+    discipline): a vocabulary at or below ``dispatch.DRIVER_ROWS`` rows
     runs the classic in-memory Sennrich loop — bit-identical to the
     distributed loop (property-pinned); above it, each round is one
     zip-explode + map-side-combinable sum over the checkpointed
@@ -126,7 +125,7 @@ def bpe_train(
     released."""
     if n_merges < 0:
         raise ValueError(f"n_merges must be >= 0 (got {n_merges})")
-    from .dispatch import free_local_checkpoint, local_df, probe_rows
+    from .dispatch import driver_path, free_local_checkpoint
 
     wf = (
         words.select(
@@ -136,29 +135,31 @@ def bpe_train(
         .filter(F.col("word").isNotNull() & (F.col("word") != ""))
         .groupBy("word")
         .agg(F.sum("freq").alias("freq"))
-        # ONE materialization of the vocabulary aggregate: the freq
-        # guard, the dispatch probe/driver collect AND the distributed
-        # chars-split checkpoint all read it — un-pinned, the guard
-        # first() and the driver collect each re-ran the corpus
-        # tokenize upstream (job dump: 0.43 s + 0.39 s, two full scans
-        # per x_bpe_merges build)
-        .localCheckpoint(eager=True)
     )
     spark = words.sparkSession
     out_schema = (
         "merge_rank int, a string, b string, merged string, cnt long"
     )
-    rows = probe_rows(wf, driver_threshold) if driver_threshold > 0 else None
-    if rows is not None:
+
+    def kernel(rows):
+        if any(r.freq is None for r in rows):
+            # an all-NULL word: the engine's NULL-skipping SUMs define
+            # it, so it takes the distributed loop
+            return None
         mn = min((r.freq for r in rows), default=None)
         if mn is not None and mn <= 0:
             raise ValueError(f"word frequencies must be positive (min={mn})")
-        rules = _bpe_driver_rows(rows, n_merges)
-        free_local_checkpoint(wf)
-        # VALUES local relation (the dispatch.local_df discipline):
-        # a plain createDataFrame parallelizes ~8 rule rows into 32
-        # near-empty Python slices at every downstream execution
-        return local_df(spark, rules, out_schema)
+        return _bpe_driver_rows(rows, n_merges)
+
+    # ONE materialization of the vocabulary aggregate (driver_path's
+    # pin): the freq guard, the dispatch probe/driver collect AND the
+    # distributed chars-split checkpoint all read it — un-pinned, the
+    # guard first() and the driver collect each re-ran the corpus
+    # tokenize upstream (job dump: 0.43 s + 0.39 s, two full scans per
+    # x_bpe_merges build)
+    out, wf = driver_path(wf, kernel, out_schema)
+    if out is not None:
+        return out
     fb = wf.agg(F.min("freq").alias("mn")).first()
     if fb.mn is not None and fb.mn <= 0:
         raise ValueError(f"word frequencies must be positive (min={fb.mn})")

@@ -2,7 +2,10 @@
 
 Many operators run a Python kernel on the driver when their input is
 small (a nation-pair edge aggregate, a vocabulary table) and a
-distributed loop otherwise. This module owns that decision:
+distributed loop otherwise. This module owns that decision, with one
+size bound, :data:`DRIVER_ROWS`, and one helper, :func:`driver_path`,
+that runs the whole chain — pin, probe, kernel, emit, release — or
+hands the pinned input back for the distributed spelling:
 
 - the probe primitives (:func:`probe_rows`, :func:`distinct_probe_rows`,
   :func:`is_local_plan`) decide the path in at most one job;
@@ -31,13 +34,12 @@ from pyspark.sql.types import StructType
 #: 5k, 0.383 vs 0.235 at 20k)
 _VALUES_MAX_ROWS = 4096
 
-#: broadcast-hint gate for driver-path results: ~100k short rows is a
-#: few MB framed — comfortably inside the executor build-side budget —
-#: and it equals the graph family's default dispatch bound, so every
-#: default-threshold driver-path result is hinted. Fixed on purpose:
-#: a caller-raised driver_threshold proves driver fit, not executor
-#: hash-relation fit (see local_df's docstring).
-_BROADCAST_HINT_MAX_ROWS = 100_000
+#: the driver-path size bound: an input of at most this many rows runs
+#: its operator's Python kernel on the driver, and a driver-path result
+#: of at most this many rows is broadcast-hinted (~100k short rows is a
+#: few MB framed — comfortably inside the executor build-side budget).
+#: Read at call time; 0 sends every operator down its distributed path.
+DRIVER_ROWS = 100_000
 
 #: column types the VALUES literal renderer covers (simpleString -> SQL);
 #: anything else (arrays, structs, timestamps) takes the RDD path
@@ -99,17 +101,14 @@ def local_df(spark, rows, schema):
     4.7 s for 25 rows.)
 
     The broadcast hint is gated on the ACTUAL row count in hand (not an
-    estimate): an RDD-backed frame has no stats, so the planner assumes
-    it is huge — a consumer joining a 25-row driver-path result to a
-    dimension table got a two-Exchange sort-merge join
-    (x_triangle_trade's measured plan). The gate is the fixed
-    :data:`_BROADCAST_HINT_MAX_ROWS` (the graph family's default probe
-    bound), NOT the caller's threshold: a caller that raised its
-    dispatch bound has proven its rows fit the DRIVER, which says
-    nothing about every executor also holding the built hash relation —
-    beyond the fixed bound results stay unhinted (walk corpora fan out
-    past it routinely). The hint stays on the VALUES path too — same
-    boundedness argument, zero-cost exchange."""
+    estimate) against :data:`DRIVER_ROWS`: an RDD-backed frame has no
+    stats, so the planner assumes it is huge — a consumer joining a
+    25-row driver-path result to a dimension table got a two-Exchange
+    sort-merge join (x_triangle_trade's measured plan). A result can
+    outgrow the input it was computed from (walk corpora fan out past
+    the bound routinely); beyond the bound it stays unhinted. The hint
+    stays on the VALUES path too — same boundedness argument, zero-cost
+    exchange."""
     st = (
         StructType.fromDDL(schema) if isinstance(schema, str) else schema
     )
@@ -135,27 +134,32 @@ def local_df(spark, rows, schema):
         df = spark.createDataFrame(
             spark.sparkContext.parallelize(rows, 1), st
         )
-    return F.broadcast(df) if len(rows) <= _BROADCAST_HINT_MAX_ROWS else df
+    return F.broadcast(df) if len(rows) <= DRIVER_ROWS else df
 
 
-def probe_rows(df: DataFrame, threshold: int) -> list | None:
-    """ONE-job smallness probe: collect up to ``threshold + 1`` rows of a
+def probe_rows(df: DataFrame, cap: int | None = None) -> list | None:
+    """ONE-job smallness probe: collect up to ``DRIVER_ROWS + 1`` rows
+    (or ``cap + 1``, when a caller's kernel needs a smaller bound) of a
     (checkpointed) frame; return the row list when the frame fits — the
-    caller then holds EVERY row and needs no further action on the frame
-    — else None. Replaces the ``count()``-then-``collect()`` pair the
-    adaptive driver/distributed dispatch used to pay: each action is a
-    full driver round-trip (a scheduled job), and on the driver path the
-    count told us nothing the collect would not. The distributed branch
-    still takes its exact counts as before — this probe only spends one
-    job deciding, and its partial result is discarded there."""
-    rows = df.limit(threshold + 1).collect()
-    return rows if len(rows) <= threshold else None
+    caller then holds EVERY row and needs no further action on the
+    frame — else None, without a job when the bound is 0. Replaces the
+    ``count()``-then-``collect()`` pair the adaptive driver/distributed
+    dispatch used to pay: each action is a full driver round-trip (a
+    scheduled job), and on the driver path the count told us nothing
+    the collect would not. The distributed branch still takes its exact
+    counts as before — this probe only spends one job deciding, and its
+    partial result is discarded there."""
+    bound = DRIVER_ROWS if cap is None else min(cap, DRIVER_ROWS)
+    if bound <= 0:
+        return None
+    rows = df.limit(bound + 1).collect()
+    return rows if len(rows) <= bound else None
 
 
 _NodeRow = namedtuple("_NodeRow", ["node"])
 
 
-def distinct_probe_rows(proj: DataFrame, threshold: int) -> list | None:
+def distinct_probe_rows(proj: DataFrame) -> list | None:
     """Smallness probe of ``proj.distinct()`` for a ONE-column frame of
     a :data:`PY_ORDERED_SIMPLE` type: probe the RAW projection (a
     CollectLimit over the scan — limit short-circuits, no aggregate to
@@ -164,20 +168,14 @@ def distinct_probe_rows(proj: DataFrame, threshold: int) -> list | None:
     applied any cast while executing/folding the projection). Probing
     ``distinct()`` itself was costing a 2-stage AQE plan + a ~0.2 s
     driver planning gap per graph query on a 25-row dimension scan
-    (measured, x_pagerank_trade). A raw row count past the threshold —
-    the 100 TB node frame — falls back to the ordinary one-job probe of
-    the distinct frame, reading ~threshold rows either way; a DEDUPED
-    count past the threshold is proof the distinct cannot fit and
-    returns None directly."""
-    t = proj.schema[0].dataType.simpleString()
-    if t in PY_ORDERED_SIMPLE:
-        raw = proj.limit(threshold + 1).collect()
-        if len(raw) <= threshold:
-            seen = dict.fromkeys(r[0] for r in raw)
-            if len(seen) <= threshold:
-                return [_NodeRow(v) for v in seen]
-            return None
-    return probe_rows(proj.distinct(), threshold)
+    (measured, x_pagerank_trade). A raw row count past the bound — the
+    100 TB node frame — falls back to the ordinary one-job probe of the
+    distinct frame, reading ~DRIVER_ROWS rows either way."""
+    if proj.schema[0].dataType.simpleString() in PY_ORDERED_SIMPLE:
+        raw = probe_rows(proj)
+        if raw is not None:
+            return [_NodeRow(v) for v in dict.fromkeys(r[0] for r in raw)]
+    return probe_rows(proj.distinct())
 
 
 def is_local_plan(df: DataFrame) -> bool:
@@ -209,6 +207,38 @@ def free_local_checkpoint(df: DataFrame) -> None:
         pass
 
 
+def _pin(df: DataFrame) -> DataFrame:
+    """``df`` materialized once for the probe and every later read: an
+    eager ``localCheckpoint``, skipped when the plan is already a
+    driver-local relation (:func:`is_local_plan`) — collecting that
+    schedules no job, so the checkpoint would be the only one."""
+    return df if is_local_plan(df) else df.localCheckpoint(eager=True)
+
+
+def driver_path(df, kernel, schema, *, pin=True, cap=None):
+    """The driver-path chain over one input frame: ``(out, frame)``.
+
+    1. pin ``df`` (:func:`_pin`), unless ``pin=False`` says re-reading
+       it is already cheap — a row-local projection (the probe's limit
+       short-circuits the scan) or a frame its caller pinned;
+    2. probe it at :data:`DRIVER_ROWS` (:func:`probe_rows`; ``cap``
+       lowers the bound for a kernel that needs it);
+    3. run ``kernel(rows)`` — it returns the result rows, or None to
+       decline (the operator's NULL, overflow or domain guard);
+    4. emit the rows with :func:`local_df` in ``schema`` and release the
+       pin: ``(out, None)``;
+    5. otherwise return ``(None, frame)``, the pinned input, for the
+       distributed spelling (the caller releases it when done)."""
+    frame = _pin(df) if pin else df
+    rows = probe_rows(frame, cap)
+    out = None if rows is None else kernel(rows)
+    if out is None:
+        return None, frame
+    if frame is not df:
+        free_local_checkpoint(frame)
+    return local_df(df.sparkSession, out, schema), None
+
+
 # -- canonical weighted edge lists (the graph operators' shared prologue) ---
 
 _DRow = namedtuple("_DRow", ["src", "dst", "w"])
@@ -231,8 +261,8 @@ def canonical_rows(rows: list, how: str) -> list | None:
     not depend on the order the engine adds in: below it no partial sum
     can leave BIGINT, so the engine's ANSI SUM cannot abort where Python
     succeeded; at or above it the caller takes the engine's spelling, so
-    the default threshold and ``driver_threshold=0`` reach the same
-    result or the same error."""
+    the default bound and ``DRIVER_ROWS = 0`` reach the same result or
+    the same error."""
     agg: dict = {}
     mag: dict = {}
     for r in rows:
@@ -289,7 +319,7 @@ class WeightedEdges:
 
     @cached_property
     def frame(self) -> DataFrame:
-        return self.plan.localCheckpoint(eager=True)
+        return _pin(self.plan)
 
     def free(self) -> None:
         """Release the checkpoint if one was built."""
@@ -299,10 +329,10 @@ class WeightedEdges:
 
 def weighted_edges(
     edges: DataFrame,
-    threshold: int,
     how: str,
     node_type: str | None = None,
     nodes=None,
+    probe: bool = True,
 ) -> WeightedEdges:
     """Canonicalize and probe a weighted edge list — the prologue every
     weighted graph operator shares. ``edges``' first three columns are
@@ -330,7 +360,8 @@ def weighted_edges(
 
     Rows with a NULL weight (an all-NULL key) leave ``rows`` None: the
     engine's NULL-skipping MIN/SUM define that case, so it takes the
-    distributed spelling. ``threshold <= 0`` skips both steps."""
+    distributed spelling. ``probe=False`` (a caller whose other input
+    already failed its probe) or ``DRIVER_ROWS = 0`` skips both steps."""
     src, dst, w = edges.columns[:3]
 
     def end(c):
@@ -361,17 +392,17 @@ def weighted_edges(
             keep = keep & (F.col("src") != F.col("dst"))
         canon = ecast.filter(keep).groupBy("src", "dst")
     ew = WeightedEdges(canon.agg(agg("w").alias("w")), nodes)
-    if threshold <= 0:
+    if not probe or DRIVER_ROWS <= 0:
         return ew
     if is_local_plan(ecast) and all(
         f.dataType.simpleString() in PY_ORDERED_SIMPLE
         for f in ecast.schema.fields[:2]
     ):
-        raw = ecast.limit(threshold + 1).collect()
-        if len(raw) <= threshold:
+        raw = probe_rows(ecast)
+        if raw is not None:
             ew.rows = canonical_rows(raw, how)
     if ew.rows is None:
-        ew.rows = probe_rows(ew.frame, threshold)
+        ew.rows = probe_rows(ew.frame)
     if ew.rows is not None and any(r.w is None for r in ew.rows):
         ew.rows = None
     return ew

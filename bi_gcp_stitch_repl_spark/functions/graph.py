@@ -10,7 +10,7 @@ pin them.
 Every operator but the float :func:`pagerank` and
 :func:`walk_skipgrams` canonicalizes its edges through
 :func:`.dispatch.weighted_edges` — one canonicalize-and-probe seam.
-When the canonical edge list fits ``driver_threshold`` rows the
+When the canonical edge list fits ``dispatch.DRIVER_ROWS`` rows the
 operator's Python kernel runs on the driver and its result is emitted
 as a local relation; above it the distributed loop runs on the
 checkpointed canonical frame. Both paths give the same rows (pinned per
@@ -89,7 +89,6 @@ def connected_components(
     edges: DataFrame,
     nodes: DataFrame | None = None,
     max_iter: int = 30,
-    driver_threshold: int = 100_000,
 ) -> DataFrame:
     """(node, component) labeling; component = min node id in the component.
 
@@ -103,11 +102,11 @@ def connected_components(
 
     **Adaptive physical strategy** (the same runtime branch discipline as
     the Jaccard bitset kernel): after dedup, if the edge list fits
-    ``driver_threshold`` rows it is union-found ON THE DRIVER and the
+    ``DRIVER_ROWS`` rows it is union-found ON THE DRIVER and the
     labels broadcast back — a dup-pair graph is usually tiny next to its
     corpus (near-dup density, not corpus size), and the distributed
     alternating-star loop costs ~4 shuffle rounds of pure scheduling
-    overhead on a 300-edge graph. Above the threshold the O(log n)
+    overhead on a 300-edge graph. Above the bound the O(log n)
     large-star/small-star rounds run unchanged; results are identical
     (min-label semantics both paths).
     """
@@ -142,12 +141,12 @@ def connected_components(
     # self-loop edges is labelled (a singleton component) from the
     # canonical list on both paths, and the raw edges are read once.
     # When it fits, the probe rows ARE the union-find input.
-    ew = weighted_edges(e.withColumn("w", F.lit(1)), driver_threshold, "sum")
+    ew = weighted_edges(e.withColumn("w", F.lit(1)), "sum")
     if ew.rows is not None:
         ew.free()
         if nodes is not None:
             nodes = nodes.distinct()
-        return _cc_driver(ew.rows, nodes, e.sparkSession, common, driver_threshold)
+        return _cc_driver(ew.rows, nodes, e.sparkSession, common)
     # the star rounds label every endpoint of a non-loop edge; what is
     # left to attach as singletons is the loop-only nodes and the
     # caller's isolated nodes
@@ -193,7 +192,7 @@ def connected_components(
 
 
 def _cc_driver(
-    erows: list, nodes: DataFrame | None, spark, id_type, driver_threshold: int
+    erows: list, nodes: DataFrame | None, spark, id_type
 ) -> DataFrame:
     """Small-graph path: union-find over the collected edge list (self-loops
     included, so loop-only nodes label themselves), labels re-emitted as a
@@ -201,12 +200,12 @@ def _cc_driver(
     ``node`` frame, or None when the edges name every node. Deterministic
     min-label components — identical output to the distributed star
     algorithm. The singleton attach dispatches the same way the edge side did: when the
-    node set also fits ``driver_threshold`` (one probe job) the full
+    node set also fits ``DRIVER_ROWS`` (one probe job) the full
     label list — including singletons — is built in Python and emitted as
     ONE local relation, replacing the distributed anti-join + union the
     downstream consumer would otherwise execute (and typically
     checkpoint) against a broadcast of the edge labels; past the
-    threshold the anti-join runs unchanged."""
+    bound the anti-join runs unchanged."""
     parent: dict = {}
 
     def find(x):
@@ -233,7 +232,7 @@ def _cc_driver(
     )
     if nodes is None:
         return local_df(spark, label_rows, schema)
-    nrows = probe_rows(nodes, driver_threshold)
+    nrows = probe_rows(nodes)
     if nrows is not None:
         # full label list driver-side: same (node, component) set as
         # labels ∪ (anti-join singletons), one local relation. A NULL
@@ -348,7 +347,6 @@ def pagerank_fixedpoint(
     scale: int = 10**12,
     frac_scale: int = 10**6,
     node_type: str = "long",
-    driver_threshold: int = 100_000,
     teleport: DataFrame | None = None,
 ) -> DataFrame:
     """Weighted PageRank in FIXED-POINT integer arithmetic: (node,
@@ -376,13 +374,13 @@ def pagerank_fixedpoint(
 
     **Adaptive physical strategy** (the :func:`connected_components`
     discipline): the input is usually an already-AGGREGATED graph, and
-    when both the edge list and the node set fit ``driver_threshold``
+    when both the edge list and the node set fit ``DRIVER_ROWS``
     rows the loop runs ON THE DRIVER over the collected aggregate — the
     distributed loop's per-iteration checkpoints are pure scheduling
     overhead on a 625-edge nation graph. Because every operation is
     integer, the two paths are BIT-IDENTICAL (property-tested against
     an independent sequential replica on random graphs), so the branch
-    is invisible to callers; above the threshold the checkpointed
+    is invisible to callers; above the bound the checkpointed
     join+sum rounds run unchanged.
 
     Why this exists next to :func:`pagerank`: the float version's
@@ -438,10 +436,8 @@ def pagerank_fixedpoint(
     # aggregate drops NULL endpoints (SQL joins and Python dict membership
     # disagree about NULL, so letting one through would diverge the two
     # physical paths)
-    ew = weighted_edges(edges, driver_threshold, "sum", node_type)
-    node_df, nrows, n = _node_universe(
-        nodes, node_type, driver_threshold if ew.rows is not None else 0
-    )
+    ew = weighted_edges(edges, "sum", node_type)
+    node_df, nrows, n = _node_universe(nodes, node_type, ew.rows is not None)
     if n == 0:
         return node_df.select("node", F.lit(0).cast("long").alias("rank_fp"))
     wb = weight_guard(ew, ew.rows)
@@ -462,8 +458,7 @@ def pagerank_fixedpoint(
         trows = distinct_probe_rows(
             teleport.select(
                 F.col(teleport.columns[0]).cast(node_type).alias("node")
-            ).filter(F.col("node").isNotNull()),
-            driver_threshold,
+            ).filter(F.col("node").isNotNull())
         )
         if trows is None:
             nrows = None
@@ -575,10 +570,10 @@ def pagerank_fixedpoint(
 
 
 def _node_universe(
-    nodes: DataFrame, node_type: str, threshold: int
+    nodes: DataFrame, node_type: str, probe: bool
 ) -> tuple[DataFrame, list | None, int]:
     """``(node_df, nrows, n)``: the distinct NULL-free node set of the
-    fixed-point operators. Probed UN-checkpointed when ``threshold > 0``
+    fixed-point operators. Probed UN-checkpointed when ``probe``
     and it fits (``nrows`` in hand; the driver path never touches the
     frame again), else checkpointed and counted for the distributed
     loop (``nrows`` None)."""
@@ -586,7 +581,7 @@ def _node_universe(
         F.col(nodes.columns[0]).cast(node_type).alias("node")
     ).filter(F.col("node").isNotNull())
     node_df = proj.distinct()
-    nrows = distinct_probe_rows(proj, threshold) if threshold > 0 else None
+    nrows = distinct_probe_rows(proj) if probe else None
     if nrows is not None:
         return node_df, nrows, len(nrows)
     node_df = node_df.localCheckpoint(eager=True)
@@ -606,7 +601,7 @@ def _pagerank_fp_driver(
     seeds: set | None = None,
 ) -> DataFrame:
     """Driver fast path: the same update rule over the collected
-    aggregate (both frames proven ≤ driver_threshold by the caller).
+    aggregate (both frames proven ≤ DRIVER_ROWS by the caller).
     Integer arithmetic makes this bit-identical to the distributed loop
     — the property suite compares both against an independent replica.
     ``seeds`` (already intersected with the node set) switches to the
@@ -665,7 +660,6 @@ def hits_fixedpoint(
     n_iter: int = 4,
     scale: int = 10**6,
     node_type: str = "long",
-    driver_threshold: int = 100_000,
 ) -> DataFrame:
     """HITS hubs/authorities (Kleinberg) in FIXED-POINT integer
     arithmetic: ``(node, hub_fp, auth_fp)`` after ``n_iter`` mutual-
@@ -699,7 +693,7 @@ def hits_fixedpoint(
     pre-normalize weights.
 
     **Adaptive physical strategy** (the pagerank_fixedpoint discipline):
-    below ``driver_threshold`` the loop runs on the collected aggregate
+    below ``DRIVER_ROWS`` the loop runs on the collected aggregate
     with Python integers — BIT-IDENTICAL to the distributed loop
     (property-tested against an independent sequential replica); above
     it, per-round hash joins + map-side-combinable sums on the
@@ -713,10 +707,8 @@ def hits_fixedpoint(
         )
     # one row per (src, dst) and NULL endpoints dropped up front — same
     # canonicalization (and same reasons) as pagerank_fixedpoint
-    ew = weighted_edges(edges, driver_threshold, "sum", node_type)
-    node_df, nrows, n = _node_universe(
-        nodes, node_type, driver_threshold if ew.rows is not None else 0
-    )
+    ew = weighted_edges(edges, "sum", node_type)
+    node_df, nrows, n = _node_universe(nodes, node_type, ew.rows is not None)
     if n == 0:
         return node_df.select(
             "node",
@@ -829,7 +821,7 @@ def _hits_fp_driver(
 
 
 def _und_edges(
-    edges: DataFrame, threshold: int, node_type: str | None = None
+    edges: DataFrame, node_type: str | None = None
 ) -> WeightedEdges:
     """The simple undirected graph of ``edges``' first two columns —
     endpoints least/greatest-ordered into ``(u, v)``, NULL endpoints,
@@ -844,7 +836,7 @@ def _und_edges(
             F.col(src).alias("src"), F.col(dst).alias("dst"),
             F.lit(1).alias("w"),
         ),
-        threshold, "und", node_type,
+        "und", node_type,
     )
 
 
@@ -855,10 +847,7 @@ def _node_schema(ew: WeightedEdges, cols: str) -> str:
     return f"node {ew.plan.schema['u'].dataType.simpleString()}, {cols}"
 
 
-def triangle_counts(
-    edges: DataFrame,
-    driver_threshold: int = 100_000,
-) -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle counts: ``(node, n_triangles)`` — how many
     3-cliques each node participates in. The standard cohesion /
     link-farm signal over a domain or interaction graph (a link farm is
@@ -888,12 +877,12 @@ def triangle_counts(
     is unique for a given input graph; counts are orientation-invariant
     anyway.
 
-    When the canonical edges fit ``driver_threshold`` the same
+    When the canonical edges fit ``DRIVER_ROWS`` the same
     degree-oriented wedge count runs in Python over the probe rows
     (bounded by the same Σ outdeg² ≤ O(m^1.5)) instead of three joins
     over a 25-node frame.
     """
-    ew = _und_edges(edges, driver_threshold)
+    ew = _und_edges(edges)
     if ew.rows is not None:
         ew.free()
         _, tri = _tri_counts_py(ew.rows)
@@ -974,7 +963,6 @@ def _tri_counts_py(urows: list) -> tuple[dict, dict]:
 def clustering_coefficients(
     edges: DataFrame,
     coeff_scale: int = 10**6,
-    driver_threshold: int = 100_000,
 ) -> DataFrame:
     """Local clustering coefficients over the simple undirected graph:
     ``(node, degree, n_triangles, coeff_fp)`` where ``coeff_fp`` is the
@@ -992,7 +980,7 @@ def clustering_coefficients(
     hash-pins them. Costs exactly triangle_counts' wedge joins + one
     degree aggregate, both over the SAME checkpointed canonical edge
     frame (one normalization pass); one extra join on the node key.
-    Below ``driver_threshold`` degrees, triangles and the ratio all run
+    Below ``DRIVER_ROWS`` degrees, triangles and the ratio all run
     in Python over the probe rows (nonnegative ints, so Python // IS the
     BIGINT DIV).
 
@@ -1003,7 +991,7 @@ def clustering_coefficients(
     (the coefficient itself is always ≤ coeff_scale); ANSI mode aborts
     rather than wraps.
     """
-    ew = _und_edges(edges, driver_threshold)
+    ew = _und_edges(edges)
     if ew.rows is not None:
         ew.free()
         degm, tri = _tri_counts_py(ew.rows)
@@ -1052,7 +1040,6 @@ def bfs_hops(
     edges: DataFrame,
     sources: DataFrame,
     max_iter: int = 30,
-    driver_threshold: int = 100_000,
 ) -> DataFrame:
     """Multi-source unweighted BFS hop counts over the simple undirected
     graph: ``(node, hops)`` = each reachable node's minimum hop distance
@@ -1078,7 +1065,7 @@ def bfs_hops(
     superseded rounds' checkpoints are released as they die
     (:func:`free_local_checkpoint`, the k_core storage contract).
     ``max_iter`` is a loud backstop: non-convergence raises. When both
-    the canonical edges and the seed set fit ``driver_threshold`` the
+    the canonical edges and the seed set fit ``DRIVER_ROWS`` the
     whole frontier loop runs in Python over the probe rows.
     """
     src_proj = sources.select(
@@ -1087,9 +1074,9 @@ def bfs_hops(
     dist0 = src_proj.distinct().select(
         "node", F.lit(0).cast("long").alias("hops")
     )
-    ew = _und_edges(edges, driver_threshold)
+    ew = _und_edges(edges)
     srows = (
-        distinct_probe_rows(src_proj, driver_threshold)
+        distinct_probe_rows(src_proj)
         if ew.rows is not None
         else None
     )
@@ -1191,7 +1178,6 @@ def sssp_weighted(
     edges: DataFrame,
     sources: DataFrame,
     max_iter: int = 50,
-    driver_threshold: int = 100_000,
 ) -> DataFrame:
     """Multi-source single-source-shortest-path over the DIRECTED
     integer-weighted graph: ``(node, dist)`` = each reachable node's
@@ -1229,7 +1215,7 @@ def sssp_weighted(
     # canonical MIN aggregate per directed pair, self-loops and NULL
     # endpoints dropped; the weight guard and the frontier Bellman-Ford
     # run in Python when the aggregate and the source set fit
-    ew = weighted_edges(edges, driver_threshold, "min")
+    ew = weighted_edges(edges, "min")
     src_proj = sources.select(
         F.col(sources.columns[0]).alias("node")
     ).filter(F.col("node").isNotNull())
@@ -1238,7 +1224,7 @@ def sssp_weighted(
     )
     weight_guard(ew, ew.rows)
     srows = (
-        distinct_probe_rows(src_proj, driver_threshold)
+        distinct_probe_rows(src_proj)
         if ew.rows is not None
         else None
     )
@@ -1334,8 +1320,7 @@ def _sssp_driver(
 
 
 def k_core(
-    edges: DataFrame, k: int, max_iter: int = 100,
-    driver_threshold: int = 100_000,
+    edges: DataFrame, k: int, max_iter: int = 100
 ) -> DataFrame:
     """Nodes of the graph's k-core: ``(node, degree)`` after repeatedly
     deleting every node of degree < ``k`` (degree recomputed each round)
@@ -1368,7 +1353,7 @@ def k_core(
     # below the bound the peel loop runs in Python over the probe rows
     # (the k-core is unique under any deletion order, and the round
     # structure — including the max_iter raise — mirrors exactly)
-    ew = _und_edges(edges, driver_threshold)
+    ew = _und_edges(edges)
     if ew.rows is not None:
         ew.free()
         edges_py = [(r.u, r.v) for r in ew.rows]
@@ -1443,7 +1428,6 @@ def label_propagation(
     nodes: DataFrame,
     n_iter: int = 4,
     node_type: str = "long",
-    driver_threshold: int = 100_000,
 ) -> DataFrame:
     """Community detection by synchronous weighted label propagation
     (Raghavan et al. 2007, determinized): ``(node, community)`` after
@@ -1475,7 +1459,7 @@ def label_propagation(
     instability, don't pin it).
 
     **Adaptive physical strategy** (the pagerank_fixedpoint discipline):
-    below ``driver_threshold`` the loop runs on the collected aggregate
+    below ``DRIVER_ROWS`` the loop runs on the collected aggregate
     with Python integers — BIT-IDENTICAL to the distributed loop
     (property-pinned); above it, each round is ONE hash join of the
     symmetric edge list against the previous labeling + a map-side-
@@ -1495,11 +1479,7 @@ def label_propagation(
         F.col(nodes.columns[0]).cast(node_type).alias("node")
     ).filter(F.col("node").isNotNull())
     nd_plan = nd_proj.distinct()
-    nrows = (
-        distinct_probe_rows(nd_proj, driver_threshold)
-        if driver_threshold > 0
-        else None
-    )
+    nrows = distinct_probe_rows(nd_proj)
     if nrows == []:
         return nd_plan.select(
             "node", F.col("node").cast("long").alias("community")
@@ -1509,10 +1489,10 @@ def label_propagation(
     # the fully-local path — it is also the distributed loop's node set
     ew = weighted_edges(
         edges,
-        driver_threshold if nrows is not None else 0,
         "und",
         node_type,
         nodes=lambda: nd_plan.localCheckpoint(eager=True),
+        probe=nrows is not None,
     )
     urows = None
     if ew.rows is not None:
@@ -1608,7 +1588,6 @@ def modularity(
     labels: DataFrame,
     scale: int = 10**6,
     node_type: str = "long",
-    driver_threshold: int = 100_000,
 ) -> DataFrame:
     """Newman modularity of a community partition over the UNDIRECTED
     weighted graph, in FIXED-POINT integers: one row per community
@@ -1651,11 +1630,7 @@ def modularity(
     # the label table fits, the duplicate-node guard runs in Python over
     # the probe rows (same check, same message) and — if the joined edge
     # aggregate also fits — the whole Q decomposition does too
-    lrows = (
-        probe_rows(lab, driver_threshold)
-        if driver_threshold > 0
-        else None
-    )
+    lrows = probe_rows(lab)
     if lrows is not None:
         seen: dict = {}
         for r in lrows:
@@ -1677,10 +1652,10 @@ def modularity(
     # whose endpoint has no label row drop (the subgraph contract)
     ew = weighted_edges(
         edges,
-        driver_threshold if lrows is not None else 0,
         "und",
         node_type,
         nodes=lambda: lab.select("node", F.col("community").alias("c")),
+        probe=lrows is not None,
     )
     urows = labm = None
     if ew.rows is not None:
@@ -1814,7 +1789,6 @@ def random_walks(
     walk_len: int = 4,
     num_walks: int = 2,
     node_type: str = "long",
-    driver_threshold: int = 100_000,
 ) -> DataFrame:
     """Deterministic hash-seeded random walks over the simple undirected
     graph — the DeepWalk/node2vec corpus-generation primitive (Perozzi et
@@ -1832,7 +1806,7 @@ def random_walks(
     have no adjacency row and start none.
 
     **Adaptive physical strategy** (the pagerank_fixedpoint discipline):
-    at or below ``driver_threshold`` undirected edges the walk runs on
+    at or below ``DRIVER_ROWS`` undirected edges the walk runs on
     the collected adjacency with Python ints — bit-identical to the
     distributed loop (property-pinned). Above it, the sorted-neighbor
     rank table ``(node, nbr, rank)`` and the degree table are built ONCE
@@ -1852,7 +1826,7 @@ def random_walks(
     spark = edges.sparkSession
     out_schema = f"start {node_type}, wid int, step int, node {node_type}"
     # the probe rows ARE the collected adjacency on the driver path
-    ew = _und_edges(edges, driver_threshold, node_type)
+    ew = _und_edges(edges, node_type)
     if ew.rows is not None:
         ew.free()
         return local_df(

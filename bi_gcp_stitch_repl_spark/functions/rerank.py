@@ -50,6 +50,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .dispatch import local_df
+
 #: Spark sequential-fold dot / norm over double arrays — identical
 #: accumulation order to DuckDB's list_sum(list_transform(list_zip(...)))
 #: (see queries/extensions.py similarity section for the parity proof).
@@ -274,9 +276,4 @@ def mmr_rerank_scored(
                 best_id, best_mmr, best_rel = vid, score, rel
         selected.append((len(selected) + 1, best_id, best_rel, best_mmr))
         del remaining[best_id]
-    # one-slice local relation: createDataFrame on a plain list would
-    # parallelize ≤ k rows into defaultParallelism near-empty tasks
-    # (same rationale as functions/dispatch.local_df)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(selected, 1), _SCHEMA
-    )
+    return local_df(spark, selected, _SCHEMA)

@@ -666,6 +666,15 @@ SQDIST = (
 )
 
 
+#: kmeans' own driver-path bound, below :data:`.dispatch.DRIVER_ROWS`:
+#: a probe row here is a whole embedding vector, not a 3-column edge,
+#: and the Python Lloyd kernel pays k·dim interpreted float operations
+#: per row per round. It equals the VALUES emission cutoff
+#: (``dispatch._VALUES_MAX_ROWS``), so a driver-path assignment always
+#: embeds as a literal relation.
+KMEANS_DRIVER_ROWS = 4096
+
+
 def _kmeans_rows_ok(rows: list) -> bool:
     """Driver-path gate: distinct non-NULL ids, non-NULL uniform-length
     vectors, every element a finite float — the domain where the Python
@@ -746,7 +755,6 @@ def kmeans_lloyd(
     n_iter: int = 2,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    driver_threshold: int = 4096,
 ) -> DataFrame:
     """Lloyd's KMeans as a pure, deterministic DataFrame plan: ``n_iter``
     assign/update rounds from a fixed seed (the ``k`` smallest-id vectors),
@@ -767,41 +775,44 @@ def kmeans_lloyd(
     correctness twin on samples.
 
     **Driver fast path** (optimization round 1): at or below
-    ``driver_threshold`` rows with distinct integral ids and finite
-    uniform-length vectors, the whole trajectory runs in Python —
-    CPython floats ARE IEEE binary64, so the sequential folds, the
+    :data:`KMEANS_DRIVER_ROWS` rows (and ``dispatch.DRIVER_ROWS``) with
+    distinct integral ids and finite uniform-length vectors, the whole
+    trajectory runs in Python — CPython floats ARE IEEE binary64, so
+    the sequential folds, the
     (dist, cid) argmin and the value-sorted means are bit-identical to
     the engine's (the pq replica test pins exactly this equivalence) —
     and the assignment embeds as a broadcastable VALUES relation,
     removing the TakeOrdered seed job, the per-round update exchanges
     and the per-run Catalyst re-analysis of the assignment plan. The
     probe is one incremental ``limit().collect()`` over a row-local
-    projection (no aggregate upstream: it reads ~threshold rows, never
-    the corpus), so the distributed path pays one cheap scan extra and
-    keeps its exact lazy shape. ``driver_threshold <= 0`` disables the
-    dispatch.
+    projection (no aggregate upstream: it reads ~KMEANS_DRIVER_ROWS
+    rows, never the corpus), so the distributed path pays one cheap
+    scan extra and keeps its exact lazy shape.
     """
     emb = corpus.select(
         id_col,
         F.expr(f"transform({vec_col}, x -> cast(x as double))").alias("v"),
     )
     if (
-        driver_threshold > 0
-        and n_iter >= 1
+        n_iter >= 1
         and k >= 1
         and emb.schema[id_col].dataType.simpleString()
         in {"tinyint", "smallint", "int", "bigint"}
     ):
-        rows = emb.limit(driver_threshold + 1).collect()
-        if len(rows) <= driver_threshold and _kmeans_rows_ok(rows):
-            from .dispatch import local_df
+        from .dispatch import driver_path
 
-            out_type = emb.schema[id_col].dataType.simpleString()
-            return local_df(
-                corpus.sparkSession,
-                _kmeans_lloyd_driver(rows, k, n_iter),
-                f"{id_col} {out_type}, cluster bigint",
-            )
+        out_type = emb.schema[id_col].dataType.simpleString()
+        out, _ = driver_path(
+            emb,
+            lambda rows: _kmeans_lloyd_driver(rows, k, n_iter)
+            if _kmeans_rows_ok(rows)
+            else None,
+            f"{id_col} {out_type}, cluster bigint",
+            pin=False,
+            cap=KMEANS_DRIVER_ROWS,
+        )
+        if out is not None:
+            return out
     # seed = the k smallest-id vectors: TakeOrdered (orderBy + limit), not
     # a row_number over a global ORDER BY window — that window funnels the
     # WHOLE corpus through one partition's sort; TakeOrdered keeps a

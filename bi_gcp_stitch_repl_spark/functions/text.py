@@ -29,16 +29,6 @@ def tokens_expr(text_col: str) -> str:
     return f"filter(split(trim({text_col}), '\\\\s+'), t -> t <> '')"
 
 
-def shingles(text_col: str, n: int = 5) -> Column:
-    """Distinct character n-gram set (array<string>) of the named column."""
-    return F.array_distinct(
-        F.expr(
-            f"transform(sequence(1, greatest(length({text_col}) - {n - 1}, 1)),"
-            f" i -> substring({text_col}, i, {n}))"
-        )
-    )
-
-
 def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Append quality-scoring features: token/char/space counts, mean token
     length, uppercase ratio, punctuation density — the cheap per-document

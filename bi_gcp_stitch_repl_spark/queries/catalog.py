@@ -290,6 +290,9 @@ def spread_narrow(df: DataFrame, *key_cols: str) -> DataFrame:
 #:    ``load_tables``) take the slots of x_bfs_trade, x_kcore_trade,
 #:    x_hits_trade and x_ppr_trade, released: each was seated for its
 #:    r11 re-oracle, is r12-fresh, and functions/graph.py is untouched.
+#: 7. x_token_count (functions/text.py lost the uncalled ``shingles``)
+#:    takes the slot of x_winnowing_pairs, released: r12-fresh, spelled
+#:    inline in queries/extensions.py, no library of it touched.
 #: Names absent from this list keep registration order after it.
 _PRIORITY: list[str] = [
     # §2 spine
@@ -308,7 +311,7 @@ _PRIORITY: list[str] = [
     "x_multimodal_meta", "x_semantic_decontaminate",
     "x_semdedup", "x_simhash", "x_simhash_pairs", "x_sparse_cosine_pairs",
     "x_token_budget_plan", "x_vocab_encode",
-    "x_winnowing_fingerprints", "x_winnowing_pairs",
+    "x_winnowing_fingerprints",
     # r11 new-query cohort (keeps slots)
     "x_communities_trade", "x_bpe_merges", "x_modularity_trade",
     "x_bpe_encode", "x_image_dhash_near_dups", "x_random_walks_trade",
@@ -321,6 +324,8 @@ _PRIORITY: list[str] = [
     # changed-library canaries after the test-only deletions (see header)
     "x_image_roundtrip_meta", "x_video_frames_roundtrip", "x_dedup_exact",
     "s9_sql_scan",
+    # changed text.py canary (see header)
+    "x_token_count",
 ]
 
 

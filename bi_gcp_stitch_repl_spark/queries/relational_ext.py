@@ -989,9 +989,7 @@ def x_triangle_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _trade_edge_frame(
-    spark: SparkSession, sf_dir: str, driver_threshold: int = 100_000
-):
+def _trade_edge_frame(spark: SparkSession, sf_dir: str):
     """``(edges(src, dst, w), nation)``: supplier nation → customer nation
     shipment counts from the full lineitem⋈orders⋈customer⋈supplier
     derivation — the ONE corpus exchange every trade-graph query pays.
@@ -1016,7 +1014,7 @@ def _trade_edge_frame(
     nothing and costs a full shuffle; the same row-count argument holds
     at 100 TB (suppkeys are ~unique within an order), where the added
     exchange would carry the whole fact table once more."""
-    from ..functions.dispatch import free_local_checkpoint, local_df, probe_rows
+    from ..functions.dispatch import driver_path
 
     li, orders, cust, supp, nat = tables(
         spark, sf_dir, "lineitem", "orders", "customer", "supplier", "nation"
@@ -1029,21 +1027,15 @@ def _trade_edge_frame(
             F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
         )
         .agg(F.count(F.lit(1)).alias("w"))
-    ).localCheckpoint(eager=True)
-    rows = (
-        probe_rows(edges, driver_threshold) if driver_threshold > 0 else None
     )
-    if rows is not None:
-        out = local_df(spark, [tuple(r) for r in rows], edges.schema)
-        free_local_checkpoint(edges)
-        return out, nat
-    return edges, nat
+    out, pinned = driver_path(
+        edges, lambda rows: [tuple(r) for r in rows], edges.schema
+    )
+    return (pinned if out is None else out), nat
 
 
 def _sparsify_mean_relative(
-    edges: DataFrame,
-    keep_weight: bool = False,
-    driver_threshold: int = 100_000,
+    edges: DataFrame, keep_weight: bool = False
 ) -> DataFrame:
     """Keep edges whose weight is ≥ NUM/DEN × the mean edge weight, as the
     BIGINT cross-multiplication ``w·n_edges·DEN >= total_w·NUM`` (no
@@ -1060,9 +1052,9 @@ def _sparsify_mean_relative(
     checkpointed frame is the POST-aggregation edge list (≤ |src|·|dst|
     distinct pairs), bounded far below the fact table at any scale.
 
-    **Driver fast path** (the ``dispatch.probe_rows`` dispatch,
+    **Driver fast path** (the ``dispatch.driver_path`` dispatch,
     optimization round 1): when the checkpointed aggregate fits
-    ``driver_threshold`` rows — the probe rows ARE the aggregate — the
+    ``dispatch.DRIVER_ROWS`` rows — the probe rows ARE the aggregate — the
     totals and the filter run in exact Python integer arithmetic and the
     result embeds as a VALUES local relation, replacing the totals
     aggregate job + 1-row broadcast + filter planning with zero jobs
@@ -1077,24 +1069,11 @@ def _sparsify_mean_relative(
     aggregation provably cannot ANSI-abort where the Python total
     succeeded; mixed signs (or any bound breach) fall back to the
     distributed spelling so the engine's own overflow behavior rules."""
-    from ..functions.dispatch import (
-        free_local_checkpoint,
-        is_local_plan,
-        local_df,
-        probe_rows,
-    )
+    from ..functions.dispatch import driver_path
 
-    local_in = is_local_plan(edges)
-    if not local_in:
-        # a driver-built VALUES input (the _trade_edge_frame fast path)
-        # probes job-free — its defensive checkpoint would be the only
-        # job this helper schedules
-        edges = edges.localCheckpoint(eager=True)
     cols = ["src", "dst", "w"] if keep_weight else ["src", "dst"]
-    rows = (
-        probe_rows(edges, driver_threshold) if driver_threshold > 0 else None
-    )
-    if rows is not None:
+
+    def kernel(rows):
         ne = len(rows)
         ws = [r["w"] for r in rows]
         tw = sum(w for w in ws if w is not None)
@@ -1104,17 +1083,19 @@ def _sparsify_mean_relative(
             and abs(tw) * KCORE_THR_NUM < 2**63
             and all(w is None or w >= 0 for w in ws)
         ):
-            schema = edges.select(*cols).schema
-            kept = [
+            return [
                 tuple(r[c] for c in cols)
                 for r in rows
                 if r["w"] is not None
                 and r["w"] * ne * KCORE_THR_DEN >= tw * KCORE_THR_NUM
             ]
-            spark = edges.sparkSession
-            if not local_in:
-                free_local_checkpoint(edges)
-            return local_df(spark, kept, schema)
+        return None
+
+    # a driver-built VALUES input (the _trade_edge_frame fast path)
+    # probes job-free — driver_path skips its defensive checkpoint
+    out, edges = driver_path(edges, kernel, edges.select(*cols).schema)
+    if out is not None:
+        return out
     tot = edges.agg(F.sum("w").alias("tw"), F.count(F.lit(1)).alias("ne"))
     return (
         edges.crossJoin(F.broadcast(tot))
@@ -1555,13 +1536,12 @@ def x_sssp_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed edge list with a map-side combinable min, convergence
     is one isEmpty probe, superseded checkpoints released (the bfs_hops
     storage contract)."""
-    from ..functions.dispatch import local_df, probe_rows
+    from ..functions.dispatch import driver_path
     from ..functions.graph import sssp_weighted
 
     edges, nat = _trade_edge_frame(spark, sf_dir)
-    ec = None
-    rows = probe_rows(edges, 100_000)
-    if rows is not None:
+
+    def kernel(rows):
         ws = [r["w"] for r in rows]
         ne = len(rows)
         tw = sum(w for w in ws if w is not None)
@@ -1569,17 +1549,24 @@ def x_sssp_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
             all(w is not None and 0 < w and ne * w < 2**63 for w in ws)
             and 0 <= tw * SSSP_COST_SCALE < 2**63
         ):
-            schema = edges.limit(0).selectExpr(
-                "src", "dst", "CAST(1 AS BIGINT) AS cost"
-            ).schema
-            kept = [
+            return [
                 (r["src"], r["dst"], (tw * SSSP_COST_SCALE) // (ne * r["w"]))
                 for r in rows
                 if r["src"] is not None
                 and r["dst"] is not None
                 and r["src"] != r["dst"]
             ]
-            ec = local_df(spark, kept, schema)
+        return None
+
+    # _trade_edge_frame already pinned its output
+    ec, _ = driver_path(
+        edges,
+        kernel,
+        edges.limit(0).selectExpr(
+            "src", "dst", "CAST(1 AS BIGINT) AS cost"
+        ).schema,
+        pin=False,
+    )
     if ec is None:
         tot = edges.agg(
             F.sum("w").alias("tw"), F.count(F.lit(1)).alias("ne")

@@ -20,6 +20,22 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def driver_rows():
+    """``driver_rows(n, fn)``: ``fn()`` with ``dispatch.DRIVER_ROWS`` set
+    to ``n`` — 0 sends every operator down its distributed path — and the
+    bound restored afterwards. An operator picks its path when called, so
+    the frame ``fn`` returns keeps the path it was built with."""
+    from bi_gcp_stitch_repl_spark.functions import dispatch
+
+    def at(n, fn):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(dispatch, "DRIVER_ROWS", n)
+            return fn()
+
+    return at
+
+
+@pytest.fixture(scope="session")
 def duck():
     import duckdb
 

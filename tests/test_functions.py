@@ -826,7 +826,7 @@ def test_semdedup_handles_negative_hash_ids(spark):
         semdedup(lab, threshold=0.95, salt=0)
 
 
-def test_connected_components_mixed_width_ids_both_paths(spark):
+def test_connected_components_mixed_width_ids_both_paths(spark, driver_rows):
     """Review r05: an (int, long) edge frame must take the same widened
     id type on the driver fast path as on the distributed path — the
     narrow-schema driver labeling crashed on a wide dst id."""
@@ -840,7 +840,7 @@ def test_connected_components_mixed_width_ids_both_paths(spark):
     small = connected_components(edges)  # driver path (2 edges)
     got = {r["node"]: r["component"] for r in small.collect()}
     assert got[2**40] == 1 and got[3] == 2
-    big = connected_components(edges, driver_threshold=0)  # distributed
+    big = driver_rows(0, lambda: connected_components(edges))  # distributed
     assert {r["node"]: r["component"] for r in big.collect()} == got
 
 
@@ -1162,7 +1162,7 @@ def test_mmr_rerank_scored_composes_with_rrf(spark):
     assert picks == [1, 3]
 
 
-def test_bpe_train_known_vocab_and_guards(spark):
+def test_bpe_train_known_vocab_and_guards(spark, driver_rows):
     """The Sennrich textbook example shape: merges follow corpus pair
     mass with the (cnt DESC, a ASC, b ASC) tie-break; a run of identical
     symbols merges LEFT-TO-RIGHT non-overlapping ('aaaaa' contributes
@@ -1186,7 +1186,7 @@ def test_bpe_train_known_vocab_and_guards(spark):
     ]
     # distributed loop bit-identical
     got_dist = [
-        tuple(r) for r in bpe_train(wf, 4, driver_threshold=0).collect()
+        tuple(r) for r in driver_rows(0, lambda: bpe_train(wf, 4)).collect()
     ]
     assert got_dist == got
     # early stop: single-char words exhaust instantly
@@ -1256,7 +1256,7 @@ def test_bpe_encode_segmentation_contract(spark):
     assert chars[2] == list("unrelated")
 
 
-def test_kmeans_lloyd_driver_path_matches_distributed(spark):
+def test_kmeans_lloyd_driver_path_matches_distributed(spark, driver_rows):
     """r11-opt: the kmeans_lloyd driver fast path (Python trajectory +
     VALUES assignment) must be bit-identical to the distributed plan —
     awkward doubles (negative zero, subnormals, exact ties broken by
@@ -1277,7 +1277,7 @@ def test_kmeans_lloyd_driver_path_matches_distributed(spark):
     dist = sorted(
         map(
             tuple,
-            kmeans_lloyd(emb, k=2, n_iter=3, driver_threshold=0).collect(),
+            driver_rows(0, lambda: kmeans_lloyd(emb, k=2, n_iter=3)).collect(),
         )
     )
     assert drv == dist and len(drv) == 6
@@ -1290,7 +1290,7 @@ def test_kmeans_lloyd_driver_path_matches_distributed(spark):
     dist = sorted(
         map(
             tuple,
-            kmeans_lloyd(bad, k=2, n_iter=2, driver_threshold=0).collect(),
+            driver_rows(0, lambda: kmeans_lloyd(bad, k=2, n_iter=2)).collect(),
         )
     )
     assert drv == dist and len(drv) == 7

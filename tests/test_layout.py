@@ -97,7 +97,8 @@ def test_driver_window_covers_survey_gates():
     the window, so the driver must re-oracle them now; three changed
     sink/source canaries replace three more released r11-cohort members,
     and two changed ops canaries replace two more; four changed-library
-    canaries replace four graph twins that r12 re-oracled.
+    canaries replace four graph twins that r12 re-oracled; the text.py
+    canary x_token_count replaces x_winnowing_pairs.
     It additionally proves the coverage-closure invariant: the union of the prior
     rounds' driver windows and this window is the ENTIRE catalog."""
     import json
@@ -131,7 +132,6 @@ def test_driver_window_covers_survey_gates():
         "x_semdedup", "x_simhash", "x_simhash_pairs",
         "x_sparse_cosine_pairs", "x_token_budget_plan", "x_vocab_encode",
         "x_winnowing_fingerprints",
-        "x_winnowing_pairs",
         # r11 new-query cohort (keeps slots)
         "x_communities_trade", "x_bpe_merges", "x_modularity_trade",
         "x_bpe_encode", "x_image_dhash_near_dups", "x_random_walks_trade",
@@ -151,6 +151,8 @@ def test_driver_window_covers_survey_gates():
         # seated in place of the four released graph twins
         "x_image_roundtrip_meta", "x_video_frames_roundtrip",
         "x_dedup_exact", "s9_sql_scan",
+        # changed text.py canary, seated in place of x_winnowing_pairs
+        "x_token_count",
     }
     assert len(required) == 50
     missing = required - set(first50)
@@ -273,9 +275,6 @@ KEPT_UNREACHED: dict[str, str] = {
         _API + "; x_winnowing_fingerprints",
     "functions/codecs.py::decode_y4m":
         "the decoder the Y4M round-trip tests check encode_y4m with",
-    "functions/text.py::shingles":
-        "exported by functions/__init__ and called by nothing; goes with the"
-        " next text.py change, whose canary x_token_count needs a window slot",
     "functions/text.py::lang_scores": _API + "; x_lang_id",
     "functions/multimodal.py::_stub_image_decoder": _STUB,
     "functions/multimodal.py::_stub_image_resizer": _STUB,
@@ -303,6 +302,59 @@ KEPT_UNREACHED: dict[str, str] = {
         )
     },
 }
+
+
+def test_driver_path_seam_is_single():
+    """``functions/dispatch.py`` is the one place that sizes and emits a
+    driver-local path. No other package def declares a
+    ``driver_threshold`` parameter, spells a size probe
+    ``.limit(<n> + 1).collect()``, or emits rows as a one-slice
+    ``parallelize(<rows>, 1)``: those go through ``dispatch.DRIVER_ROWS``,
+    ``probe_rows`` / ``driver_path`` and ``local_df``. AST only."""
+    import ast
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(repo, "bi_gcp_stitch_repl_spark")
+    seam = os.path.join(pkg, "functions", "dispatch.py")
+
+    def is_call(node, attr):
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == attr
+        )
+
+    found = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        if path == seam:
+            continue
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        rel = os.path.relpath(path, pkg)
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                a = node.args
+                names = a.posonlyargs + a.args + a.kwonlyargs
+                if any(x.arg == "driver_threshold" for x in names):
+                    found.append(f"{rel}:{node.lineno} driver_threshold parameter")
+            if (
+                is_call(node, "collect")
+                and is_call(node.func.value, "limit")
+                and len(node.func.value.args) == 1
+                and isinstance(node.func.value.args[0], ast.BinOp)
+                and isinstance(node.func.value.args[0].op, ast.Add)
+                and isinstance(node.func.value.args[0].right, ast.Constant)
+                and node.func.value.args[0].right.value == 1
+            ):
+                found.append(f"{rel}:{node.lineno} .limit(n + 1).collect() probe")
+            if (
+                is_call(node, "parallelize")
+                and len(node.args) == 2
+                and isinstance(node.args[1], ast.Constant)
+                and node.args[1].value == 1
+            ):
+                found.append(f"{rel}:{node.lineno} one-slice parallelize emit")
+    assert not found, f"driver-path code outside functions/dispatch.py: {found}"
 
 
 def test_package_defs_reached_outside_tests():

@@ -478,7 +478,7 @@ def test_no_forced_broadcast_on_scaled_sides_in_package():
          "bloom_bit_set(bench, text_col=text_col, n=n, m=m, k=k)"):
             "1-row packed bit-set (m bits, fixed filter size)",
         ("functions/graph.py", "labels"):
-            "driver fast path only — label set under driver_threshold rows",
+            "driver fast path only — label set under DRIVER_ROWS rows",
         ("functions/graph.py", "dangling"): "1-row dangling-mass aggregate",
         ("functions/graph.py", "dmn"): "1-row dangling-mass aggregate",
         ("functions/graph.py", "at"): "1-row HITS L1-normalization total",

@@ -196,16 +196,16 @@ def test_connected_components_long_chain(spark):
     assert set(got.values()) == {0}
 
 
-def test_connected_components_rejects_nonpositive_max_iter(spark):
+def test_connected_components_rejects_nonpositive_max_iter(spark, driver_rows):
     """max_iter <= 0 must fail loudly up front (ADVICE r04): with zero
     star rounds the post-loop labeling would run on raw edges and emit
     split components while the non-convergence guard stays silent."""
     import pytest
 
-    # above driver_threshold so the distributed loop (the buggy path) runs
+    # DRIVER_ROWS = 0 so the distributed loop (the buggy path) runs
     edges_df = spark.createDataFrame([(0, 1), (1, 2)], "src long, dst long")
     with pytest.raises(ValueError, match="max_iter"):
-        connected_components(edges_df, max_iter=0, driver_threshold=0)
+        driver_rows(0, lambda: connected_components(edges_df, max_iter=0))
 
 
 def test_connected_components_no_edges(spark):
@@ -278,9 +278,9 @@ def test_scd2_intervals_agree_with_asof_join(spark):
 
 
 @pytest.mark.parametrize("seed,n_nodes,n_edges", [(5, 50, 40), (6, 30, 60)])
-def test_connected_components_paths_agree(spark, seed, n_nodes, n_edges):
+def test_connected_components_paths_agree(spark, driver_rows, seed, n_nodes, n_edges):
     """The driver union-find fast path and the distributed star algorithm
-    (forced via driver_threshold=0) produce identical labelings."""
+    (forced by setting DRIVER_ROWS to 0) produce identical labelings."""
     rng = random.Random(seed)
     edges = [
         (rng.randrange(n_nodes), rng.randrange(n_nodes)) for _ in range(n_edges)
@@ -295,8 +295,8 @@ def test_connected_components_paths_agree(spark, seed, n_nodes, n_edges):
     }
     dist = {
         r["node"]: r["component"]
-        for r in connected_components(
-            edges_df, nodes=nodes_df, driver_threshold=0
+        for r in driver_rows(
+            0, lambda: connected_components(edges_df, nodes=nodes_df)
         ).collect()
     }
     assert fast == dist == _uf_components(edges, list(range(n_nodes)))

@@ -229,7 +229,7 @@ def test_k_core_known_graphs(spark):
     }
 
 
-def test_personalized_pagerank_seed_semantics(spark):
+def test_personalized_pagerank_seed_semantics(spark, driver_rows):
     """teleport=seeds: the seed's rank rises vs the uniform restart (it
     receives ALL restart mass), non-seeds keep only flow-through rank,
     both physical paths agree bit-for-bit, and an out-of-node-set
@@ -251,8 +251,8 @@ def test_personalized_pagerank_seed_semantics(spark):
     }
     dist = {
         r.node: r.rank_fp
-        for r in pagerank_fixedpoint(
-            e, nd, teleport=seeds, driver_threshold=0
+        for r in driver_rows(
+            0, lambda: pagerank_fixedpoint(e, nd, teleport=seeds)
         ).collect()
     }
     assert drv == dist
@@ -360,7 +360,7 @@ def test_hits_fixedpoint_known_graph_and_guards(spark):
         hits_fixedpoint(huge, nd, scale=10**6)  # 1e12 * 1e7 wraps int64
 
 
-def test_clustering_coefficients_single_normalization(spark):
+def test_clustering_coefficients_single_normalization(spark, driver_rows):
     """r9 verdict #1 / ADVICE: the triangle/coefficient composition must
     pay ONE simple-undirected normalization + checkpoint, not two copies
     of the same edge set. Probe = persistent-RDD delta: exactly 2 new
@@ -378,7 +378,7 @@ def test_clustering_coefficients_single_normalization(spark):
     before = _persistent_rdd_ids(sc)
     # force the distributed composition (r11 added a driver fast path;
     # this probe pins the DISTRIBUTED single-normalization contract)
-    out = clustering_coefficients(k4_tail, driver_threshold=0)
+    out = driver_rows(0, lambda: clustering_coefficients(k4_tail))
     rows = {r.node: r.coeff_fp for r in out.collect()}
     assert rows[0] == 10**6 and rows[4] == 0  # semantics unchanged
     assert len(_persistent_rdd_ids(sc) - before) == 2
@@ -392,7 +392,7 @@ def test_clustering_coefficients_single_normalization(spark):
     assert len(_persistent_rdd_ids(sc) - before) == 0
 
 
-def test_k_core_one_fixpoint_action_and_bounded_checkpoints(spark):
+def test_k_core_one_fixpoint_action_and_bounded_checkpoints(spark, driver_rows):
     """r9 verdict #2 / ADVICE: (a) the per-round fixpoint check is ONE
     aggregate job (count + count_if in the same pass), pinned by the
     exact job count — with AQE off the peel costs 3 jobs/round (deg
@@ -417,10 +417,10 @@ def test_k_core_one_fixpoint_action_and_bounded_checkpoints(spark):
             before = sc._jsc.sc().getPersistentRDDs().size()
             sc.setJobGroup(group, "k_core fixpoint probe")
             try:
-                # driver_threshold=0 forces the distributed peel (r11
-                # added a driver fast path; <= 0 disables the dispatch
+                # DRIVER_ROWS = 0 forces the distributed peel (r11
+                # added a driver fast path; a 0 bound skips the dispatch
                 # probe outright, so the pinned job count is unchanged)
-                assert k_core(path, 2, driver_threshold=0).collect() == []
+                assert driver_rows(0, lambda: k_core(path, 2)).collect() == []
             finally:
                 sc.setJobGroup(None, None)
             jobs = len(sc.statusTracker().getJobIdsForGroup(group))
@@ -439,7 +439,7 @@ def test_pagerank_fixedpoint_empty_graph(spark):
     assert pagerank_fixedpoint(e, nd).count() == 0
 
 
-def test_pagerank_fixedpoint_input_contract(spark):
+def test_pagerank_fixedpoint_input_contract(spark, driver_rows):
     """Positive-weight contract (floor-div vs DIV would diverge the two
     physical paths on negatives; zero out-weight divides by zero), the
     (src, dst, weight) arity error, and NULL-endpoint/NULL-node drops
@@ -461,21 +461,23 @@ def test_pagerank_fixedpoint_input_contract(spark):
         "src long, dst long, w long",
     )
     nd_null = spark.createDataFrame([(1,), (2,), (None,)], "node long")
-    for thr in (100_000, 0):  # driver path, then distributed path
+    for bound in (100_000, 0):  # driver path, then distributed path
         got = {
             r.node: r.rank_fp
-            for r in pagerank_fixedpoint(
-                e, nd_null, driver_threshold=thr
+            for r in driver_rows(
+                bound, lambda: pagerank_fixedpoint(e, nd_null)
             ).collect()
         }
         clean = {
             r.node: r.rank_fp
-            for r in pagerank_fixedpoint(
-                spark.createDataFrame(
-                    [(1, 2, 1)], "src long, dst long, w long"
+            for r in driver_rows(
+                bound,
+                lambda: pagerank_fixedpoint(
+                    spark.createDataFrame(
+                        [(1, 2, 1)], "src long, dst long, w long"
+                    ),
+                    spark.createDataFrame([(1,), (2,)], "node long"),
                 ),
-                spark.createDataFrame([(1,), (2,)], "node long"),
-                driver_threshold=thr,
             ).collect()
         }
         assert got == clean  # NULL edges/nodes dropped, both paths agree
@@ -593,7 +595,7 @@ def test_modularity_known_graphs_and_guards(spark):
     assert all(r.contrib_fp == 0 and r.w_in == 0 for r in empty)
 
 
-def test_random_walks_replica_and_distributed_pin(spark):
+def test_random_walks_replica_and_distributed_pin(spark, driver_rows):
     """Deterministic hash-seeded walks on a known graph match an
     INDEPENDENT Python replica (recomputing each step's hash choice from
     the edge list — a different formulation than the library's driver
@@ -629,7 +631,7 @@ def test_random_walks_replica_and_distributed_pin(spark):
     got = {(r.start, r.wid, r.step, r.node) for r in out}
     assert got == expect and len(out) == len(expect) == 6 * 2 * 4
 
-    dist = random_walks(e, walk_len=3, num_walks=2, driver_threshold=0)
+    dist = driver_rows(0, lambda: random_walks(e, walk_len=3, num_walks=2))
     drows = dist.collect()
     assert {(r.start, r.wid, r.step, r.node) for r in drows} == expect
     byw: dict = {}
@@ -753,7 +755,7 @@ def test_walk_skipgrams_duckdb_oracle_parity(spark):
     assert got == oracle and len(got) > 10
 
 
-def test_modularity_driver_matches_distributed(spark):
+def test_modularity_driver_matches_distributed(spark, driver_rows):
     """The r11 driver fast path (probe-collected Q decomposition) must be
     bit-identical to the distributed aggregations — including negative
     contributions (truncate-toward-zero divide), a NULL community label
@@ -773,7 +775,8 @@ def test_modularity_driver_matches_distributed(spark):
     key = lambda t: (t[0] is None, t[0])  # noqa: E731 — NULL community row
     drv = sorted(map(tuple, modularity(e, lab).collect()), key=key)
     dist = sorted(
-        map(tuple, modularity(e, lab, driver_threshold=0).collect()), key=key
+        map(tuple, driver_rows(0, lambda: modularity(e, lab)).collect()),
+        key=key,
     )
     assert drv == dist
     # singleton partition: every contrib negative, identical both paths
@@ -781,11 +784,13 @@ def test_modularity_driver_matches_distributed(spark):
         [(i, i) for i in range(7)], "node long, community long"
     )
     drv = sorted(map(tuple, modularity(e, labn).collect()))
-    dist = sorted(map(tuple, modularity(e, labn, driver_threshold=0).collect()))
+    dist = sorted(
+        map(tuple, driver_rows(0, lambda: modularity(e, labn)).collect())
+    )
     assert drv == dist and all(r[3] < 0 for r in drv)
 
 
-def test_cc_driver_singleton_attach_matches_distributed(spark):
+def test_cc_driver_singleton_attach_matches_distributed(spark, driver_rows):
     """The r11 driver-side singleton attach (full label list as one local
     relation when the node set also fits the probe) must emit exactly the
     labels ∪ anti-join-singletons set — including a NULL node id, which
@@ -806,38 +811,14 @@ def test_cc_driver_singleton_attach_matches_distributed(spark):
     dist = sorted(
         map(
             tuple,
-            connected_components(e, nodes=nodes, driver_threshold=0).collect(),
+            driver_rows(
+                0, lambda: connected_components(e, nodes=nodes)
+            ).collect(),
         ),
         key=lambda t: (t[0] is None, t[0]),
     )
     assert drv == dist
     assert (None, None) in drv and (42, 42) in drv
-
-
-def test_graph_driver_paths_match_distributed_r11(spark):
-    """The r11 sssp_weighted driver fast path must be row-identical to
-    its forced-distributed twin on a weighted corridor graph with an
-    isolated source, a self-loop and unreachable nodes, and keep the
-    positive-weight guard. (The unweighted operators' cases live in
-    test_unweighted_graph_paths_agree_at_threshold.)"""
-    from bi_gcp_stitch_repl_spark.functions.graph import sssp_weighted
-
-    seeds = spark.createDataFrame([(0,), (42,)], "node long")
-    # SSSP over the directed weighted spelling
-    ew = spark.createDataFrame(
-        [(0, 1, 5), (1, 2, 1), (0, 2, 9), (2, 3, 1), (9, 9, 7), (4, 0, 2)],
-        "src long, dst long, w long",
-    )
-    drv = sorted(map(tuple, sssp_weighted(ew, seeds).collect()))
-    dist = sorted(
-        map(tuple, sssp_weighted(ew, seeds, driver_threshold=0).collect())
-    )
-    assert drv == dist and dict(drv)[2] == 6 and dict(drv)[3] == 7
-    import pytest as _pytest
-
-    bad = spark.createDataFrame([(0, 1, 0)], "src long, dst long, w long")
-    with _pytest.raises(ValueError, match="positive"):
-        sssp_weighted(bad, seeds)
 
 
 def test_undirected_canonical_rows_python_matches_sql(spark):
@@ -869,7 +850,7 @@ def test_undirected_canonical_rows_python_matches_sql(spark):
     for rows, ddl in fixtures:
         df = spark.createDataFrame(rows, ddl).withColumn("w", F.lit(1))
         py = sorted(map(tuple, canonical_rows([r + (1,) for r in rows], "und")))
-        sql = sorted(map(tuple, weighted_edges(df, 0, "und").plan.collect()))
+        sql = sorted(map(tuple, weighted_edges(df, "und", probe=False).plan.collect()))
         assert py == sql and py, (py, sql)
     sc = spark.sparkContext
     vals = spark.sql(
@@ -877,14 +858,14 @@ def test_undirected_canonical_rows_python_matches_sql(spark):
     )
     sc.setJobGroup("und_values_probe", "VALUES canonicalization")
     try:
-        ew = weighted_edges(vals, 100_000, "und")
+        ew = weighted_edges(vals, "und")
     finally:
         sc.setJobGroup(None, None)
     assert sorted(map(tuple, ew.rows)) == [(1, 2, 2)]
     assert not sc.statusTracker().getJobIdsForGroup("und_values_probe")
 
 
-def test_sparsify_driver_path_matches_distributed(spark):
+def test_sparsify_driver_path_matches_distributed(spark, driver_rows):
     """r11-opt: _sparsify_mean_relative's probe-based driver path must
     emit exactly the distributed cross-multiplication filter's rows
     (incl. NULL-weight drop), for both keep_weight spellings."""
@@ -908,15 +889,15 @@ def test_sparsify_driver_path_matches_distributed(spark):
         dist = sorted(
             map(
                 tuple,
-                _sparsify_mean_relative(
-                    df, keep_weight=kw, driver_threshold=0
+                driver_rows(
+                    0, lambda: _sparsify_mean_relative(df, keep_weight=kw)
                 ).collect(),
             )
         )
         assert drv == dist and drv, (kw, drv, dist)
 
 
-def test_lpa_modularity_local_input_fast_path(spark):
+def test_lpa_modularity_local_input_fast_path(spark, driver_rows):
     """r11-opt: the fully-local LPA/modularity fast path (VALUES edge
     input + Python weighted aggregate) must be bit-identical to the
     forced-distributed loops, and dispatch.canonical_rows must refuse
@@ -937,7 +918,7 @@ def test_lpa_modularity_local_input_fast_path(spark):
     nd = spark.createDataFrame([(v,) for v in range(1, 8)], "node long")
     drv = sorted(map(tuple, label_propagation(e, nd).collect()))
     dist = sorted(
-        map(tuple, label_propagation(e, nd, driver_threshold=0).collect())
+        map(tuple, driver_rows(0, lambda: label_propagation(e, nd)).collect())
     )
     assert drv == dist and drv
     lab = spark.createDataFrame(
@@ -945,7 +926,9 @@ def test_lpa_modularity_local_input_fast_path(spark):
         "node long, community long",
     )
     drv = sorted(map(tuple, modularity(e, lab).collect()))
-    dist = sorted(map(tuple, modularity(e, lab, driver_threshold=0).collect()))
+    dist = sorted(
+        map(tuple, driver_rows(0, lambda: modularity(e, lab)).collect())
+    )
     assert drv == dist and drv
     # the in-universe restriction: node 9's edge must not contribute
     assert all(r is not None for r in drv)
@@ -960,65 +943,11 @@ def test_lpa_modularity_local_input_fast_path(spark):
     assert canonical_rows([(1, 2, 5), (2, 1, None)], "und")[0].w == 5
 
 
-def test_null_weight_fast_paths_match_distributed_r12(spark):
-    """r12-opt (r11 advice): all-NULL-weight pairs reach the weighted
-    operators as w=NULL rows. The driver fast paths must not crash on
-    them (Python None arithmetic) — they route to the distributed
-    spelling, whose SQL NULL-skipping MIN/SUM define the behavior — so
-    fast-path and forced-distributed results stay identical."""
-    from bi_gcp_stitch_repl_spark.functions.graph import (
-        hits_fixedpoint,
-        label_propagation,
-        modularity,
-        pagerank_fixedpoint,
-    )
-
-    # (5,6) carries only NULL weights -> the canonical aggregate emits
-    # w=NULL for that pair; every other weight is positive
-    e = spark.createDataFrame(
-        [(1, 2, 5), (2, 3, 1), (5, 6, None), (6, 5, None), (3, 1, 2)],
-        "src long, dst long, w long",
-    )
-    nd = spark.createDataFrame([(v,) for v in range(1, 7)], "node long")
-    lab = spark.createDataFrame(
-        [(1, 10), (2, 10), (3, 11), (5, 12), (6, 12)],
-        "node long, community long",
-    )
-    for fast, slow in [
-        (
-            pagerank_fixedpoint(e, nd),
-            pagerank_fixedpoint(e, nd, driver_threshold=0),
-        ),
-        (
-            hits_fixedpoint(e, nd),
-            hits_fixedpoint(e, nd, driver_threshold=0),
-        ),
-        (
-            label_propagation(e, nd),
-            label_propagation(e, nd, driver_threshold=0),
-        ),
-        (modularity(e, lab), modularity(e, lab, driver_threshold=0)),
-    ]:
-        got = sorted(map(tuple, fast.collect()))
-        want = sorted(map(tuple, slow.collect()))
-        assert got == want and got, (got, want)
-    # the LPA fully-local (VALUES-input) fast path takes the same fallback
-    ev = spark.sql(
-        "SELECT * FROM VALUES (1L, 2L, 5L), (5L, 6L, CAST(NULL AS BIGINT))"
-        " AS t(src, dst, w)"
-    )
-    got = sorted(map(tuple, label_propagation(ev, nd).collect()))
-    want = sorted(
-        map(tuple, label_propagation(ev, nd, driver_threshold=0).collect())
-    )
-    assert got == want and got
-
-
-def test_mixed_sign_overflow_same_outcome_both_paths(spark):
+def test_mixed_sign_overflow_same_outcome_both_paths(spark, driver_rows):
     """Mixed-sign weights whose partial sums leave int64 in one
     summation order but not in another. The engine sums each input
     slice first; the driver canonicalization sums in collection order.
-    The default threshold and ``driver_threshold=0`` must reach the same
+    The default bound and ``DRIVER_ROWS = 0`` must reach the same
     outcome — the same rows or the same error — for both orders."""
     from bi_gcp_stitch_repl_spark.functions.graph import (
         label_propagation,
@@ -1053,14 +982,14 @@ def test_mixed_sign_overflow_same_outcome_both_paths(spark):
         e = spark.sql(f"SELECT * FROM VALUES {', '.join(vals)} AS t(src, dst, w)")
         for name, op in ops.items():
             fast = outcome(lambda: op(e))
-            slow = outcome(lambda: op(e, driver_threshold=0))
+            slow = outcome(lambda: driver_rows(0, lambda: op(e)))
             assert fast == slow, (name, ws, fast, slow)
 
 
 @pytest.mark.parametrize(
     "op, jobs",
     [
-        # (VALUES edge frame, groupBy aggregate): default-threshold jobs
+        # (VALUES edge frame, groupBy aggregate): default-bound jobs
         # of the operator call, measured before the dispatch seam existed
         ("pagerank_fixedpoint", (1, 4)),
         ("hits_fixedpoint", (1, 4)),
@@ -1110,7 +1039,7 @@ def test_weighted_dispatch_job_counts(spark, op, jobs):
 @pytest.mark.parametrize(
     "op, jobs",
     [
-        # (VALUES edge frame, groupBy aggregate): default-threshold jobs
+        # (VALUES edge frame, groupBy aggregate): default-bound jobs
         # of the operator call. A VALUES frame canonicalizes job-free;
         # bfs_hops adds its seed probe (connected_components reads its
         # nodes from the canonical list). An aggregate pays the
@@ -1158,6 +1087,144 @@ def test_undirected_dispatch_job_counts(spark, op, jobs):
     assert tuple(got) == jobs
 
 
+@pytest.mark.parametrize(
+    "family, jobs",
+    [
+        # (VALUES input, aggregate input, forced-distributed): jobs of
+        # the call, measured before these families moved onto
+        # dispatch.driver_path. An aggregate is pinned once and probed
+        # once; a VALUES vocabulary is still an aggregate to pin.
+        ("bpe_train", (3, 3, 17)),
+        # a row-local projection: probed, never pinned
+        ("kmeans_lloyd", (0, 2, 0)),
+        ("_sparsify_mean_relative", (0, 3, 0)),
+        # _trade_edge_frame then _sparsify_mean_relative: the trade
+        # frame emitted as VALUES, the pinned trade aggregate, and both
+        # forced distributed
+        ("trade_sparsify", (6, 7, 6)),
+        # x_sssp_trade's cost frame (sssp_weighted stubbed out): the
+        # same three trade-frame shapes feed its cost dispatch, which
+        # re-reads the trade frame unpinned
+        ("x_sssp_trade", (6, 6, 5)),
+        # the pool collect and the query take; the emit costs no job
+        ("mmr_rerank", (4, 3, 4)),
+    ],
+)
+def test_ported_dispatch_job_counts(spark, driver_rows, monkeypatch, family, jobs):
+    """The driver_path families' dispatch cost is pinned on a VALUES
+    input, an aggregate input and the forced-distributed path (each
+    call run twice, the second counted, so first-read file listings
+    do not count)."""
+    from pyspark.sql import functions as F
+
+    from bi_gcp_stitch_repl_spark.functions import bpe, graph, rerank, similarity
+    from bi_gcp_stitch_repl_spark.queries import relational_ext as rx
+
+    from tests.conftest import SF_SMOKE
+
+    sc = spark.sparkContext
+
+    def agg(df, key, col):
+        return (
+            spark.createDataFrame(df.collect(), df.schema)
+            .groupBy(key)
+            .agg(col)
+        )
+
+    words = spark.sql(
+        "SELECT * FROM VALUES ('low', 5L), ('lower', 2L), ('newest', 6L),"
+        " ('widest', 3L) AS t(word, freq)"
+    )
+    emb = spark.sql(
+        "SELECT * FROM VALUES (1L, array(0.0D, 0.0D)),"
+        " (2L, array(1.0D, 0.0D)), (3L, array(9.0D, 9.0D)),"
+        " (4L, array(8.0D, 9.0D)) AS t(vec_id, embedding)"
+    )
+    edges = spark.sql(
+        "SELECT * FROM VALUES (1L, 2L, 5L), (2L, 1L, 3L), (2L, 3L, 1L),"
+        " (3L, 4L, 9L), (4L, 1L, 2L) AS t(src, dst, w)"
+    )
+    query = spark.sql("SELECT array(1.0D, 0.0D) AS embedding")
+
+    def trade(bound):
+        return driver_rows(bound, lambda: rx._trade_edge_frame(spark, SF_SMOKE))
+
+    monkeypatch.setattr(
+        graph, "sssp_weighted",
+        lambda ec, seeds: ec.selectExpr("src AS node", "cost AS dist"),
+    )
+
+    def sssp_trade(bound):
+        real = rx._trade_edge_frame
+        with monkeypatch.context() as mp:
+            mp.setattr(
+                rx, "_trade_edge_frame",
+                lambda s, d: driver_rows(bound, lambda: real(s, d)),
+            )
+            return rx.x_sssp_trade(spark, SF_SMOKE)
+
+    vals, aggd, forced = {
+        "bpe_train": (
+            lambda: bpe.bpe_train(words, 4),
+            lambda: bpe.bpe_train(agg(words, "word", F.sum("freq").alias("freq")), 4),
+            lambda: driver_rows(0, lambda: bpe.bpe_train(words, 4)),
+        ),
+        "kmeans_lloyd": (
+            lambda: similarity.kmeans_lloyd(emb, k=2, n_iter=2),
+            lambda: similarity.kmeans_lloyd(
+                agg(emb, "vec_id", F.first("embedding").alias("embedding")),
+                k=2, n_iter=2,
+            ),
+            lambda: driver_rows(
+                0, lambda: similarity.kmeans_lloyd(emb, k=2, n_iter=2)
+            ),
+        ),
+        "_sparsify_mean_relative": (
+            lambda: rx._sparsify_mean_relative(edges, keep_weight=True),
+            lambda: rx._sparsify_mean_relative(
+                agg(edges, ["src", "dst"], F.sum("w").alias("w")),
+                keep_weight=True,
+            ),
+            lambda: driver_rows(
+                0, lambda: rx._sparsify_mean_relative(edges, keep_weight=True)
+            ),
+        ),
+        "trade_sparsify": (
+            lambda: rx._sparsify_mean_relative(trade(100_000)[0]),
+            lambda: rx._sparsify_mean_relative(trade(0)[0]),
+            lambda: driver_rows(
+                0, lambda: rx._sparsify_mean_relative(trade(0)[0])
+            ),
+        ),
+        "x_sssp_trade": (
+            lambda: sssp_trade(100_000),
+            lambda: sssp_trade(0),
+            lambda: driver_rows(0, lambda: rx.x_sssp_trade(spark, SF_SMOKE)),
+        ),
+        "mmr_rerank": (
+            lambda: rerank.mmr_rerank(emb, query, k=2, pool=4),
+            lambda: rerank.mmr_rerank(
+                agg(emb, "vec_id", F.first("embedding").alias("embedding")),
+                query, k=2, pool=4,
+            ),
+            lambda: driver_rows(
+                0, lambda: rerank.mmr_rerank(emb, query, k=2, pool=4)
+            ),
+        ),
+    }[family]
+    got = []
+    for i, call in enumerate((vals, aggd, forced)):
+        for rep in range(2):
+            group = f"ported_{family}_{i}_{rep}"
+            sc.setJobGroup(group, "ported dispatch cost")
+            try:
+                call()
+            finally:
+                sc.setJobGroup(None, None)
+        got.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert tuple(got) == jobs
+
+
 #: parity inputs: the hub-and-tail graph (K4 with a tail into a triangle,
 #: plus a separate pair), string keys, an empty frame, a lone self-loop
 _PARITY_INPUTS = {
@@ -1179,10 +1246,10 @@ _PARITY_INPUTS = {
         "random_walks", "connected_components",
     ],
 )
-def test_unweighted_graph_paths_agree_at_threshold(spark, op):
+def test_unweighted_graph_paths_agree_at_threshold(spark, driver_rows, op):
     """Driver and distributed paths give the same rows: the default
-    threshold and thresholds k-1, k and k+1 around the canonical edge
-    count k all match ``driver_threshold=0``. random_walks skips the
+    bound and ``DRIVER_ROWS`` at k-1, k and k+1 around the canonical edge
+    count k all match ``DRIVER_ROWS = 0``. random_walks skips the
     string keys: its step hash is integer arithmetic."""
     from bi_gcp_stitch_repl_spark.functions import graph
     from bi_gcp_stitch_repl_spark.functions.dispatch import canonical_rows
@@ -1197,16 +1264,16 @@ def test_unweighted_graph_paths_agree_at_threshold(spark, op):
             f"node {key}",
         )
         fn = {
-            "k_core": lambda **kw: graph.k_core(e, 2, **kw),
-            "bfs_hops": lambda **kw: graph.bfs_hops(e, seeds, **kw),
-        }.get(op, lambda **kw: getattr(graph, op)(e, **kw))
+            "k_core": lambda: graph.k_core(e, 2),
+            "bfs_hops": lambda: graph.bfs_hops(e, seeds),
+        }.get(op, lambda: getattr(graph, op)(e))
         k = len(canonical_rows([(a, b, 1) for a, b in rows], how))
-        want = sorted(map(tuple, fn(driver_threshold=0).collect()))
-        # a threshold <= 0 IS the forced-distributed call: not re-run
+        want = sorted(map(tuple, driver_rows(0, fn).collect()))
+        # a bound <= 0 IS the forced-distributed call: not re-run
         bounds = [t for t in (k - 1, k, k + 1) if t > 0]
-        for kw in ({}, *({"driver_threshold": t} for t in bounds)):
-            got = sorted(map(tuple, fn(**kw).collect()))
-            assert got == want, (name, kw, got, want)
+        for bound in (100_000, *bounds):
+            got = sorted(map(tuple, driver_rows(bound, fn).collect()))
+            assert got == want, (name, bound, got, want)
         assert want or name != "hub_tail"
         if (op, name) == ("triangle_counts", "strings"):
             assert want == [("a", 1), ("b", 1), ("c", 1)]
@@ -1214,7 +1281,169 @@ def test_unweighted_graph_paths_agree_at_threshold(spark, op):
             assert (42, 0) in want and 7 not in dict(want)
 
 
-def test_pagerank_teleport_probe_bounded_r12(spark):
+#: weighted parity inputs by name: ``(src, dst, w)`` rows, and the VALUES
+#: SQL when the input is a driver-local relation instead of a
+#: createDataFrame frame. The (5, 6) pair carries only NULL weights; the
+#: mixed-sign (1, 2) key has Σ|w| = 3·2^62 − 1 ≥ 2^63 while no partial
+#: sum, in any order, leaves int64. Every operator runs the first four;
+#: ``_EXTRA_INPUTS`` adds the rest where they bear on the operator.
+_WEIGHTED_INPUTS = {
+    "null_w": (
+        [(1, 2, 5), (2, 3, 1), (5, 6, None), (6, 5, None), (3, 1, 2)], None
+    ),
+    "mixed_sign": (
+        [(1, 2, 2**62), (2, 3, 1), (1, 2, -(2**62)), (3, 1, 2),
+         (1, 2, 2**62 - 1)],
+        None,
+    ),
+    "empty": ([], None),
+    "strings": ([("a", "b", 5), ("b", "c", 1), ("c", "a", 2), ("c", "d", 3)], None),
+    "null_w_values": (
+        [(1, 2, 5), (5, 6, None)],
+        "SELECT * FROM VALUES (1L, 2L, 5L), (5L, 6L, CAST(NULL AS BIGINT))"
+        " AS t(src, dst, w)",
+    ),
+    "zero_w": ([(0, 1, 0), (1, 2, 3)], None),
+    "corridor": (
+        [(0, 1, 5), (1, 2, 1), (0, 2, 9), (2, 3, 1), (9, 9, 7), (4, 0, 2)],
+        None,
+    ),
+}
+
+#: bpe_train's ``(word, freq)`` inputs, same hazards
+_BPE_INPUTS = {
+    "null_w": [("low", 5), ("lower", None), ("newest", 6), ("widest", 3)],
+    "mixed_sign": [("ab", 2**62), ("ab", -(2**62)), ("ab", 2**62 - 1), ("bab", 3)],
+    "empty": [],
+    "strings": [("löw", 5), ("lower", 2), ("newest", 6), ("wïdest", 3)],
+}
+
+#: kmeans_lloyd's ``(vec_id, embedding)`` inputs: a NULL element, ids of
+#: both signs near the int64 ends, no rows, string ids
+_KMEANS_INPUTS = {
+    "null_w": [(1, [0.0, 0.0]), (2, [1.0, None]), (3, [9.0, 9.0]), (4, [8.0, 9.0])],
+    "mixed_sign": [
+        (-(2**62), [-1.5, 2.0]), (2**62, [3.0, -4.0]), (0, [0.5, 0.5]),
+        (7, [-3.0, -3.0]),
+    ],
+    "empty": [],
+    "strings": [("a", [0.0, 1.0]), ("b", [1.0, 0.0]), ("c", [5.0, 5.0])],
+}
+
+
+def _key_type(rows) -> str:
+    return "string" if rows and isinstance(rows[0][0], str) else "long"
+
+
+def _weighted_case(spark, op, name):
+    """``(call, k)`` for one operator on one input: ``call`` runs the
+    operator with its default round count, ``k`` is the row count of the
+    input its dispatch probes."""
+    from bi_gcp_stitch_repl_spark.functions import graph
+    from bi_gcp_stitch_repl_spark.functions.bpe import bpe_train
+    from bi_gcp_stitch_repl_spark.functions.dispatch import canonical_rows
+    from bi_gcp_stitch_repl_spark.functions.similarity import kmeans_lloyd
+    from bi_gcp_stitch_repl_spark.queries.relational_ext import (
+        _sparsify_mean_relative,
+    )
+
+    if op == "bpe_train":
+        rows = _BPE_INPUTS[name]
+        wf = spark.createDataFrame(rows, "word string, freq long")
+        return (lambda: bpe_train(wf, 4)), len({w for w, _ in rows})
+    if op == "kmeans_lloyd":
+        rows = _KMEANS_INPUTS[name]
+        emb = spark.createDataFrame(
+            rows, f"vec_id {_key_type(rows)}, embedding array<double>"
+        )
+        return (lambda: kmeans_lloyd(emb, k=2, n_iter=2)), len(rows)
+    rows, sql = _WEIGHTED_INPUTS[name]
+    key = _key_type(rows)
+    e = (
+        spark.sql(sql) if sql
+        else spark.createDataFrame(rows, f"src {key}, dst {key}, w long")
+    )
+    if op == "_sparsify_mean_relative":
+        return (lambda: _sparsify_mean_relative(e, keep_weight=True)), len(rows)
+    ends = sorted({v for r in rows for v in r[:2]})
+    nodes = list(range(ends[0], ends[-1] + 1)) if key == "long" and ends else ends
+    nd = spark.createDataFrame([(v,) for v in nodes], f"node {key}")
+    lab = spark.createDataFrame(
+        [(v, 10 + i // 2) for i, v in enumerate(nodes) if v in ends],
+        f"node {key}, community long",
+    )
+    seeds = spark.createDataFrame(
+        [(v,) for v in nodes[:1] + ["zz" if key == "string" else 42]],
+        f"node {key}",
+    )
+    call, how = {
+        "pagerank_fixedpoint": (
+            lambda: graph.pagerank_fixedpoint(e, nd, node_type=key), "sum"
+        ),
+        "hits_fixedpoint": (
+            lambda: graph.hits_fixedpoint(e, nd, node_type=key), "sum"
+        ),
+        "sssp_weighted": (lambda: graph.sssp_weighted(e, seeds), "min"),
+        "label_propagation": (
+            lambda: graph.label_propagation(e, nd, node_type=key), "und"
+        ),
+        "modularity": (lambda: graph.modularity(e, lab, node_type=key), "und"),
+    }[op]
+    return call, len(canonical_rows([(a, b, 1) for a, b, _ in rows], how))
+
+
+def _outcome(fn):
+    """The sorted result rows, or the error: its type, and for the
+    operators' own ValueError guards its message too."""
+    try:
+        return sorted(map(tuple, fn().collect()), key=repr)
+    except Exception as exc:  # noqa: BLE001 — the outcome IS the error
+        msg = f": {exc}" if isinstance(exc, ValueError) else ""
+        return type(exc).__name__ + msg
+
+
+_WEIGHTED_OPS = (
+    "pagerank_fixedpoint", "hits_fixedpoint", "sssp_weighted",
+    "label_propagation", "modularity",
+)
+
+#: inputs beyond the four hard ones: the fully-local LPA fast path on a
+#: NULL weight, and SSSP's corridor graph (an isolated source, a
+#: self-loop, unreachable nodes) and positive-weight guard
+_EXTRA_INPUTS = {
+    "label_propagation": ("null_w_values",),
+    "sssp_weighted": ("corridor", "zero_w"),
+}
+
+
+@pytest.mark.parametrize(
+    "op", [*_WEIGHTED_OPS, "bpe_train", "kmeans_lloyd", "_sparsify_mean_relative"]
+)
+def test_weighted_paths_agree_at_threshold(spark, driver_rows, op):
+    """Driver and distributed paths reach the same outcome — the same
+    rows or the same error — on the hard inputs: NULL weights (also as a
+    driver-local VALUES input), a mixed-sign key whose Σ|w| passes 2^63,
+    an empty input and string keys. The default bound and
+    ``DRIVER_ROWS`` at k-1, k and k+1 around the probed row count k all
+    match ``DRIVER_ROWS = 0``."""
+    hard = ("null_w", "mixed_sign", "empty", "strings")
+    for name in (*hard, *_EXTRA_INPUTS.get(op, ())):
+        if op == "label_propagation" and name == "strings":
+            continue  # label ids are the integral node ids
+        call, k = _weighted_case(spark, op, name)
+        want = _outcome(lambda: driver_rows(0, call))
+        for bound in (100_000, *(t for t in (k - 1, k, k + 1) if t > 0)):
+            got = _outcome(lambda: driver_rows(bound, call))
+            assert got == want, (name, bound, got, want)
+        if op in _WEIGHTED_OPS and name.startswith("null_w"):
+            assert isinstance(want, list) and want, (name, want)
+        if name == "zero_w":
+            assert want.startswith("ValueError") and "positive" in want
+        if (op, name) == ("sssp_weighted", "corridor"):
+            assert dict(want)[2] == 6 and dict(want)[3] == 7
+
+
+def test_pagerank_teleport_probe_bounded_r12(spark, driver_rows):
     """r12-opt (r11 advice): the personalized-PageRank driver path must
     PROBE the teleport set instead of collecting it unbounded — a seed
     list above the dispatch bound falls back to the distributed
@@ -1225,24 +1454,22 @@ def test_pagerank_teleport_probe_bounded_r12(spark):
         [(1, 2, 5), (2, 3, 1), (3, 1, 2)], "src long, dst long, w long"
     )
     nd = spark.createDataFrame([(v,) for v in range(1, 4)], "node long")
-    # teleport cardinality (20) exceeds driver_threshold (8) while the
+    # teleport cardinality (20) exceeds DRIVER_ROWS (8) while the
     # edge/node frames fit: the driver path must decline, and the
-    # distributed branch must produce the same ranks as threshold=0
+    # distributed branch must produce the same ranks as a 0 bound
     tel = spark.range(1, 21).selectExpr("id AS node")
-    got = sorted(
-        map(
-            tuple,
-            pagerank_fixedpoint(e, nd, teleport=tel, driver_threshold=8)
-            .collect(),
+
+    def ranks(bound):
+        return sorted(
+            map(
+                tuple,
+                driver_rows(
+                    bound, lambda: pagerank_fixedpoint(e, nd, teleport=tel)
+                ).collect(),
+            )
         )
-    )
-    want = sorted(
-        map(
-            tuple,
-            pagerank_fixedpoint(e, nd, teleport=tel, driver_threshold=0)
-            .collect(),
-        )
-    )
+
+    got, want = ranks(8), ranks(0)
     assert got == want and got
 
 
@@ -1257,7 +1484,7 @@ def _persistent_rdd_ids(sc) -> set:
     return ids
 
 
-def test_undirected_edges_checkpoint_lifecycle(spark):
+def test_undirected_edges_checkpoint_lifecycle(spark, driver_rows):
     """Storage of the unweighted graph operators' dispatch. Above the
     bound exactly one persisted RDD remains and it holds the canonical
     (deduplicated) edge list — never the raw pre-dedup list, which at
@@ -1270,7 +1497,7 @@ def test_undirected_edges_checkpoint_lifecycle(spark):
     raw = spark.createDataFrame(pairs, "src long, dst long")
     want = sorted({(min(a, b), max(a, b)) for a, b in pairs if a != b})
     before = _persistent_rdd_ids(sc)
-    ew = graph._und_edges(raw, 5)
+    ew = driver_rows(5, lambda: graph._und_edges(raw))
     added = _persistent_rdd_ids(sc) - before
     assert ew.rows is None and len(want) > 5
     assert added == {ew.frame._jdf.queryExecution().analyzed().rdd().id()}
@@ -1291,7 +1518,7 @@ def test_undirected_edges_checkpoint_lifecycle(spark):
 
 
 @pytest.mark.parametrize("op", ["triangle_counts", "k_core"])
-def test_join_upstream_evaluated_once_above_bound(spark, op):
+def test_join_upstream_evaluated_once_above_bound(spark, driver_rows, op):
     """An edge frame whose root is a shuffle join (no aggregate on top)
     is evaluated ONCE per operator call above the dispatch bound: the
     canonical edge list is checkpointed once and both the probe and the
@@ -1316,15 +1543,15 @@ def test_join_upstream_evaluated_once_above_bound(spark, op):
     edges = left.join(right.hint("merge"), "k").select("src", "dst")
     fn = {
         "triangle_counts": graph.triangle_counts,
-        "k_core": lambda e, **kw: graph.k_core(e, 2, **kw),
+        "k_core": lambda e: graph.k_core(e, 2),
     }[op]
     # 6 canonical edges (two triangles), above the bound of 5
-    out = fn(edges, driver_threshold=5).collect()
+    out = driver_rows(5, lambda: fn(edges)).collect()
     assert out and passes.value == n, (op, passes.value)
 
 
-@pytest.mark.parametrize("driver_threshold", [100_000, 3])
-def test_connected_components_evaluates_upstream_once(spark, driver_threshold):
+@pytest.mark.parametrize("bound", [100_000, 3])
+def test_connected_components_evaluates_upstream_once(spark, driver_rows, bound):
     """connected_components reads a lazy edge upstream once per call, on
     the driver path and above the bound: the canonical edges and the node
     set (which keeps self-loop-only nodes) share one evaluation. Upstream
@@ -1340,8 +1567,11 @@ def test_connected_components_evaluates_upstream_once(spark, driver_threshold):
 
     rows = [(i, i + 1) for i in range(0, 18, 2)] + [(30, 30), (31, 31)] + [(1, 3)] * 9
     edges = spark.createDataFrame(rows, "src long, dst long")
-    out = graph.connected_components(
-        edges.mapInArrow(identity, edges.schema), driver_threshold=driver_threshold
+    out = driver_rows(
+        bound,
+        lambda: graph.connected_components(
+            edges.mapInArrow(identity, edges.schema)
+        ),
     ).collect()
     assert passes.value == len(rows) == 20
     labels = {r["node"]: r["component"] for r in out}
@@ -1349,7 +1579,7 @@ def test_connected_components_evaluates_upstream_once(spark, driver_threshold):
     assert labels[3] == labels[2] == 0 and labels[30] == 30 and labels[31] == 31
 
 
-def test_connected_components_null_endpoint_without_node_frame(spark):
+def test_connected_components_null_endpoint_without_node_frame(spark, driver_rows):
     """Without a node frame the nodes are the edges' non-NULL endpoints on
     both paths: an edge with one NULL end adds its other end as a
     singleton, and a NULL end names no node."""
@@ -1358,12 +1588,13 @@ def test_connected_components_null_endpoint_without_node_frame(spark):
     e = spark.createDataFrame(
         [(1, 2), (5, None), (None, 7), (None, None), (9, 9)], "src long, dst long"
     )
-    for threshold in (100_000, 0):
-        got = sorted(map(tuple, graph.connected_components(e, driver_threshold=threshold).collect()))
-        assert got == [(1, 1), (2, 1), (5, 5), (7, 7), (9, 9)], threshold
+    for bound in (100_000, 0):
+        got = driver_rows(bound, lambda: graph.connected_components(e))
+        got = sorted(map(tuple, got.collect()))
+        assert got == [(1, 1), (2, 1), (5, 5), (7, 7), (9, 9)], bound
 
 
-def test_sssp_local_input_fast_path_r12(spark):
+def test_sssp_local_input_fast_path_r12(spark, driver_rows):
     """r12-opt: sssp_weighted's fully-local fast path (VALUES edge input
     collected job-free, min-aggregation + Bellman-Ford in Python) must be
     bit-identical to the forced-distributed loop, keep the positive-weight
@@ -1379,7 +1610,7 @@ def test_sssp_local_input_fast_path_r12(spark):
     seeds = spark.createDataFrame([(1,), (4,)], "node long")
     got = sorted(map(tuple, sssp_weighted(e, seeds).collect()))
     want = sorted(
-        map(tuple, sssp_weighted(e, seeds, driver_threshold=0).collect())
+        map(tuple, driver_rows(0, lambda: sssp_weighted(e, seeds)).collect())
     )
     assert got == want and got
     # min-aggregated duplicate edge: (1,2) keeps cost 3
@@ -1396,6 +1627,6 @@ def test_sssp_local_input_fast_path_r12(spark):
     )
     got = sorted(map(tuple, sssp_weighted(en, seeds).collect()))
     want = sorted(
-        map(tuple, sssp_weighted(en, seeds, driver_threshold=0).collect())
+        map(tuple, driver_rows(0, lambda: sssp_weighted(en, seeds)).collect())
     )
     assert got == want and got

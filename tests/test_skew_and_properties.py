@@ -587,7 +587,7 @@ def _pr_reference(edges, nodes, n_iter, S=10**12, FS=10**6, seeds=None):
 
 @pytest.mark.slow
 def test_pagerank_fixedpoint_matches_integer_reference(
-    spark, edges, n_iter, drop_node
+    spark, driver_rows, edges, n_iter, drop_node
 ):
     from bi_gcp_stitch_repl_spark.functions.graph import pagerank_fixedpoint
 
@@ -605,7 +605,7 @@ def test_pagerank_fixedpoint_matches_integer_reference(
         e = e.limit(0)
     nd = spark.createDataFrame([(v,) for v in nodes], "node long")
     expect = _pr_reference(edges, nodes, n_iter)
-    # default = the driver fast path at this size; driver_threshold=0
+    # default = the driver fast path at this size; DRIVER_ROWS = 0
     # forces the distributed checkpointed loop — BOTH must equal the
     # independent replica exactly (the bit-identical-paths contract)
     got_driver = {
@@ -614,8 +614,8 @@ def test_pagerank_fixedpoint_matches_integer_reference(
     }
     got_dist = {
         r.node: r.rank_fp
-        for r in pagerank_fixedpoint(
-            e, nd, n_iter=n_iter, driver_threshold=0
+        for r in driver_rows(
+            0, lambda: pagerank_fixedpoint(e, nd, n_iter=n_iter)
         ).collect()
     }
     assert got_driver == expect
@@ -637,7 +637,7 @@ def test_pagerank_fixedpoint_matches_integer_reference(
 
 @pytest.mark.slow
 def test_personalized_pagerank_matches_integer_reference(
-    spark, edges, n_iter, seed_a, seed_b
+    spark, driver_rows, edges, n_iter, seed_a, seed_b
 ):
     """pagerank_fixedpoint(teleport=seeds): driver fast path AND forced
     distributed loop both equal the seeded replica bit-for-bit — restart
@@ -663,8 +663,8 @@ def test_personalized_pagerank_matches_integer_reference(
     }
     got_dist = {
         r.node: r.rank_fp
-        for r in pagerank_fixedpoint(
-            e, nd, n_iter=n_iter, teleport=tp, driver_threshold=0
+        for r in driver_rows(
+            0, lambda: pagerank_fixedpoint(e, nd, n_iter=n_iter, teleport=tp)
         ).collect()
     }
     assert got_driver == expect
@@ -715,7 +715,7 @@ def _hits_reference(edges, nodes, n_iter, S=10**6):
 
 @pytest.mark.slow
 def test_hits_fixedpoint_matches_integer_reference(
-    spark, edges, n_iter, drop_node
+    spark, driver_rows, edges, n_iter, drop_node
 ):
     """Driver fast path AND forced distributed loop both equal the
     independent sequential replica bit-for-bit on random directed
@@ -740,8 +740,8 @@ def test_hits_fixedpoint_matches_integer_reference(
     }
     got_dist = {
         r.node: (r.hub_fp, r.auth_fp)
-        for r in hits_fixedpoint(
-            e, nd, n_iter=n_iter, driver_threshold=0
+        for r in driver_rows(
+            0, lambda: hits_fixedpoint(e, nd, n_iter=n_iter)
         ).collect()
     }
     assert got_driver == expect
@@ -984,7 +984,9 @@ def _lpa_reference(edges, nodes, n_iter):
 
 
 @pytest.mark.slow
-def test_label_propagation_matches_reference(spark, edges, n_iter, drop_node):
+def test_label_propagation_matches_reference(
+    spark, driver_rows, edges, n_iter, drop_node
+):
     """Driver fast path AND forced distributed loop both equal the
     independent sequential replica bit-for-bit on random weighted
     multigraphs — including subgraph labelings (a dropped node's edges
@@ -1009,8 +1011,8 @@ def test_label_propagation_matches_reference(spark, edges, n_iter, drop_node):
     }
     got_dist = {
         r.node: r.community
-        for r in label_propagation(
-            e, nd, n_iter=n_iter, driver_threshold=0
+        for r in driver_rows(
+            0, lambda: label_propagation(e, nd, n_iter=n_iter)
         ).collect()
     }
     assert got_driver == expect
@@ -1071,7 +1073,7 @@ def _bpe_reference(vocab, n_merges):
 
 
 @pytest.mark.slow
-def test_bpe_train_matches_reference(spark, words, n_merges):
+def test_bpe_train_matches_reference(spark, driver_rows, words, n_merges):
     """Driver fast path AND forced distributed loop both equal the
     independent recursive replica on random small-alphabet vocabularies
     (duplicate words must SUM their frequencies first — the library
@@ -1087,7 +1089,7 @@ def test_bpe_train_matches_reference(spark, words, n_merges):
     got_driver = [tuple(r) for r in bpe_train(wf, n_merges).collect()]
     got_dist = [
         tuple(r)
-        for r in bpe_train(wf, n_merges, driver_threshold=0).collect()
+        for r in driver_rows(0, lambda: bpe_train(wf, n_merges)).collect()
     ]
     assert got_driver == expect
     assert got_dist == expect
